@@ -2928,8 +2928,9 @@ _SQL_NGRAM_PAIR_CTES = (
 
 def _q_g_pipeline_runner(spark, sf_dir):
     """Execute the full 15-node medallion DAG through plans/runner.py
-    (topological order, catalog sinks per node, observe-piggybacked DQ
-    gates, warehouse double-write) and return the terminal
+    (dependency order with independent nodes run concurrently, catalog
+    sinks per node, observe-piggybacked DQ gates, warehouse
+    double-write) and return the terminal
     gold.fact_sales table. The runner-wired twin of _q_g_fact_sales:
     same oracle, but the rows travelled bronze → silver → gold through
     materialized catalog tables exactly like the reference's job graph

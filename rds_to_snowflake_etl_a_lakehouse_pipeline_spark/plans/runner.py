@@ -1,13 +1,27 @@
-"""Topological pipeline runner for the medallion DAG.
+"""Dependency-driven pipeline runner for the medallion DAG.
 
 The reference's 15 jobs are orchestrated externally (Airflow per
 README.md:41-42 — no DAG in repo); dependencies are implicit via S3
-paths. Here the DAG is explicit: each node declares inputs, the runner
-topo-sorts, materializes each node to the session catalog (so downstream
-nodes re-read exactly like the reference's S3/catalog handoff), attaches
-the DQ gate as an ``observe`` on the sink write (no extra pass), and
-records per-node wall-clock — the reference's ``load_duration`` log
+paths. Here the DAG is explicit: each node declares inputs, and the
+runner dispatches a node as soon as every node it depends on has
+finished, so independent nodes (the six bronze ingests, most silver
+jobs) run side by side on a per-run thread pool, as the
+Airflow-orchestrated Glue jobs do. Spark accepts concurrent jobs from
+several Python threads; each node's thread inherits the caller's job
+group and local properties (``cancelJobGroup`` still cancels a refresh)
+and tags its jobs with the description ``plans.runner.<node>``.
+
+Each node materializes to the session catalog (so downstream nodes
+re-read exactly like the reference's S3/catalog handoff), attaches the
+DQ gate as an ``observe`` on the sink write (no extra pass), and records
+its start offset and wall-clock — the reference's ``load_duration`` log
 (silver/crm_cust_info_silver.py:111-114) as structured metrics.
+
+Fail-fast: a cycle or an input that is neither a node nor a source
+raises before anything is written. Once a node fails (a DQ gate or an
+exception), no further node is dispatched, the nodes already running
+finish, and the failure of the earliest failed node in topological
+order is raised.
 
 Gold nodes that also target the warehouse double-write; the runner
 caches between the two sinks instead of recomputing the plan (the
@@ -18,8 +32,10 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Sequence
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.io import WarehouseSink, write_table
@@ -43,6 +59,7 @@ class NodeResult:
     seconds: float
     rows_written: int | None
     dq: list[DQResult] = field(default_factory=list)
+    started: float = 0.0  # seconds from the start of Pipeline.run
 
 
 class Pipeline:
@@ -76,11 +93,16 @@ class Pipeline:
         self, spark: SparkSession, sources: dict[str, DataFrame] | None = None
     ) -> dict[str, NodeResult]:
         """Execute the DAG. ``sources`` provides DataFrames for dep names
-        that are not nodes (external inputs). Raises on a failed DQ gate.
+        that are not nodes (external inputs). Raises on a cycle or an
+        unresolved input before anything is written, and on a failed DQ
+        gate or a failing node once the nodes already running finish.
         """
         sources = sources or {}
-        outputs: dict[str, DataFrame] = {}
-        results: dict[str, NodeResult] = {}
+        order = self._topo_order()
+        for name in order:
+            for d in self.nodes[name].deps:
+                if d not in self.nodes and d not in sources:
+                    raise KeyError(f"unresolved input '{d}' of node '{name}'")
 
         # ensure catalog databases for qualified sinks (bronze.x, gold.y)
         dbs = set()
@@ -91,17 +113,15 @@ class Pipeline:
         for db in sorted(dbs):
             spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
 
-        def resolve(name: str) -> DataFrame:
-            if name in outputs:
-                return outputs[name]
-            if name in sources:
-                return sources[name]
-            raise KeyError(f"unresolved input '{name}'")
+        outputs: dict[str, DataFrame] = {}
+        results: dict[str, NodeResult] = {}
+        t_run = time.time()
 
-        for name in self._topo_order():
+        def run_node(name: str) -> tuple[DataFrame, NodeResult]:
+            spark.sparkContext.setJobDescription(f"plans.runner.{name}")
             node = self.nodes[name]
             t0 = time.time()
-            df = node.fn(*[resolve(d) for d in node.deps])
+            df = node.fn(*[outputs[d] if d in self.nodes else sources[d] for d in node.deps])
             dq: list[DQResult] = []
             rows = None
             rules = list(node.dq_rules)
@@ -145,6 +165,38 @@ class Pipeline:
             failed = [r for r in dq if not r.passed]
             if failed:
                 raise RuntimeError(f"DQ gate failed at {name}: {failed}")
-            outputs[name] = out
-            results[name] = NodeResult(name, round(time.time() - t0, 3), rows, dq)
-        return results
+            return out, NodeResult(
+                name, round(time.time() - t0, 3), rows, dq, started=round(t0 - t_run, 3)
+            )
+
+        # in-DAG dependencies each node still waits for; a node is
+        # dispatched once its set is empty and no node has failed
+        pending = {n: {d for d in self.nodes[n].deps if d in self.nodes} for n in order}
+        failures: dict[str, BaseException] = {}
+        # a pool thread starts only when no idle one is free, so the
+        # threads never outnumber the nodes in flight (the DAG's width)
+        with ThreadPoolExecutor(max_workers=max(len(order), 1)) as pool:
+            running: dict[Future, str] = {}
+            while True:
+                if not failures:
+                    for name in [n for n in order if n in pending and not pending[n]]:
+                        del pending[name]
+                        # wrapping clones the caller's local properties (job
+                        # group, tags) once; wrap per node, because the node's
+                        # setJobDescription writes into that clone
+                        target = inheritable_thread_target(spark)(run_node)
+                        running[pool.submit(target, name)] = name
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    name = running.pop(fut)
+                    if (exc := fut.exception()) is not None:
+                        failures[name] = exc
+                        continue
+                    outputs[name], results[name] = fut.result()
+                    for deps in pending.values():
+                        deps.discard(name)
+        if failures:
+            raise failures[next(n for n in order if n in failures)]
+        return {n: results[n] for n in order}

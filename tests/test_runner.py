@@ -1,0 +1,150 @@
+"""Pipeline runner contract: dependency-driven concurrent dispatch,
+fail-fast on a failed DQ gate, deterministic error and result order,
+job-group inheritance, and validation before any write. Tiny in-memory
+DataFrames with sinks in a per-test scratch database."""
+
+from __future__ import annotations
+
+import itertools
+import threading
+
+import pytest
+
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.dq import DQRule
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.runner import Node, Pipeline
+
+ROW_GATE = [DQRule("row_count", "row_count", threshold=1)]
+# NodeResult.started and .seconds are each rounded to the millisecond
+ROUNDING_S = 0.002
+
+_ids = itertools.count()
+
+
+@pytest.fixture
+def db(spark):
+    name = f"runner_t{next(_ids)}"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
+    yield name
+    spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
+
+
+@pytest.fixture
+def src(spark):
+    return spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id int, v string")
+
+
+def _track(ran: list, name: str, fn=lambda *dfs: dfs[0]):
+    def wrapped(*dfs):
+        ran.append(name)
+        return fn(*dfs)
+
+    return wrapped
+
+
+def _union(*dfs):
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df)
+    return out
+
+
+def test_failed_gate_stops_downstream_and_lets_in_flight_finish(spark, db, src):
+    # diamond a -> (b, c) -> d; b's row_count gate fails. b and c are
+    # dispatched together, so c is in flight when b fails.
+    spark.createDataFrame([(-1, "old")], "id int, v string").write.saveAsTable(f"{db}.d")
+    ran: list[str] = []
+    pipe = Pipeline([
+        Node("a", _track(ran, "a"), deps=["src"], sink=f"{db}.a", dq_rules=ROW_GATE),
+        Node("b", _track(ran, "b", lambda df: df.filter("id < 0")), deps=["a"],
+             sink=f"{db}.b", dq_rules=ROW_GATE),
+        Node("c", _track(ran, "c"), deps=["a"], sink=f"{db}.c", dq_rules=ROW_GATE),
+        Node("d", _track(ran, "d", _union), deps=["b", "c"], sink=f"{db}.d",
+             dq_rules=ROW_GATE),
+    ])
+    with pytest.raises(RuntimeError, match="DQ gate failed at b"):
+        pipe.run(spark, {"src": src})
+    assert "d" not in ran
+    # the in-flight sibling ran to completion before run raised
+    assert sorted(r.id for r in spark.table(f"{db}.c").collect()) == [1, 2, 3]
+    # d's existing table was neither swapped nor staged
+    assert [tuple(r) for r in spark.table(f"{db}.d").collect()] == [(-1, "old")]
+    assert not spark.catalog.tableExists(f"{db}.d__stage")
+
+
+def test_earliest_failure_in_topological_order_is_raised(spark, db, src):
+    # c fails at once in its fn; b fails later, at its gate after its
+    # write. b precedes c in topological order, so b's failure is raised.
+    def broken(df):
+        raise ValueError("c is broken")
+
+    pipe = Pipeline([
+        Node("a", lambda df: df, deps=["src"], sink=f"{db}.a"),
+        Node("b", lambda df: df.filter("id < 0"), deps=["a"], sink=f"{db}.b",
+             dq_rules=ROW_GATE),
+        Node("c", broken, deps=["a"], sink=f"{db}.c"),
+    ])
+    with pytest.raises(RuntimeError, match="DQ gate failed at b"):
+        pipe.run(spark, {"src": src})
+
+
+def test_independent_nodes_overlap_and_respect_dependencies(spark, db, src):
+    # a and b each wait at a two-party barrier while their plan is
+    # built: a serial runner times out there, only real overlap passes
+    barrier = threading.Barrier(2, timeout=60)
+
+    def meet(df):
+        barrier.wait()
+        return df
+
+    pipe = Pipeline([
+        Node("c", _union, deps=["a", "b"], sink=f"{db}.c", dq_rules=ROW_GATE),
+        Node("a", meet, deps=["src"], sink=f"{db}.a", dq_rules=ROW_GATE),
+        Node("b", meet, deps=["src"], sink=f"{db}.b", dq_rules=ROW_GATE),
+        Node("e", lambda c: c.filter("id > 1"), deps=["c"], sink=f"{db}.e"),
+    ])
+    results = pipe.run(spark, {"src": src})
+    assert list(results) == pipe._topo_order()
+    for name, node in pipe.nodes.items():
+        for d in node.deps:
+            if d in pipe.nodes:
+                dep = results[d]
+                assert results[name].started + ROUNDING_S >= dep.started + dep.seconds
+    assert results["c"].rows_written == 6
+    assert spark.table(f"{db}.e").count() == 4
+
+
+def test_pool_threads_inherit_caller_job_group(spark, db, src):
+    sc = spark.sparkContext
+    group = f"plans-runner-{db}"
+    pipe = Pipeline([
+        Node("a", lambda df: df, deps=["src"], sink=f"{db}.a"),
+        Node("b", lambda a: a, deps=["a"], sink=f"{db}.b"),
+    ])
+    sc.setJobGroup(group, "runner job group inheritance")
+    try:
+        pipe.run(spark, {"src": src})
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_unresolved_input_raises_before_any_write(spark, db, src):
+    pipe = Pipeline([
+        Node("p", lambda df: df, deps=["src"], sink=f"{db}.p"),
+        Node("q", lambda p, m: p, deps=["p", "missing"], sink=f"{db}.q"),
+    ])
+    with pytest.raises(KeyError, match="missing"):
+        pipe.run(spark, {"src": src})
+    assert not spark.catalog.tableExists(f"{db}.p")
+
+
+def test_cycle_raises_before_any_write(spark, db, src):
+    pipe = Pipeline([
+        Node("z", lambda df: df, deps=["src"], sink=f"{db}.z"),
+        Node("x", lambda y: y, deps=["y"], sink=f"{db}.x"),
+        Node("y", lambda x: x, deps=["x"], sink=f"{db}.y"),
+    ])
+    with pytest.raises(ValueError, match="cycle"):
+        pipe.run(spark, {"src": src})
+    assert not spark.catalog.tableExists(f"{db}.z")
