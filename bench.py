@@ -337,9 +337,10 @@ def main() -> None:
         # near-dups of the corpus or of earlier batch rows; hot-bucket
         # capped on both joins.
         batch = load(spark, d, "documents").filter(F.col("doc_id") % 10 == 0)
-        # log_skew=False pins the r16-benched uninstrumented per-batch
-        # body (the q11 crc32 precedent) — the round-17 skew report is
-        # one extra bounded agg that would change what q16 measures
+        # log_skew=False keeps q16 timing the same per-batch body as
+        # earlier rounds (the q11 crc32 precedent). The skew report no
+        # longer reads the index (one aggregate over the batch's two
+        # pins), but it is still one more job per batch
         return minhash_incremental_dedup(
             spark, inc_table, batch, append=False, max_bucket_size=64,
             log_skew=False,
@@ -431,7 +432,7 @@ def main() -> None:
             .parquet(stream_src)
         )
         with _tempfile.TemporaryDirectory() as ck:
-            # log_skew=False: same uninstrumented-body pin as q16
+            # log_skew=False: same per-batch body as q16 (see there)
             stream_corpus_dedup(
                 sdf, inc_table, ck, append=False, max_bucket_size=64,
                 query_name="bench_q22", log_skew=False,

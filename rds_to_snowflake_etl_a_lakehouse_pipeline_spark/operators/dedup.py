@@ -661,71 +661,42 @@ def _skew_log_table(table: str) -> str:
     return f"{table}_skew_log"
 
 
-def minhash_batch_skew_report(
-    idx: DataFrame, banded: DataFrame, max_bucket_size: int | None
+def _bucket_skew_report(
+    idx_sizes: DataFrame, batch_sizes: DataFrame, cap: int | None
 ) -> dict:
     """Bucket-skew measurement for ONE probe batch against a standing
-    MinHash index — the text-tier twin of ``ivf_append_index``'s drift
-    report. Sized over only the (band, bucket) keys THIS batch hits
-    (the same semi-join bound as :func:`_split_index_hot_buckets`), so
-    the cost is O(batch), never O(index): ``sum_sq_bucket_rows`` is the
-    Σbucket² probe-work proxy that hot-bucket growth inflates, and
-    ``n_capped_buckets`` counts hit buckets over the probe cap — i.e.
-    buckets where star semantics are CURRENTLY trading away per-member
-    pair recall, the thing the cap truncates silently.
+    index, shared by the MinHash, Hamming and ER families (the ER index
+    calls its blocks buckets). ``idx_sizes`` / ``batch_sizes`` hold one
+    row per bucket with its UNCAPPED row count ``_bsz``: the index
+    buckets the batch hits, and the batch's own buckets.
 
-    ``n_capped_batch_buckets`` measures the cap's OTHER truncation site
-    (round 17 review): the within-batch star path drops every
-    non-representative member of a hot BATCH bucket, and in the
-    ``append=False`` steady state those survivors never reach the
-    index, so the index-side count alone would sit at zero while the
-    cap actively trades recall every batch. Both sides are sized in
-    ONE fused agg job (the report is buffered per micro-batch by the
-    streaming wrapper, so its job count is part of the per-batch
-    floor); the caller decides whether to persist
-    (:func:`minhash_append_skew_reports`) or buffer (streaming)."""
-    hit = banded.select("band", "bucket").distinct()
-    idx_sizes = (
-        idx.join(hit, ["band", "bucket"])
-        .groupBy("band", "bucket")
-        .agg(F.count("*").alias("n"))
-        .withColumn("_side", F.lit("index"))
+    ``sum_sq_bucket_rows`` is the Σbucket² probe-work proxy that
+    hot-bucket growth inflates. ``n_capped_buckets`` counts hit index
+    buckets over the cap and ``n_capped_batch_buckets`` batch buckets
+    over it: the places where the family's cap is trading recall right
+    now (MinHash collapses them to a star on the min-id
+    representative; Hamming and ER drop them from candidate
+    generation). The batch-side count matters in the ``append=False``
+    steady state, where survivors never reach the index and the
+    index-side count alone would sit at zero. One aggregate job; the
+    caller persists the dict (``*_append_skew_reports``) or buffers it
+    (the streaming wrappers flush once per drain)."""
+    sides = idx_sizes.select("_bsz", F.lit(True).alias("_idx")).unionByName(
+        batch_sizes.select("_bsz", F.lit(False).alias("_idx"))
     )
-    batch_sizes = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count("*").alias("n"))
-        .withColumn("_side", F.lit("batch"))
-    )
-    cap = max_bucket_size
     capv = F.lit(cap if cap is not None else 2**62)
-    is_idx = F.col("_side") == "index"
-    row = idx_sizes.unionByName(batch_sizes).agg(
-        F.coalesce(
-            F.sum(F.when(is_idx, 1).otherwise(0)), F.lit(0)
-        ).alias("n_hit_buckets"),
-        F.coalesce(F.max(F.when(is_idx, F.col("n"))), F.lit(0)).alias(
-            "max_bucket_rows"
-        ),
-        F.coalesce(
-            F.sum(F.when(is_idx, F.col("n") * F.col("n"))), F.lit(0)
-        ).alias("sum_sq_bucket_rows"),
-        F.coalesce(
-            F.sum(F.when(is_idx & (F.col("n") > capv), 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_capped_buckets"),
-        F.coalesce(
-            F.sum(F.when(~is_idx & (F.col("n") > capv), 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_capped_batch_buckets"),
+    idx_n = F.when(F.col("_idx"), F.col("_bsz"))
+    batch_n = F.when(~F.col("_idx"), F.col("_bsz"))
+    row = sides.agg(
+        F.count(idx_n).alias("n_hit_buckets"),
+        F.max(idx_n).alias("max_bucket_rows"),
+        F.sum(idx_n * idx_n).alias("sum_sq_bucket_rows"),
+        F.count(F.when(idx_n > capv, 1)).alias("n_capped_buckets"),
+        F.count(F.when(batch_n > capv, 1)).alias("n_capped_batch_buckets"),
     ).first()
-    return {
-        "n_hit_buckets": int(row["n_hit_buckets"]),
-        "max_bucket_rows": int(row["max_bucket_rows"]),
-        "sum_sq_bucket_rows": int(row["sum_sq_bucket_rows"]),
-        "n_capped_buckets": int(row["n_capped_buckets"]),
-        "n_capped_batch_buckets": int(row["n_capped_batch_buckets"]),
-        "cap": cap,
-    }
+    report = {k: int(v or 0) for k, v in row.asDict().items()}
+    report["cap"] = cap
+    return report
 
 
 def minhash_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
@@ -758,36 +729,42 @@ def minhash_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
     write_table(log_row, _skew_log_table(table), mode="append")
 
 
-def _split_index_hot_buckets(
-    idx: DataFrame,
-    probe_banded: DataFrame,
-    id_col: str,
-    max_bucket_size: int | None,
-):
-    """Split an index into (cold_rows, hot_representatives) by per-
-    (band, bucket) size, counting ONLY buckets the probe batch actually
-    hits — a semi-join on the batch's distinct buckets keeps the sizing
-    pass proportional to the batch, not the accreted index. Hot buckets
-    (size > cap) collapse to their min-``id_col`` representative row, so
-    the probe join does O(1) work per hot bucket instead of O(B).
-    Returns (idx, None) when ``max_bucket_size`` is None."""
-    if max_bucket_size is None:
-        return idx, None
-    hit = probe_banded.select("band", "bucket").distinct()
-    idx_hit = idx.join(hit, ["band", "bucket"])
-    w_bucket = Window.partitionBy("band", "bucket")
-    sized = idx_hit.withColumn("_bsz", F.count("*").over(w_bucket))
-    cold = sized.filter(F.col("_bsz") <= max_bucket_size).drop("_bsz")
-    hot = (
-        sized.filter(F.col("_bsz") > max_bucket_size)
-        .withColumn(
-            "_rn",
-            F.row_number().over(w_bucket.orderBy(F.col(id_col).asc())),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_bsz", "_rn")
+def _bucket_sizes(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """Add ``_bsz`` (rows in the row's ``keys`` bucket) and ``_brn``
+    (the row's rank by ``id_col`` inside it, from 1) in one window
+    pass: the one definition of hot-bucket sizing every capped index
+    probe shares. A bucket is hot when ``_bsz`` exceeds the cap; its
+    ``_brn = 1`` row is the min-id representative; the ``_brn = 1``
+    rows carry one size per bucket for :func:`_bucket_skew_report`.
+    Ids are unique per side, so the rank of a non-representative row
+    is always above 1."""
+    w = Window.partitionBy(*keys).orderBy(F.col(id_col).asc())
+    everything = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return df.withColumn("_bsz", F.count("*").over(everything)).withColumn(
+        "_brn", F.row_number().over(w)
     )
-    return cold, hot
+
+
+def _index_hit_slice(
+    idx: DataFrame,
+    probe: DataFrame,
+    keys: list[str],
+    id_col: str,
+    cap: int | None,
+) -> DataFrame:
+    """The index rows in the ``keys`` buckets the probe batch hits,
+    sized by :func:`_bucket_sizes` and trimmed to what a capped probe
+    reads: every row of a cold bucket (``_bsz <= cap``) plus each hot
+    bucket's representative (``_brn = 1``). The semi-join on the
+    batch's distinct keys bounds the window and the slice by the hit
+    buckets, but the index scan itself opens every index file, so a
+    caller with several consumers pins the slice once
+    (:func:`_materialize`). ``cap=None`` keeps every hit row."""
+    hit = probe.select(*keys).distinct()
+    sized = _bucket_sizes(idx.join(hit, keys), keys, id_col)
+    if cap is None:
+        return sized
+    return sized.filter((F.col("_bsz") <= cap) | (F.col("_brn") == 1))
 
 
 def minhash_query_index(
@@ -816,8 +793,10 @@ def minhash_query_index(
     against the bucket's min-id REPRESENTATIVE only, threshold-exempt
     (star semantics — the probe doc is merged into the boilerplate
     cluster; per-member pair recall inside the hot bucket is traded
-    away). Sizing is computed per probe over only the buckets the batch
-    hits, so it stays proportional to the batch."""
+    away). Sizing runs per probe over only the buckets the batch hits
+    (:func:`_index_hit_slice`, the same helper and cap rule the
+    incremental dedup uses); this probe stays lazy, so each action on
+    its result scans the index once."""
     from ..sources.io import check_table_meta
 
     check_table_meta(
@@ -829,45 +808,32 @@ def minhash_query_index(
         bands,
         num_hashes // bands,
     )
-    idx_cold, idx_hot = _split_index_hot_buckets(idx, nb, id_col, max_bucket_size)
-    cold = (
-        nb.alias("n")
-        .join(
-            idx_cold.alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.bucket") == F.col("c.bucket")),
+    est = F.round(_jaccard_est(F.col("n._sig"), F.col("c.sig"), num_hashes), 6)
+    match = est >= threshold
+    if max_bucket_size is not None:
+        idx = _index_hit_slice(
+            idx, nb, ["band", "bucket"], id_col, max_bucket_size
         )
-        .select(
-            F.col("n._id").alias("new_id"),
-            F.col(f"c.{id_col}").alias("corpus_id"),
-            F.round(
-                _jaccard_est(F.col("n._sig"), F.col("c.sig"), num_hashes), 6
-            ).alias("jaccard_est"),
-        )
-        .filter(F.col("jaccard_est") >= threshold)
-    )
-    if idx_hot is not None:
         # Star pairs vs the hot bucket's min-id representative are
         # threshold-EXEMPT, matching minhash_lsh_pairs: they merge the
         # probe document into the boilerplate cluster the bucket
         # represents (see the max_bucket_size docstring there).
-        hot = (
-            nb.alias("n")
-            .join(
-                idx_hot.alias("c"),
-                (F.col("n.band") == F.col("c.band"))
-                & (F.col("n.bucket") == F.col("c.bucket")),
-            )
-            .select(
-                F.col("n._id").alias("new_id"),
-                F.col(f"c.{id_col}").alias("corpus_id"),
-                F.round(
-                    _jaccard_est(F.col("n._sig"), F.col("c.sig"), num_hashes), 6
-                ).alias("jaccard_est"),
-            )
+        match = match | (F.col("c._bsz") > max_bucket_size)
+    return (
+        nb.alias("n")
+        .join(
+            idx.alias("c"),
+            (F.col("n.band") == F.col("c.band"))
+            & (F.col("n.bucket") == F.col("c.bucket")),
         )
-        cold = cold.unionByName(hot)
-    return cold.dropDuplicates(["new_id", "corpus_id"])
+        .filter(match)
+        .select(
+            F.col("n._id").alias("new_id"),
+            F.col(f"c.{id_col}").alias("corpus_id"),
+            est.alias("jaccard_est"),
+        )
+        .dropDuplicates(["new_id", "corpus_id"])
+    )
 
 
 def minhash_incremental_dedup(
@@ -891,7 +857,7 @@ def minhash_incremental_dedup(
     signatures to the index — so the next batch dedups against
     everything that came before. The streaming-corpus form of
     :func:`minhash_lsh_dedup`: each batch costs its own signatures plus
-    one bucketed join against the index, never a corpus re-scan.
+    one read of the bucketed index, never a corpus re-shingle.
 
     ``n_buckets`` defaults from the index's recorded table properties
     (and is validated against them when passed explicitly) — appends
@@ -899,10 +865,10 @@ def minhash_incremental_dedup(
     the pre-shuffled join layout. Signature parameters are validated
     the same way (:func:`~..sources.io.check_table_meta`).
 
-    The batch is SIGNED ONCE: the checkpointed (_id, _sig) table feeds
-    the corpus probe, the within-batch self-join, and the survivor
-    append alike (the signature kernel is the dominant per-batch cost;
-    re-running it per consumer would triple it).
+    The batch is SIGNED ONCE: the signature kernel is the dominant
+    per-batch cost, so its output is pinned (:func:`_materialize`) and
+    the corpus probe, the within-batch self-join and the survivor append
+    all read the pin instead of re-running it per consumer.
 
     ``max_bucket_size`` caps hot (band, bucket) keys in BOTH joins —
     the steady-state path a standing pipeline runs per arriving batch,
@@ -914,26 +880,42 @@ def minhash_incremental_dedup(
     ``minhash_lsh_dedup`` with a cap does); against the index, probes
     landing in a hot bucket are dropped as members of that boilerplate
     cluster via its representative (see
-    :func:`minhash_query_index`). Index bucket sizing is restricted to
-    buckets the batch hits, so the guard costs O(batch), not O(index).
+    :func:`minhash_query_index`).
 
-    ``storage``: materialization strategy for the signature table and
-    the survivor set — ``"checkpoint"`` (default; scoped blocks, fails
-    on executor loss), ``"persist"`` (lineage kept, survives executor
-    loss — use on preemptible clusters), or ``"table"`` (written stage
-    table, survives full job restarts). See :func:`_materialize`.
+    Cost of a capped batch: the index is read ONCE. Two pins replace
+    the bare signatures: the banded batch with its bucket sizes
+    (:func:`_bucket_sizes`), and the index's hit slice — the rows in
+    the buckets the batch hits, sized in one window pass and trimmed to
+    cold rows plus one representative per hot bucket
+    (:func:`_index_hit_slice`). The cold probe, the hot
+    representatives, the within-batch star losers and the skew report
+    all read those pins. The scan behind the hit slice still opens
+    every index file (the semi-join on the batch's keys bounds the
+    window and the pin, not the scan), so the per-batch floor grows
+    with the index's file count; compaction bounds that. An uncapped
+    call pins only the signatures and reads the index once, in the
+    probe join.
+
+    ``storage``: materialization strategy for the pins and the survivor
+    set — ``"checkpoint"`` (default; scoped blocks, fails on executor
+    loss), ``"persist"`` (lineage kept, survives executor loss — use on
+    preemptible clusters), or ``"table"`` (written stage table, survives
+    full job restarts). See :func:`_materialize`.
 
     ``log_skew`` (round 17): per-batch bucket-skew measurement into the
-    ``{table}_skew_log`` companion (:func:`minhash_batch_skew_report` —
+    ``{table}_skew_log`` companion (:func:`_bucket_skew_report` —
     Σbucket² probe-work proxy + the count of INDEX buckets over the cap
     + the count of hot BATCH buckets the within-batch star path capped,
     i.e. both places star semantics trade away per-member recall RIGHT
     NOW). Defaults to ON exactly when ``max_bucket_size`` is set — the
     signal matters when a cap is silently truncating, and an uncapped
-    probe stays byte-identical to the pre-r17 plan. ``skew_sink``
-    redirects the report into a caller-held buffer instead of a 1-row
-    write job (the streaming wrapper flushes ONE write post-drain, the
-    same batching contract as the IVF drift log).
+    probe keeps its plan. The report is one aggregate over the pins'
+    one-row-per-bucket rows: no join, no groupBy, no extra index read
+    (an explicit ``log_skew=True`` on an uncapped call takes the pinned
+    path to get the same). ``skew_sink`` redirects the report into a
+    caller-held buffer instead of a 1-row write job (the streaming
+    wrapper flushes ONE write post-drain, the same batching contract as
+    the IVF drift log).
     ``maintenance.table_health`` turns the log into a
     ``cap_truncating`` health flag."""
     num_hashes = sig_kwargs.get("num_hashes", 64)
@@ -954,63 +936,48 @@ def minhash_incremental_dedup(
     if n_buckets is None:
         n_buckets = int(meta.get("n_buckets", 32))
 
-    sig = _materialize(
-        _signature_table(new_df, id_col, text_col, num_hashes, shingle_n, impl),
-        storage,
-    )
-    banded = _band_explode(sig, bands, num_hashes // bands)
-
+    cap = max_bucket_size
+    if log_skew is None:
+        log_skew = cap is not None
+    keys = ["band", "bucket"]
+    sig = _signature_table(new_df, id_col, text_col, num_hashes, shingle_n, impl)
     idx = spark.table(table)
-    idx_cold, idx_hot = _split_index_hot_buckets(idx, banded, id_col, max_bucket_size)
+    if cap is None and not log_skew:
+        banded = _band_explode(_materialize(sig, storage), bands, num_hashes // bands)
+    else:
+        # One pin per side, one index read per batch: the banded batch
+        # with its bucket sizes, and the index's hit slice with its own.
+        # The probe, the star paths and the skew report all read these.
+        banded = _materialize(
+            _bucket_sizes(_band_explode(sig, bands, num_hashes // bands), keys, "_id"),
+            storage,
+        )
+        idx = _materialize(_index_hit_slice(idx, banded, keys, id_col, cap), storage)
+
+    # round-to-6 before the threshold, matching minhash_query_index /
+    # minhash_lsh_pairs (differs only for non-power-of-2 num_hashes,
+    # where k/num_hashes is inexact in binary)
+    match = (
+        F.round(_jaccard_est(F.col("n._sig"), F.col("c.sig"), num_hashes), 6)
+        >= threshold
+    )
+    within_banded = banded
+    if cap is not None:
+        # Probes landing in a hot index bucket meet only its
+        # representative and are dropped as members of its boilerplate
+        # cluster, threshold-exempt (star semantics, see the docstring).
+        match = match | (F.col("c._bsz") > cap)
+        within_banded = banded.filter(F.col("_bsz") <= cap)
     vs_corpus = (
         banded.alias("n")
         .join(
-            idx_cold.alias("c"),
+            idx.alias("c"),
             (F.col("n.band") == F.col("c.band"))
             & (F.col("n.bucket") == F.col("c.bucket")),
         )
-        .filter(
-            # round-to-6 before the threshold, matching minhash_query_index /
-            # minhash_lsh_pairs (differs only for non-power-of-2 num_hashes,
-            # where k/num_hashes is inexact in binary)
-            F.round(_jaccard_est(F.col("n._sig"), F.col("c.sig"), num_hashes), 6)
-            >= threshold
-        )
+        .filter(match)
         .select(F.col("n._id").alias(id_col))
     )
-    if idx_hot is not None:
-        # Probes landing in a hot index bucket are members of its
-        # boilerplate cluster: drop them, threshold-exempt (star
-        # semantics, see the docstring).
-        vs_hot = (
-            banded.alias("n")
-            .join(
-                idx_hot.alias("c"),
-                (F.col("n.band") == F.col("c.band"))
-                & (F.col("n.bucket") == F.col("c.bucket")),
-            )
-            .select(F.col("n._id").alias(id_col))
-        )
-        vs_corpus = vs_corpus.unionByName(vs_hot)
-
-    within_banded = banded
-    within_star = None
-    if max_bucket_size is not None:
-        # Within-batch star capping, mirroring minhash_lsh_pairs: hot
-        # batch buckets drop every non-representative member (greedy
-        # dedup keeps the min id either way), bounding the self-join's
-        # per-bucket work to O(B) instead of O(B²).
-        w_bucket = Window.partitionBy("band", "bucket")
-        sized = banded.withColumn("_bsz", F.count("*").over(w_bucket))
-        within_star = (
-            sized.filter(F.col("_bsz") > max_bucket_size)
-            .withColumn(
-                "_rep_id", F.first("_id").over(w_bucket.orderBy(F.col("_id").asc()))
-            )
-            .filter(F.col("_id") != F.col("_rep_id"))
-            .select(F.col("_id").alias(id_col))
-        )
-        within_banded = sized.filter(F.col("_bsz") <= max_bucket_size).drop("_bsz")
     within = (
         within_banded.alias("a")
         .join(
@@ -1025,15 +992,23 @@ def minhash_incremental_dedup(
         )
         .select(F.col("b._id").alias(id_col))
     )
-    if within_star is not None:
-        within = within.unionByName(within_star)
+    if cap is not None:
+        # Within-batch star capping, mirroring minhash_lsh_pairs: hot
+        # batch buckets drop every non-representative member (greedy
+        # dedup keeps the min id either way), bounding the self-join's
+        # per-bucket work to O(B) instead of O(B²).
+        within = within.unionByName(
+            banded.filter((F.col("_bsz") > cap) & (F.col("_brn") > 1)).select(
+                F.col("_id").alias(id_col)
+            )
+        )
     losers = vs_corpus.unionByName(within).distinct()
     survivors = _materialize(new_df.join(losers, id_col, "left_anti"), storage)
 
-    if log_skew is None:
-        log_skew = max_bucket_size is not None
     if log_skew:
-        report = minhash_batch_skew_report(idx, banded, max_bucket_size)
+        report = _bucket_skew_report(
+            idx.filter(F.col("_brn") == 1), banded.filter(F.col("_brn") == 1), cap
+        )
         if skew_sink is not None:
             skew_sink.append(report)
         else:
@@ -1053,17 +1028,42 @@ def minhash_incremental_dedup(
     return survivors
 
 
+# Optimized-plan nodes whose size Catalyst cannot know: RDD-backed
+# relations (createDataFrame over local data or an RDD) and every
+# Python evaluation node (UDFs, mapInPandas/mapInArrow, grouped maps).
+_UNSIZED_NODES = ("LogicalRDD", "Python", "InPandas", "InArrow")
+
+
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's ``sizeInBytes`` estimate for the optimized plan — free
-    (no job). None when the estimate is unavailable OR is the
-    "unknown" sentinel region (Catalyst assigns ``Long.MaxValue``-ish
-    defaults to plans it cannot size, e.g. through Python maps): an
-    unknown size must never trigger a size-gated code path."""
+    (no job). None when the estimate rests on unknown statistics: an
+    unknown size must never trigger a size-gated code path.
+
+    Unknown is detected at the plan's LEAVES, not by the magnitude of
+    the derived estimate: Catalyst gives an unsizable leaf the
+    ``spark.sql.defaultSizeInBytes`` sentinel (``Long.MaxValue``), and
+    a projection scales that by its row-width ratio, so a narrow select
+    over a wide RDD-backed frame lands on a plausible-looking number.
+    Any RDD-backed or Python-evaluation node, or any leaf sized at the
+    sentinel, makes the whole estimate unknown."""
     try:
-        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        plan = df._jdf.queryExecution().optimizedPlan()
+        default = int(
+            str(df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes())
+        )
+        nodes = [plan]
+        while nodes:
+            node = nodes.pop()
+            if any(n in node.getClass().getSimpleName() for n in _UNSIZED_NODES):
+                return None
+            children = node.children()
+            if children.size() == 0 and int(str(node.stats().sizeInBytes())) >= default:
+                return None
+            nodes.extend(children.apply(i) for i in range(children.size()))
+        est = int(str(plan.stats().sizeInBytes()))
     except Exception:  # noqa: BLE001 — best-effort; caller treats as unknown
         return None
-    return est if 0 <= est < (1 << 60) else None
+    return est if 0 <= est < default else None
 
 
 def _pair_grain_decision(

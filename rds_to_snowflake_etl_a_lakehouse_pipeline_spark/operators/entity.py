@@ -56,7 +56,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
-from .dedup import connected_components
+from .dedup import _bucket_skew_report, connected_components
 
 __all__ = [
     "normalize_name",
@@ -453,69 +453,6 @@ def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
     clear_layout_pending(spark, table)
 
 
-def er_batch_skew_report(
-    idx_blocks: DataFrame, batch_blocks: DataFrame, max_block_size: int | None
-) -> dict:
-    """Block-skew measurement for ONE probe batch against a standing
-    ER index — the ER member of the r17 skew-telemetry family, with
-    the family's own cap semantics: an over-cap block is SKIPPED
-    outright on both sides (precision-first — merging a
-    non-discriminative block through a representative would collapse
-    distinct entities), so ``n_capped_buckets`` counts hit index
-    blocks whose every member just became invisible to this batch and
-    ``n_capped_batch_buckets`` the batch-side blocks likewise dropped.
-    Stat names deliberately match the minhash/hamming log schema
-    ("bucket" = block here) so ``table_health``'s shared aggregation
-    serves all three families. Sized over only the blocks THIS batch
-    hits — O(batch), never O(index) — in one fused agg.
-
-    ``idx_blocks`` / ``batch_blocks`` carry a ``_blk`` column and one
-    row per (record, block key), UNCAPPED (the report measures what
-    the cap is about to drop)."""
-    hit = batch_blocks.select("_blk").distinct()
-    idx_sizes = (
-        idx_blocks.join(hit, "_blk")
-        .groupBy("_blk")
-        .agg(F.count("*").alias("n"))
-        .withColumn("_side", F.lit("index"))
-    )
-    batch_sizes = (
-        batch_blocks.groupBy("_blk")
-        .agg(F.count("*").alias("n"))
-        .withColumn("_side", F.lit("batch"))
-    )
-    cap = max_block_size
-    capv = F.lit(cap if cap is not None else 2**62)
-    is_idx = F.col("_side") == "index"
-    row = idx_sizes.unionByName(batch_sizes).agg(
-        F.coalesce(
-            F.sum(F.when(is_idx, 1).otherwise(0)), F.lit(0)
-        ).alias("n_hit_buckets"),
-        F.coalesce(F.max(F.when(is_idx, F.col("n"))), F.lit(0)).alias(
-            "max_bucket_rows"
-        ),
-        F.coalesce(
-            F.sum(F.when(is_idx, F.col("n") * F.col("n"))), F.lit(0)
-        ).alias("sum_sq_bucket_rows"),
-        F.coalesce(
-            F.sum(F.when(is_idx & (F.col("n") > capv), 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_capped_buckets"),
-        F.coalesce(
-            F.sum(F.when(~is_idx & (F.col("n") > capv), 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_capped_batch_buckets"),
-    ).first()
-    return {
-        "n_hit_buckets": int(row["n_hit_buckets"]),
-        "max_bucket_rows": int(row["max_bucket_rows"]),
-        "sum_sq_bucket_rows": int(row["sum_sq_bucket_rows"]),
-        "n_capped_buckets": int(row["n_capped_buckets"]),
-        "n_capped_batch_buckets": int(row["n_capped_batch_buckets"]),
-        "cap": cap,
-    }
-
-
 def er_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
     """Append probe-batch skew report dict(s) to the
     ``{table}_skew_log`` companion in ONE write job — identical schema
@@ -585,11 +522,15 @@ def er_incremental(
 
     ``max_block_size`` skips oversized blocks on BOTH sides
     (precision-first, same rationale as :func:`er_candidate_pairs`);
-    index block sizing counts only blocks the batch hits, so the guard
-    costs O(batch), not O(index).
+    index block sizing counts only blocks the batch hits, so its window
+    is sized by the batch (the index scan under it still reads every
+    index file).
 
     ``log_skew`` (late r17): per-batch block-skew measurement into the
-    ``{table}_skew_log`` companion (:func:`er_batch_skew_report`) —
+    ``{table}_skew_log`` companion (``dedup._bucket_skew_report``, the
+    stats the MinHash and Hamming indexes log; an over-cap block is
+    skipped outright on both sides, so ``n_capped_buckets`` counts hit
+    index blocks whose every member this batch could not see) —
     defaults ON exactly when ``max_block_size`` is set (uncapped
     probes stay plan-identical). ``skew_sink`` buffers the report dict
     instead of writing (the streaming wrapper batches per-micro-batch
@@ -658,10 +599,13 @@ def er_incremental(
         log_skew = max_block_size is not None
     if log_skew:
         # measured UNCAPPED on both sides (the report records what the
-        # cap is about to drop); the index side already carries _blk
-        report = er_batch_skew_report(
-            idx,
-            _blocked(batch, id_col, text_col, block_key, None),
+        # cap is about to drop), over only the blocks this batch hits;
+        # the index side already carries _blk
+        blocks = _blocked(batch, id_col, text_col, block_key, None)
+        hit = blocks.select("_blk").distinct()
+        report = _bucket_skew_report(
+            idx.join(hit, "_blk").groupBy("_blk").agg(F.count("*").alias("_bsz")),
+            blocks.groupBy("_blk").agg(F.count("*").alias("_bsz")),
             max_block_size,
         )
         if skew_sink is not None:

@@ -478,22 +478,6 @@ def _fp_band_explode(
     ).select("_id", "_ph", "bv.band", "bv.val")
 
 
-def _cap_hot_buckets(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    """Exclude flooded (band, val) buckets from candidate generation —
-    the one flood convention every Hamming path shares (pairs, index
-    probe, within-batch self-join): a capped bucket costs nothing and
-    pairs that ALSO share a cold band still surface. No-op when
-    ``max_bucket_size`` is None."""
-    if max_bucket_size is None:
-        return banded
-    w = Window.partitionBy("band", "val")
-    return (
-        banded.withColumn("_bsz", F.count("*").over(w))
-        .filter(F.col("_bsz") <= max_bucket_size)
-        .drop("_bsz")
-    )
-
-
 def hamming_hash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1231,63 +1215,6 @@ def hamming_reband_index(spark, table: str, band_bits: int) -> None:
     clear_layout_pending(spark, table)
 
 
-def hamming_batch_skew_report(
-    idx: DataFrame, banded: DataFrame, max_bucket_size: int | None
-) -> dict:
-    """Bucket-skew measurement for ONE probe batch against a standing
-    Hamming index — the media twin of ``dedup.minhash_batch_skew_report``
-    with the same stat names (so the health aggregation is shared) but
-    the family's harsher cap semantics: an over-cap (band, val) bucket
-    is EXCLUDED from candidate generation entirely (no star
-    representative), so ``n_capped_buckets`` counts index buckets whose
-    EVERY member just became invisible to this probe (a pair must
-    share a cold band to surface), and ``n_capped_batch_buckets`` the
-    within-batch buckets likewise dropped. Sized over only the keys
-    THIS batch hits — O(batch), never O(index) — in one fused agg."""
-    hit = banded.select("band", "val").distinct()
-    idx_sizes = (
-        idx.join(hit, ["band", "val"])
-        .groupBy("band", "val")
-        .agg(F.count("*").alias("n"))
-        .withColumn("_side", F.lit("index"))
-    )
-    batch_sizes = (
-        banded.groupBy("band", "val")
-        .agg(F.count("*").alias("n"))
-        .withColumn("_side", F.lit("batch"))
-    )
-    cap = max_bucket_size
-    capv = F.lit(cap if cap is not None else 2**62)
-    is_idx = F.col("_side") == "index"
-    row = idx_sizes.unionByName(batch_sizes).agg(
-        F.coalesce(
-            F.sum(F.when(is_idx, 1).otherwise(0)), F.lit(0)
-        ).alias("n_hit_buckets"),
-        F.coalesce(F.max(F.when(is_idx, F.col("n"))), F.lit(0)).alias(
-            "max_bucket_rows"
-        ),
-        F.coalesce(
-            F.sum(F.when(is_idx, F.col("n") * F.col("n"))), F.lit(0)
-        ).alias("sum_sq_bucket_rows"),
-        F.coalesce(
-            F.sum(F.when(is_idx & (F.col("n") > capv), 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_capped_buckets"),
-        F.coalesce(
-            F.sum(F.when(~is_idx & (F.col("n") > capv), 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_capped_batch_buckets"),
-    ).first()
-    return {
-        "n_hit_buckets": int(row["n_hit_buckets"]),
-        "max_bucket_rows": int(row["max_bucket_rows"]),
-        "sum_sq_bucket_rows": int(row["sum_sq_bucket_rows"]),
-        "n_capped_buckets": int(row["n_capped_buckets"]),
-        "n_capped_batch_buckets": int(row["n_capped_batch_buckets"]),
-        "cap": cap,
-    }
-
-
 def hamming_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
     """Append probe-batch skew report dict(s) to the
     ``{table}_skew_log`` companion in ONE write job — identical
@@ -1322,17 +1249,10 @@ def _hamming_probe_pairs(
     idx: DataFrame,
     id_col: str,
     max_hamming: int,
-    max_bucket_size: int | None,
 ) -> DataFrame:
     """(new_id, corpus_id, hamming) candidates from the banded batch
-    against a banded index. ``max_bucket_size`` mirrors
-    :func:`hamming_hash_pairs`' flood dial: a hot (band, val) index
-    bucket (boilerplate thumbnails, silence clips) is EXCLUDED from
-    candidate generation — sized over only the buckets the batch hits,
-    so the guard costs O(batch), never O(index)."""
-    if max_bucket_size is not None:
-        hit = banded_new.select("band", "val").distinct()
-        idx = _cap_hot_buckets(idx.join(hit, ["band", "val"]), max_bucket_size)
+    against the banded index rows ``idx`` — the whole index, or a
+    capped caller's cold slice of it."""
     return (
         banded_new.alias("n")
         .join(
@@ -1365,15 +1285,26 @@ def hamming_index_probe(
     ``max_hamming`` of an indexed one. Only the batch is banded and
     shuffled; the corpus streams out of its bucketed table into the
     (band, val) join. Recall is total for ``max_hamming < 64 //
-    band_bits`` by pigeonhole (see :func:`hamming_hash_pairs`)."""
+    band_bits`` by pigeonhole (see :func:`hamming_hash_pairs`).
+
+    ``max_bucket_size`` mirrors :func:`hamming_hash_pairs`' flood dial:
+    a hot (band, val) index bucket (boilerplate thumbnails, silence
+    clips) is EXCLUDED from candidate generation. Sizing runs over only
+    the buckets the batch hits (``dedup._index_hit_slice``, the helper
+    and cap rule :func:`hamming_incremental_dedup` pins); this probe
+    stays lazy, so each action on its result scans the index once."""
     from ..sources.io import check_table_meta
+    from .dedup import _index_hit_slice
 
     meta = check_table_meta(spark, table, kind="hamming_fp")
     band_bits = int(meta["band_bits"])
     banded = _fp_band_explode(new_df, id_col, hash_col, band_bits)
-    return _hamming_probe_pairs(
-        banded, spark.table(table), id_col, max_hamming, max_bucket_size
-    )
+    idx = spark.table(table)
+    if max_bucket_size is not None:
+        idx = _index_hit_slice(
+            idx, banded, ["band", "val"], id_col, max_bucket_size
+        ).filter(F.col("_bsz") <= max_bucket_size)
+    return _hamming_probe_pairs(banded, idx, id_col, max_hamming)
 
 
 def hamming_incremental_dedup(
@@ -1395,7 +1326,7 @@ def hamming_incremental_dedup(
     (``append=True``) add the survivors' banded fingerprints to the
     index — the media twin of ``dedup.minhash_incremental_dedup``, with
     the same batch-cost contract: each batch pays its own fingerprints
-    plus one bucketed probe join, never a corpus re-scan.
+    plus one read of the bucketed index, never a corpus re-decode.
 
     Rows whose ``hash_col`` is NULL (no real tier decoded the blob)
     SURVIVE but are not indexed: an undecodable payload can neither be
@@ -1415,19 +1346,40 @@ def hamming_incremental_dedup(
     reuse pinned blocks instead of re-running the caller's upstream
     decode/FFT ``mapInPandas``.
 
+    Cost of a capped batch: the index is read ONCE. The banded batch is
+    pinned with its bucket sizes (``dedup._bucket_sizes``) and the
+    index's hit slice with its own (``dedup._index_hit_slice``: the
+    rows in the buckets the batch hits, trimmed to cold rows plus one
+    sized row per hot bucket); the probe, the within-batch cap and the
+    skew report all read those pins. The scan behind the slice still
+    opens every index file, so the per-batch floor grows with the
+    index's file count; compaction bounds that. An uncapped call pins
+    only the batch and reads the index once, in the probe join.
+
     ``log_skew`` (late r17): per-batch bucket-skew measurement into
-    the ``{table}_skew_log`` companion
-    (:func:`hamming_batch_skew_report`) — defaults ON exactly when a
-    probe cap is set (uncapped probes stay plan-identical to the
-    benched body). ``skew_sink`` buffers the report dict instead of
-    writing (the streaming wrapper batches per-micro-batch reports
-    into one post-drain flush)."""
+    the ``{table}_skew_log`` companion (``dedup._bucket_skew_report``:
+    one aggregate over the pins' one-row-per-bucket rows, no join, no
+    groupBy, no extra index read; ``n_capped_buckets`` counts hit index
+    buckets whose every member this probe just excluded) — defaults ON
+    exactly when a probe cap is set (uncapped probes keep their plan;
+    an explicit ``log_skew=True`` takes the pinned path). ``skew_sink``
+    buffers the report dict instead of writing (the streaming wrapper
+    batches per-micro-batch reports into one post-drain flush)."""
     from ..sources.io import check_table_meta, write_table
-    from .dedup import _materialize
+    from .dedup import (
+        _bucket_sizes,
+        _bucket_skew_report,
+        _index_hit_slice,
+        _materialize,
+    )
 
     meta = check_table_meta(spark, table, kind="hamming_fp")
     band_bits = int(meta["band_bits"])
     n_buckets = int(meta["n_buckets"])
+    cap = max_bucket_size
+    if log_skew is None:
+        log_skew = cap is not None
+    keys = ["band", "val"]
 
     # ONE materialization of the batch itself: the (id, fp) projection,
     # the within-batch self-join, the survivor anti-join, and the
@@ -1439,11 +1391,21 @@ def hamming_incremental_dedup(
         F.col(hash_col).isNotNull()
     )
     banded = _fp_band_explode(fps, id_col, hash_col, band_bits)
-    vs_corpus = _hamming_probe_pairs(
-        banded, spark.table(table), id_col, max_hamming, max_bucket_size
-    ).select(F.col("new_id").alias(id_col))
-
-    within_banded = _cap_hot_buckets(banded, max_bucket_size)
+    idx = spark.table(table)
+    if cap is not None or log_skew:
+        # One pin per side, one index read per batch: the banded batch
+        # with its bucket sizes, and the index's hit slice with its own.
+        # The probe, the within-batch cap and the skew report read these.
+        banded = _materialize(_bucket_sizes(banded, keys, "_id"), storage)
+        idx = _materialize(_index_hit_slice(idx, banded, keys, id_col, cap), storage)
+    cold_idx, within_banded = idx, banded
+    if cap is not None:
+        # a hot bucket is excluded from candidate generation on both sides
+        cold_idx = idx.filter(F.col("_bsz") <= cap)
+        within_banded = banded.filter(F.col("_bsz") <= cap)
+    vs_corpus = _hamming_probe_pairs(banded, cold_idx, id_col, max_hamming).select(
+        F.col("new_id").alias(id_col)
+    )
     within = (
         within_banded.alias("a")
         .join(
@@ -1466,11 +1428,11 @@ def hamming_incremental_dedup(
     # pins the same way)
     survivors = _materialize(new_df.join(losers, id_col, "left_anti"), storage)
 
-    if log_skew is None:
-        log_skew = max_bucket_size is not None
     if log_skew:
-        report = hamming_batch_skew_report(
-            spark.table(table), banded, max_bucket_size
+        report = _bucket_skew_report(
+            idx.filter(F.col("_brn") == 1),
+            banded.filter(F.col("_brn") == 1),
+            cap,
         )
         if skew_sink is not None:
             skew_sink.append(report)

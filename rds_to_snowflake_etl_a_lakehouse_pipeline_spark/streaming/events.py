@@ -350,9 +350,11 @@ def stream_corpus_dedup(
     ``operators.dedup.minhash_incremental_dedup``; survivors' signatures
     append to the index so later batches dedup against everything seen.
     The streaming form of a standing ingest pipeline — each batch pays
-    its own signatures plus one bucketed probe join, never a corpus
-    re-scan. Signature parameters must match the
-    ``minhash_build_index`` call that created ``table``.
+    its own signatures plus ONE read of the bucketed index, capped or
+    not (the per-batch cost is spelled out on
+    ``minhash_incremental_dedup``), never a corpus re-shingle. Signature
+    parameters must match the ``minhash_build_index`` call that created
+    ``table``.
 
     Unlike exact ``dedup_events`` (state-store keyed dropDuplicates),
     the dedup criterion here is NEAR-duplication — state lives in the
@@ -369,9 +371,10 @@ def stream_corpus_dedup(
     ON when ``max_bucket_size`` is set, like the batch API — are
     BUFFERED and flushed to the ``{table}_skew_log`` companion in ONE
     post-drain write, the same batching contract as
-    ``stream_ivf_append``'s drift log (the bench's q22 pins the
-    uninstrumented per-batch body with ``log_skew=False``, the q11
-    crc32 precedent). The flush is epoch-guarded exactly like the IVF
+    ``stream_ivf_append``'s drift log. Each report is one aggregate job
+    over the batch's two pins (no join, no groupBy, no index read);
+    the bench's q22 still passes ``log_skew=False`` so it keeps
+    timing the same per-batch body as earlier rounds. The flush is epoch-guarded exactly like the IVF
     drift flush (:func:`_flush_ivf_drift_reports`): a
     ``minhash_build_index`` rebuild landing between the last
     micro-batch and the flush re-derives every bucket key AND clears
@@ -455,7 +458,9 @@ def stream_media_dedup(
     :func:`stream_corpus_dedup`, with the same state story: state
     lives in a bucketed catalog table, not the streaming state store,
     so it survives restarts and is queryable/compactable like any
-    table (``maintenance.py`` sweeps it like the MinHash index).
+    table (``maintenance.py`` sweeps it like the MinHash index). Each
+    batch pays its fingerprints plus ONE read of the bucketed index,
+    capped or not (see ``hamming_incremental_dedup``).
 
     The stream carries the HASH column (compute it in the stream
     transform via ``image_perceptual_hash`` / ``audio_spectral_hash``
@@ -465,7 +470,8 @@ def stream_media_dedup(
     mode, as on the MinHash twin.
 
     ``log_skew`` (late r17): per-batch bucket-skew reports — defaulted
-    ON when ``max_bucket_size`` is set, like the batch API — are
+    ON when ``max_bucket_size`` is set, like the batch API; one
+    aggregate job over the batch's pins, no index read — are
     BUFFERED and flushed to the ``{table}_skew_log`` companion in ONE
     post-drain write, epoch-guarded exactly like
     :func:`_flush_minhash_skew_reports`: a ``hamming_index_build``

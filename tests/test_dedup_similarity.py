@@ -566,6 +566,34 @@ def test_minhash_pair_grain_narrow_matches_wide(spark):
         _pair_grain_decision(df, "sideways", 1)
 
 
+def test_plan_size_bytes_unknown_through_narrow_projection(spark, tmp_path):
+    """Unknown statistics are detected at the plan's leaves: Catalyst
+    scales an RDD-backed leaf's ``Long.MaxValue`` sentinel by a
+    projection's row-width ratio, so a 2-column select over a
+    60-column frame derives an estimate below any magnitude cutoff.
+    It must still read as unknown (and keep ``pair_grain="auto"``
+    wide), while a file scan keeps its real estimate."""
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
+        _pair_grain_decision,
+        _plan_size_bytes,
+    )
+
+    cols = ", ".join(f"c{i} bigint" for i in range(60))
+    rdd = spark.sparkContext.parallelize([tuple(range(60))] * 3)
+    wide = spark.createDataFrame(rdd, cols)
+    narrow = wide.select(
+        F.col("c0").alias("doc_id"), F.col("c1").cast("string").alias("text")
+    )
+    assert _plan_size_bytes(wide) is None
+    assert _plan_size_bytes(narrow) is None
+    assert _pair_grain_decision(narrow, "auto", 1) == "wide"
+
+    path = str(tmp_path / "scan")
+    spark.range(100).write.parquet(path)
+    est = _plan_size_bytes(spark.read.parquet(path).select("id"))
+    assert est is not None and est > 0
+
+
 @pytest.mark.slow
 def test_storage_persist_matches_checkpoint(spark):
     """storage="persist" (the preemptible-cluster durability knob:
