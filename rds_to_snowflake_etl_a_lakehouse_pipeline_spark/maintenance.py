@@ -147,19 +147,56 @@ def _skew_log_health(spark: SparkSession, table: str, rep: dict) -> None:
 
 
 def _layout_pending_health(spark: SparkSession, table: str, rep: dict) -> None:
-    """Surface an interrupted layout rewrite (index build / reband /
-    reblock crashed between its data swap and its contract commit —
-    see ``io.mark_layout_pending``). While pending, every probe
-    refuses via ``check_table_meta``, so the index is effectively DOWN
-    until the rewrite converges; the sweep resumes the recorded verb
-    when it is replayable (the integer-target rebands) and otherwise
-    surfaces the marker for the operator (builds need the corpus,
-    er reblocks need the caller's key expression)."""
+    """Surface an interrupted layout rewrite (``io.rewrite_layout``
+    crashed between its data swap and its contract commit) on any
+    family the rewrite serves. While pending, every probe refuses via
+    ``check_table_meta``, so the index is effectively DOWN until the
+    rewrite converges; the sweep resumes the recorded verb when it is
+    replayable (:func:`_resume_layout`) and otherwise surfaces the
+    marker for the operator (builds need the corpus, er reblocks need
+    the caller's key expression)."""
     from .sources.io import get_layout_pending
 
     pending = get_layout_pending(spark, table)
     if pending is not None:
         rep["layout_pending"] = pending
+
+
+def _rewrite_distinct_state(spark: SparkSession, table: str) -> None:
+    """The distinct-state compaction: the same guarded rewrite as
+    ``io.compact_index_table``, bucketed on every column by the
+    recorded ``state_buckets`` (the tuple IS the key)."""
+    from .sources.io import recorded_contract, rewrite_layout
+
+    rows = spark.table(table).distinct().localCheckpoint(eager=True)
+    rewrite_layout(
+        spark, table, rows, "distinct_state_rewrite",
+        recorded_contract(spark, table),
+    )
+
+
+def _resume_layout(spark: SparkSession, table: str, pending: dict) -> bool:
+    """Re-run an interrupted layout rewrite when its verb is replayable
+    from the marker alone — the integer-target rebands and the
+    layout-preserving compactions; False for the rest (builds need the
+    corpus, er reblocks the caller's key expression)."""
+    from .operators.dedup import minhash_reband_index
+    from .operators.entity import er_compact_index
+    from .operators.multimodal import hamming_reband_index
+    from .sources.io import compact_index_table
+
+    verbs = {
+        "minhash_reband_index": lambda t: minhash_reband_index(spark, table, int(t)),
+        "hamming_reband_index": lambda t: hamming_reband_index(spark, table, int(t)),
+        "compact_index_table": lambda t: compact_index_table(spark, table),
+        "er_compact_index": lambda t: er_compact_index(spark, table),
+        "distinct_state_rewrite": lambda t: _rewrite_distinct_state(spark, table),
+    }
+    resume = verbs.get(pending["verb"])
+    if resume is None:
+        return False
+    resume(pending["target"])
+    return True
 
 
 def table_health(spark: SparkSession, table: str, family: str) -> dict:
@@ -169,9 +206,9 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
 
     if family in ("minhash", "span", "ivf", "hamming_fp", "exact"):
         rep = index_table_health(spark, table, MAX_FILES_PER_BUCKET)
+        _layout_pending_health(spark, table, rep)
         if family in ("minhash", "hamming_fp"):
             _skew_log_health(spark, table, rep)
-            _layout_pending_health(spark, table, rep)
         if family == "ivf" and spark.catalog.tableExists(f"{table}_drift_stats"):
             # the build-time quantizer baseline; per-append drift ratios
             # are measured (and reported) by ivf_append_index itself
@@ -315,12 +352,14 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
         df = spark.table(table)
         n_buckets = int(meta.get("state_buckets", 0)) or 1
         n_files = len(df.inputFiles())
-        return {
+        rep = {
             "n_buckets": n_buckets,
             "n_files": n_files,
             "files_per_bucket": round(n_files / n_buckets, 2),
             "compact_recommended": n_files / n_buckets > MAX_FILES_PER_BUCKET,
         }
+        _layout_pending_health(spark, table, rep)
+        return rep
     if family == "batch_sink":
         live = _batch_partition_ids(spark, table)
         pending = _pending_fold(spark, table)
@@ -663,62 +702,15 @@ def run_maintenance(
             merge_acted = False
             resumed_layout = False
             if rep.get("layout_pending"):
-                # an index build/reband/reblock crashed between its
-                # data swap and its contract commit: probes refuse via
+                # a guarded layout rewrite crashed between its data
+                # swap and its contract commit: probes refuse via
                 # check_table_meta until the rewrite converges, so
                 # this outranks every other verb for these families.
-                # The integer-target rebands are replayable from the
-                # marker (they re-derive from state surviving both
-                # layouts); builds need the corpus and er reblocks the
-                # caller's key expression, so those only get the note.
+                # Replayable verbs re-derive from state surviving both
+                # layouts; the rest only get the note.
                 p = rep["layout_pending"]
-                if p["verb"] == "minhash_reband_index":
-                    from .operators.dedup import minhash_reband_index
-
-                    minhash_reband_index(spark, name, int(p["target"]))
-                    acts.append("minhash_reband_index (resumed)")
-                    resumed_layout = True
-                elif p["verb"] == "hamming_reband_index":
-                    from .operators.multimodal import hamming_reband_index
-
-                    hamming_reband_index(spark, name, int(p["target"]))
-                    acts.append("hamming_reband_index (resumed)")
-                    resumed_layout = True
-                elif p["verb"] == "compact_index_table":
-                    # compaction changes no layout — the re-run
-                    # restores the contract from the marker snapshot
-                    from .sources.io import compact_index_table
-
-                    compact_index_table(spark, name)
-                    acts.append("compact_index_table (resumed)")
-                    resumed_layout = True
-                elif p["verb"] == "er_compact_index":
-                    from .operators.entity import er_compact_index
-
-                    er_compact_index(spark, name)
-                    acts.append("er_compact_index (resumed)")
-                    resumed_layout = True
-                elif p["verb"] == "distinct_state_rewrite":
-                    from .sources.io import (
-                        clear_layout_pending,
-                        set_table_meta,
-                        write_table,
-                    )
-
-                    snap = p["snapshot"]
-                    n = int(snap.get("state_buckets", 0))
-                    rows = (
-                        spark.table(name)
-                        .distinct()
-                        .localCheckpoint(eager=True)
-                    )
-                    write_table(
-                        rows, name,
-                        bucket_by=(n, rows.columns) if n else None,
-                    )
-                    set_table_meta(spark, name, **snap)
-                    clear_layout_pending(spark, name)
-                    acts.append("distinct_state_rewrite (resumed)")
+                if _resume_layout(spark, name, p):
+                    acts.append(f"{p['verb']} (resumed)")
                     resumed_layout = True
                 else:
                     acts.append(
@@ -871,33 +863,9 @@ def run_maintenance(
 
                     compact_index_table(spark, name)
                     acts.append("compact_index_table")
-            elif family == "distinct_state":
-                # same stage-and-swap as compact_index_table, with the
-                # bucket spec from the distinct-state contract (bucketed
-                # on ALL columns — the tuple IS the key). Marker-guarded
-                # like every swap-then-meta rewrite: a crash between
-                # the swap and the meta re-record would leave a
-                # contract-less table the next sweep can't classify
-                from .sources.io import (
-                    clear_layout_pending,
-                    get_table_meta,
-                    mark_layout_pending,
-                    set_table_meta,
-                    write_table,
-                )
-
-                meta = get_table_meta(spark, name)
-                n = int(meta.get("state_buckets", 0))
-                rows = spark.table(name).distinct().localCheckpoint(eager=True)
-                mark_layout_pending(
-                    spark, name, "distinct_state_rewrite", "", snapshot=meta
-                )
-                write_table(
-                    rows, name,
-                    bucket_by=(n, rows.columns) if n else None,
-                )
-                set_table_meta(spark, name, **meta)
-                clear_layout_pending(spark, name)
+            elif family == "distinct_state" and not resumed_layout:
+                # a resumed rewrite just compacted the table
+                _rewrite_distinct_state(spark, name)
                 applied[name] = "distinct_state_rewrite"
             elif family == "er":
                 # compose: a table can be flagged for relabel/file

@@ -176,8 +176,10 @@ def exact_build_index(
     would silently fingerprint different content and nothing would
     ever match. (The digest, not the raw list: Spark's property
     redaction masks read-back values matching ``(?i)url`` etc., and
-    'url' is exactly the column a frontier index keys on.)"""
-    from ..sources.io import set_table_meta, write_table
+    'url' is exactly the column a frontier index keys on.) Written
+    through ``io.rewrite_layout``, so a crash before the contract
+    commit leaves probes refusing instead of validating nothing."""
+    from ..sources.io import rewrite_layout
 
     fps = df.select(
         _exact_fingerprint(content_cols).alias("fp"),
@@ -185,14 +187,12 @@ def exact_build_index(
         # exact_incremental_dedup's batch_id); build rows carry NULL
         F.lit(None).cast("bigint").alias("_src_batch"),
     ).distinct()
-    write_table(fps, table, bucket_by=(n_buckets, ["fp"]))
-    set_table_meta(
-        df.sparkSession,
-        table,
-        kind="exact",
-        n_buckets=n_buckets,
-        bucket_cols="fp",
-        content_sig=_content_cols_sig(content_cols),
+    rewrite_layout(
+        df.sparkSession, table, fps, "exact_build_index",
+        {
+            "kind": "exact", "n_buckets": n_buckets, "bucket_cols": "fp",
+            "content_sig": _content_cols_sig(content_cols),
+        },
     )
 
 
@@ -506,56 +506,27 @@ def minhash_build_index(
     Signature parameters + ``n_buckets`` are recorded as table
     properties; probes/appends validate against them (a mismatched
     ``shingle_n``/``num_hashes`` silently estimates garbage jaccard).
+    The write goes through ``io.rewrite_layout``, which also advances
+    ``skew_epoch`` and clears the skew log (bucket keys re-derive from
+    the fresh corpus).
     """
-    from ..sources.io import (
-        clear_layout_pending,
-        get_table_meta,
-        mark_layout_pending,
-        set_table_meta,
-        write_table,
-    )
+    from ..sources.io import rewrite_layout
 
-    spark = df.sparkSession
-    # monotone rebuild counter, the minhash twin of the IVF centroid
-    # fingerprint: buffered skew reports (streaming) flush only while
-    # the epoch they were measured under is still current — a rebuild
-    # landing mid-drain re-derives every bucket key, so reports against
-    # the retired corpus must not re-arm cap_truncating on the fresh log
-    prev_epoch = 0
-    if spark.catalog.tableExists(table):
-        prev_epoch = int(get_table_meta(spark, table).get("skew_epoch", 0) or 0)
     banded = _band_explode(
         _signature_table(df, id_col, text_col, num_hashes, shingle_n, impl),
         bands,
         num_hashes // bands,
     ).select(F.col("_id").alias(id_col), F.col("_sig").alias("sig"), "band", "bucket")
-    # fail-loud window: a crash between the data swap and the contract
-    # commit below would leave new-layout data under the old recorded
-    # parameters — probes would silently join disjoint bucket spaces
-    mark_layout_pending(
-        spark, table, "minhash_build_index", str(bands),
-        snapshot={
+    rewrite_layout(
+        df.sparkSession, table, banded, "minhash_build_index",
+        {
             "kind": "minhash", "num_hashes": num_hashes, "bands": bands,
             "shingle_n": shingle_n, "n_buckets": n_buckets,
+            "bucket_cols": "bucket",
         },
+        target=str(bands),
+        rotate_skew=True,
     )
-    write_table(banded, table, bucket_by=(n_buckets, ["bucket"]))
-    # a rebuild invalidates the per-append skew history (bucket keys
-    # re-derive from the fresh corpus) — clear it like the IVF family
-    # clears its drift log on every matrix rotation
-    spark.sql(f"DROP TABLE IF EXISTS {_skew_log_table(table)}")
-    set_table_meta(
-        spark,
-        table,
-        kind="minhash",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        n_buckets=n_buckets,
-        bucket_cols="bucket",
-        skew_epoch=prev_epoch + 1,
-    )
-    clear_layout_pending(spark, table)
 
 
 def minhash_reband_index(spark, table: str, bands: int) -> None:
@@ -587,34 +558,17 @@ def minhash_reband_index(spark, table: str, bands: int) -> None:
     streaming skew reports measured under the old banding are dropped
     at flush, never re-arming ``cap_truncating`` with stale keys.
 
-    Crash-safe via the ``{table}_retune_pending`` marker
-    (``io.mark_layout_pending``): a crash between the data swap and
-    the contract commit leaves the marker in place, every probe
-    refuses (instead of silently joining disjoint bucket spaces), and
-    re-running the verb converges from ANY window — the band-0 slice
-    it re-derives from carries the full signature under both the old
-    and the new banding. ``run_maintenance(apply=True)`` resumes the
-    recorded target automatically.
+    Crash-safe through ``io.rewrite_layout``: a crash between the data
+    swap and the contract commit leaves the marker in place, every
+    probe refuses (instead of silently joining disjoint bucket
+    spaces), and re-running the verb converges from ANY window — the
+    band-0 slice it re-derives from carries the full signature under
+    both the old and the new banding. ``run_maintenance(apply=True)``
+    resumes the recorded target automatically.
     """
-    from ..sources.io import (
-        clear_layout_pending,
-        get_table_meta,
-        mark_layout_pending,
-        set_table_meta,
-        write_table,
-    )
+    from ..sources.io import recorded_contract, rewrite_layout
 
-    from ..sources.io import get_layout_pending
-
-    meta = get_table_meta(spark, table)
-    if not meta:
-        # a previous rewrite crashed after its swap destroyed the
-        # table's properties: restore the invariant contract from the
-        # marker's snapshot (the re-run re-derives the DATA from the
-        # band-0 slice either way)
-        pending = get_layout_pending(spark, table)
-        if pending is not None:
-            meta = pending["snapshot"]
+    meta = recorded_contract(spark, table)
     if meta.get("kind") != "minhash":
         raise ValueError(
             f"{table} is not a minhash index (kind={meta.get('kind')!r})"
@@ -624,7 +578,6 @@ def minhash_reband_index(spark, table: str, bands: int) -> None:
         raise ValueError(
             f"bands={bands} must divide num_hashes={num_hashes}"
         )
-    n_buckets = int(meta["n_buckets"])
     idx = spark.table(table)
     id_col = next(
         c for c in idx.columns if c not in ("sig", "band", "bucket")
@@ -638,27 +591,12 @@ def minhash_reband_index(spark, table: str, bands: int) -> None:
         "band",
         "bucket",
     )
-    mark_layout_pending(
-        spark, table, "minhash_reband_index", str(bands), snapshot=meta
+    rewrite_layout(
+        spark, table, banded, "minhash_reband_index",
+        {**meta, "bands": bands, "bucket_cols": "bucket"},
+        target=str(bands),
+        rotate_skew=True,
     )
-    write_table(banded, table, bucket_by=(n_buckets, ["bucket"]))
-    spark.sql(f"DROP TABLE IF EXISTS {_skew_log_table(table)}")
-    set_table_meta(
-        spark,
-        table,
-        kind="minhash",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=int(meta["shingle_n"]),
-        n_buckets=n_buckets,
-        bucket_cols="bucket",
-        skew_epoch=int(meta.get("skew_epoch", 0) or 0) + 1,
-    )
-    clear_layout_pending(spark, table)
-
-
-def _skew_log_table(table: str) -> str:
-    return f"{table}_skew_log"
 
 
 def _bucket_skew_report(
@@ -679,8 +617,8 @@ def _bucket_skew_report(
     generation). The batch-side count matters in the ``append=False``
     steady state, where survivors never reach the index and the
     index-side count alone would sit at zero. One aggregate job; the
-    caller persists the dict (``*_append_skew_reports``) or buffers it
-    (the streaming wrappers flush once per drain)."""
+    caller persists the dict (:func:`append_skew_reports`) or buffers
+    it (the streaming wrappers flush once per drain)."""
     sides = idx_sizes.select("_bsz", F.lit(True).alias("_idx")).unionByName(
         batch_sizes.select("_bsz", F.lit(False).alias("_idx"))
     )
@@ -699,13 +637,14 @@ def _bucket_skew_report(
     return report
 
 
-def minhash_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
-    """Append probe-batch skew report dict(s) to the
-    ``{table}_skew_log`` companion in ONE write job — same batching
-    contract as ``similarity.ivf_append_drift_reports`` (streaming
-    buffers per-batch reports and flushes post-drain; the log is
-    advisory, so a crash losing a buffer only delays the health flag
-    until later batches re-measure)."""
+def append_skew_reports(spark, table: str, reports: list[dict]) -> None:
+    """Append :func:`_bucket_skew_report` dict(s) to the MinHash,
+    Hamming or ER index's ``{table}_skew_log`` companion in ONE write
+    job — same batching contract as
+    ``similarity.ivf_append_drift_reports`` (streaming buffers
+    per-batch reports and flushes post-drain; the log is advisory, so
+    a crash losing a buffer only delays the health flag until later
+    batches re-measure)."""
     if not reports:
         return
     from ..sources.io import write_table
@@ -726,7 +665,7 @@ def minhash_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
         "sum_sq_bucket_rows bigint, n_capped_buckets bigint, "
         "n_capped_batch_buckets bigint, cap bigint",
     ).withColumn("logged_at", F.current_timestamp())
-    write_table(log_row, _skew_log_table(table), mode="append")
+    write_table(log_row, f"{table}_skew_log", mode="append")
 
 
 def _bucket_sizes(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
@@ -1012,7 +951,7 @@ def minhash_incremental_dedup(
         if skew_sink is not None:
             skew_sink.append(report)
         else:
-            minhash_append_skew_reports(spark, table, [report])
+            append_skew_reports(spark, table, [report])
 
     if append:
         from ..sources.io import write_table
@@ -2461,9 +2400,10 @@ def span_build_index(
     ``k`` and ``n_buckets`` are recorded as table properties
     (:func:`~..sources.io.set_table_meta`); probes and appends validate
     against them — a silent ``k`` mismatch would never match any gram
-    and pass everything through undeduped.
+    and pass everything through undeduped. Written through
+    ``io.rewrite_layout`` (fail-loud if it crashes before the commit).
     """
-    from ..sources.io import set_table_meta, write_table
+    from ..sources.io import rewrite_layout
 
     # _src_batch records which STREAMING batch first contributed a
     # fingerprint (NULL for the base corpus): a crash-replayed batch
@@ -2475,10 +2415,10 @@ def span_build_index(
         .distinct()
         .withColumn("_src_batch", F.lit(None).cast("bigint"))
     )
-    write_table(fps, table, bucket_by=(n_buckets, ["_h"]))
-    set_table_meta(
-        df.sparkSession, table, kind="span", k=k, n_buckets=n_buckets,
-        bucket_cols="_h",
+    rewrite_layout(
+        df.sparkSession, table, fps, "span_build_index",
+        {"kind": "span", "k": k, "n_buckets": n_buckets, "bucket_cols": "_h"},
+        target=str(k),
     )
 
 

@@ -56,7 +56,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
-from .dedup import _bucket_skew_report, connected_components
+from .dedup import _bucket_skew_report, append_skew_reports, connected_components
 
 __all__ = [
     "normalize_name",
@@ -323,19 +323,12 @@ def er_build_index(
     ``block_key`` expression must be reused verbatim on every probe
     and append (it defines the join layout). ``n_buckets`` is recorded
     as a table property; appends default from and validate against it
-    (:func:`~..sources.io.check_table_meta`)."""
-    from ..sources.io import set_table_meta, write_table
+    (:func:`~..sources.io.check_table_meta`). Written through
+    ``io.rewrite_layout``: a crash before the contract commit leaves
+    probes refusing, and a rebuild advances ``skew_epoch`` and clears
+    the skew log (every block key re-derives from the new corpus)."""
+    from ..sources.io import rewrite_layout
 
-    from ..sources.io import (
-        clear_layout_pending,
-        get_table_meta,
-        mark_layout_pending,
-    )
-
-    spark = resolved.sparkSession
-    prev_epoch = 0
-    if spark.catalog.tableExists(table):
-        prev_epoch = int(get_table_meta(spark, table).get("skew_epoch", 0) or 0)
     bk = F.col(block_key) if isinstance(block_key, str) else block_key
     rows = resolved.select(
         F.col(id_col).alias("id"),
@@ -345,29 +338,13 @@ def er_build_index(
     )
     if isinstance(rows.schema["_blk"].dataType, ArrayType):
         rows = rows.withColumn("_blk", F.explode("_blk"))
-    # fail-loud window: a crash between the swap and the contract
-    # commit leaves the marker in place and probes refuse (the block
-    # key is caller-owned, so a half-committed rebuild is otherwise
-    # invisible to validation)
-    mark_layout_pending(
-        spark, table, "er_build_index", str(block_key),
-        snapshot={"kind": "er", "n_buckets": n_buckets},
+    rewrite_layout(
+        resolved.sparkSession, table, rows.filter(F.col("_blk").isNotNull()),
+        "er_build_index",
+        {"kind": "er", "n_buckets": n_buckets, "bucket_cols": "_blk"},
+        target=str(block_key),
+        rotate_skew=True,
     )
-    write_table(
-        rows.filter(F.col("_blk").isNotNull()),
-        table,
-        bucket_by=(n_buckets, ["_blk"]),
-    )
-    # a rebuild re-derives every block key from a new corpus — the
-    # skew history is measured against retired blocks; clear it and
-    # rotate the epoch so a mid-drain stream flush drops stale buffers
-    # (the minhash/hamming index contract)
-    spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
-    set_table_meta(
-        spark, table, kind="er", n_buckets=n_buckets,
-        bucket_cols="_blk", skew_epoch=prev_epoch + 1,
-    )
-    clear_layout_pending(spark, table)
 
 
 def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
@@ -398,36 +375,20 @@ def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
     contract stays caller-owned. Rotation bumps ``skew_epoch`` and
     clears the skew log like a rebuild.
 
-    Crash-safe via the ``{table}_retune_pending`` marker
-    (``io.mark_layout_pending``): a crash between the swap and the
-    contract commit leaves the marker, probes refuse instead of
+    Crash-safe through ``io.rewrite_layout``: a crash between the swap
+    and the contract commit leaves the marker, probes refuse instead of
     silently resolving standalone, and re-running the verb converges
     from any window (the stored text survives both layouts). Because
     the key is a Column expression the sweep cannot replay it — the
     sweep surfaces the pending marker as a note; re-run with YOUR key
     to converge."""
-    from ..sources.io import (
-        clear_layout_pending,
-        get_table_meta,
-        mark_layout_pending,
-        set_table_meta,
-        write_table,
-    )
+    from ..sources.io import recorded_contract, rewrite_layout
 
-    from ..sources.io import get_layout_pending
-
-    meta = get_table_meta(spark, table)
-    if not meta:
-        # restore the contract from a crashed rewrite's snapshot (the
-        # swap destroyed the table's properties with the table)
-        pending = get_layout_pending(spark, table)
-        if pending is not None:
-            meta = pending["snapshot"]
+    meta = recorded_contract(spark, table)
     if meta.get("kind") != "er":
         raise ValueError(
             f"{table} is not an er index (kind={meta.get('kind')!r})"
         )
-    n_buckets = int(meta["n_buckets"])
     bk = F.col(block_key) if isinstance(block_key, str) else block_key
     rows = (
         spark.table(table)
@@ -437,49 +398,13 @@ def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
     )
     if isinstance(rows.schema["_blk"].dataType, ArrayType):
         rows = rows.withColumn("_blk", F.explode("_blk"))
-    mark_layout_pending(
-        spark, table, "er_reblock_index", str(block_key), snapshot=meta
+    rewrite_layout(
+        spark, table, rows.filter(F.col("_blk").isNotNull()),
+        "er_reblock_index",
+        {**meta, "bucket_cols": "_blk"},
+        target=str(block_key),
+        rotate_skew=True,
     )
-    write_table(
-        rows.filter(F.col("_blk").isNotNull()),
-        table,
-        bucket_by=(n_buckets, ["_blk"]),
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
-    set_table_meta(
-        spark, table, kind="er", n_buckets=n_buckets, bucket_cols="_blk",
-        skew_epoch=int(meta.get("skew_epoch", 0) or 0) + 1,
-    )
-    clear_layout_pending(spark, table)
-
-
-def er_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
-    """Append probe-batch skew report dict(s) to the
-    ``{table}_skew_log`` companion in ONE write job — identical schema
-    and batching contract as the minhash/hamming twins (streaming
-    buffers per-batch reports, one post-drain flush; the log is
-    advisory, so a lost buffer only delays the health flag)."""
-    if not reports:
-        return
-    from ..sources.io import write_table
-
-    log_row = spark.createDataFrame(
-        [
-            (
-                int(r["n_hit_buckets"]),
-                int(r["max_bucket_rows"]),
-                int(r["sum_sq_bucket_rows"]),
-                int(r["n_capped_buckets"]),
-                int(r.get("n_capped_batch_buckets", 0)),
-                None if r["cap"] is None else int(r["cap"]),
-            )
-            for r in reports
-        ],
-        "n_hit_buckets bigint, max_bucket_rows bigint, "
-        "sum_sq_bucket_rows bigint, n_capped_buckets bigint, "
-        "n_capped_batch_buckets bigint, cap bigint",
-    ).withColumn("logged_at", F.current_timestamp())
-    write_table(log_row, f"{table}_skew_log", mode="append")
 
 
 def er_incremental(
@@ -611,7 +536,7 @@ def er_incremental(
         if skew_sink is not None:
             skew_sink.append(report)
         else:
-            er_append_skew_reports(spark, table, [report])
+            append_skew_reports(spark, table, [report])
     if append:
         # anchors whose component label changed = entity merges; record
         # (old -> new) instead of rewriting the losing entity's rows
@@ -701,42 +626,21 @@ def er_compact_index(spark, table: str, n_buckets: int | None = None) -> None:
     cost doesn't grow with relabels (they apply as a tiny broadcast
     map), but an unbounded relabel log makes the driver-side closure
     collect grow; compaction resets it."""
-    from ..sources.io import get_table_meta, set_table_meta, write_table
+    from ..sources.io import recorded_contract, rewrite_layout
 
-    from ..sources.io import (
-        clear_layout_pending,
-        get_layout_pending,
-        mark_layout_pending,
-    )
-
-    meta = get_table_meta(spark, table)
-    if not meta:
-        # a previous compaction crashed after its swap wiped the
-        # properties: restore the contract from the marker snapshot
-        pending = get_layout_pending(spark, table)
-        if pending is not None:
-            meta = dict(pending["snapshot"])
+    meta = recorded_contract(spark, table)
     if n_buckets is None:
         n_buckets = int(meta.get("n_buckets", 32))
     rel = _relabel_closure(spark, table, enforce_cap=False)
     rows = _apply_relabels(spark.table(table), "entity", rel)
-    # stage through a temp view snapshot: write_table's stage-and-swap
-    # materializes before dropping, so reading the target is safe.
-    # Marker-guarded (io.mark_layout_pending): a crash between the
-    # swap and the meta re-record would otherwise leave a
-    # contract-less index the sweep can't even classify
-    mark_layout_pending(spark, table, "er_compact_index", "", snapshot=meta)
-    write_table(rows, table, bucket_by=(n_buckets, ["_blk"]))
-    # re-record the FULL metadata (the overwrite dropped the table's
-    # properties): compaction folds labels but does NOT re-derive
-    # block keys, so the skew history and its epoch stay valid
-    set_table_meta(
-        spark, table, **{
-            **meta, "kind": "er", "n_buckets": n_buckets,
-            "bucket_cols": "_blk",
-        },
+    # write_table's stage-and-swap materializes before dropping, so
+    # reading the target is safe. The FULL contract is re-recorded:
+    # compaction folds labels but does NOT re-derive block keys, so
+    # the skew history and its epoch stay valid (no rotation)
+    rewrite_layout(
+        spark, table, rows, "er_compact_index",
+        {**meta, "kind": "er", "n_buckets": n_buckets, "bucket_cols": "_blk"},
     )
-    clear_layout_pending(spark, table)
     spark.sql(f"DROP TABLE IF EXISTS {_relabel_tbl(table)}")
 
 

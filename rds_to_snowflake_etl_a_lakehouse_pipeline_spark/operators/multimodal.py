@@ -1098,44 +1098,22 @@ def hamming_index_build(
     ``skew_epoch`` (late r17, the MinHash-index contract): a monotone
     rebuild counter — streaming skew reports buffered under a retired
     epoch are dropped at flush instead of re-arming ``cap_truncating``
-    against the fresh index; a rebuild also clears the skew log."""
-    from ..sources.io import (
-        clear_layout_pending,
-        get_table_meta,
-        mark_layout_pending,
-        set_table_meta,
-        write_table,
-    )
+    against the fresh index; a rebuild also clears the skew log (both
+    done by ``io.rewrite_layout``)."""
+    from ..sources.io import rewrite_layout
 
-    spark = df.sparkSession
-    prev_epoch = 0
-    if spark.catalog.tableExists(table):
-        prev_epoch = int(get_table_meta(spark, table).get("skew_epoch", 0) or 0)
     banded = _fp_band_explode(df, id_col, hash_col, band_bits).select(
         F.col("_id").alias(id_col), F.col("_ph").alias("fp"), "band", "val"
     )
-    # fail-loud window: a crash between the swap and the contract
-    # commit would leave new-width vals under the old recorded
-    # band_bits — probes would silently join disjoint val spaces
-    mark_layout_pending(
-        spark, table, "hamming_index_build", str(band_bits),
-        snapshot={
+    rewrite_layout(
+        df.sparkSession, table, banded, "hamming_index_build",
+        {
             "kind": "hamming_fp", "band_bits": band_bits,
-            "n_buckets": n_buckets,
+            "n_buckets": n_buckets, "bucket_cols": "val",
         },
+        target=str(band_bits),
+        rotate_skew=True,
     )
-    write_table(banded, table, bucket_by=(n_buckets, ["val"]))
-    spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
-    set_table_meta(
-        spark,
-        table,
-        kind="hamming_fp",
-        band_bits=band_bits,
-        n_buckets=n_buckets,
-        bucket_cols="val",
-        skew_epoch=prev_epoch + 1,
-    )
-    clear_layout_pending(spark, table)
 
 
 def hamming_reband_index(spark, table: str, band_bits: int) -> None:
@@ -1162,86 +1140,32 @@ def hamming_reband_index(spark, table: str, band_bits: int) -> None:
     (``check_table_meta``), so a caller still probing at the old width
     fails loudly instead of silently joining disjoint val spaces.
     Rotation bumps ``skew_epoch`` and clears the skew log like a
-    rebuild. Crash-safe via the ``{table}_retune_pending`` marker
-    (``io.mark_layout_pending``): a crash between the swap and the
-    contract commit leaves the marker, probes refuse instead of
-    silently missing, and a re-run converges from any window (the
-    stored fingerprints survive both layouts);
+    rebuild. Crash-safe through ``io.rewrite_layout``: a crash between
+    the swap and the contract commit leaves the marker, probes refuse
+    instead of silently missing, and a re-run converges from any
+    window (the stored fingerprints survive both layouts);
     ``run_maintenance(apply=True)`` resumes the recorded target."""
-    from ..sources.io import (
-        clear_layout_pending,
-        get_table_meta,
-        mark_layout_pending,
-        set_table_meta,
-        write_table,
-    )
+    from ..sources.io import recorded_contract, rewrite_layout
 
-    from ..sources.io import get_layout_pending
-
-    meta = get_table_meta(spark, table)
-    if not meta:
-        # restore the contract from a crashed rewrite's snapshot (the
-        # swap destroyed the table's properties with the table)
-        pending = get_layout_pending(spark, table)
-        if pending is not None:
-            meta = pending["snapshot"]
+    meta = recorded_contract(spark, table)
     if meta.get("kind") != "hamming_fp":
         raise ValueError(
             f"{table} is not a hamming_fp index (kind={meta.get('kind')!r})"
         )
     if band_bits < 1 or 64 % band_bits != 0:
         raise ValueError(f"band_bits={band_bits} must divide 64")
-    n_buckets = int(meta["n_buckets"])
     idx = spark.table(table)
     id_col = next(c for c in idx.columns if c not in ("fp", "band", "val"))
     docs = idx.filter(F.col("band") == 0).select(F.col(id_col), F.col("fp"))
     banded = _fp_band_explode(docs, id_col, "fp", band_bits).select(
         F.col("_id").alias(id_col), F.col("_ph").alias("fp"), "band", "val"
     )
-    mark_layout_pending(
-        spark, table, "hamming_reband_index", str(band_bits), snapshot=meta
+    rewrite_layout(
+        spark, table, banded, "hamming_reband_index",
+        {**meta, "band_bits": band_bits, "bucket_cols": "val"},
+        target=str(band_bits),
+        rotate_skew=True,
     )
-    write_table(banded, table, bucket_by=(n_buckets, ["val"]))
-    spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
-    set_table_meta(
-        spark,
-        table,
-        kind="hamming_fp",
-        band_bits=band_bits,
-        n_buckets=n_buckets,
-        bucket_cols="val",
-        skew_epoch=int(meta.get("skew_epoch", 0) or 0) + 1,
-    )
-    clear_layout_pending(spark, table)
-
-
-def hamming_append_skew_reports(spark, table: str, reports: list[dict]) -> None:
-    """Append probe-batch skew report dict(s) to the
-    ``{table}_skew_log`` companion in ONE write job — identical
-    schema and batching contract as ``dedup.minhash_append_skew_reports``
-    (streaming buffers per-batch reports and flushes post-drain; the
-    log is advisory, so a lost buffer only delays the health flag)."""
-    if not reports:
-        return
-    from ..sources.io import write_table
-
-    log_row = spark.createDataFrame(
-        [
-            (
-                int(r["n_hit_buckets"]),
-                int(r["max_bucket_rows"]),
-                int(r["sum_sq_bucket_rows"]),
-                int(r["n_capped_buckets"]),
-                int(r.get("n_capped_batch_buckets", 0)),
-                None if r["cap"] is None else int(r["cap"]),
-            )
-            for r in reports
-        ],
-        "n_hit_buckets bigint, max_bucket_rows bigint, "
-        "sum_sq_bucket_rows bigint, n_capped_buckets bigint, "
-        "n_capped_batch_buckets bigint, cap bigint",
-    ).withColumn("logged_at", F.current_timestamp())
-    write_table(log_row, f"{table}_skew_log", mode="append")
 
 
 def _hamming_probe_pairs(
@@ -1371,6 +1295,7 @@ def hamming_incremental_dedup(
         _bucket_skew_report,
         _index_hit_slice,
         _materialize,
+        append_skew_reports,
     )
 
     meta = check_table_meta(spark, table, kind="hamming_fp")
@@ -1437,7 +1362,7 @@ def hamming_incremental_dedup(
         if skew_sink is not None:
             skew_sink.append(report)
         else:
-            hamming_append_skew_reports(spark, table, [report])
+            append_skew_reports(spark, table, [report])
 
     if append:
         surv_banded = banded.join(

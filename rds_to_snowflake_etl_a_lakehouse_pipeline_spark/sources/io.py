@@ -19,7 +19,9 @@ Standing-index contract (shared by every incremental index family —
   parameters must MATCH the recorded contract (mismatches raise,
   because a silent mismatch deduplicates/probes nothing), and layout
   parameters left as ``None`` DEFAULT from it;
-- **compact / rebuild** re-record the contract after rewriting;
+- **build / reband / compact** rewrite through :func:`rewrite_layout`,
+  which takes the bucket layout from the contract it commits and keeps
+  the swap-then-commit window fail-loud;
 - **health** is a cheap dict (``*_index_health`` / ``health()`` /
   the append's returned drift dict) with a ``*_recommended`` flag the
   pipeline can act on (or an ``auto_*`` knob that acts on it).
@@ -440,8 +442,8 @@ def mark_layout_pending(
     snapshot: dict | None = None,
 ) -> None:
     """Persist a one-row ``{table}_retune_pending`` marker BEFORE a
-    layout-deriving rewrite (index build / reband / reblock) mutates
-    the table. The rewrite's stage-and-swap is old-or-new per table,
+    layout rewrite (:func:`rewrite_layout`: index build, reband,
+    reblock, compaction) mutates the table. The rewrite's stage-and-swap is old-or-new per table,
     but the CONTRACT update (``set_table_meta``) is a separate
     statement — a crash between them leaves data derived under the new
     parameters with the old parameters still recorded, and every later
@@ -456,10 +458,10 @@ def mark_layout_pending(
     the old and new layout (band-0 signature slice / stored
     fingerprints / stored text), so a re-run from ANY window converges.
 
-    ``snapshot`` carries the table's PRE-rewrite contract metadata:
-    the swap destroys the table's properties along with the table, so
-    without the snapshot a resume could not recover the invariant
-    parameters (num_hashes, n_buckets, shingle_n, …) the re-run needs.
+    ``snapshot`` carries the contract the rewrite commits: the swap
+    destroys the table's properties along with the table, so without
+    the snapshot a resume could not recover the invariant parameters
+    (num_hashes, n_buckets, shingle_n, …) the re-run needs.
     """
     import json
 
@@ -568,56 +570,102 @@ def index_table_health(
     }
 
 
-def compact_index_table(spark: SparkSession, table: str) -> None:
-    """Rewrite a bucketed standing index as one file set: same bucket
-    spec (read from the recorded ``spark_graft.index.*`` metadata),
-    rows deduplicated (appends may have raced identical fingerprints),
-    metadata re-recorded after the stage-and-swap. Resets the
-    small-file creep :func:`index_table_health` measures; semantics
-    are unchanged — existence-set indexes (span) and signature indexes
-    (minhash) both tolerate row dedup by construction.
-
-    Crash-safe via the ``{table}_retune_pending`` marker: the swap
-    destroys the table's properties, so a crash before the re-record
-    would otherwise leave a contract-less index — probes would skip
-    validation, appends would fall back to default bucket counts, and
-    the sweep could no longer classify the table. While the marker is
-    pending probes refuse, and a re-run (or the maintenance sweep's
-    auto-resume) restores the contract from the marker's snapshot —
-    the layout is unchanged by compaction, so the resume is exact."""
+def recorded_contract(spark: SparkSession, table: str) -> dict[str, str]:
+    """The contract recorded on ``table`` — or, when a crashed
+    :func:`rewrite_layout` swap wiped the table's properties, the
+    pending marker's snapshot of it (empty when neither exists)."""
     meta = get_table_meta(spark, table)
     if not meta:
         pending = get_layout_pending(spark, table)
         if pending is not None:
             meta = dict(pending["snapshot"])
-    rows = spark.table(table).distinct()
-    bucket_by = (
-        (int(meta["n_buckets"]), meta["bucket_cols"].split(","))
-        if "bucket_cols" in meta and "n_buckets" in meta
+    return meta
+
+
+def _contract_layout(
+    contract: dict, columns: list[str]
+) -> tuple[list[str] | None, tuple[int, list[str]] | None]:
+    """``(partition_by, bucket_by)`` fixed by a recorded contract: the
+    index families record ``n_buckets`` + ``bucket_cols`` (IVF also
+    ``partition_cols``); distinct state records ``state_buckets`` and
+    buckets on every column (the tuple IS the key)."""
+    bucket_by = None
+    if "n_buckets" in contract and "bucket_cols" in contract:
+        bucket_by = (
+            int(contract["n_buckets"]), str(contract["bucket_cols"]).split(",")
+        )
+    elif int(contract.get("state_buckets", 0) or 0):
+        bucket_by = (int(contract["state_buckets"]), list(columns))
+    partition_by = (
+        str(contract["partition_cols"]).split(",")
+        if "partition_cols" in contract
         else None
     )
-    partition_by = (
-        meta["partition_cols"].split(",") if "partition_cols" in meta else None
-    )
-    if bucket_by or partition_by:
-        # the IVF family records BOTH (cell-partitioned for probe
-        # pruning, id-bucketed for the flat streaming replay probe) —
-        # a compaction that dropped either half would silently change
-        # the layout contract the probes rely on
-        mark_layout_pending(
-            spark, table, "compact_index_table", "", snapshot=meta
+    return partition_by, bucket_by
+
+
+def rewrite_layout(
+    spark: SparkSession,
+    table: str,
+    rows: DataFrame,
+    verb: str,
+    contract: dict,
+    target: str = "",
+    rotate_skew: bool = False,
+) -> None:
+    """The one guarded layout rewrite every standing-index family runs
+    (build, reband/reblock, compaction, the distinct-state rewrite):
+    mark ``{table}_retune_pending`` → stage-and-swap ``rows`` into the
+    layout ``contract`` records (:func:`_contract_layout`) → commit
+    ``contract`` → clear the marker. The swap destroys the table's
+    properties, so a crash before the commit leaves the marker behind
+    and every probe refuses (see :func:`mark_layout_pending`) instead
+    of joining disjoint key spaces. The marker snapshots ``contract``,
+    so a resume (or :func:`recorded_contract`) can restore it.
+
+    ``rotate_skew`` is for rewrites that re-derive bucket keys: the
+    ``{table}_skew_log`` is dropped and ``skew_epoch`` advances past
+    the table's current one, so a stream holding buffered reports from
+    the retired keys drops them at flush."""
+    if rotate_skew:
+        prior = (
+            recorded_contract(spark, table)
+            if spark.catalog.tableExists(table)
+            else {}
         )
-        write_table(
-            rows, table, partition_by=partition_by, bucket_by=bucket_by
-        )
-    else:
+        contract = {
+            **contract,
+            "skew_epoch": int(prior.get("skew_epoch", 0) or 0) + 1,
+        }
+    partition_by, bucket_by = _contract_layout(contract, rows.columns)
+    mark_layout_pending(spark, table, verb, target, snapshot=contract)
+    write_table(rows, table, partition_by=partition_by, bucket_by=bucket_by)
+    if rotate_skew:
+        spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
+    set_table_meta(spark, table, **contract)
+    clear_layout_pending(spark, table)
+
+
+def compact_index_table(spark: SparkSession, table: str) -> None:
+    """Rewrite a bucketed standing index as one file set: same layout
+    (read from the recorded ``spark_graft.index.*`` contract), rows
+    deduplicated (appends may have raced identical fingerprints),
+    contract re-recorded unchanged through :func:`rewrite_layout`.
+    Resets the small-file creep :func:`index_table_health` measures;
+    semantics are unchanged — existence-set indexes (span, exact) and
+    signature indexes (minhash) both tolerate row dedup by
+    construction. A crashed compaction is resumed from the marker's
+    snapshot (the layout is unchanged by compaction, so the resume is
+    exact)."""
+    meta = recorded_contract(spark, table)
+    rows = spark.table(table).distinct()
+    if _contract_layout(meta, rows.columns) == (None, None):
         raise ValueError(
             f"{table!r} records no bucket/partition layout metadata; only "
             "indexes built by this library's *_build_index functions are "
             "compactable generically"
         )
-    set_table_meta(spark, table, **meta)
-    clear_layout_pending(spark, table)
+    rewrite_layout(spark, table, rows, "compact_index_table", meta)
 
 
 def connection_config(prefix: str, keys: tuple[str, ...]) -> dict[str, str]:

@@ -10,6 +10,8 @@ would hold state forever (fine in batch, fatal in a long-running job).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -243,6 +245,29 @@ def run_available_now(
     return sdf.sparkSession.table(query_name)
 
 
+def _drain(
+    sdf: DataFrame,
+    body,
+    checkpoint_dir: str,
+    query_name: str,
+    output_mode: str = "update",
+) -> None:
+    """Run ``body(batch_df, batch_id)`` on every micro-batch of the
+    input available now (``foreachBatch`` under
+    ``trigger(availableNow=True)``) and block until it is drained; the
+    checkpoint gives exactly-once batch tracking across restarts. The
+    one drain every ``stream_*`` wrapper here runs."""
+    (
+        sdf.writeStream.foreachBatch(body)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_to_warehouse(
     sdf: DataFrame,
     sink,
@@ -268,15 +293,7 @@ def stream_to_warehouse(
     def _land(batch_df: DataFrame, batch_id: int) -> None:
         sink.write(batch_df, table, mode=mode)
 
-    q = (
-        sdf.writeStream.foreachBatch(_land)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _land, checkpoint_dir, query_name, output_mode)
 
 
 def stream_incremental_merge(
@@ -320,15 +337,7 @@ def stream_incremental_merge(
             prefer="order",
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)
 
 
 def stream_corpus_dedup(
@@ -369,72 +378,78 @@ def stream_corpus_dedup(
 
     ``log_skew`` (round 17): per-batch bucket-skew reports — defaulted
     ON when ``max_bucket_size`` is set, like the batch API — are
-    BUFFERED and flushed to the ``{table}_skew_log`` companion in ONE
-    post-drain write, the same batching contract as
-    ``stream_ivf_append``'s drift log. Each report is one aggregate job
-    over the batch's two pins (no join, no groupBy, no index read);
-    the bench's q22 still passes ``log_skew=False`` so it keeps
-    timing the same per-batch body as earlier rounds. The flush is epoch-guarded exactly like the IVF
-    drift flush (:func:`_flush_ivf_drift_reports`): a
-    ``minhash_build_index`` rebuild landing between the last
-    micro-batch and the flush re-derives every bucket key AND clears
-    the log, so buffered reports measured against the retired corpus
-    are dropped instead of re-arming ``cap_truncating`` on the fresh
-    index."""
+    buffered and flushed once per drain by :func:`_stream_probe`. Each
+    report is one aggregate job over the batch's two pins (no join, no
+    groupBy, no index read); the bench's q22 still passes
+    ``log_skew=False`` so it keeps timing the same per-batch body as
+    earlier rounds."""
     from ..operators.dedup import minhash_incremental_dedup
+
+    _stream_probe(
+        sdf, table, checkpoint_dir, query_name, max_bucket_size, log_skew,
+        partial(
+            minhash_incremental_dedup, id_col=id_col, text_col=text_col,
+            threshold=threshold, append=append,
+            max_bucket_size=max_bucket_size, **sig_kwargs,
+        ),
+    )
+
+
+def _stream_probe(
+    sdf: DataFrame,
+    table: str,
+    checkpoint_dir: str,
+    query_name: str,
+    cap: int | None,
+    log_skew: bool | None,
+    probe,
+) -> None:
+    """The one body of the standing-probe streams (MinHash, Hamming,
+    ER): drain ``sdf`` through ``probe(spark, table, batch_df,
+    log_skew=, skew_sink=)``, skipping empty micro-batches.
+    ``log_skew`` defaults ON when the probe ``cap`` is set; the
+    per-batch skew reports are buffered and written once after the
+    drain by :func:`_flush_skew_reports`, under the ``skew_epoch``
+    read here before the first batch."""
     from ..sources.io import get_table_meta
 
     reports: list[dict] = []
     if log_skew is None:
-        log_skew = max_bucket_size is not None
+        log_skew = cap is not None
     held_epoch = get_table_meta(sdf.sparkSession, table).get("skew_epoch")
 
-    def _dedup(batch_df: DataFrame, batch_id: int) -> None:
+    def _probe(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        minhash_incremental_dedup(
+        probe(
             batch_df.sparkSession,
             table,
             batch_df,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            append=append,
-            max_bucket_size=max_bucket_size,
             log_skew=log_skew,
             skew_sink=reports if log_skew else None,
-            **sig_kwargs,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_dedup)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _flush_minhash_skew_reports(sdf.sparkSession, table, held_epoch, reports)
+    _drain(sdf, _probe, checkpoint_dir, query_name)
+    _flush_skew_reports(sdf.sparkSession, table, held_epoch, reports)
 
 
-def _flush_minhash_skew_reports(
+def _flush_skew_reports(
     spark, table: str, held_epoch, reports: list[dict]
 ) -> None:
-    """Post-drain skew-log flush, epoch-guarded like
-    :func:`_flush_ivf_drift_reports`: a ``minhash_build_index`` rebuild
-    from another session landing mid-drain re-derives every bucket key
-    and clears the log — buffered reports measured under the retired
-    epoch would re-arm ``cap_truncating`` on the fresh index, so the
-    buffer is dropped when the recorded epoch no longer matches. One
-    constant-time SHOW TBLPROPERTIES, then one write."""
-    from ..operators.dedup import minhash_append_skew_reports
+    """Post-drain skew-log flush for the MinHash, Hamming and ER
+    indexes, epoch-guarded like :func:`_flush_ivf_drift_reports`: a
+    rebuild or reband/reblock from another session landing mid-drain
+    re-derives every bucket key and clears the log
+    (``io.rewrite_layout``) — buffered reports measured under the
+    retired epoch would re-arm ``cap_truncating`` on the fresh index,
+    so the buffer is dropped when the recorded epoch no longer
+    matches. One constant-time SHOW TBLPROPERTIES, then one write."""
+    from ..operators.dedup import append_skew_reports
     from ..sources.io import get_table_meta
 
-    recorded = get_table_meta(spark, table).get("skew_epoch")
-    if recorded != held_epoch:
+    if get_table_meta(spark, table).get("skew_epoch") != held_epoch:
         reports = []
-    minhash_append_skew_reports(spark, table, reports)
+    append_skew_reports(spark, table, reports)
 
 
 def stream_media_dedup(
@@ -471,66 +486,18 @@ def stream_media_dedup(
 
     ``log_skew`` (late r17): per-batch bucket-skew reports — defaulted
     ON when ``max_bucket_size`` is set, like the batch API; one
-    aggregate job over the batch's pins, no index read — are
-    BUFFERED and flushed to the ``{table}_skew_log`` companion in ONE
-    post-drain write, epoch-guarded exactly like
-    :func:`_flush_minhash_skew_reports`: a ``hamming_index_build``
-    rebuild landing mid-drain re-derives every (band, val) key and
-    clears the log, so buffered reports measured against the retired
-    corpus are dropped instead of re-arming ``cap_truncating``."""
+    aggregate job over the batch's pins, no index read — are buffered
+    and flushed once per drain by :func:`_stream_probe`."""
     from ..operators.multimodal import hamming_incremental_dedup
-    from ..sources.io import get_table_meta
 
-    reports: list[dict] = []
-    if log_skew is None:
-        log_skew = max_bucket_size is not None
-    held_epoch = get_table_meta(sdf.sparkSession, table).get("skew_epoch")
-
-    def _dedup(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hamming_incremental_dedup(
-            batch_df.sparkSession,
-            table,
-            batch_df,
-            id_col=id_col,
-            hash_col=hash_col,
-            max_hamming=max_hamming,
-            append=append,
+    _stream_probe(
+        sdf, table, checkpoint_dir, query_name, max_bucket_size, log_skew,
+        partial(
+            hamming_incremental_dedup, id_col=id_col, hash_col=hash_col,
+            max_hamming=max_hamming, append=append,
             max_bucket_size=max_bucket_size,
-            log_skew=log_skew,
-            skew_sink=reports if log_skew else None,
-        )
-
-    q = (
-        sdf.writeStream.foreachBatch(_dedup)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
-    _flush_hamming_skew_reports(sdf.sparkSession, table, held_epoch, reports)
-
-
-def _flush_hamming_skew_reports(
-    spark, table: str, held_epoch, reports: list[dict]
-) -> None:
-    """Post-drain skew-log flush for the Hamming index, epoch-guarded
-    like :func:`_flush_minhash_skew_reports`: a rebuild (or reband)
-    from another session landing mid-drain re-derives every (band,
-    val) key and clears the log — buffered reports measured under the
-    retired epoch would re-arm ``cap_truncating`` on the fresh index,
-    so the buffer is dropped when the recorded epoch no longer
-    matches. One constant-time SHOW TBLPROPERTIES, then one write."""
-    from ..operators.multimodal import hamming_append_skew_reports
-    from ..sources.io import get_table_meta
-
-    recorded = get_table_meta(spark, table).get("skew_epoch")
-    if recorded != held_epoch:
-        reports = []
-    hamming_append_skew_reports(spark, table, reports)
 
 
 def stream_entity_resolution(
@@ -562,64 +529,17 @@ def stream_entity_resolution(
 
     ``log_skew`` (late r17): per-batch block-skew reports — defaulted
     ON when ``max_block_size`` is set, like the batch API — are
-    BUFFERED and flushed to the ``{table}_skew_log`` companion in ONE
-    post-drain write, epoch-guarded exactly like the minhash/hamming
-    twins (an ``er_build_index`` rebuild or ``er_reblock_index``
-    landing mid-drain re-derives every block key and clears the log,
-    so stale buffered reports are dropped)."""
+    buffered and flushed once per drain by :func:`_stream_probe`."""
     from ..operators.entity import er_incremental
-    from ..sources.io import get_table_meta
 
-    reports: list[dict] = []
-    if log_skew is None:
-        log_skew = max_block_size is not None
-    held_epoch = get_table_meta(sdf.sparkSession, table).get("skew_epoch")
-
-    def _resolve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        er_incremental(
-            batch_df.sparkSession,
-            table,
-            batch_df,
-            id_col,
-            text_col,
-            block_key,
-            threshold=threshold,
+    _stream_probe(
+        sdf, table, checkpoint_dir, query_name, max_block_size, log_skew,
+        partial(
+            er_incremental, id_col=id_col, text_col=text_col,
+            block_key=block_key, threshold=threshold,
             max_block_size=max_block_size,
-            log_skew=log_skew,
-            skew_sink=reports if log_skew else None,
-        )
-
-    q = (
-        sdf.writeStream.foreachBatch(_resolve)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
-    _flush_er_skew_reports(sdf.sparkSession, table, held_epoch, reports)
-
-
-def _flush_er_skew_reports(
-    spark, table: str, held_epoch, reports: list[dict]
-) -> None:
-    """Post-drain skew-log flush for the ER index, epoch-guarded like
-    the minhash/hamming twins: a rebuild or reblock from another
-    session landing mid-drain re-derives every block key and clears
-    the log — buffered reports measured under the retired epoch would
-    re-arm ``cap_truncating`` on the fresh index, so the buffer is
-    dropped when the recorded epoch no longer matches. One
-    constant-time SHOW TBLPROPERTIES, then one write."""
-    from ..operators.entity import er_append_skew_reports
-    from ..sources.io import get_table_meta
-
-    recorded = get_table_meta(spark, table).get("skew_epoch")
-    if recorded != held_epoch:
-        reports = []
-    er_append_skew_reports(spark, table, reports)
 
 
 def interval_join(
@@ -774,15 +694,7 @@ def stream_versioned_merge(
         )
         vt.merge(resolved, list(keys), allow_new_columns=allow_new_columns)
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)
 
 
 def _checkpoint_stream_id(spark: SparkSession, checkpoint_dir: str) -> str:
@@ -1253,15 +1165,7 @@ def stream_frequency_sketch(
             merged = batch_sketch
         write_table(merged.withColumn("_applied_batch", F.lit(stamp)), table)
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)
 
 
 def stream_distinct_sketch(
@@ -1319,15 +1223,7 @@ def stream_distinct_sketch(
             merged = batch_sketch
         write_table(merged.withColumn("_applied_batch", F.lit(stamp)), table)
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)
 
 
 def stream_ivf_append(
@@ -1486,15 +1382,7 @@ def stream_ivf_append(
             )
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_append)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _append, checkpoint_dir, query_name)
     # appends ran in foreachBatch's cloned session; invalidate the
     # caller session's file-listing cache so post-drain probes see the
     # streamed rows
@@ -1566,15 +1454,7 @@ def stream_histogram_sketch(
             merged = batch_sketch
         write_table(merged.withColumn("_applied_batch", F.lit(stamp)), table)
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)
 
 
 def stream_span_dedup(
@@ -1623,15 +1503,7 @@ def stream_span_dedup(
         )
         _land_batch_partition(masked, sink_table, batch_id, stream_id=sid)
 
-    q = (
-        sdf.writeStream.foreachBatch(_mask)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _mask, checkpoint_dir, query_name)
 
 
 def stream_exact_dedup(
@@ -1677,15 +1549,7 @@ def stream_exact_dedup(
         )
         _land_batch_partition(survivors, sink_table, batch_id, stream_id=sid)
 
-    q = (
-        sdf.writeStream.foreachBatch(_dedup)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _dedup, checkpoint_dir, query_name)
 
 
 def stream_frontier_schedule(
@@ -1738,15 +1602,7 @@ def stream_frontier_schedule(
             stamp=_stream_stamp(sid, batch_id), stream_id=sid,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)
 
 
 def _frontier_schedule_merge_batch(
@@ -2008,15 +1864,7 @@ def stream_crawl_tick(
             stamp=_stream_stamp(sid, batch_id), stream_id=sid,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_tick)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _tick, checkpoint_dir, query_name)
 
 
 def _fuse_intervals(intervals: DataFrame, key_col: str, gap_us: int) -> DataFrame:
@@ -2108,15 +1956,7 @@ def stream_sessionize(
             state_partitions=state_partitions, stamp=stamp,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)
 
 
 def _sessionize_merge_batch(
@@ -2360,15 +2200,7 @@ def stream_quarantine(
             stream_id=sid,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_route)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _route, checkpoint_dir, query_name)
 
 
 def _quarantine_route_batch(
@@ -2454,12 +2286,4 @@ def stream_incremental_distinct(
             write_table(fresh, table, bucket_by=bucket_by)
             set_table_meta(spark, table, state_buckets=state_buckets or 0)
 
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, _merge, checkpoint_dir, query_name)

@@ -632,7 +632,7 @@ def test_er_compact_preserves_skew_epoch_and_flush_guard(spark, tmp_path):
         get_table_meta,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
-        _flush_er_skew_reports,
+        _flush_skew_reports as _flush_er_skew_reports,
     )
 
     t = "er_skew_epoch_idx"
@@ -681,8 +681,10 @@ def test_sweep_compacts_er_and_composes_with_skew_note(spark):
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
         run_maintenance,
     )
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
+        append_skew_reports as er_append_skew_reports,
+    )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.entity import (
-        er_append_skew_reports,
         er_build_index,
         resolve_entities,
     )

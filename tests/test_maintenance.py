@@ -1101,7 +1101,7 @@ def test_hamming_skew_flush_drops_stale_epoch(spark, tmp_path):
         hamming_index_build,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
-        _flush_hamming_skew_reports,
+        _flush_skew_reports as _flush_hamming_skew_reports,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
         get_table_meta,
@@ -1200,7 +1200,7 @@ def test_minhash_skew_flush_drops_stale_epoch(spark):
         get_table_meta,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
-        _flush_minhash_skew_reports,
+        _flush_skew_reports as _flush_minhash_skew_reports,
     )
 
     t = "maint_mh_skew_epoch"
