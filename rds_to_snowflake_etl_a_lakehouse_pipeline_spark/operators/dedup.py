@@ -30,6 +30,9 @@ from pyspark.sql.functions import pandas_udf
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.session import (
     ensure_parallelism as _ensure_parallelism,
 )
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
+    _plan_size_bytes,
+)
 
 
 def _materialize(df: DataFrame, storage: str, eager: bool = True) -> DataFrame:
@@ -157,7 +160,7 @@ def exact_build_index(
     df: DataFrame,
     table: str,
     content_cols: list[str],
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> None:
     """Write the standing SEEN-SET for exact dedup: the distinct
     content fingerprints of ``df`` as a catalog table hash-bucketed on
@@ -178,7 +181,12 @@ def exact_build_index(
     redaction masks read-back values matching ``(?i)url`` etc., and
     'url' is exactly the column a frontier index keys on.) Written
     through ``io.rewrite_layout``, so a crash before the contract
-    commit leaves probes refusing instead of validating nothing."""
+    commit leaves probes refusing instead of validating nothing.
+
+    ``n_buckets=None`` sizes the bucket count from the fingerprints
+    (``io._sized_buckets``: at least one per core, at most 32, and 32
+    when the size is unknown); an explicit count wins. Either way it
+    is recorded, and every append and compaction keeps it."""
     from ..sources.io import rewrite_layout
 
     fps = df.select(
@@ -483,7 +491,7 @@ def minhash_build_index(
     bands: int = 16,
     shingle_n: int = 5,
     impl: str = "arrow",
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> None:
     """Write the banded MinHash signature index as a bucketed catalog
     table — the write-once / query-many form the
@@ -506,6 +514,11 @@ def minhash_build_index(
     Signature parameters + ``n_buckets`` are recorded as table
     properties; probes/appends validate against them (a mismatched
     ``shingle_n``/``num_hashes`` silently estimates garbage jaccard).
+    ``n_buckets=None`` sizes the count from the banded rows
+    (``io._sized_buckets``); the Arrow signature kernel (the default
+    ``impl``) hides their size from Catalyst, so such a build keeps
+    32 buckets. An explicit count wins; rebands and appends keep the
+    recorded one.
     The write goes through ``io.rewrite_layout``, which also advances
     ``skew_epoch`` and clears the skew log (bucket keys re-derive from
     the fresh corpus).
@@ -965,44 +978,6 @@ def minhash_incremental_dedup(
             surv_banded, table, mode="append", bucket_by=(n_buckets, ["bucket"])
         )
     return survivors
-
-
-# Optimized-plan nodes whose size Catalyst cannot know: RDD-backed
-# relations (createDataFrame over local data or an RDD) and every
-# Python evaluation node (UDFs, mapInPandas/mapInArrow, grouped maps).
-_UNSIZED_NODES = ("LogicalRDD", "Python", "InPandas", "InArrow")
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's ``sizeInBytes`` estimate for the optimized plan — free
-    (no job). None when the estimate rests on unknown statistics: an
-    unknown size must never trigger a size-gated code path.
-
-    Unknown is detected at the plan's LEAVES, not by the magnitude of
-    the derived estimate: Catalyst gives an unsizable leaf the
-    ``spark.sql.defaultSizeInBytes`` sentinel (``Long.MaxValue``), and
-    a projection scales that by its row-width ratio, so a narrow select
-    over a wide RDD-backed frame lands on a plausible-looking number.
-    Any RDD-backed or Python-evaluation node, or any leaf sized at the
-    sentinel, makes the whole estimate unknown."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        default = int(
-            str(df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes())
-        )
-        nodes = [plan]
-        while nodes:
-            node = nodes.pop()
-            if any(n in node.getClass().getSimpleName() for n in _UNSIZED_NODES):
-                return None
-            children = node.children()
-            if children.size() == 0 and int(str(node.stats().sizeInBytes())) >= default:
-                return None
-            nodes.extend(children.apply(i) for i in range(children.size()))
-        est = int(str(plan.stats().sizeInBytes()))
-    except Exception:  # noqa: BLE001 — best-effort; caller treats as unknown
-        return None
-    return est if 0 <= est < default else None
 
 
 def _pair_grain_decision(
@@ -2378,7 +2353,7 @@ def span_build_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> None:
     """Persist the corpus's distinct k-token span fingerprints as a
     bucketed catalog table — the standing-state form of
@@ -2402,6 +2377,10 @@ def span_build_index(
     against them — a silent ``k`` mismatch would never match any gram
     and pass everything through undeduped. Written through
     ``io.rewrite_layout`` (fail-loud if it crashes before the commit).
+    ``n_buckets=None`` sizes the count from the fingerprints
+    (``io._sized_buckets``: at least one per core, at most 32, and 32
+    when the size is unknown); an explicit count wins, and appends and
+    compactions keep the recorded one.
     """
     from ..sources.io import rewrite_layout
 

@@ -313,7 +313,7 @@ def er_build_index(
     text_col: str,
     block_key: Column | str,
     entity_col: str = "entity_id",
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> None:
     """Persist an already-resolved corpus (:func:`resolve_entities`
     output) as the standing ER index: one row per (record, block key)
@@ -321,9 +321,12 @@ def er_build_index(
     every later :func:`er_incremental` probe joins pre-shuffled corpus
     buckets and a batch pays only its own side of the shuffle. The
     ``block_key`` expression must be reused verbatim on every probe
-    and append (it defines the join layout). ``n_buckets`` is recorded
-    as a table property; appends default from and validate against it
-    (:func:`~..sources.io.check_table_meta`). Written through
+    and append (it defines the join layout). ``n_buckets=None`` sizes
+    the bucket count from the index rows (``io._sized_buckets``: at
+    least one per core, at most 32, and 32 when the size is unknown);
+    an explicit count wins. It is recorded as a table property;
+    appends, reblocks and compactions default from and validate
+    against it (:func:`~..sources.io.check_table_meta`). Written through
     ``io.rewrite_layout``: a crash before the contract commit leaves
     probes refusing, and a rebuild advances ``skew_epoch`` and clears
     the skew log (every block key re-derives from the new corpus)."""

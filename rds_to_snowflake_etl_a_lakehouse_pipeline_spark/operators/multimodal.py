@@ -1085,7 +1085,7 @@ def hamming_index_build(
     id_col: str = "doc_id",
     hash_col: str = "phash",
     band_bits: int = 16,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> None:
     """Write the banded fingerprint index as a bucketed catalog table
     (id, fp, band, val), hash-bucketed on the band ``val``: every later
@@ -1094,6 +1094,11 @@ def hamming_index_build(
     batches pay only their own fingerprints. Banding parameters are
     recorded as table properties and validated on every probe/append
     (a mismatched ``band_bits`` would silently destroy recall).
+
+    ``n_buckets=None`` sizes the bucket count from the banded rows
+    (``io._sized_buckets``: at least one per core, at most 32, and 32
+    when the size is unknown); an explicit count wins. The count is
+    recorded, and every append, reband and compaction keeps it.
 
     ``skew_epoch`` (late r17, the MinHash-index contract): a monotone
     rebuild counter — streaming skew reports buffered under a retired

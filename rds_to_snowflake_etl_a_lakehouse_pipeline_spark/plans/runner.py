@@ -13,7 +13,8 @@ and tags its jobs with the description ``plans.runner.<node>``.
 
 Each node materializes to the session catalog (so downstream nodes
 re-read exactly like the reference's S3/catalog handoff), attaches the
-DQ gate as an ``observe`` on the sink write (no extra pass), and records
+DQ gate as an ``observe`` on the sink write (no extra pass; ``unique``
+rules, which ``observe`` cannot compute, read the written sink), and records
 its start offset and wall-clock — the reference's ``load_duration`` log
 (silver/crm_cust_info_silver.py:111-114) as structured metrics.
 
@@ -140,10 +141,13 @@ class Pipeline:
                         node.sink,
                         partition_by=list(node.partition_by) if node.partition_by else None,
                     )
+                    out = spark.table(node.sink)
                     if finish:
                         dq.extend(finish())
                     if unique_rules:
-                        dq.extend(evaluate_now(df_obs, unique_rules))
+                        # checks the rows written, without re-running
+                        # the node's plan
+                        dq.extend(evaluate_now(out, unique_rules))
                     # Gate BEFORE the warehouse write: the observe-based DQ
                     # results only exist once the primary (catalog) sink has
                     # executed — that write is the documented piggyback — but
@@ -156,7 +160,6 @@ class Pipeline:
                 finally:
                     if node.warehouse_table:
                         df_obs.unpersist()
-                out = spark.table(node.sink)
                 rows = next((int(r.observed) for r in dq if r.rule == "row_count"), None)
             else:
                 if rules:

@@ -21,7 +21,9 @@ Standing-index contract (shared by every incremental index family —
   parameters left as ``None`` DEFAULT from it;
 - **build / reband / compact** rewrite through :func:`rewrite_layout`,
   which takes the bucket layout from the contract it commits and keeps
-  the swap-then-commit window fail-loud;
+  the swap-then-commit window fail-loud; a build that leaves
+  ``n_buckets`` unset gets a count sized from its rows
+  (:func:`_sized_buckets`), and every later rewrite keeps it;
 - **health** is a cheap dict (``*_index_health`` / ``health()`` /
   the append's returned drift dict) with a ``*_recommended`` flag the
   pipeline can act on (or an ``auto_*`` knob that acts on it).
@@ -582,6 +584,79 @@ def recorded_contract(spark: SparkSession, table: str) -> dict[str, str]:
     return meta
 
 
+# Optimized-plan nodes whose size Catalyst cannot know: RDD-backed
+# relations (createDataFrame over local data or an RDD) and every
+# Python evaluation node (UDFs, mapInPandas/mapInArrow, grouped maps).
+_UNSIZED_NODES = ("LogicalRDD", "Python", "InPandas", "InArrow")
+
+
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's ``sizeInBytes`` estimate for the optimized plan — free
+    (no job). None when the estimate rests on unknown statistics: an
+    unknown size must never trigger a size-gated code path.
+
+    Unknown is detected at the plan's LEAVES, not by the magnitude of
+    the derived estimate: Catalyst gives an unsizable leaf the
+    ``spark.sql.defaultSizeInBytes`` sentinel (``Long.MaxValue``), and
+    a projection scales that by its row-width ratio, so a narrow select
+    over a wide RDD-backed frame lands on a plausible-looking number.
+    Any RDD-backed or Python-evaluation node, or any leaf sized at the
+    sentinel, makes the whole estimate unknown."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        default = int(
+            str(df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes())
+        )
+        nodes = [plan]
+        while nodes:
+            node = nodes.pop()
+            if any(n in node.getClass().getSimpleName() for n in _UNSIZED_NODES):
+                return None
+            children = node.children()
+            if children.size() == 0 and int(str(node.stats().sizeInBytes())) >= default:
+                return None
+            nodes.extend(children.apply(i) for i in range(children.size()))
+        est = int(str(plan.stats().sizeInBytes()))
+    except Exception:  # noqa: BLE001 — best-effort; caller treats as unknown
+        return None
+    return est if 0 <= est < default else None
+
+
+# bucket count of a standing index whose size is unknown, and the
+# ceiling of a sized one: a sized build never gets more buckets (or
+# more files per append) than an unsized one
+INDEX_MAX_BUCKETS = 32
+
+
+def _sized_buckets(rows: DataFrame) -> int:
+    """Bucket count for a standing index built from ``rows``: one
+    bucket per core, more only when the estimated size needs more than
+    one ``spark.sql.files.maxPartitionBytes`` split per core, never
+    more than :data:`INDEX_MAX_BUCKETS` — and exactly that cap when
+    :func:`_plan_size_bytes` cannot size ``rows`` (RDD-backed or
+    Python-kernel input). Every append writes up to one file per
+    bucket and every probe opens every file, so a small index pays for
+    each bucket it does not need on every micro-batch. A bucketed scan
+    reads each bucket as one task and never splits it, so past one
+    split per core the count keeps a bucket near one split.
+
+    The estimate is Catalyst's non-CBO one, which does not scale an
+    ``explode``: a banded index (one row per band) is estimated at its
+    input's size, e.g. 78 KB for a 4-band Hamming index that writes
+    318 KB, so a large banded index can get as few as 1/bands of the
+    buckets its written size asks for. The per-core floor hides the
+    gap at small sizes. The count is sized once, at build: an index
+    that grows by appends keeps it, and ``defaultParallelism`` counts
+    only the executors registered at build time."""
+    est = _plan_size_bytes(rows)
+    if est is None:
+        return INDEX_MAX_BUCKETS
+    spark = rows.sparkSession
+    split = int(str(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()))
+    wanted = max(spark.sparkContext.defaultParallelism, -(-est // split))
+    return min(INDEX_MAX_BUCKETS, wanted)
+
+
 def _contract_layout(
     contract: dict, columns: list[str]
 ) -> tuple[list[str] | None, tuple[int, list[str]] | None]:
@@ -626,7 +701,14 @@ def rewrite_layout(
     ``rotate_skew`` is for rewrites that re-derive bucket keys: the
     ``{table}_skew_log`` is dropped and ``skew_epoch`` advances past
     the table's current one, so a stream holding buffered reports from
-    the retired keys drops them at flush."""
+    the retired keys drops them at flush.
+
+    A build passes ``n_buckets=None`` to have the count sized from
+    ``rows`` (:func:`_sized_buckets`); the sized count is what the
+    contract records, so every later reband, compaction and append
+    keeps it."""
+    if "n_buckets" in contract and contract["n_buckets"] is None:
+        contract = {**contract, "n_buckets": _sized_buckets(rows)}
     if rotate_skew:
         prior = (
             recorded_contract(spark, table)

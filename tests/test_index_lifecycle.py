@@ -213,3 +213,113 @@ def test_layout_pending_distinct_state_rewrite_and_resume(spark):
     assert io.get_table_meta(spark, t) == meta
     assert sorted(map(tuple, spark.table(t).collect())) == rows
     _drop(spark, t)
+
+
+def _fps(spark, n=40):
+    return spark.createDataFrame(
+        [(i, 0x1234_5678_9ABC_0000 + i * 7919) for i in range(n)],
+        "doc_id bigint, phash bigint",
+    )
+
+
+def test_built_index_bucket_count_follows_its_data(spark, tmp_path):
+    """A build left at ``n_buckets=None`` sizes the bucket count from
+    the rows it writes: one bucket per core for a small sized input,
+    never more than the old fixed 32, and exactly 32 when Catalyst
+    cannot size the input. An explicit count wins, and no later
+    rewrite or append changes the recorded count."""
+    cores = spark.sparkContext.defaultParallelism
+    sized = min(32, cores)
+    fp_path, doc_path = str(tmp_path / "fps"), str(tmp_path / "docs")
+    _fps(spark).write.parquet(fp_path)
+    _docs(spark).write.parquet(doc_path)
+
+    t = "sizing_hamming_idx"
+    _drop(spark, t)
+    mm.hamming_index_build(spark.read.parquet(fp_path), t, band_bits=16)
+    meta = io.get_table_meta(spark, t)
+    assert int(meta["n_buckets"]) == sized <= 32
+    assert _bucket_spec(spark, t) == (sized, "val")
+
+    # the recorded count survives a reband, a compaction and appends
+    mm.hamming_reband_index(spark, t, band_bits=8)
+    assert io.get_table_meta(spark, t)["n_buckets"] == str(sized)
+    assert _bucket_spec(spark, t) == (sized, "val")
+    io.compact_index_table(spark, t)
+    assert io.get_table_meta(spark, t)["n_buckets"] == str(sized)
+    assert _bucket_spec(spark, t) == (sized, "val")
+    batch = spark.createDataFrame(
+        [(1000 + i, 0x0FED_CBA9_8765_0000 + i * 104729) for i in range(6)],
+        "doc_id bigint, phash bigint",
+    )
+    mm.hamming_incremental_dedup(spark, t, batch, max_hamming=3).collect()
+    mm.hamming_incremental_dedup(
+        spark, t, batch.withColumn("doc_id", F.col("doc_id") + 100),
+        max_hamming=3, max_bucket_size=2,
+    ).collect()
+    assert io.get_table_meta(spark, t)["n_buckets"] == str(sized)
+    assert _bucket_spec(spark, t) == (sized, "val")
+    _drop(spark, t)
+
+    t = "sizing_span_idx"
+    _drop(spark, t)
+    dd.span_build_index(spark.read.parquet(doc_path), t, k=4)
+    assert io.get_table_meta(spark, t)["n_buckets"] == str(sized)
+    assert _bucket_spec(spark, t) == (sized, "_h")
+    _drop(spark, t)
+
+    # unknown statistics (an RDD-backed frame) keep the fixed 32
+    t = "sizing_rdd_idx"
+    _drop(spark, t)
+    assert io._plan_size_bytes(_fps(spark)) is None
+    mm.hamming_index_build(_fps(spark), t, band_bits=16)
+    assert io.get_table_meta(spark, t)["n_buckets"] == "32"
+    assert _bucket_spec(spark, t) == (32, "val")
+    _drop(spark, t)
+
+    # an explicit count is kept as given
+    t = "sizing_explicit_idx"
+    _drop(spark, t)
+    mm.hamming_index_build(spark.read.parquet(fp_path), t, n_buckets=7)
+    assert io.get_table_meta(spark, t)["n_buckets"] == "7"
+    assert _bucket_spec(spark, t) == (7, "val")
+    _drop(spark, t)
+
+
+def test_sized_bucket_count_follows_the_split_size(spark, tmp_path, monkeypatch):
+    """Past one ``spark.sql.files.maxPartitionBytes`` split per core a
+    build gets ``ceil(estimate / split)`` buckets, never more than 32.
+    A bucketed scan reads each bucket as one task, however large, so
+    the count keeps a bucket near one split."""
+    cores = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "fps")
+    _fps(spark, n=400).write.parquet(path)
+    ests = []
+    real = io._plan_size_bytes
+
+    def spy(df):
+        ests.append(real(df))
+        return ests[-1]
+
+    monkeypatch.setattr(io, "_plan_size_bytes", spy)
+    t = "sizing_split_idx"
+    _drop(spark, t)
+    mm.hamming_index_build(spark.read.parquet(path), t, band_bits=16)
+    est = ests[-1]
+    assert int(io.get_table_meta(spark, t)["n_buckets"]) == cores
+
+    key = "spark.sql.files.maxPartitionBytes"
+    try:
+        for split in (est // (cores + 3), est // 40):
+            spark.conf.set(key, str(split))
+            _drop(spark, t)
+            mm.hamming_index_build(spark.read.parquet(path), t, band_bits=16)
+            assert ests[-1] == est
+            want = min(32, -(-est // split))
+            assert want > cores
+            assert int(io.get_table_meta(spark, t)["n_buckets"]) == want
+            assert _bucket_spec(spark, t) == (want, "val")
+        assert want == 32
+    finally:
+        spark.conf.unset(key)
+        _drop(spark, t)

@@ -9,6 +9,7 @@ import itertools
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.dq import DQRule
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.runner import Node, Pipeline
@@ -148,3 +149,24 @@ def test_cycle_raises_before_any_write(spark, db, src):
     with pytest.raises(ValueError, match="cycle"):
         pipe.run(spark, {"src": src})
     assert not spark.catalog.tableExists(f"{db}.z")
+
+
+def test_unique_gate_checks_the_written_sink(spark, db, src):
+    # a unique rule reads the sink the node wrote: the node's plan (here
+    # a Python UDF that counts its calls) runs once per row, and the
+    # gate sees the written rows, not a re-execution
+    calls = spark.sparkContext.accumulator(0)
+
+    def tag(v):
+        calls.add(1)
+        return v.upper()
+
+    tagged = F.udf(tag, "string")
+    pipe = Pipeline([
+        Node("u", lambda df: df.withColumn("v", tagged("v")), deps=["src"],
+             sink=f"{db}.u", dq_rules=[DQRule("v_unique", "unique", column="v")]),
+    ])
+    res = pipe.run(spark, {"src": src})
+    assert calls.value == src.count() == 3
+    assert [(r.rule, r.passed, r.observed) for r in res["u"].dq] == [("v_unique", True, 3)]
+    assert sorted(r.v for r in spark.table(f"{db}.u").collect()) == ["A", "B", "C"]
