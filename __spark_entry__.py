@@ -784,7 +784,7 @@ def _q_t_pretrain_pipeline(spark, sf_dir):
         .join(score_char_lm(d, lm, "doc_id", "text", grams=g), "doc_id")
         .filter((F.col("quality") >= 0.8) & (F.col("nll") <= 0.8))
     )
-    # materialize="checkpoint" pins the 150-row sample and re-spreads
+    # materialize=True pins the 150-row sample and re-spreads
     # it, so the shard layout below runs distributed instead of
     # inheriting the mid-plan limit's single partition (the last
     # explain-audit offender — 0 single-partition exchanges now)
@@ -793,7 +793,7 @@ def _q_t_pretrain_pipeline(spark, sf_dir):
         "doc_id",
         "n_chars",
         k=150,
-        materialize="checkpoint",
+        materialize=True,
     )
     return global_shuffle(picked, "doc_id", n_shards=4).select(
         "doc_id", "lang", "shard", "shard_pos"

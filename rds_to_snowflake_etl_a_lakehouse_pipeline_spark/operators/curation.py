@@ -224,7 +224,7 @@ def weighted_sample(
     weight_col: str,
     k: int,
     seed: int = 42,
-    materialize: str | None = None,
+    materialize: bool = False,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis &
     Spirakis, "Weighted random sampling with a reservoir", 2006): each
@@ -252,13 +252,12 @@ def weighted_sample(
     Spark falls back to sort + single-partition GlobalLimit over the
     input — fine when upstream gates have already shrunk the set (the
     narrow (key, weight, priority) rows of a filtered candidate pool),
-    wrong over a raw 100 TB corpus. Pass ``materialize``
-    ("checkpoint" | "persist", the :func:`~.dedup._materialize`
-    strategies) to cut the plan there: the k-row sample is computed
-    with the limit TERMINAL (per-partition heaps, k-sized merge),
-    pinned, and re-spread across ``defaultParallelism`` partitions so
-    every downstream stage runs distributed instead of inheriting the
-    limit's single partition.
+    wrong over a raw 100 TB corpus. Pass ``materialize=True`` to cut
+    the plan there: the k-row sample is computed with the limit
+    TERMINAL (per-partition heaps, k-sized merge), pinned with
+    ``localCheckpoint``, and re-spread across ``defaultParallelism``
+    partitions so every downstream stage runs distributed instead of
+    inheriting the limit's single partition.
     """
     h = F.conv(
         F.substring(
@@ -279,10 +278,8 @@ def weighted_sample(
         .limit(k)
         .drop("_pri")
     )
-    if materialize is not None:
-        from .dedup import _materialize
-
-        out = _materialize(out, materialize).repartition(
+    if materialize:
+        out = out.localCheckpoint().repartition(
             df.sparkSession.sparkContext.defaultParallelism
         )
     return out
@@ -431,6 +428,15 @@ def percentile_buckets(
     unpartitioned window pins the ENTIRE table through one task.
     ``bucket = 1 + #{thresholds ≤ value}``.
 
+    Thresholds are Spark's exact ``percentile``: for ``p = i/n_buckets``
+    over the n sorted values, ``pos = p·(n − 1)``, ``lower = ⌊pos⌋``,
+    ``higher = ⌈pos⌉``, and the threshold is ``(higher − pos)·lo +
+    (pos − lower)·hi`` (just ``lo`` when ``lo == hi``), interpolated from
+    the lower neighbour. numpy's ``linear`` method computes the same
+    quantile as ``hi − (hi − lo)·(1 − t)`` for ``t ≥ 0.5``; the two can
+    round apart in the last place (e.g. between 0.0 and 5e-324 this
+    rule gives 0.0, numpy 5e-324).
+
     Semantic difference vs NTILE, deliberate: bucket membership is
     VALUE-based, so boundary-equal rows always share a bucket
     (deterministic, engine-independent) while NTILE splits ties by
@@ -551,7 +557,6 @@ def cluster_split(
     dst: str = "id_b",
     splits=None,
     algorithm: str = "star",
-    storage: str = "checkpoint",
 ) -> DataFrame:
     """Leakage-safe train/val/test assignment: rows are first joined
     into near-dup CLUSTERS (connected components over ``pairs`` — any
@@ -584,9 +589,7 @@ def cluster_split(
     from ..functions.text import DEFAULT_SPLITS, hash_split
     from .dedup import connected_components
 
-    labels = connected_components(
-        pairs, src=src, dst=dst, algorithm=algorithm, storage=storage
-    )
+    labels = connected_components(pairs, src=src, dst=dst, algorithm=algorithm)
     out = df.join(labels.withColumnRenamed("id", id_col), id_col, "left")
     cluster = F.coalesce(F.col("component"), F.col(id_col))
     return (

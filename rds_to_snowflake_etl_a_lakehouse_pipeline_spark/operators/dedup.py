@@ -30,72 +30,6 @@ from pyspark.sql.functions import pandas_udf
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.session import (
     ensure_parallelism as _ensure_parallelism,
 )
-from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-    _plan_size_bytes,
-)
-
-
-def _materialize(df: DataFrame, storage: str, eager: bool = True) -> DataFrame:
-    """Materialize an intermediate so downstream consumers reuse its
-    blocks instead of recomputing.
-
-    ``storage="checkpoint"``: ``localCheckpoint`` — truncates lineage
-    (iterative plans stay flat) and its blocks are released by the
-    context cleaner on GC, but they are NOT recomputable: losing an
-    executor (spot/preemptible nodes, dynamic-allocation downscale)
-    fails the job.
-
-    ``storage="persist"``: ``persist(MEMORY_AND_DISK)`` — lineage is
-    retained, so lost blocks are recomputed and the job survives
-    executor loss; the durable choice for preemptible clusters. Costs:
-    iterative callers' plans grow with rounds (bounded by ``max_iter``),
-    and blocks occupy executor storage until ``unpersist()`` (iterative
-    callers here unpersist each superseded round; the final result's
-    blocks are released when the caller drops the DataFrame).
-
-    ``storage="table"``: write to a catalog stage table
-    (``sg_stage_<uuid>``) and read it back — the only strategy that
-    survives a FULL job/driver restart, not just executor loss: a
-    restarted job can resume from the written stage instead of
-    recomputing (long multi-stage curation jobs on preemptible
-    infrastructure). Costs a full write+read round trip per
-    materialization; stage tables persist until dropped — iterative
-    callers leave one per round, so reserve it for the coarse
-    per-batch materializations (signatures, hit sets, survivors) and
-    clean up with ``DROP TABLE sg_stage_*`` when the job retires.
-    """
-    if storage == "checkpoint":
-        return df.localCheckpoint(eager=eager)
-    if storage == "persist":
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            df.count()
-        return df
-    if storage == "table":
-        import uuid
-
-        name = f"sg_stage_{uuid.uuid4().hex[:12]}"
-        df.write.mode("errorifexists").format("parquet").saveAsTable(name)
-        return df.sparkSession.table(name)
-    raise ValueError(
-        f"unknown storage strategy: {storage!r} (checkpoint|persist|table)"
-    )
-
-
-def cleanup_stage_tables(spark) -> list[str]:
-    """Drop every ``sg_stage_*`` table the ``storage="table"``
-    materialization strategy left behind (:func:`_materialize`) —
-    run when a job retires; stage tables exist precisely so they
-    SURVIVE restarts, so nothing drops them automatically. Returns the
-    dropped table names."""
-    dropped = []
-    for t in spark.catalog.listTables():
-        if t.name.startswith("sg_stage_"):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            dropped.append(t.name)
-    return dropped
 
 
 def _shingles(text: Column, n: int) -> Column:
@@ -218,7 +152,6 @@ def exact_incremental_dedup(
     order_col: str | None = None,
     append: bool = True,
     n_buckets: int | None = None,
-    storage: str = "checkpoint",
     batch_id: int | None = None,
 ) -> DataFrame:
     """Drop new rows whose exact content was ALREADY SEEN — by the
@@ -230,11 +163,10 @@ def exact_incremental_dedup(
     row, one within-batch window, and one anti-join against the
     bucketed index; the index is never re-scanned.
 
-    Survivors are MATERIALIZED before the append (``storage`` as in
-    :func:`_materialize`) — a lazy survivor plan re-read after the
-    append would find its own fingerprints in the index and drop every
-    row as a duplicate of itself (the same hazard the Hamming index
-    documents).
+    Survivors are pinned with ``localCheckpoint`` before the append —
+    a lazy survivor plan re-read after the append would find its own
+    fingerprints in the index and drop every row as a duplicate of
+    itself (the same hazard the Hamming index documents).
 
     ``batch_id`` makes the step REPLAY-EXACT for streaming callers
     (:func:`~..streaming.events.stream_exact_dedup`), the same stamp
@@ -273,10 +205,9 @@ def exact_incremental_dedup(
         probe_idx = idx.filter(
             F.col("_src_batch").isNull() | (F.col("_src_batch") != batch_id)
         )
-    survivors = _materialize(
-        self_kept.join(probe_idx, self_kept["_fp"] == probe_idx["fp"], "left_anti"),
-        storage,
-    )
+    survivors = self_kept.join(
+        probe_idx, self_kept["_fp"] == probe_idx["fp"], "left_anti"
+    ).localCheckpoint()
     if append:
         # the replay anti-join stays LAZY and runs inside the append
         # write job itself (r17): its index scan snapshots the file set
@@ -711,7 +642,7 @@ def _index_hit_slice(
     batch's distinct keys bounds the window and the slice by the hit
     buckets, but the index scan itself opens every index file, so a
     caller with several consumers pins the slice once
-    (:func:`_materialize`). ``cap=None`` keeps every hit row."""
+    (``localCheckpoint``). ``cap=None`` keeps every hit row."""
     hit = probe.select(*keys).distinct()
     sized = _bucket_sizes(idx.join(hit, keys), keys, id_col)
     if cap is None:
@@ -798,7 +729,6 @@ def minhash_incremental_dedup(
     append: bool = True,
     n_buckets: int | None = None,
     max_bucket_size: int | None = None,
-    storage: str = "checkpoint",
     log_skew: bool | None = None,
     skew_sink: list | None = None,
     **sig_kwargs,
@@ -818,7 +748,7 @@ def minhash_incremental_dedup(
     the same way (:func:`~..sources.io.check_table_meta`).
 
     The batch is SIGNED ONCE: the signature kernel is the dominant
-    per-batch cost, so its output is pinned (:func:`_materialize`) and
+    per-batch cost, so its output is pinned (``localCheckpoint``) and
     the corpus probe, the within-batch self-join and the survivor append
     all read the pin instead of re-running it per consumer.
 
@@ -847,12 +777,6 @@ def minhash_incremental_dedup(
     with the index's file count; compaction bounds that. An uncapped
     call pins only the signatures and reads the index once, in the
     probe join.
-
-    ``storage``: materialization strategy for the pins and the survivor
-    set — ``"checkpoint"`` (default; scoped blocks, fails on executor
-    loss), ``"persist"`` (lineage kept, survives executor loss — use on
-    preemptible clusters), or ``"table"`` (written stage table, survives
-    full job restarts). See :func:`_materialize`.
 
     ``log_skew`` (round 17): per-batch bucket-skew measurement into the
     ``{table}_skew_log`` companion (:func:`_bucket_skew_report` —
@@ -895,16 +819,15 @@ def minhash_incremental_dedup(
     sig = _signature_table(new_df, id_col, text_col, num_hashes, shingle_n, impl)
     idx = spark.table(table)
     if cap is None and not log_skew:
-        banded = _band_explode(_materialize(sig, storage), bands, num_hashes // bands)
+        banded = _band_explode(sig.localCheckpoint(), bands, num_hashes // bands)
     else:
         # One pin per side, one index read per batch: the banded batch
         # with its bucket sizes, and the index's hit slice with its own.
         # The probe, the star paths and the skew report all read these.
-        banded = _materialize(
-            _bucket_sizes(_band_explode(sig, bands, num_hashes // bands), keys, "_id"),
-            storage,
-        )
-        idx = _materialize(_index_hit_slice(idx, banded, keys, id_col, cap), storage)
+        banded = _bucket_sizes(
+            _band_explode(sig, bands, num_hashes // bands), keys, "_id"
+        ).localCheckpoint()
+        idx = _index_hit_slice(idx, banded, keys, id_col, cap).localCheckpoint()
 
     # round-to-6 before the threshold, matching minhash_query_index /
     # minhash_lsh_pairs (differs only for non-power-of-2 num_hashes,
@@ -955,7 +878,7 @@ def minhash_incremental_dedup(
             )
         )
     losers = vs_corpus.unionByName(within).distinct()
-    survivors = _materialize(new_df.join(losers, id_col, "left_anti"), storage)
+    survivors = new_df.join(losers, id_col, "left_anti").localCheckpoint()
 
     if log_skew:
         report = _bucket_skew_report(
@@ -980,23 +903,6 @@ def minhash_incremental_dedup(
     return survivors
 
 
-def _pair_grain_decision(
-    df: DataFrame,
-    pair_grain: str,
-    narrow_min_input_bytes: int,
-) -> str:
-    """Resolve ``pair_grain="auto"`` to "wide" or "narrow" from the
-    input's free Catalyst size estimate (see :func:`minhash_lsh_pairs`
-    for the regime argument). Unknown estimate → "wide" (the current,
-    bench-validated shape)."""
-    if pair_grain in ("wide", "narrow"):
-        return pair_grain
-    if pair_grain != "auto":
-        raise ValueError(f"pair_grain must be auto|wide|narrow, got {pair_grain!r}")
-    est = _plan_size_bytes(df)
-    return "narrow" if est is not None and est >= narrow_min_input_bytes else "wide"
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -1006,11 +912,7 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     threshold: float = 0.7,
     impl: str = "arrow",
-    persist_index: bool = True,
     max_bucket_size: int | None = None,
-    storage: str = "checkpoint",
-    pair_grain: str = "auto",
-    narrow_min_input_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH.
 
@@ -1023,19 +925,13 @@ def minhash_lsh_pairs(
     ``impl``: "arrow" (default — JVM shingle hashing + vectorized numpy
     min-mix, ~60× faster) or "catalyst" (pure built-in expressions).
 
-    ``persist_index``: materialize the (_id, _sig) signature table so
-    the self-join computes signatures once, not once per side (at
-    warehouse scale you would write this index to a table instead).
-    ``storage`` picks the materialization strategy (see
-    :func:`_materialize`): the default ``"checkpoint"`` is scoped —
-    blocks are released automatically once the returned DataFrame is
-    garbage collected — but NOT recomputable, so an executor loss
-    (spot nodes, dynamic-allocation downscale) fails the job.
-    ``"persist"`` keeps lineage, surviving executor loss at the price
-    of a cache entry that lives until the result is dropped — the
-    right knob for preemptible clusters. For long-running deployments,
-    write the signature index to a real table instead
-    (:func:`minhash_build_index`, the stated warehouse-scale form).
+    The (_id, _sig) signature table is pinned with ``localCheckpoint``
+    so the self-join computes signatures once, not once per side. Its
+    blocks are released once the returned DataFrame is garbage
+    collected, but they are not recomputable: an executor loss fails
+    the job. For long-running deployments, write the signature index to
+    a real table instead (:func:`minhash_build_index`, the stated
+    warehouse-scale form).
 
     ``max_bucket_size``: skew guard for boilerplate-heavy corpora. A
     band bucket holding B docs yields B(B-1)/2 candidates under the
@@ -1057,116 +953,16 @@ def minhash_lsh_pairs(
     so set it only when downstream consumes components/dedup decisions
     rather than the raw pair list.
 
-    ``pair_grain`` (round 18 — the size-adaptive switch deferred from
-    round 17): shape of the banded self-join, results identical.
-
-    * ``"wide"`` — the candidate join carries the full signature
-      (``bands × num_hashes × 8`` ≈ 8 KiB/doc at defaults through the
-      band exchange) and each candidate's estimate is computed before
-      the pair-dedup. Fewest stages; the measured optimum at bench SF,
-      where per-stage fixed cost (~0.2–0.5 s locally) dominates.
-    * ``"narrow"`` — the 100 TB shape: the self-join and pair-dedup run
-      over ``(band, bucket, _id)`` only (~24 B/doc/band), and the two
-      signatures are re-attached at UNIQUE-pair grain from the
-      materialized index to compute the estimate once per pair. ~21×
-      fewer bytes per doc through the band exchange at defaults, paid
-      for with two extra joins + one extra narrow dedup shuffle —
-      measured LOSS at sf0.1 (4.4 → 6.1 s, r17) and win once the
-      banded signature bytes dominate the fixed stage cost.
-    * ``"auto"`` (default) — "narrow" when Catalyst's free input-size
-      estimate is at least ``narrow_min_input_bytes`` (default
-      256 MiB), else "wide". Derivation: banded signature shuffle bytes
-      = rows × bands × num_hashes × 8 ≈ input_bytes × (8 KiB /
-      avg_doc_bytes) at defaults, so a ≥256 MiB corpus (avg docs well
-      under 8 KiB — dedup-grade corpora by construction) shuffles
-      ≥ hundreds of MiB of signatures that the narrow shape avoids,
-      amortizing its ~2 s of extra fixed stage cost many times over;
-      an unknown estimate (e.g. a non-scan input behind a Python map)
-      falls back to "wide". See ``tools/smoke_minhash_narrow.py`` for
-      the measured crossover.
     """
     rows_per_band = num_hashes // bands
-    grain = _pair_grain_decision(df, pair_grain, narrow_min_input_bytes)
     sig = _signature_table(df, id_col, text_col, num_hashes, shingle_n, impl)
-    if persist_index:
-        # Materialize the narrow (_id, _sig) table — NOT the 16×-exploded
-        # banded table — eagerly so the self-join's two scans don't each
-        # run the signature UDF. The banding explode is cheap Catalyst
-        # and recomputes from the checkpointed blocks. localCheckpoint
-        # (MEMORY_AND_DISK — spills rather than OOMs) is scoped: unlike
-        # persist(), whose SQL-cache entry survives until an explicit
-        # unpersist/clearCache, its blocks are freed by the context
-        # cleaner when this DataFrame is GC'd, so bench loops and
-        # long-lived pipelines don't accumulate executor storage.
-        sig = _materialize(sig, storage)
-
-    banded = _band_explode(sig, bands, rows_per_band)
+    # Pin the narrow (_id, _sig) table, not the 16×-exploded banded
+    # one: the banding explode is cheap Catalyst and recomputes from the
+    # checkpointed blocks (MEMORY_AND_DISK, spills rather than OOMs).
+    banded = _band_explode(sig.localCheckpoint(), bands, rows_per_band)
 
     def _est(sig_x, sig_y):
         return _jaccard_est(sig_x, sig_y, num_hashes)
-
-    if grain == "narrow":
-        # The candidate self-join and pair-dedup over (band, bucket,
-        # _id) only — Catalyst prunes ``_sig`` out of the band exchange
-        # (the bucket hash is computed before the shuffle). Signatures
-        # re-attach at UNIQUE-pair grain from the materialized index,
-        # so the estimate is computed once per pair instead of once per
-        # shared band. Identical output to the wide shape: the estimate
-        # is deterministic per (id_a, id_b), so dedup-then-threshold ==
-        # threshold-then-dedup.
-        slim = banded.select("band", "bucket", "_id")
-        hot_cand = None
-        if max_bucket_size is not None:
-            w_bucket = Window.partitionBy("band", "bucket")
-            w_rep = w_bucket.orderBy(F.col("_id").asc())
-            sized = slim.withColumn("_bsz", F.count("*").over(w_bucket))
-            hot_cand = (
-                sized.filter(F.col("_bsz") > max_bucket_size)
-                .withColumn("_rep_id", F.first("_id").over(w_rep))
-                .filter(F.col("_id") != F.col("_rep_id"))
-                .select(
-                    F.col("_rep_id").alias("id_a"), F.col("_id").alias("id_b")
-                )
-            )
-            slim = sized.filter(F.col("_bsz") <= max_bucket_size).drop("_bsz")
-        a = slim.alias("a")
-        b = slim.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        sig_a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sig_a"))
-        sig_b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sig_b"))
-
-        def _attach(p):
-            return (
-                p.join(sig_a, "id_a")
-                .join(sig_b, "id_b")
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.round(_est(F.col("_sig_a"), F.col("_sig_b")), 6).alias(
-                        "jaccard_est"
-                    ),
-                )
-            )
-
-        pairs = _attach(cand).filter(F.col("jaccard_est") >= threshold)
-        if hot_cand is not None:
-            # Star pairs stay threshold-exempt (connectivity edges —
-            # see the max_bucket_size docstring); deduped before the
-            # attach so a member flooded in several buckets re-attaches
-            # its signatures once.
-            pairs = pairs.unionByName(
-                _attach(hot_cand.dropDuplicates(["id_a", "id_b"]))
-            )
-        return pairs.dropDuplicates(["id_a", "id_b"])
 
     hot_pairs = None
     if max_bucket_size is not None:
@@ -1249,7 +1045,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 20,
     algorithm: str = "label",
-    storage: str = "checkpoint",
 ) -> DataFrame:
     """(id, component) for every vertex in ``edges``, where component =
     the MIN vertex id reachable from it (undirected).
@@ -1276,45 +1071,34 @@ def connected_components(
     variants, social/citation graphs). Same output contract; property-
     tested equal to the label path on random graphs.
 
-    Both paths materialize intermediate state each round and exit early
-    at a fixed point. ``storage="checkpoint"`` (default) uses
-    ``localCheckpoint``: the plan stays flat across iterations and
+    Both paths pin each round's state with ``localCheckpoint`` and exit
+    early at a fixed point: the plan stays flat across iterations and
     blocks are released on GC, but they are unrecoverable — a lost
     executor (spot/preemptible nodes, dynamic-allocation downscale)
-    fails the job. ``storage="persist"`` keeps lineage (lost blocks
-    recompute; the job survives preemption) at the price of a plan
-    that grows with rounds — bounded by ``max_iter``, and each
-    superseded round is unpersisted as soon as the next is
-    materialized, so storage stays one-round-sized. Use "persist" on
-    preemptible hardware, or reliable ``checkpoint()`` via a
-    checkpoint dir for very high round counts.
+    fails the job, which is then re-run.
     Raises RuntimeWarning when ``max_iter`` rounds elapse before
     convergence — the returned labels would otherwise silently split a
     wide component (under-deleting in dedup) with no signal.
     """
     if algorithm == "star":
-        return _connected_components_star(edges, src, dst, max_iter, storage)
+        return _connected_components_star(edges, src, dst, max_iter)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm: {algorithm!r} (label|star)")
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # pre-partition the static join side by its per-round key ONCE, so
     # the propagation join never re-exchanges the edge list
-    e = _materialize(e.distinct().repartition("b"), storage)
+    e = e.distinct().repartition("b").localCheckpoint()
     # Round 1 fused into the init: against identity labels the neighbor
     # join IS the edge list, so min(self ∪ N(self)) is one agg over e —
     # no vertex-distinct pass, no first-round join.
-    labels = _materialize(
+    labels = (
         e.groupBy("a")
         .agg(F.min("b").alias("_mb"))
-        .select(
-            F.col("a").alias("id"), F.least("a", "_mb").alias("comp")
-        ),
-        storage,
-        eager=False,
+        .select(F.col("a").alias("id"), F.least("a", "_mb").alias("comp"))
+        .localCheckpoint(eager=False)
     )
     changed = None
-    prev_upd = labels
     for _ in range(max_iter - 1):
         nbr = e.join(
             labels.select(F.col("id").alias("_b"), "comp"),
@@ -1326,24 +1110,18 @@ def connected_components(
         # followed by a separate change-count job. The old label rides
         # the SAME aggregation as a self-tagged min (each id carries
         # exactly one self row), so change detection costs no join.
-        upd = _materialize(
+        upd = (
             labels.select("id", "comp", F.lit(True).alias("_mine"))
             .unionByName(nbr)
             .groupBy("id")
             .agg(
                 F.min("comp").alias("comp"),
                 F.min(F.when(F.col("_mine"), F.col("comp"))).alias("_old"),
-            ),
-            storage,
-            eager=False,
+            )
+            .localCheckpoint(eager=False)
         )
         changed = upd.filter(F.col("comp") != F.col("_old")).count()
         labels = upd.select("id", "comp")
-        if storage == "persist" and prev_upd is not None:
-            # the new round is materialized; the superseded round's
-            # blocks back nothing downstream — release them now
-            prev_upd.unpersist()
-        prev_upd = upd
         if changed == 0:
             break
     if changed is None:
@@ -1363,7 +1141,7 @@ def connected_components(
 
 
 def _connected_components_star(
-    edges: DataFrame, src: str, dst: str, max_iter: int, storage: str = "checkpoint"
+    edges: DataFrame, src: str, dst: str, max_iter: int
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al., SoCC
     '14): round count is O(log² n) — in practice ~log n — regardless of
@@ -1400,10 +1178,7 @@ def _connected_components_star(
         .select(F.col("a").alias("id"), F.col("a").alias("component"))
         .distinct()
     )
-    e = _materialize(
-        norm.filter(F.col("a") != F.col("b")).distinct(),
-        storage,
-    )
+    e = norm.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
 
     def signature(df: DataFrame) -> tuple:
         row = df.agg(
@@ -1414,7 +1189,6 @@ def _connected_components_star(
 
     sig = signature(e)
     converged = False
-    prev_e = e
     for _ in range(max_iter):
         # large-star: undirected neighborhoods; each neighbor strictly
         # greater than u re-attaches to the neighborhood min. Output
@@ -1435,18 +1209,14 @@ def _connected_components_star(
         sized = ls.withColumn("_m", F.min("b").over(Window.partitionBy("a")))
         # lazy: the signature agg is the round's one action and saves
         # the blocks as a side effect
-        e = _materialize(
+        e = (
             sized.filter(F.col("b") != F.col("_m"))
             .select(F.col("b").alias("a"), F.col("_m").alias("b"))
             .unionByName(sized.select("a", F.col("_m").alias("b")))
-            .distinct(),
-            storage,
-            eager=False,
+            .distinct()
+            .localCheckpoint(eager=False)
         )
         new_sig = signature(e)
-        if storage == "persist" and prev_e is not None:
-            prev_e.unpersist()
-        prev_e = e
         if new_sig == sig:
             converged = True
             break
@@ -1539,7 +1309,6 @@ def cc_dedup(
     src: str = "id_a",
     dst: str = "id_b",
     algorithm: str = "label",
-    storage: str = "checkpoint",
 ) -> DataFrame:
     """Keep one representative (the min id) per connected component of
     ``pairs``; rows never appearing in a pair survive untouched. Use
@@ -1547,13 +1316,9 @@ def cc_dedup(
     simhash_near_dups, embedding_cosine_pairs) when transitive cluster
     semantics are wanted instead of the greedy per-pair drop.
     ``algorithm`` selects the :func:`connected_components` path
-    ("label" for shallow near-dup graphs, "star" for high-diameter);
-    ``storage`` its per-round materialization strategy
-    (checkpoint|persist|table — see :func:`_materialize`).
+    ("label" for shallow near-dup graphs, "star" for high-diameter).
     """
-    labels = connected_components(
-        pairs, src=src, dst=dst, algorithm=algorithm, storage=storage
-    )
+    labels = connected_components(pairs, src=src, dst=dst, algorithm=algorithm)
     losers = labels.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
@@ -1793,7 +1558,6 @@ def set_jaccard_pairs(
     ex: DataFrame,
     threshold: float = 0.5,
     max_df: int | None = 1000,
-    storage: str = "checkpoint",
 ) -> DataFrame:
     """Exact Jaccard over arbitrary element sets: ``ex`` is an
     ``(_id, shingle)`` frame with one UNIQUE row per (set, element) —
@@ -1803,8 +1567,8 @@ def set_jaccard_pairs(
     ``multimodal.frame_hash_pairs`` (video): candidate pairs share ≥1
     element (equi-join on the element — never all-pairs), ``max_df``
     caps boilerplate elements (the quadratic skew bomb), and the
-    materialized index (``storage`` knob) feeds document frequencies,
-    set sizes, and both self-join sides from one computation."""
+    checkpointed index feeds document frequencies, set sizes, and both
+    self-join sides from one computation."""
     if max_df is not None:
         rare = (
             ex.groupBy("shingle")
@@ -1813,7 +1577,7 @@ def set_jaccard_pairs(
             .select("shingle")
         )
         ex = ex.join(rare, "shingle")
-    ex = _materialize(ex, storage)
+    ex = ex.localCheckpoint()
     sizes = ex.groupBy("_id").agg(F.count("*").alias("sz"))
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
@@ -1847,7 +1611,6 @@ def ngram_containment_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = 1000,
-    storage: str = "checkpoint",
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT for candidate pairs sharing ≥1 shingle:
     ``containment(A in B) = |shingles(A) ∩ shingles(B)| / |shingles(A)|``
@@ -1861,8 +1624,8 @@ def ngram_containment_pairs(
 
     Same plan skeleton and skew posture as :func:`ngram_jaccard_pairs`
     (inverted-index self-join, ``max_df`` boilerplate-shingle cap,
-    materialized index reused across all consumers — ``storage`` knob
-    as elsewhere); only the final arithmetic differs.
+    checkpointed index reused across all consumers); only the final
+    arithmetic differs.
     """
     ex = _ensure_parallelism(df).select(
         F.col(id_col).alias("_id"),
@@ -1876,7 +1639,7 @@ def ngram_containment_pairs(
             .select("shingle")
         )
         ex = ex.join(rare, "shingle")
-    ex = _materialize(ex, storage)
+    ex = ex.localCheckpoint()
     sizes = ex.groupBy("_id").agg(F.count("*").alias("sz"))
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
@@ -2411,7 +2174,6 @@ def span_incremental_dedup(
     append: bool = True,
     out_col: str = "deduped_text",
     removed_col: str = "n_tokens_removed",
-    storage: str = "checkpoint",
     n_buckets: int | None = None,
     batch_id: int | None = None,
 ) -> DataFrame:
@@ -2434,9 +2196,8 @@ def span_incremental_dedup(
     (anti-join). Indexes built before the ``_src_batch`` column
     existed degrade gracefully: no exclusion, unstamped append.
 
-    The hit set is MATERIALIZED (``storage``: checkpoint|persist|table, see
-    :func:`_materialize` for the durability trade-off) before the
-    append touches the index — the returned DataFrame is lazy, and an
+    The hit set is pinned with ``localCheckpoint`` before the append
+    touches the index — the returned DataFrame is lazy, and an
     un-materialized hit plan re-read at collect time would see the
     index ALREADY containing this batch's own spans and mask every
     token (caught by
@@ -2473,16 +2234,14 @@ def span_incremental_dedup(
     # blocks (the per-row k-token join + md5 pass is the dominant
     # per-batch cost; lazily re-deriving it per consumer would pay it
     # 3-4x).
-    sb = _materialize(_span_explode(batch, id_col, text_col, k), storage)
+    sb = _span_explode(batch, id_col, text_col, k).localCheckpoint()
     # (a) historical hits: semi-join keeps the probe side's (id, pos)
     hist_hits = sb.join(probe_idx, "_h", "leftsemi").select(
         F.col("_sid").alias(id_col), F.col("_pos").alias("pos")
     )
     # (b) within-batch non-first duplicates
     batch_hits = duplicated_span_hits(batch, id_col, text_col, k=k, exploded=sb)
-    hits = _materialize(
-        hist_hits.unionByName(batch_hits).distinct(), storage
-    )
+    hits = hist_hits.unionByName(batch_hits).distinct().localCheckpoint()
     masked = _apply_span_mask(batch, hits, id_col, text_col, k, out_col, removed_col)
     if append:
         from ..sources.io import write_table

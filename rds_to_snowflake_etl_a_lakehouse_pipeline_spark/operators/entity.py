@@ -207,20 +207,19 @@ def resolve_entities(
     entity_col: str = "entity_id",
     algorithm: str = "label",
     max_iter: int = 20,
-    storage: str = "checkpoint",
 ) -> DataFrame:
     """``df`` plus ``entity_col``: the MIN ``id_col`` of each record's
     transitive similarity cluster (records with no match resolve to
     themselves). Transitive closure means A~B and B~C share one entity
     even when A and C never co-occur in a block — the contract pair-
     greedy matching cannot give (see
-    :func:`..dedup.connected_components`, whose ``algorithm`` /
-    ``storage`` knobs pass through)."""
+    :func:`..dedup.connected_components`, whose ``algorithm`` knob
+    passes through)."""
     pairs = er_candidate_pairs(
         df, id_col, text_col, block_key, threshold, max_block_size, similarity
     )
     labels = connected_components(
-        pairs, max_iter=max_iter, algorithm=algorithm, storage=storage
+        pairs, max_iter=max_iter, algorithm=algorithm
     ).withColumnRenamed("id", id_col)
     return (
         df.join(labels, id_col, "left")
@@ -423,7 +422,6 @@ def er_incremental(
     append: bool = True,
     algorithm: str = "label",
     max_iter: int = 20,
-    storage: str = "checkpoint",
     n_buckets: int | None = None,
     auto_compact_relabels: int | None = None,
     log_skew: bool | None = None,
@@ -513,7 +511,6 @@ def er_incremental(
         batch_edges.unionByName(cross_edges),
         max_iter=max_iter,
         algorithm=algorithm,
-        storage=storage,
     )
     assigned = (
         batch.select(F.col(id_col).alias("id"))

@@ -39,8 +39,7 @@ aggregation key); each iteration is then one co-partitioned join on
 ``src`` (rank side shuffles, edge side is the big static relation —
 AQE picks the strategy) plus one ``dst`` aggregation that reuses the
 layout. Iterations are O(|E|) each and the chain is cut every
-iteration by ``localCheckpoint``/``checkpoint`` via the same
-``storage`` dial as the dedup family.
+iteration by ``localCheckpoint``, as in the dedup family.
 """
 
 from __future__ import annotations
@@ -48,14 +47,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _materialize
-
 
 def _graph_parts(
     edges: DataFrame,
     src: str,
     dst: str,
-    storage: str,
     weight_col: str | None = None,
 ):
     """(nodes, edge_deg) — distinct node set over both endpoints and
@@ -68,18 +64,18 @@ def _graph_parts(
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("double").alias("_w"))
-    e = _materialize(edges.select(*cols), storage)
-    nodes = _materialize(
+    e = edges.select(*cols).localCheckpoint()
+    nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        storage,
+        .distinct()
+        .localCheckpoint()
     )
     deg_expr = (
         F.sum("_w") if weight_col is not None else F.count("*")
     ).alias("_deg")
     deg = e.groupBy("src").agg(deg_expr)
-    edge_deg = _materialize(e.join(deg, "src"), storage)
+    edge_deg = e.join(deg, "src").localCheckpoint()
     return nodes, edge_deg
 
 
@@ -90,7 +86,6 @@ def pagerank_integer(
     n_iter: int = 10,
     damping_pct: int = 85,
     scale: int = 10**9,
-    storage: str = "checkpoint",
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """(node, rank) after ``n_iter`` damped power iterations over
@@ -111,7 +106,7 @@ def pagerank_integer(
     ranks exactly 0."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    nodes, edge_deg = _graph_parts(edges, src, dst, storage)
+    nodes, edge_deg = _graph_parts(edges, src, dst)
     # overflow guard: worst case a single node absorbs all mass. With
     # seeds, teleport mass enters at every node of the UNION node∪seed
     # set (a seed set largely outside the edge list still injects
@@ -140,12 +135,12 @@ def pagerank_integer(
         seed_nodes = seeds.select(
             F.col(seeds.columns[0]).alias("node")
         ).distinct()
-        marked = _materialize(
+        marked = (
             nodes.unionByName(seed_nodes)
             .distinct()
             .join(seed_nodes.withColumn("_s", F.lit(1)), "node", "left")
-            .select("node", F.col("_s").isNotNull().alias("_seed")),
-            storage,
+            .select("node", F.col("_s").isNotNull().alias("_seed"))
+            .localCheckpoint()
         )
         init = F.when(F.col("_seed"), F.lit(scale)).otherwise(F.lit(0))
         base_col = F.when(F.col("_seed"), F.lit(base)).otherwise(F.lit(0))
@@ -154,7 +149,7 @@ def pagerank_integer(
     else:
         ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
         base_df = nodes.select("node", F.lit(base).cast("long").alias("_base"))
-    for i in range(n_iter):
+    for _ in range(n_iter):
         contribs = (
             edge_deg.join(ranks, F.col("src") == F.col("node"))
             .select(
@@ -164,22 +159,16 @@ def pagerank_integer(
             .groupBy("dst")
             .agg(F.sum("_c").alias("_in"))
         )
-        nxt = _materialize(
+        ranks = (
             base_df.join(contribs, F.col("node") == F.col("dst"), "left")
             .select(
                 "node",
                 (F.col("_base") + F.coalesce(F.col("_in"), F.lit(0)))
                 .cast("long")
                 .alias("rank"),
-            ),
-            storage,
+            )
+            .localCheckpoint()
         )
-        # release the superseded round's blocks (the iterative-caller
-        # convention from dedup._materialize: under storage="persist"
-        # n_iter stale nodes-sized caches would otherwise pile up)
-        if i > 0 and storage == "persist":
-            ranks.unpersist()
-        ranks = nxt
     return ranks
 
 
@@ -189,7 +178,6 @@ def pagerank(
     dst: str = "dst",
     n_iter: int = 10,
     damping: float = 0.85,
-    storage: str = "checkpoint",
     weight_col: str | None = None,
     tol: float | None = None,
 ) -> DataFrame:
@@ -207,11 +195,11 @@ def pagerank(
     it — real link graphs converge in far fewer hops than a safe fixed
     ``n_iter``, and the check costs one 1-row aggregation per
     iteration (skipped entirely when ``tol`` is None)."""
-    nodes, edge_deg = _graph_parts(edges, src, dst, storage, weight_col)
+    nodes, edge_deg = _graph_parts(edges, src, dst, weight_col)
     base = 1.0 - damping
     ranks = nodes.select("node", F.lit(1.0).alias("rank"))
     w = F.col("_w") if weight_col is not None else F.lit(1.0)
-    for i in range(n_iter):
+    for _ in range(n_iter):
         contribs = (
             edge_deg.join(ranks, F.col("src") == F.col("node"))
             .select(
@@ -221,12 +209,13 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("_c").alias("_in"))
         )
-        nxt = _materialize(
-            nodes.join(contribs, F.col("node") == F.col("dst"), "left").select(
+        nxt = (
+            nodes.join(contribs, F.col("node") == F.col("dst"), "left")
+            .select(
                 "node",
                 (F.lit(base) + F.coalesce(F.col("_in"), F.lit(0.0))).alias("rank"),
-            ),
-            storage,
+            )
+            .localCheckpoint()
         )
         done = False
         if tol is not None:
@@ -237,10 +226,6 @@ def pagerank(
                 .first()[0]
             )
             done = delta is not None and delta < tol
-        # release the superseded round's blocks (iterative-caller
-        # convention from dedup._materialize)
-        if i > 0 and storage == "persist":
-            ranks.unpersist()
         ranks = nxt
         if done:
             break

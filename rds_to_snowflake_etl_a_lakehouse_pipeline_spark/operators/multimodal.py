@@ -1245,7 +1245,6 @@ def hamming_incremental_dedup(
     max_hamming: int = 3,
     append: bool = True,
     max_bucket_size: int | None = None,
-    storage: str = "checkpoint",
     log_skew: bool | None = None,
     skew_sink: list | None = None,
 ) -> DataFrame:
@@ -1269,8 +1268,8 @@ def hamming_incremental_dedup(
     semantics to BOTH joins — a hot (band, val) bucket is excluded
     from candidate generation (pairs also sharing a cold band still
     surface), bounding the self-join at O(cap·batch) and the probe at
-    O(cap·batch_hits). ``storage`` materializes the BATCH itself once
-    (``dedup._materialize``) so the fingerprint projection, the
+    O(cap·batch_hits). The BATCH itself is pinned once
+    (``localCheckpoint``) so the fingerprint projection, the
     within-batch self-join, the survivor anti-join, and the append all
     reuse pinned blocks instead of re-running the caller's upstream
     decode/FFT ``mapInPandas``.
@@ -1299,7 +1298,6 @@ def hamming_incremental_dedup(
         _bucket_sizes,
         _bucket_skew_report,
         _index_hit_slice,
-        _materialize,
         append_skew_reports,
     )
 
@@ -1316,7 +1314,7 @@ def hamming_incremental_dedup(
     # append all re-read the pinned blocks instead of re-running the
     # caller's upstream decode/FFT mapInPandas (the dominant per-batch
     # cost for media batches)
-    new_df = _materialize(new_df, storage)
+    new_df = new_df.localCheckpoint()
     fps = new_df.select(F.col(id_col), F.col(hash_col)).filter(
         F.col(hash_col).isNotNull()
     )
@@ -1326,8 +1324,8 @@ def hamming_incremental_dedup(
         # One pin per side, one index read per batch: the banded batch
         # with its bucket sizes, and the index's hit slice with its own.
         # The probe, the within-batch cap and the skew report read these.
-        banded = _materialize(_bucket_sizes(banded, keys, "_id"), storage)
-        idx = _materialize(_index_hit_slice(idx, banded, keys, id_col, cap), storage)
+        banded = _bucket_sizes(banded, keys, "_id").localCheckpoint()
+        idx = _index_hit_slice(idx, banded, keys, id_col, cap).localCheckpoint()
     cold_idx, within_banded = idx, banded
     if cap is not None:
         # a hot bucket is excluded from candidate generation on both sides
@@ -1356,7 +1354,7 @@ def hamming_incremental_dedup(
     # see the survivors' own just-appended fingerprints and drop them
     # as dups of themselves (the same hazard minhash_incremental_dedup
     # pins the same way)
-    survivors = _materialize(new_df.join(losers, id_col, "left_anti"), storage)
+    survivors = new_df.join(losers, id_col, "left_anti").localCheckpoint()
 
     if log_skew:
         report = _bucket_skew_report(
@@ -1606,7 +1604,6 @@ def frame_hash_pairs(
     every_n: int = 2,
     threshold: float = 0.5,
     max_df: int | None = 1000,
-    storage: str = "checkpoint",
 ) -> DataFrame:
     """Near-duplicate VIDEO detection by sampled-frame fingerprints:
     sample every Nth fixed-size frame (:func:`sample_frames`), hash
@@ -1628,9 +1625,7 @@ def frame_hash_pairs(
     ex = frames.select(
         F.col(id_col).alias("_id"), F.hex("frame").alias("shingle")
     ).distinct()
-    return set_jaccard_pairs(
-        ex, threshold=threshold, max_df=max_df, storage=storage
-    )
+    return set_jaccard_pairs(ex, threshold=threshold, max_df=max_df)
 
 
 # ----------------------------------------------------------------- EXIF tier

@@ -514,69 +514,30 @@ def test_minhash_lsh_hot_bucket_cap_bounds_candidates(spark):
     assert 1002 in kept_ids
 
 
-def test_minhash_pair_grain_narrow_matches_wide(spark):
-    """Round 18: the size-adaptive narrow pair shape (candidate join +
-    pair-dedup at (band, bucket, id) grain, signatures re-attached at
-    unique-pair grain) is results-identical to the wide shape — on a
-    plain near-dup corpus AND under a hot-bucket flood with the cap's
-    star pairs — and "auto" engages it only above the input-size
-    threshold, never on an unsizable plan."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
-        _pair_grain_decision,
-    )
-
-    B = 60
-    boiler = (
-        "subscribe to our newsletter terms of service privacy policy all "
-        "rights reserved copyright contact us about careers press blog"
-    )
-    rows = [(i, boiler) for i in range(B)]
-    rows += [(1000, BASE), (1001, NEAR), (1002, FAR)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-
-    def key(rs):
-        return sorted((r["id_a"], r["id_b"], r["jaccard_est"]) for r in rs)
-
-    for kw in (
-        dict(num_hashes=64, bands=16, threshold=0.5),
-        dict(num_hashes=64, bands=16, threshold=0.5, max_bucket_size=10),
-    ):
-        wide = minhash_lsh_pairs(
-            df, "doc_id", "text", pair_grain="wide", **kw
-        ).collect()
-        narrow = minhash_lsh_pairs(
-            df, "doc_id", "text", pair_grain="narrow", **kw
-        ).collect()
-        assert key(wide) == key(narrow) and len(wide) > 0
-
-    # auto: an input with REAL Catalyst stats (range scan) resolves
-    # wide at the default threshold, narrow once its estimate crosses
-    # the threshold
-    rng = spark.range(1000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("doc text "), F.col("id").cast("string")).alias("text"),
-    )
-    assert _pair_grain_decision(rng, "auto", 256 << 20) == "wide"
-    assert _pair_grain_decision(rng, "auto", 1) == "narrow"
-    # a local-list DataFrame is RDD-backed in PySpark — no usable size
-    # estimate (Catalyst's defaultSizeInBytes sentinel); auto must stay
-    # wide even at the lowest threshold rather than size-gate on garbage
-    assert _pair_grain_decision(df, "auto", 1) == "wide"
-    with pytest.raises(ValueError):
-        _pair_grain_decision(df, "sideways", 1)
-
-
 def test_plan_size_bytes_unknown_through_narrow_projection(spark, tmp_path):
     """Unknown statistics are detected at the plan's leaves: Catalyst
     scales an RDD-backed leaf's ``Long.MaxValue`` sentinel by a
     projection's row-width ratio, so a 2-column select over a
     60-column frame derives an estimate below any magnitude cutoff.
-    It must still read as unknown (and keep ``pair_grain="auto"``
-    wide), while a file scan keeps its real estimate."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
-        _pair_grain_decision,
+    It must still read as unknown (``io._sized_buckets`` gates on
+    it), as must a local-list frame, while a range or file scan keeps
+    its real estimate."""
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
         _plan_size_bytes,
     )
+
+    rng = spark.range(1000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc text "), F.col("id").cast("string")).alias("text"),
+    )
+    est = _plan_size_bytes(rng)
+    assert est is not None and est > 0
+    # a local-list DataFrame is RDD-backed in PySpark: no usable size
+    # estimate (Catalyst's defaultSizeInBytes sentinel)
+    local = spark.createDataFrame(
+        [(1000, BASE), (1001, NEAR)], "doc_id bigint, text string"
+    )
+    assert _plan_size_bytes(local) is None
 
     cols = ", ".join(f"c{i} bigint" for i in range(60))
     rdd = spark.sparkContext.parallelize([tuple(range(60))] * 3)
@@ -586,153 +547,11 @@ def test_plan_size_bytes_unknown_through_narrow_projection(spark, tmp_path):
     )
     assert _plan_size_bytes(wide) is None
     assert _plan_size_bytes(narrow) is None
-    assert _pair_grain_decision(narrow, "auto", 1) == "wide"
 
     path = str(tmp_path / "scan")
     spark.range(100).write.parquet(path)
     est = _plan_size_bytes(spark.read.parquet(path).select("id"))
     assert est is not None and est > 0
-
-
-@pytest.mark.slow
-def test_storage_persist_matches_checkpoint(spark):
-    """storage="persist" (the preemptible-cluster durability knob:
-    lineage kept, blocks recomputable on executor loss) produces
-    byte-identical results to the default localCheckpoint path on
-    every operator that exposes it, and leaves no cache entries behind
-    beyond the returned result."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
-        connected_components,
-        minhash_build_index,
-        minhash_incremental_dedup,
-        minhash_lsh_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, BASE), (2, NEAR), (3, FAR), (4, BASE)],
-        "doc_id bigint, text string",
-    )
-    kw = dict(num_hashes=64, bands=16, threshold=0.5)
-    p_ckpt = sorted(
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(docs, "doc_id", "text", **kw).collect()
-    )
-    p_pers = sorted(
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", storage="persist", **kw
-        ).collect()
-    )
-    assert p_ckpt == p_pers and p_ckpt
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "id_a bigint, id_b bigint"
-    )
-    for algo in ("label", "star"):
-        lbl_c = {
-            r["id"]: r["component"]
-            for r in connected_components(edges, algorithm=algo).collect()
-        }
-        lbl_p = {
-            r["id"]: r["component"]
-            for r in connected_components(
-                edges, algorithm=algo, storage="persist"
-            ).collect()
-        }
-        assert lbl_c == lbl_p == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
-
-    t = "mh_storage_persist_test"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    minhash_build_index(
-        spark.createDataFrame([(1, BASE)], "doc_id bigint, text string"), t
-    )
-    batch = spark.createDataFrame(
-        [(10, BASE), (11, FAR)], "doc_id bigint, text string"
-    )
-    surv = minhash_incremental_dedup(
-        spark, t, batch, threshold=0.9, append=False, storage="persist"
-    )
-    assert {r["doc_id"] for r in surv.collect()} == {11}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="checkpoint"):
-        connected_components(edges, storage="disk")
-
-
-def test_storage_table_matches_checkpoint(spark):
-    """storage="table" (the full-restart durability tier completing the
-    checkpoint|persist|table trio): identical results on each consumer,
-    with the stage materialized as real ``sg_stage_*`` catalog tables
-    that would survive a driver restart."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
-        connected_components,
-        minhash_build_index,
-        minhash_incremental_dedup,
-        span_build_index,
-        span_incremental_dedup,
-    )
-
-    pre = {t.name for t in spark.catalog.listTables()}
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
-    )
-    lbl = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, storage="table").collect()
-    }
-    assert lbl == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-    t = "mh_storage_table_test"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    minhash_build_index(
-        spark.createDataFrame([(1, BASE)], "doc_id bigint, text string"), t
-    )
-    batch = spark.createDataFrame(
-        [(10, BASE), (11, FAR)], "doc_id bigint, text string"
-    )
-    surv = minhash_incremental_dedup(
-        spark, t, batch, threshold=0.9, append=False, storage="table"
-    )
-    assert {r["doc_id"] for r in surv.collect()} == {11}
-
-    st = "span_storage_table_test"
-    spark.sql(f"DROP TABLE IF EXISTS {st}")
-    span_build_index(
-        spark.createDataFrame(
-            [(1, "alpha beta gamma delta")], "doc_id long, text string"
-        ),
-        st,
-        k=4,
-    )
-    got = span_incremental_dedup(
-        spark,
-        st,
-        spark.createDataFrame(
-            [(9, "alpha beta gamma delta")], "doc_id long, text string"
-        ),
-        k=4,
-        append=False,
-        storage="table",
-    ).first()
-    assert got.deduped_text == "" and got.n_tokens_removed == 4
-
-    # the stages really are catalog tables (restart-durable), and only
-    # sg_stage_* names were introduced beyond the fixtures above
-    new = {t2.name for t2 in spark.catalog.listTables()} - pre
-    stages = {n for n in new if n.startswith("sg_stage_")}
-    assert stages, "table strategy should leave sg_stage_* tables"
-    # the retirement sweep drops them all
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
-        cleanup_stage_tables,
-    )
-
-    dropped = cleanup_stage_tables(spark)
-    assert stages <= set(dropped)
-    left = {t3.name for t3 in spark.catalog.listTables()
-            if t3.name.startswith("sg_stage_")}
-    assert left == set()
 
 
 def test_connected_components_self_loops_both_algorithms(spark):
@@ -2237,8 +2056,10 @@ def test_span_incremental_dedup_against_persisted_index(spark):
     got2 = span_incremental_dedup(spark, "span_idx_t", b2, k=4).first()
     assert got2.deduped_text == "" and got2.n_tokens_removed == 6
 
-    # append=False leaves the index unchanged
+    # append=False masks the same way and leaves the index unchanged
     n_before = spark.table("span_idx_t").count()
+    got3 = span_incremental_dedup(spark, "span_idx_t", b2, k=4, append=False).first()
+    assert got3.deduped_text == "" and got3.n_tokens_removed == 6
     b3 = spark.createDataFrame(
         [(30, "another brand new span of words entirely")],
         "doc_id long, text string",

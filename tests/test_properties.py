@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -682,10 +682,18 @@ def test_funnel_counts_matches_python_reference(spark, events):
     ),
     nb=st.sampled_from([2, 4, 5]),
 )
+# the midpoint of 0 and the smallest subnormal is not representable:
+# the lower-neighbour form rounds it to 0.0, numpy's form to 5e-324
+@example(vals=[0.0, 5e-324], nb=2)
 @PROP
 def test_percentile_buckets_matches_numpy_reference(spark, vals, nb):
-    """percentile_buckets == numpy's linear-interpolation quantiles +
-    the same >=-threshold counting rule, for arbitrary doubles."""
+    """percentile_buckets == linear-interpolation quantiles + the same
+    >=-threshold counting rule, for arbitrary doubles. The thresholds
+    are computed exactly as the operator states (interpolated from the
+    lower neighbour) and must agree with numpy's ``linear`` quantiles
+    to rounding; the buckets must match exactly."""
+    import math
+
     import numpy as np
 
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.curation import (
@@ -698,8 +706,18 @@ def test_percentile_buckets_matches_numpy_reference(spark, vals, nb):
     got = {
         r.id: r.b for r in percentile_buckets(df, "v", nb, "b").collect()
     }
-    thr = np.quantile(np.array(vals, dtype=np.float64),
+    srt = sorted(vals)
+    thr = []
+    for p in (i / nb for i in range(1, nb)):
+        pos = (len(srt) - 1) * p
+        lower, higher = math.floor(pos), math.ceil(pos)
+        lo, hi = srt[lower], srt[higher]
+        thr.append(
+            lo if lo == hi else (higher - pos) * lo + (pos - lower) * hi
+        )
+    ref = np.quantile(np.array(vals, dtype=np.float64),
                       [i / nb for i in range(1, nb)], method="linear")
+    assert np.allclose(thr, ref, rtol=0, atol=1e-9)
     for i, v in enumerate(vals):
         assert got[i] == 1 + int(sum(v >= t for t in thr))
 
