@@ -106,11 +106,11 @@ def classify_table(spark: SparkSession, table: str) -> str | None:
 def _skew_log_health(spark: SparkSession, table: str, rep: dict) -> None:
     """Fold the ``{table}_skew_log`` companion into a health report —
     shared by the three capped standing-index families (minhash,
-    hamming_fp, er — round 17; all three log the SAME schema, with
-    "bucket" meaning LSH bucket, fingerprint band-val, or ER block).
+    hamming_fp, er; all three log the SAME schema, with "bucket"
+    meaning LSH bucket, fingerprint band-val, or ER block).
     Per-probe skew reports persist via the family's
-    ``*_incremental``/stream path when a probe cap is set — the
-    index-family twin of the IVF drift log. ``cap_truncating``: some
+    ``*_incremental``/stream path when a probe cap is set, as IVF
+    appends persist drift reports. ``cap_truncating``: some
     logged probe hit an INDEX bucket over the cap, OR carried a hot
     BATCH bucket the within-batch path dropped
     (``n_capped_batch_buckets`` — the append=False steady state never

@@ -19,6 +19,7 @@ variants simply don't exist here by construction.
 from __future__ import annotations
 
 import warnings
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -151,42 +152,35 @@ def exact_incremental_dedup(
     content_cols: list[str],
     order_col: str | None = None,
     append: bool = True,
-    n_buckets: int | None = None,
     batch_id: int | None = None,
 ) -> DataFrame:
     """Drop new rows whose exact content was ALREADY SEEN — by the
     indexed corpus or by an earlier row of the same batch (min
     ``order_col`` survives, matching :func:`exact_dedup`) — then
     (``append=True``) add the survivors' fingerprints so the next
-    batch dedups against everything that came before. The exact twin
-    of :func:`minhash_incremental_dedup`: each batch pays one md5 per
-    row, one within-batch window, and one anti-join against the
-    bucketed index; the index is never re-scanned.
+    batch dedups against everything that came before. Each batch pays
+    one md5 per row, one within-batch window, and one anti-join
+    against the bucketed index; the corpus is never re-scanned. The
+    append takes its bucket layout from the index's recorded contract.
 
     Survivors are pinned with ``localCheckpoint`` before the append —
     a lazy survivor plan re-read after the append would find its own
     fingerprints in the index and drop every row as a duplicate of
-    itself (the same hazard the Hamming index documents).
+    itself.
 
     ``batch_id`` makes the step REPLAY-EXACT for streaming callers
-    (:func:`~..streaming.events.stream_exact_dedup`), the same stamp
-    threading as ``span_incremental_dedup``: appended fingerprints
+    (:func:`~..streaming.events.stream_exact_dedup`): appended fingerprints
     carry the stamp in ``_src_batch``, the probe EXCLUDES index rows
     this batch stamped (a crash-redelivered batch must not drop its
     own rows as dups of themselves), and the append anti-joins
     against the current fingerprint set so a replay re-appends
     nothing. Pass the checkpoint-scoped ``_stream_stamp``, never a
     bare micro-batch id."""
-    from ..sources.io import check_table_meta, write_table
+    from ..sources.io import append_layout, check_table_meta
 
     meta = check_table_meta(
-        spark,
-        table,
-        content_sig=_content_cols_sig(content_cols),
-        n_buckets=n_buckets,
+        spark, table, content_sig=_content_cols_sig(content_cols)
     )
-    if n_buckets is None:
-        n_buckets = int(meta.get("n_buckets", 32))
     if "_fp" in new_df.columns:
         raise ValueError(
             "exact_incremental_dedup reserves the '_fp' column; rename it"
@@ -220,9 +214,7 @@ def exact_incremental_dedup(
             .join(idx.select("fp"), "fp", "left_anti")
             .withColumn("_src_batch", F.lit(batch_id).cast("bigint"))
         )
-        write_table(
-            new_fps, table, mode="append", bucket_by=(n_buckets, ["fp"])
-        )
+        append_layout(new_fps, table, meta)
     return survivors.drop("_fp")
 
 
@@ -426,8 +418,7 @@ def minhash_build_index(
 ) -> None:
     """Write the banded MinHash signature index as a bucketed catalog
     table — the write-once / query-many form the
-    :func:`minhash_lsh_pairs` docstring points to for warehouse scale
-    (the text-tier twin of ``similarity.ivf_build_index``).
+    :func:`minhash_lsh_pairs` docstring points to for warehouse scale.
 
     The table holds (doc_id, sig, band, bucket), hash-bucketed on the
     LSH ``bucket`` column: every later probe joins on (band, bucket),
@@ -454,93 +445,37 @@ def minhash_build_index(
     ``skew_epoch`` and clears the skew log (bucket keys re-derive from
     the fresh corpus).
     """
-    from ..sources.io import rewrite_layout
-
-    banded = _band_explode(
-        _signature_table(df, id_col, text_col, num_hashes, shingle_n, impl),
-        bands,
-        num_hashes // bands,
-    ).select(F.col("_id").alias(id_col), F.col("_sig").alias("sig"), "band", "bucket")
-    rewrite_layout(
-        df.sparkSession, table, banded, "minhash_build_index",
+    fam = _minhash_family(id_col, text_col, num_hashes, bands, shingle_n, impl)
+    _rewrite_banded(
+        df.sparkSession, table, fam, fam.sign(df), id_col, "minhash_build_index",
         {
-            "kind": "minhash", "num_hashes": num_hashes, "bands": bands,
-            "shingle_n": shingle_n, "n_buckets": n_buckets,
+            "kind": "minhash", **fam.contract, "n_buckets": n_buckets,
             "bucket_cols": "bucket",
         },
-        target=str(bands),
-        rotate_skew=True,
     )
 
 
 def minhash_reband_index(spark, table: str, bands: int) -> None:
-    """Re-derive a standing MinHash index's banding from its STORED
-    signatures — the bounded retune verb the ``cap_truncating`` health
-    flag points to. Banding is a pure function of (signature, band
-    count), so the index alone suffices: one scan of the ``band = 0``
-    slice (one row per document, full signature riding on it), one
-    re-explode at the new band count, one bucketed rewrite through the
-    stage-and-swap. The corpus text is never touched — at 100 TB the
-    signatures are orders of magnitude smaller than the documents, so
-    retuning costs an index rewrite, not a corpus re-shingle.
+    """Re-derive a standing MinHash index's banding at ``bands`` bands
+    from its stored signatures, without touching the corpus text: the
+    retune verb the ``cap_truncating`` health flag points to. One scan
+    of the ``band = 0`` slice, one re-explode, one guarded rewrite
+    (:func:`_banded_reband`, shared with
+    ``multimodal.hamming_reband_index``).
 
-    ``reband(b_old → b_new)`` is exactly ``build(b_new)`` over the same
+    ``reband(b_old → b_new)`` equals ``build(b_new)`` over the same
     corpus (hash-verified by the ``m_minhash_reband_dedup`` oracle
-    entry): more bands = smaller slices = higher candidate recall at
-    the threshold S-curve's low end but hotter buckets (more probe
-    work, more cap pressure); fewer bands the reverse. The choice is a
-    recall/cost POLICY call, which is why the maintenance sweep only
-    surfaces the flag and points here instead of auto-applying (the
-    pairs already star-capped are gone either way — retuning changes
-    future probes only).
+    entry). More bands give higher candidate recall at the low end of
+    the threshold S-curve but hotter buckets; fewer bands the reverse.
+    That is a policy call, so the maintenance sweep only flags it.
 
-    ``bands`` must divide the recorded ``num_hashes``. Probes validate
-    their band count against table meta (``check_table_meta``), so a
-    caller still probing with the old band count fails loudly instead
-    of silently joining on stale buckets. Rotation bumps
-    ``skew_epoch`` and clears the skew log like a rebuild — buffered
-    streaming skew reports measured under the old banding are dropped
-    at flush, never re-arming ``cap_truncating`` with stale keys.
-
-    Crash-safe through ``io.rewrite_layout``: a crash between the data
-    swap and the contract commit leaves the marker in place, every
-    probe refuses (instead of silently joining disjoint bucket
-    spaces), and re-running the verb converges from ANY window — the
-    band-0 slice it re-derives from carries the full signature under
-    both the old and the new banding. ``run_maintenance(apply=True)``
-    resumes the recorded target automatically.
+    ``bands`` must divide the recorded ``num_hashes``. A caller still
+    probing with the old band count fails the contract check. The
+    rewrite rotates ``skew_epoch`` and clears the skew log, and a
+    crash in any window leaves probes refusing until a re-run (or
+    ``run_maintenance(apply=True)``) converges.
     """
-    from ..sources.io import recorded_contract, rewrite_layout
-
-    meta = recorded_contract(spark, table)
-    if meta.get("kind") != "minhash":
-        raise ValueError(
-            f"{table} is not a minhash index (kind={meta.get('kind')!r})"
-        )
-    num_hashes = int(meta["num_hashes"])
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}"
-        )
-    idx = spark.table(table)
-    id_col = next(
-        c for c in idx.columns if c not in ("sig", "band", "bucket")
-    )
-    docs = idx.filter(F.col("band") == 0).select(
-        F.col(id_col).alias("_id"), F.col("sig").alias("_sig")
-    )
-    banded = _band_explode(docs, bands, num_hashes // bands).select(
-        F.col("_id").alias(id_col),
-        F.col("_sig").alias("sig"),
-        "band",
-        "bucket",
-    )
-    rewrite_layout(
-        spark, table, banded, "minhash_reband_index",
-        {**meta, "bands": bands, "bucket_cols": "bucket"},
-        target=str(bands),
-        rotate_skew=True,
-    )
+    _banded_reband(spark, table, _minhash_family(), "minhash_reband_index", bands)
 
 
 def _bucket_skew_report(
@@ -650,6 +585,288 @@ def _index_hit_slice(
     return sized.filter((F.col("_bsz") <= cap) | (F.col("_brn") == 1))
 
 
+def _pin_probe_sides(
+    banded: DataFrame,
+    idx: DataFrame,
+    keys: list[str],
+    id_col: str,
+    cap: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The two pins of a capped (or skew-logging) standing-index probe:
+    the batch's bucketed rows with their sizes (:func:`_bucket_sizes`)
+    and the index's hit slice with its own (:func:`_index_hit_slice`).
+    The probe, the cap rule and the skew report all read these, so the
+    index is scanned once per batch. ``banded`` carries its ids as
+    ``_id``; ``id_col`` names the index's id column."""
+    banded = _bucket_sizes(banded, keys, "_id").localCheckpoint()
+    return banded, _index_hit_slice(idx, banded, keys, id_col, cap).localCheckpoint()
+
+
+def _cold(sized: DataFrame, cap: int | None) -> DataFrame:
+    """The exclude rule: the rows of ``sized`` in buckets of at most
+    ``cap`` rows (all of them when uncapped)."""
+    return sized if cap is None else sized.filter(F.col("_bsz") <= cap)
+
+
+def _log_skew(
+    spark, table: str, banded: DataFrame, idx: DataFrame, cap, skew_sink
+) -> None:
+    """Measure one batch's bucket skew from the two pins of
+    :func:`_pin_probe_sides` (their ``_brn = 1`` rows carry one size
+    per bucket) and buffer the report in ``skew_sink``, or append it to
+    ``{table}_skew_log`` when no sink is given."""
+    report = _bucket_skew_report(
+        idx.filter(F.col("_brn") == 1), banded.filter(F.col("_brn") == 1), cap
+    )
+    if skew_sink is not None:
+        skew_sink.append(report)
+    else:
+        append_skew_reports(spark, table, [report])
+
+
+class _BandedFamily(NamedTuple):
+    """One banded standing index, as the shared probe
+    (:func:`_banded_probe`), dedup (:func:`_banded_dedup`) and reband
+    (:func:`_banded_reband`) bodies read it. The instances are
+    :func:`_minhash_family` and ``multimodal._hamming_family``.
+
+    - ``kind`` / ``contract``: the recorded contract kind, and the
+      caller's values for the contract keys a probe validates;
+    - ``keys``: the bucket key columns;
+    - ``value`` / ``batch_value``: the column holding the full
+      signature on the index and on the banded batch;
+    - ``sign``: caller batch → ``(_id, batch_value)``, NULLs dropped;
+    - ``band`` / ``band_param``: those rows and a contract →
+      ``(_id, batch_value, *keys)``, one row per band; the contract key
+      that sets the banding (a reband's target);
+    - ``score`` / ``keep`` / ``score_col``: the score of two values,
+      the predicate a candidate pair's score must pass, and the
+      score's name in the probe's output;
+    - ``star``: the hot-bucket rule. Star: a hot index bucket is met
+      only through its min-id representative, which matches whatever
+      the score, and a hot batch bucket drops every member but its min
+      id. Otherwise exclude: a hot bucket yields no candidate on
+      either side;
+    - ``pin_batch``: pin the caller's batch (its values come out of an
+      upstream decode) instead of the values ``sign`` computes.
+    """
+
+    kind: str
+    contract: dict
+    keys: list[str]
+    value: str
+    batch_value: str
+    sign: Callable[[DataFrame], DataFrame]
+    band: Callable[[DataFrame, dict], DataFrame]
+    band_param: str
+    score: Callable[[Column, Column], Column]
+    keep: Callable[[Column], Column]
+    score_col: str
+    star: bool
+    pin_batch: bool
+
+
+def _minhash_family(
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_n: int = 5,
+    impl: str = "arrow",
+    threshold: float = 0.8,
+) -> _BandedFamily:
+    """The MinHash index: signatures banded into ``(band, bucket)``,
+    pairs kept at a 6-decimal rounded Jaccard estimate ≥ ``threshold``
+    (matching :func:`minhash_lsh_pairs`), star rule on hot buckets."""
+
+    def band(sig: DataFrame, contract: dict) -> DataFrame:
+        b, n = int(contract["bands"]), int(contract["num_hashes"])
+        if b < 1 or n % b != 0:
+            raise ValueError(f"bands={b} must divide num_hashes={n}")
+        return _band_explode(sig, b, n // b)
+
+    return _BandedFamily(
+        kind="minhash",
+        contract={"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n},
+        keys=["band", "bucket"], value="sig", batch_value="_sig",
+        sign=lambda df: _signature_table(
+            df, id_col, text_col, num_hashes, shingle_n, impl
+        ),
+        band=band, band_param="bands",
+        score=lambda x, y: F.round(_jaccard_est(x, y, num_hashes), 6),
+        keep=lambda s: s >= threshold, score_col="jaccard_est",
+        star=True, pin_batch=False,
+    )
+
+
+def _family_contract(spark, table: str, fam: _BandedFamily) -> dict:
+    """The index's recorded contract, validated against ``fam``'s
+    (:func:`~..sources.io.check_table_meta`); the caller's values fill
+    keys an older index did not record."""
+    from ..sources.io import check_table_meta
+
+    return {
+        **fam.contract,
+        **check_table_meta(spark, table, kind=fam.kind, **fam.contract),
+    }
+
+
+def _corpus_hits(
+    fam: _BandedFamily, banded: DataFrame, idx: DataFrame, cap: int | None
+) -> DataFrame:
+    """``banded`` (as ``n``) joined to the index rows ``idx`` (as
+    ``c``) on the bucket keys, kept by ``fam``'s pair predicate under
+    its hot-bucket rule. ``idx`` is the whole index when uncapped, and
+    its sized hit slice otherwise."""
+    keep = fam.keep(fam.score(F.col(f"n.{fam.batch_value}"), F.col(f"c.{fam.value}")))
+    if cap is not None and fam.star:
+        keep = keep | (F.col("c._bsz") > cap)
+    elif not fam.star:
+        idx = _cold(idx, cap)
+    on = [F.col(f"n.{k}") == F.col(f"c.{k}") for k in fam.keys]
+    return banded.alias("n").join(idx.alias("c"), on).filter(keep)
+
+
+def _banded_probe(
+    spark, table: str, fam: _BandedFamily, new_df: DataFrame, id_col: str,
+    cap: int | None,
+) -> DataFrame:
+    """``(new_id, corpus_id, <score_col>)``, one row per batch document
+    and indexed document that :func:`_corpus_hits` pairs. Lazy: each
+    action on the result scans the index once."""
+    meta = _family_contract(spark, table, fam)
+    banded = fam.band(fam.sign(new_df), meta)
+    idx = spark.table(table)
+    if cap is not None:
+        idx = _index_hit_slice(idx, banded, fam.keys, id_col, cap)
+    return (
+        _corpus_hits(fam, banded, idx, cap)
+        .select(
+            F.col("n._id").alias("new_id"),
+            F.col(f"c.{id_col}").alias("corpus_id"),
+            fam.score(F.col(f"n.{fam.batch_value}"), F.col(f"c.{fam.value}")).alias(
+                fam.score_col
+            ),
+        )
+        .dropDuplicates(["new_id", "corpus_id"])
+    )
+
+
+def _banded_dedup(
+    spark, table: str, fam: _BandedFamily, new_df: DataFrame, id_col: str,
+    append: bool, cap: int | None, log_skew: bool | None, skew_sink: list | None,
+) -> DataFrame:
+    """The one incremental dedup body of the banded indexes: keep the
+    batch rows that pair with no indexed row and with no smaller-id
+    row of the batch, then (``append``) add their banded rows to the
+    index. Rows whose value is NULL survive unindexed.
+
+    Cost: the batch's own values, plus one scan of the index. An
+    uncapped call pins the values (or the batch, ``fam.pin_batch``)
+    and meets the index in the probe join. A capped or skew-logging
+    call pins both sides once (:func:`_pin_probe_sides`) and reads the
+    pins for the probe, the within-batch self-join, the cap rule and
+    the skew report. The scan behind the hit slice still opens every
+    index file, so the per-batch floor grows with the file count until
+    compaction. Survivors are pinned before the append: a lazy
+    survivor plan re-read after it would find the batch's own rows in
+    the index and drop them as duplicates of themselves."""
+    meta = _family_contract(spark, table, fam)
+    if log_skew is None:
+        log_skew = cap is not None
+    if fam.pin_batch:
+        new_df = new_df.localCheckpoint()
+    signed = fam.sign(new_df)
+    idx = spark.table(table)
+    if cap is None and not log_skew:
+        banded = fam.band(signed if fam.pin_batch else signed.localCheckpoint(), meta)
+    else:
+        banded, idx = _pin_probe_sides(
+            fam.band(signed, meta), idx, fam.keys, id_col, cap
+        )
+    vs_corpus = _corpus_hits(fam, banded, idx, cap).select(
+        F.col("n._id").alias(id_col)
+    )
+    within_banded = _cold(banded, cap)
+    within = (
+        within_banded.alias("a")
+        .join(
+            within_banded.alias("b"),
+            [F.col(f"a.{k}") == F.col(f"b.{k}") for k in fam.keys]
+            + [F.col("a._id") < F.col("b._id")],
+        )
+        .filter(
+            fam.keep(
+                fam.score(F.col(f"a.{fam.batch_value}"), F.col(f"b.{fam.batch_value}"))
+            )
+        )
+        .select(F.col("b._id").alias(id_col))
+    )
+    if cap is not None and fam.star:
+        within = within.unionByName(
+            banded.filter((F.col("_bsz") > cap) & (F.col("_brn") > 1)).select(
+                F.col("_id").alias(id_col)
+            )
+        )
+    losers = vs_corpus.unionByName(within).distinct()
+    survivors = new_df.join(losers, id_col, "left_anti").localCheckpoint()
+    if log_skew:
+        _log_skew(spark, table, banded, idx, cap, skew_sink)
+    if append:
+        from ..sources.io import append_layout
+
+        kept = banded.join(survivors.select(F.col(id_col).alias("_id")), "_id")
+        append_layout(_stored(fam, kept, id_col), table, meta)
+    return survivors
+
+
+def _stored(fam: _BandedFamily, banded: DataFrame, id_col: str) -> DataFrame:
+    """Banded rows in the index's column layout."""
+    return banded.select(
+        F.col("_id").alias(id_col), F.col(fam.batch_value).alias(fam.value), *fam.keys
+    )
+
+
+def _rewrite_banded(
+    spark, table: str, fam: _BandedFamily, rows: DataFrame, id_col: str,
+    verb: str, contract: dict,
+) -> None:
+    """Band ``(_id, batch_value)`` rows under ``contract`` and rewrite
+    ``table`` with them through ``io.rewrite_layout``, rotating the skew
+    epoch: the one write of a build and a reband. The marker's target
+    is the contract's band parameter, which a resume re-applies."""
+    from ..sources.io import rewrite_layout
+
+    rewrite_layout(
+        spark, table, _stored(fam, fam.band(rows, contract), id_col), verb,
+        contract, target=str(contract[fam.band_param]), rotate_skew=True,
+    )
+
+
+def _banded_reband(
+    spark, table: str, fam: _BandedFamily, verb: str, value: int
+) -> None:
+    """Re-band a standing index at ``fam.band_param = value`` from the
+    values it stores: the ``band = 0`` slice holds one row per document
+    with its full value, so the corpus is never re-read. A crash in any
+    window leaves probes refusing, and a re-run converges (both layouts
+    keep the full values)."""
+    from ..sources.io import recorded_contract
+
+    meta = recorded_contract(spark, table)
+    if meta.get("kind") != fam.kind:
+        raise ValueError(
+            f"{table} is not a {fam.kind} index (kind={meta.get('kind')!r})"
+        )
+    idx = spark.table(table)
+    id_col = next(c for c in idx.columns if c not in (fam.value, *fam.keys))
+    docs = idx.filter(F.col("band") == 0).select(
+        F.col(id_col).alias("_id"), F.col(fam.value).alias(fam.batch_value)
+    )
+    contract = {**meta, fam.band_param: value}
+    _rewrite_banded(spark, table, fam, docs, id_col, verb, contract)
+
+
 def minhash_query_index(
     spark,
     table: str,
@@ -663,60 +880,23 @@ def minhash_query_index(
     impl: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """(new_id, corpus_id, jaccard_est) for every new document whose
-    estimated jaccard against an indexed corpus document clears the
-    threshold. Signature parameters must match the index build. Only
-    the new batch is signed and exploded; the corpus index streams out
-    of its bucketed table into the (band, bucket) join.
+    """``(new_id, corpus_id, jaccard_est)`` for every new document whose
+    estimated Jaccard against an indexed document clears
+    ``threshold``. Signature parameters must match the build. Only the
+    batch is signed and banded; the index streams out of its bucketed
+    table into the ``(band, bucket)`` join.
 
-    ``max_bucket_size``: hot-bucket skew guard, the index-probe twin of
-    :func:`minhash_lsh_pairs`'s cap. An index bucket that accretes B
-    boilerplate documents across appends costs every probe O(B) per
-    batch row landing in it; buckets over the cap instead match probes
-    against the bucket's min-id REPRESENTATIVE only, threshold-exempt
-    (star semantics — the probe doc is merged into the boilerplate
-    cluster; per-member pair recall inside the hot bucket is traded
-    away). Sizing runs per probe over only the buckets the batch hits
-    (:func:`_index_hit_slice`, the same helper and cap rule the
-    incremental dedup uses); this probe stays lazy, so each action on
-    its result scans the index once."""
-    from ..sources.io import check_table_meta
-
-    check_table_meta(
-        spark, table, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n
+    ``max_bucket_size`` caps hot index buckets with the star rule of
+    :func:`minhash_lsh_pairs`: a probe landing in a bucket over the cap
+    meets only the bucket's min-id representative and pairs with it
+    whatever the estimate. Buckets are sized over the ones the batch
+    hits. The body is :func:`_banded_probe`, shared with
+    ``multimodal.hamming_index_probe``; the result is lazy, so each
+    action on it scans the index once."""
+    fam = _minhash_family(
+        id_col, text_col, num_hashes, bands, shingle_n, impl, threshold
     )
-    idx = spark.table(table)
-    nb = _band_explode(
-        _signature_table(new_df, id_col, text_col, num_hashes, shingle_n, impl),
-        bands,
-        num_hashes // bands,
-    )
-    est = F.round(_jaccard_est(F.col("n._sig"), F.col("c.sig"), num_hashes), 6)
-    match = est >= threshold
-    if max_bucket_size is not None:
-        idx = _index_hit_slice(
-            idx, nb, ["band", "bucket"], id_col, max_bucket_size
-        )
-        # Star pairs vs the hot bucket's min-id representative are
-        # threshold-EXEMPT, matching minhash_lsh_pairs: they merge the
-        # probe document into the boilerplate cluster the bucket
-        # represents (see the max_bucket_size docstring there).
-        match = match | (F.col("c._bsz") > max_bucket_size)
-    return (
-        nb.alias("n")
-        .join(
-            idx.alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.bucket") == F.col("c.bucket")),
-        )
-        .filter(match)
-        .select(
-            F.col("n._id").alias("new_id"),
-            F.col(f"c.{id_col}").alias("corpus_id"),
-            est.alias("jaccard_est"),
-        )
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
+    return _banded_probe(spark, table, fam, new_df, id_col, max_bucket_size)
 
 
 def minhash_incremental_dedup(
@@ -727,180 +907,47 @@ def minhash_incremental_dedup(
     text_col: str = "text",
     threshold: float = 0.8,
     append: bool = True,
-    n_buckets: int | None = None,
     max_bucket_size: int | None = None,
     log_skew: bool | None = None,
     skew_sink: list | None = None,
-    **sig_kwargs,
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_n: int = 5,
+    impl: str = "arrow",
 ) -> DataFrame:
-    """Incremental corpus curation: drop new documents that are
-    near-dups of the ALREADY-INDEXED corpus or of an earlier document
-    in the same batch, then (``append=True``) add the survivors'
-    signatures to the index — so the next batch dedups against
-    everything that came before. The streaming-corpus form of
-    :func:`minhash_lsh_dedup`: each batch costs its own signatures plus
-    one read of the bucketed index, never a corpus re-shingle.
+    """Drop the new documents that near-dup an indexed document or an
+    earlier (smaller-id) document of the same batch, then
+    (``append=True``) add the survivors' banded signatures to the
+    index, so the next batch dedups against everything before it. The
+    streaming-corpus form of :func:`minhash_lsh_dedup`: a batch costs
+    its own signatures plus one scan of the bucketed index. The
+    signatures are computed once and pinned.
 
-    ``n_buckets`` defaults from the index's recorded table properties
-    (and is validated against them when passed explicitly) — appends
-    with a different bucket count would either fail or silently break
-    the pre-shuffled join layout. Signature parameters are validated
-    the same way (:func:`~..sources.io.check_table_meta`).
+    Signature parameters and the append's bucket layout come from the
+    index's recorded contract (:func:`~..sources.io.check_table_meta`);
+    a mismatch raises.
 
-    The batch is SIGNED ONCE: the signature kernel is the dominant
-    per-batch cost, so its output is pinned (``localCheckpoint``) and
-    the corpus probe, the within-batch self-join and the survivor append
-    all read the pin instead of re-running it per consumer.
+    ``max_bucket_size`` caps hot ``(band, bucket)`` keys with the star
+    rule on both sides: a probe landing in a hot index bucket is
+    dropped as a member of the cluster its representative stands for,
+    and a hot batch bucket drops every member but its min id (as
+    :func:`minhash_lsh_dedup` does with a cap).
 
-    ``max_bucket_size`` caps hot (band, bucket) keys in BOTH joins —
-    the steady-state path a standing pipeline runs per arriving batch,
-    where an uncapped boilerplate bucket goes O(B²) within the batch
-    and O(B·batch_hits) against an index that accretes the bucket
-    across appends. Within the batch, hot buckets emit star losers
-    (every non-min-id member is dropped as a dup of the bucket
-    representative, threshold-exempt — exactly what
-    ``minhash_lsh_dedup`` with a cap does); against the index, probes
-    landing in a hot bucket are dropped as members of that boilerplate
-    cluster via its representative (see
-    :func:`minhash_query_index`).
+    ``log_skew`` (default: on when capped) measures the batch's bucket
+    skew (:func:`_bucket_skew_report`) from the probe's pins; the
+    report goes to ``skew_sink`` when given, else to the
+    ``{table}_skew_log`` companion, which ``maintenance.table_health``
+    turns into the ``cap_truncating`` flag.
 
-    Cost of a capped batch: the index is read ONCE. Two pins replace
-    the bare signatures: the banded batch with its bucket sizes
-    (:func:`_bucket_sizes`), and the index's hit slice — the rows in
-    the buckets the batch hits, sized in one window pass and trimmed to
-    cold rows plus one representative per hot bucket
-    (:func:`_index_hit_slice`). The cold probe, the hot
-    representatives, the within-batch star losers and the skew report
-    all read those pins. The scan behind the hit slice still opens
-    every index file (the semi-join on the batch's keys bounds the
-    window and the pin, not the scan), so the per-batch floor grows
-    with the index's file count; compaction bounds that. An uncapped
-    call pins only the signatures and reads the index once, in the
-    probe join.
-
-    ``log_skew`` (round 17): per-batch bucket-skew measurement into the
-    ``{table}_skew_log`` companion (:func:`_bucket_skew_report` —
-    Σbucket² probe-work proxy + the count of INDEX buckets over the cap
-    + the count of hot BATCH buckets the within-batch star path capped,
-    i.e. both places star semantics trade away per-member recall RIGHT
-    NOW). Defaults to ON exactly when ``max_bucket_size`` is set — the
-    signal matters when a cap is silently truncating, and an uncapped
-    probe keeps its plan. The report is one aggregate over the pins'
-    one-row-per-bucket rows: no join, no groupBy, no extra index read
-    (an explicit ``log_skew=True`` on an uncapped call takes the pinned
-    path to get the same). ``skew_sink`` redirects the report into a
-    caller-held buffer instead of a 1-row write job (the streaming
-    wrapper flushes ONE write post-drain, the same batching contract as
-    the IVF drift log).
-    ``maintenance.table_health`` turns the log into a
-    ``cap_truncating`` health flag."""
-    num_hashes = sig_kwargs.get("num_hashes", 64)
-    bands = sig_kwargs.get("bands", 16)
-    shingle_n = sig_kwargs.get("shingle_n", 5)
-    impl = sig_kwargs.get("impl", "arrow")
-
-    from ..sources.io import check_table_meta
-
-    meta = check_table_meta(
-        spark,
-        table,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        n_buckets=n_buckets,
+    The body is :func:`_banded_dedup`, shared with
+    ``multimodal.hamming_incremental_dedup``."""
+    fam = _minhash_family(
+        id_col, text_col, num_hashes, bands, shingle_n, impl, threshold
     )
-    if n_buckets is None:
-        n_buckets = int(meta.get("n_buckets", 32))
-
-    cap = max_bucket_size
-    if log_skew is None:
-        log_skew = cap is not None
-    keys = ["band", "bucket"]
-    sig = _signature_table(new_df, id_col, text_col, num_hashes, shingle_n, impl)
-    idx = spark.table(table)
-    if cap is None and not log_skew:
-        banded = _band_explode(sig.localCheckpoint(), bands, num_hashes // bands)
-    else:
-        # One pin per side, one index read per batch: the banded batch
-        # with its bucket sizes, and the index's hit slice with its own.
-        # The probe, the star paths and the skew report all read these.
-        banded = _bucket_sizes(
-            _band_explode(sig, bands, num_hashes // bands), keys, "_id"
-        ).localCheckpoint()
-        idx = _index_hit_slice(idx, banded, keys, id_col, cap).localCheckpoint()
-
-    # round-to-6 before the threshold, matching minhash_query_index /
-    # minhash_lsh_pairs (differs only for non-power-of-2 num_hashes,
-    # where k/num_hashes is inexact in binary)
-    match = (
-        F.round(_jaccard_est(F.col("n._sig"), F.col("c.sig"), num_hashes), 6)
-        >= threshold
+    return _banded_dedup(
+        spark, table, fam, new_df, id_col, append, max_bucket_size, log_skew,
+        skew_sink,
     )
-    within_banded = banded
-    if cap is not None:
-        # Probes landing in a hot index bucket meet only its
-        # representative and are dropped as members of its boilerplate
-        # cluster, threshold-exempt (star semantics, see the docstring).
-        match = match | (F.col("c._bsz") > cap)
-        within_banded = banded.filter(F.col("_bsz") <= cap)
-    vs_corpus = (
-        banded.alias("n")
-        .join(
-            idx.alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.bucket") == F.col("c.bucket")),
-        )
-        .filter(match)
-        .select(F.col("n._id").alias(id_col))
-    )
-    within = (
-        within_banded.alias("a")
-        .join(
-            within_banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .filter(
-            F.round(_jaccard_est(F.col("a._sig"), F.col("b._sig"), num_hashes), 6)
-            >= threshold
-        )
-        .select(F.col("b._id").alias(id_col))
-    )
-    if cap is not None:
-        # Within-batch star capping, mirroring minhash_lsh_pairs: hot
-        # batch buckets drop every non-representative member (greedy
-        # dedup keeps the min id either way), bounding the self-join's
-        # per-bucket work to O(B) instead of O(B²).
-        within = within.unionByName(
-            banded.filter((F.col("_bsz") > cap) & (F.col("_brn") > 1)).select(
-                F.col("_id").alias(id_col)
-            )
-        )
-    losers = vs_corpus.unionByName(within).distinct()
-    survivors = new_df.join(losers, id_col, "left_anti").localCheckpoint()
-
-    if log_skew:
-        report = _bucket_skew_report(
-            idx.filter(F.col("_brn") == 1), banded.filter(F.col("_brn") == 1), cap
-        )
-        if skew_sink is not None:
-            skew_sink.append(report)
-        else:
-            append_skew_reports(spark, table, [report])
-
-    if append:
-        from ..sources.io import write_table
-
-        surv_banded = banded.join(
-            survivors.select(F.col(id_col).alias("_id")), "_id"
-        ).select(
-            F.col("_id").alias(id_col), F.col("_sig").alias("sig"), "band", "bucket"
-        )
-        write_table(
-            surv_banded, table, mode="append", bucket_by=(n_buckets, ["bucket"])
-        )
-    return survivors
 
 
 def minhash_lsh_pairs(
@@ -2120,8 +2167,7 @@ def span_build_index(
 ) -> None:
     """Persist the corpus's distinct k-token span fingerprints as a
     bucketed catalog table — the standing-state form of
-    :func:`span_dedup` for a pipeline that ingests batches forever
-    (the exact-substring twin of :func:`minhash_build_index`).
+    :func:`span_dedup` for a pipeline that ingests batches forever.
 
     The table holds one 16-byte ``_h`` per DISTINCT span ever seen,
     hash-bucketed on ``_h``: each later probe joins on ``_h`` against a
@@ -2174,7 +2220,6 @@ def span_incremental_dedup(
     append: bool = True,
     out_col: str = "deduped_text",
     removed_col: str = "n_tokens_removed",
-    n_buckets: int | None = None,
     batch_id: int | None = None,
 ) -> DataFrame:
     """Exact substring dedup of ONE arriving batch against everything
@@ -2211,16 +2256,14 @@ def span_incremental_dedup(
     keeps; the index remembers original spans (by design: a span seen
     once and masked later must still be recognized as seen).
 
-    ``k`` is validated against the index's recorded contract and
-    ``n_buckets`` defaults from it (:func:`~..sources.io.check_table_meta`)
-    — a mismatched ``k`` would silently dedup nothing, and a mismatched
-    append bucket spec would fail (or break the pre-shuffled layout).
+    ``k`` is validated against the index's recorded contract
+    (:func:`~..sources.io.check_table_meta`), since a mismatched ``k``
+    would silently dedup nothing, and the append takes its bucket
+    layout from the same contract (``io.append_layout``).
     """
-    from ..sources.io import check_table_meta
+    from ..sources.io import append_layout, check_table_meta
 
-    meta = check_table_meta(spark, table, k=k, n_buckets=n_buckets)
-    if n_buckets is None:
-        n_buckets = int(meta.get("n_buckets", 32))
+    meta = check_table_meta(spark, table, k=k)
 
     idx = spark.table(table)
     probe_idx = idx
@@ -2244,8 +2287,6 @@ def span_incremental_dedup(
     hits = hist_hits.unionByName(batch_hits).distinct().localCheckpoint()
     masked = _apply_span_mask(batch, hits, id_col, text_col, k, out_col, removed_col)
     if append:
-        from ..sources.io import write_table
-
         # anti-join against the FULL index (not the replay view): a
         # redelivered batch's fingerprints are already present, so the
         # re-append is a no-op
@@ -2254,5 +2295,5 @@ def span_incremental_dedup(
             new_fps = new_fps.withColumn(
                 "_src_batch", F.lit(batch_id).cast("bigint")
             )
-        write_table(new_fps, table, mode="append", bucket_by=(n_buckets, ["_h"]))
+        append_layout(new_fps, table, meta)
     return masked

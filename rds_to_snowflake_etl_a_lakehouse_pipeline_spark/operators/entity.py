@@ -56,7 +56,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
-from .dedup import _bucket_skew_report, append_skew_reports, connected_components
+from .dedup import _cold, _log_skew, _pin_probe_sides, connected_components
 
 __all__ = [
     "normalize_name",
@@ -323,9 +323,8 @@ def er_build_index(
     and append (it defines the join layout). ``n_buckets=None`` sizes
     the bucket count from the index rows (``io._sized_buckets``: at
     least one per core, at most 32, and 32 when the size is unknown);
-    an explicit count wins. It is recorded as a table property;
-    appends, reblocks and compactions default from and validate
-    against it (:func:`~..sources.io.check_table_meta`). Written through
+    an explicit count wins. It is recorded as a table property, and
+    appends, reblocks and compactions keep it. Written through
     ``io.rewrite_layout``: a crash before the contract commit leaves
     probes refusing, and a rebuild advances ``skew_epoch`` and clears
     the skew log (every block key re-derives from the new corpus)."""
@@ -422,16 +421,15 @@ def er_incremental(
     append: bool = True,
     algorithm: str = "label",
     max_iter: int = 20,
-    n_buckets: int | None = None,
     auto_compact_relabels: int | None = None,
     log_skew: bool | None = None,
     skew_sink: list | None = None,
 ) -> DataFrame:
-    """Resolve an arriving batch against the standing index WITHOUT
-    re-resolving the corpus: each batch pays its own blocking + one
-    bucketed join against the index + a batch-sized clustering. The
+    """Resolve an arriving batch against the standing index without
+    re-resolving the corpus: each batch pays its own blocking, one
+    bucketed join against the index and a batch-sized clustering. The
     steady-state form of :func:`resolve_entities` for continuous
-    mastering (the ER twin of ``dedup.minhash_incremental_dedup``).
+    mastering.
 
     Exact contract (property-tested): after any sequence of incremental
     batches, :func:`er_entity_labels` equals a from-scratch
@@ -447,53 +445,50 @@ def er_incremental(
     minima.
 
     ``max_block_size`` skips oversized blocks on BOTH sides
-    (precision-first, same rationale as :func:`er_candidate_pairs`);
-    index block sizing counts only blocks the batch hits, so its window
-    is sized by the batch (the index scan under it still reads every
-    index file).
+    (precision-first, same rationale as :func:`er_candidate_pairs`).
+    A capped batch pins its blocked rows and the index's hit slice once
+    (``dedup._pin_probe_sides``, the pins of the banded indexes), drops
+    hot blocks from both (the exclude rule) and reads those pins for
+    the candidate edges, the merge anchors and the skew report, so the
+    index is scanned once per batch. An uncapped batch meets the index
+    in the edge join.
 
-    ``log_skew`` (late r17): per-batch block-skew measurement into the
-    ``{table}_skew_log`` companion (``dedup._bucket_skew_report``, the
-    stats the MinHash and Hamming indexes log; an over-cap block is
-    skipped outright on both sides, so ``n_capped_buckets`` counts hit
-    index blocks whose every member this batch could not see) —
-    defaults ON exactly when ``max_block_size`` is set (uncapped
-    probes stay plan-identical). ``skew_sink`` buffers the report dict
-    instead of writing (the streaming wrapper batches per-micro-batch
-    reports into one post-drain flush).
+    ``log_skew`` (default: on when capped) measures the batch's block
+    skew (``dedup._bucket_skew_report``; ``n_capped_buckets`` counts
+    hit index blocks this batch could not see) and hands the report to
+    ``skew_sink`` when given, else to the ``{table}_skew_log``
+    companion.
 
     Returns the batch's ``(id, entity_id)`` assignment. With
     ``append=True`` the batch rows join the index under their assigned
-    labels and any merge relabels are recorded, so the next batch
-    resolves against everything seen so far.
+    labels, in the bucket layout the index records, and any merge
+    relabels are recorded, so the next batch resolves against
+    everything seen so far.
 
-    Relabel-log guard (the IVF-drift pattern applied to ER): after an
-    appending batch, the relabel log's size is measured; past
-    ``er_index_health``'s threshold a compaction recommendation is
-    WARNED, and with ``auto_compact_relabels=N`` set,
+    Relabel-log guard: after an appending batch, the relabel log's size
+    is measured; past ``er_index_health``'s threshold a compaction
+    recommendation is WARNED, and with ``auto_compact_relabels=N`` set,
     :func:`er_compact_index` runs automatically once the log reaches N
     entries — so the driver-side closure stays metadata-sized no
     matter how bridge-heavy the feed.
     """
-    from ..sources.io import check_table_meta, write_table
+    from ..sources.io import append_layout, check_table_meta, write_table
 
-    meta = check_table_meta(spark, table, n_buckets=n_buckets)
-    if n_buckets is None:
-        n_buckets = int(meta.get("n_buckets", 32))
+    meta = check_table_meta(spark, table)
     sim_fn = similarity or levenshtein_similarity
     rel = _relabel_closure(spark, table)
     idx = _apply_relabels(spark.table(table), "entity", rel)
+    if log_skew is None:
+        log_skew = max_block_size is not None
 
-    b = _blocked(batch, id_col, text_col, block_key, max_block_size)
-    hit = b.select("_blk").distinct()
-    idx_hit = idx.join(hit, "_blk")
-    if max_block_size is not None:
-        w = Window.partitionBy("_blk")
-        idx_hit = (
-            idx_hit.withColumn("_bsz", F.count("*").over(w))
-            .filter(F.col("_bsz") <= max_block_size)
-            .drop("_bsz")
-        )
+    b = _blocked(batch, id_col, text_col, block_key, None)
+    if max_block_size is None and not log_skew:
+        idx_hit = idx.join(b.select("_blk").distinct(), "_blk")
+    else:
+        b, idx_hit = _pin_probe_sides(b, idx, ["_blk"], "id", max_block_size)
+        if log_skew:
+            _log_skew(spark, table, b, idx_hit, max_block_size, skew_sink)
+        b, idx_hit = _cold(b, max_block_size), _cold(idx_hit, max_block_size)
     cross_edges = (
         b.alias("n")
         .join(idx_hit.alias("c"), "_blk")
@@ -520,23 +515,6 @@ def er_incremental(
             F.coalesce("component", F.col("id")).alias("entity_id"),
         )
     )
-    if log_skew is None:
-        log_skew = max_block_size is not None
-    if log_skew:
-        # measured UNCAPPED on both sides (the report records what the
-        # cap is about to drop), over only the blocks this batch hits;
-        # the index side already carries _blk
-        blocks = _blocked(batch, id_col, text_col, block_key, None)
-        hit = blocks.select("_blk").distinct()
-        report = _bucket_skew_report(
-            idx.join(hit, "_blk").groupBy("_blk").agg(F.count("*").alias("_bsz")),
-            blocks.groupBy("_blk").agg(F.count("*").alias("_bsz")),
-            max_block_size,
-        )
-        if skew_sink is not None:
-            skew_sink.append(report)
-        else:
-            append_skew_reports(spark, table, [report])
     if append:
         # anchors whose component label changed = entity merges; record
         # (old -> new) instead of rewriting the losing entity's rows
@@ -562,12 +540,7 @@ def er_incremental(
         )
         if isinstance(rows.schema["_blk"].dataType, ArrayType):
             rows = rows.withColumn("_blk", F.explode("_blk"))
-        write_table(
-            rows.filter(F.col("_blk").isNotNull()),
-            table,
-            mode="append",
-            bucket_by=(n_buckets, ["_blk"]),
-        )
+        append_layout(rows.filter(F.col("_blk").isNotNull()), table, meta)
         if new_rel:
             rel_df = spark.createDataFrame(new_rel, "old_id bigint, new_id bigint")
             write_table(rel_df, _relabel_tbl(table), mode="append")
@@ -576,7 +549,7 @@ def er_incremental(
                 auto_compact_relabels is not None
                 and health["n_relabel_entries"] >= auto_compact_relabels
             ):
-                er_compact_index(spark, table, n_buckets=n_buckets)
+                er_compact_index(spark, table)
             elif health["compact_recommended"]:
                 warnings.warn(
                     f"ER relabel log for {table!r} has "
@@ -603,8 +576,7 @@ def er_entity_labels(spark, table: str) -> DataFrame:
 def er_index_health(
     spark, table: str, max_relabels: int = 10_000
 ) -> dict:
-    """Relabel-log health for a standing ER index — the ER twin of
-    ``ivf_append_index``'s drift report and ``VersionedTable.health``:
+    """Relabel-log health for a standing ER index:
     ``{n_relabel_entries, hard_cap, compact_recommended}``. The log
     grows one entry per entity-merge event; every probe pays a
     driver-side closure over it, so past ``max_relabels`` the
@@ -620,7 +592,7 @@ def er_index_health(
     }
 
 
-def er_compact_index(spark, table: str, n_buckets: int | None = None) -> None:
+def er_compact_index(spark, table: str) -> None:
     """Fold the relabel side table into the index (rewrite rows under
     their final entity labels) and drop it. Run periodically — probe
     cost doesn't grow with relabels (they apply as a tiny broadcast
@@ -629,18 +601,13 @@ def er_compact_index(spark, table: str, n_buckets: int | None = None) -> None:
     from ..sources.io import recorded_contract, rewrite_layout
 
     meta = recorded_contract(spark, table)
-    if n_buckets is None:
-        n_buckets = int(meta.get("n_buckets", 32))
     rel = _relabel_closure(spark, table, enforce_cap=False)
     rows = _apply_relabels(spark.table(table), "entity", rel)
     # write_table's stage-and-swap materializes before dropping, so
-    # reading the target is safe. The FULL contract is re-recorded:
-    # compaction folds labels but does NOT re-derive block keys, so
+    # reading the target is safe. The recorded contract is kept as it
+    # is: compaction folds labels but does NOT re-derive block keys, so
     # the skew history and its epoch stay valid (no rotation)
-    rewrite_layout(
-        spark, table, rows, "er_compact_index",
-        {**meta, "kind": "er", "n_buckets": n_buckets, "bucket_cols": "_blk"},
-    )
+    rewrite_layout(spark, table, rows, "er_compact_index", meta)
     spark.sql(f"DROP TABLE IF EXISTS {_relabel_tbl(table)}")
 
 

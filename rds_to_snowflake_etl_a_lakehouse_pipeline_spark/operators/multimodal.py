@@ -453,29 +453,32 @@ def _fp_band_explode(
     undecodable blob can't near-dup). Shared by the all-pairs join
     (:func:`hamming_hash_pairs`) and the standing-index family
     (:func:`hamming_index_build` / probe / incremental)."""
-    n_bands = 64 // band_bits
     h = F.col(hash_col)
     sk = df.select(F.col(id_col).alias("_id"), h.alias("_ph")).filter(
         h.isNotNull()
     )
-    return sk.select(
-        "_id",
-        "_ph",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.shiftrightunsigned(F.col("_ph"), b * band_bits)
-                            .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        ).alias("val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("_id", "_ph", "bv.band", "bv.val")
+    return sk.select("_id", "_ph", _fp_bands(band_bits)).select(
+        "_id", "_ph", "bv.band", "bv.val"
+    )
+
+
+def _fp_bands(band_bits: int):
+    """``bv``: one ``(band, val)`` struct per ``band_bits``-wide slice
+    of the ``_ph`` fingerprint, exploded into one row each."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    (
+                        F.shiftrightunsigned(F.col("_ph"), b * band_bits)
+                        .bitwiseAND(F.lit((1 << band_bits) - 1))
+                    ).alias("val"),
+                )
+                for b in range(64 // band_bits)
+            ]
+        )
+    ).alias("bv")
 
 
 def hamming_hash_pairs(
@@ -551,25 +554,9 @@ def hamming_hash_pairs(
     vals = raw.groupBy("_ph").agg(F.count("*").alias("_cnt")).localCheckpoint(
         eager=False
     )
-    n_bands = 64 // band_bits
-    banded = vals.select(
-        "_ph",
-        "_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.shiftrightunsigned(F.col("_ph"), b * band_bits)
-                            .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        ).alias("val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("_ph", "_cnt", "bv.band", "bv.val")
+    banded = vals.select("_ph", "_cnt", _fp_bands(band_bits)).select(
+        "_ph", "_cnt", "bv.band", "bv.val"
+    )
     if max_bucket_size is not None:
         w = Window.partitionBy("band", "val")
         banded = (
@@ -1072,11 +1059,10 @@ def resize_images(
 
 
 # -------------------------------------------------- standing fingerprint index
-# The media twin of dedup.minhash_build_index / minhash_incremental_dedup:
-# a standing bucketed table of banded 64-bit fingerprints (image aHash,
+# A standing bucketed table of banded 64-bit fingerprints (image aHash,
 # audio spectral, text SimHash — any hamming_hash_pairs-compatible hash)
-# that arriving batches probe and extend, so a 100 TB ingest pipeline
-# near-dups each batch against everything seen WITHOUT a corpus re-scan.
+# that arriving batches probe and extend, so an ingest pipeline
+# near-dups each batch against everything seen without a corpus re-scan.
 
 
 def hamming_index_build(
@@ -1100,104 +1086,72 @@ def hamming_index_build(
     when the size is unknown); an explicit count wins. The count is
     recorded, and every append, reband and compaction keeps it.
 
-    ``skew_epoch`` (late r17, the MinHash-index contract): a monotone
-    rebuild counter — streaming skew reports buffered under a retired
-    epoch are dropped at flush instead of re-arming ``cap_truncating``
-    against the fresh index; a rebuild also clears the skew log (both
-    done by ``io.rewrite_layout``)."""
-    from ..sources.io import rewrite_layout
+    ``skew_epoch`` is a monotone rebuild counter: streaming skew
+    reports buffered under a retired epoch are dropped at flush instead
+    of re-arming ``cap_truncating`` against the fresh index, and a
+    rebuild also clears the skew log (both done by
+    ``io.rewrite_layout``)."""
+    from .dedup import _rewrite_banded
 
-    banded = _fp_band_explode(df, id_col, hash_col, band_bits).select(
-        F.col("_id").alias(id_col), F.col("_ph").alias("fp"), "band", "val"
-    )
-    rewrite_layout(
-        df.sparkSession, table, banded, "hamming_index_build",
+    fam = _hamming_family(id_col, hash_col)
+    _rewrite_banded(
+        df.sparkSession, table, fam, fam.sign(df), id_col, "hamming_index_build",
         {
             "kind": "hamming_fp", "band_bits": band_bits,
             "n_buckets": n_buckets, "bucket_cols": "val",
         },
-        target=str(band_bits),
-        rotate_skew=True,
     )
 
 
 def hamming_reband_index(spark, table: str, band_bits: int) -> None:
-    """Re-derive a standing Hamming index's banding from its STORED
-    fingerprints — the media twin of ``dedup.minhash_reband_index``
-    and the bounded retune verb the family's ``cap_truncating`` health
-    flag points to. Banding is a pure function of (fingerprint,
-    band_bits), and the full 64-bit fingerprint rides on every index
-    row, so the index alone suffices: one scan of the ``band = 0``
-    slice (one row per document), one re-explode at the new width, one
-    bucketed rewrite through the stage-and-swap — never a corpus
-    re-decode (at 100 TB the fingerprints are orders of magnitude
-    smaller than the media blobs they summarize).
+    """Re-derive a standing Hamming index's banding at ``band_bits``
+    bits per band from its stored fingerprints, without re-decoding
+    any media: one scan of the ``band = 0`` slice, one re-explode, one
+    guarded rewrite (``dedup._banded_reband``, shared with
+    ``dedup.minhash_reband_index``). It is the retune verb the
+    family's ``cap_truncating`` health flag points to.
 
-    The trade is the pigeonhole S-curve: SMALLER ``band_bits`` = more
-    bands = total recall up to a larger ``max_hamming``
-    (``max_hamming < 64/band_bits``) but hotter buckets (fewer
-    distinct vals per band = more candidates per probe = more cap
-    pressure); larger ``band_bits`` the reverse. A policy call, which
-    is why the maintenance sweep only surfaces the flag and points
-    here instead of auto-applying.
+    Smaller ``band_bits`` give more bands, so total recall reaches a
+    larger ``max_hamming`` (``max_hamming < 64 / band_bits``), but
+    hotter buckets; larger ``band_bits`` the reverse. That is a policy
+    call, so the maintenance sweep only flags it.
 
-    ``band_bits`` must divide 64. Probes validate against table meta
-    (``check_table_meta``), so a caller still probing at the old width
-    fails loudly instead of silently joining disjoint val spaces.
-    Rotation bumps ``skew_epoch`` and clears the skew log like a
-    rebuild. Crash-safe through ``io.rewrite_layout``: a crash between
-    the swap and the contract commit leaves the marker, probes refuse
-    instead of silently missing, and a re-run converges from any
-    window (the stored fingerprints survive both layouts);
-    ``run_maintenance(apply=True)`` resumes the recorded target."""
-    from ..sources.io import recorded_contract, rewrite_layout
+    ``band_bits`` must divide 64. A caller still probing at the old
+    width fails the contract check. The rewrite rotates
+    ``skew_epoch`` and clears the skew log, and a crash in any window
+    leaves probes refusing until a re-run (or
+    ``run_maintenance(apply=True)``) converges."""
+    from .dedup import _banded_reband
 
-    meta = recorded_contract(spark, table)
-    if meta.get("kind") != "hamming_fp":
-        raise ValueError(
-            f"{table} is not a hamming_fp index (kind={meta.get('kind')!r})"
-        )
-    if band_bits < 1 or 64 % band_bits != 0:
-        raise ValueError(f"band_bits={band_bits} must divide 64")
-    idx = spark.table(table)
-    id_col = next(c for c in idx.columns if c not in ("fp", "band", "val"))
-    docs = idx.filter(F.col("band") == 0).select(F.col(id_col), F.col("fp"))
-    banded = _fp_band_explode(docs, id_col, "fp", band_bits).select(
-        F.col("_id").alias(id_col), F.col("_ph").alias("fp"), "band", "val"
-    )
-    rewrite_layout(
-        spark, table, banded, "hamming_reband_index",
-        {**meta, "band_bits": band_bits, "bucket_cols": "val"},
-        target=str(band_bits),
-        rotate_skew=True,
-    )
+    _banded_reband(spark, table, _hamming_family(), "hamming_reband_index", band_bits)
 
 
-def _hamming_probe_pairs(
-    banded_new: DataFrame,
-    idx: DataFrame,
-    id_col: str,
-    max_hamming: int,
-) -> DataFrame:
-    """(new_id, corpus_id, hamming) candidates from the banded batch
-    against the banded index rows ``idx`` — the whole index, or a
-    capped caller's cold slice of it."""
-    return (
-        banded_new.alias("n")
-        .join(
-            idx.alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.val") == F.col("c.val")),
-        )
-        .select(
-            F.col("n._id").alias("new_id"),
-            F.col(f"c.{id_col}").alias("corpus_id"),
-            F.bit_count(F.col("n._ph").bitwiseXOR(F.col("c.fp"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["new_id", "corpus_id"])
+def _hamming_family(
+    id_col: str = "doc_id", hash_col: str = "phash", max_hamming: int = 3
+):
+    """The Hamming index as a ``dedup._BandedFamily``: 64-bit
+    fingerprints split into ``(band, val)`` exact-match bands at the
+    recorded ``band_bits``, pairs kept at ``bit_count(xor) <=
+    max_hamming``, hot buckets excluded. The caller's batch is pinned,
+    because its fingerprints come out of an upstream decode."""
+    from .dedup import _BandedFamily
+
+    def band(fps: DataFrame, contract: dict) -> DataFrame:
+        bits = int(contract["band_bits"])
+        if bits < 1 or 64 % bits != 0:
+            raise ValueError(f"band_bits={bits} must divide 64")
+        return _fp_band_explode(fps, "_id", "_ph", bits)
+
+    return _BandedFamily(
+        kind="hamming_fp", contract={},
+        keys=["band", "val"], value="fp", batch_value="_ph",
+        sign=lambda df: df.select(
+            F.col(id_col).alias("_id"), F.col(hash_col).alias("_ph")
+        ).filter(F.col("_ph").isNotNull()),
+        band=band, band_param="band_bits",
+        score=lambda x, y: F.bit_count(x.bitwiseXOR(y)),
+        keep=lambda s: s <= max_hamming, score_col="hamming",
+        star=False, pin_batch=True,
     )
 
 
@@ -1210,30 +1164,22 @@ def hamming_index_probe(
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """(new_id, corpus_id, hamming) for every new fingerprint within
-    ``max_hamming`` of an indexed one. Only the batch is banded and
-    shuffled; the corpus streams out of its bucketed table into the
-    (band, val) join. Recall is total for ``max_hamming < 64 //
-    band_bits`` by pigeonhole (see :func:`hamming_hash_pairs`).
+    """``(new_id, corpus_id, hamming)`` for every new fingerprint within
+    ``max_hamming`` of an indexed one. Only the batch is banded; the
+    index streams out of its bucketed table into the ``(band, val)``
+    join. Recall is total for ``max_hamming < 64 // band_bits`` by
+    pigeonhole (see :func:`hamming_hash_pairs`).
 
-    ``max_bucket_size`` mirrors :func:`hamming_hash_pairs`' flood dial:
-    a hot (band, val) index bucket (boilerplate thumbnails, silence
-    clips) is EXCLUDED from candidate generation. Sizing runs over only
-    the buckets the batch hits (``dedup._index_hit_slice``, the helper
-    and cap rule :func:`hamming_incremental_dedup` pins); this probe
-    stays lazy, so each action on its result scans the index once."""
-    from ..sources.io import check_table_meta
-    from .dedup import _index_hit_slice
+    ``max_bucket_size`` applies :func:`hamming_hash_pairs`' flood rule:
+    a hot ``(band, val)`` index bucket (boilerplate thumbnails, silence
+    clips) is excluded from candidate generation. Buckets are sized
+    over the ones the batch hits. The body is ``dedup._banded_probe``,
+    shared with ``dedup.minhash_query_index``; the result is lazy, so
+    each action on it scans the index once."""
+    from .dedup import _banded_probe
 
-    meta = check_table_meta(spark, table, kind="hamming_fp")
-    band_bits = int(meta["band_bits"])
-    banded = _fp_band_explode(new_df, id_col, hash_col, band_bits)
-    idx = spark.table(table)
-    if max_bucket_size is not None:
-        idx = _index_hit_slice(
-            idx, banded, ["band", "val"], id_col, max_bucket_size
-        ).filter(F.col("_bsz") <= max_bucket_size)
-    return _hamming_probe_pairs(banded, idx, id_col, max_hamming)
+    fam = _hamming_family(id_col, hash_col, max_hamming)
+    return _banded_probe(spark, table, fam, new_df, id_col, max_bucket_size)
 
 
 def hamming_incremental_dedup(
@@ -1248,135 +1194,34 @@ def hamming_incremental_dedup(
     log_skew: bool | None = None,
     skew_sink: list | None = None,
 ) -> DataFrame:
-    """Incremental media curation: drop new documents whose fingerprint
-    is within ``max_hamming`` of the ALREADY-INDEXED corpus or of an
-    earlier (smaller-``id_col``) document in the same batch, then
-    (``append=True``) add the survivors' banded fingerprints to the
-    index — the media twin of ``dedup.minhash_incremental_dedup``, with
-    the same batch-cost contract: each batch pays its own fingerprints
-    plus one read of the bucketed index, never a corpus re-decode.
+    """Drop the new documents whose fingerprint is within
+    ``max_hamming`` of an indexed one or of an earlier (smaller-id)
+    document of the same batch, then (``append=True``) add the
+    survivors' banded fingerprints to the index. A batch costs its own
+    fingerprints plus one scan of the bucketed index, never a corpus
+    re-decode. The caller's batch is pinned once, so its upstream
+    decode runs once.
 
-    Rows whose ``hash_col`` is NULL (no real tier decoded the blob)
-    SURVIVE but are not indexed: an undecodable payload can neither be
-    claimed a near-dup nor anchor future dedups — route those to a
-    quarantine/decode-retry path instead of silently dropping data.
+    The fingerprint column is computed by the caller
+    (:func:`image_perceptual_hash`, :func:`audio_spectral_hash`, or a
+    text SimHash); this operator is modality-agnostic. Rows whose
+    ``hash_col`` is NULL (no real tier decoded the blob) survive but
+    are not indexed: route them to a decode-retry path.
 
-    The fingerprint column is computed by the CALLER
-    (:func:`image_perceptual_hash`, :func:`audio_spectral_hash`, or
-    text SimHash) — this operator is modality-agnostic.
-    ``max_bucket_size`` applies :func:`hamming_hash_pairs`' flood
-    semantics to BOTH joins — a hot (band, val) bucket is excluded
-    from candidate generation (pairs also sharing a cold band still
-    surface), bounding the self-join at O(cap·batch) and the probe at
-    O(cap·batch_hits). The BATCH itself is pinned once
-    (``localCheckpoint``) so the fingerprint projection, the
-    within-batch self-join, the survivor anti-join, and the append all
-    reuse pinned blocks instead of re-running the caller's upstream
-    decode/FFT ``mapInPandas``.
+    ``max_bucket_size`` applies :func:`hamming_hash_pairs`' flood rule
+    to both joins: a hot ``(band, val)`` bucket yields no candidate
+    (pairs that also share a cold band still surface). ``log_skew``
+    and ``skew_sink`` are those of ``dedup.minhash_incremental_dedup``.
 
-    Cost of a capped batch: the index is read ONCE. The banded batch is
-    pinned with its bucket sizes (``dedup._bucket_sizes``) and the
-    index's hit slice with its own (``dedup._index_hit_slice``: the
-    rows in the buckets the batch hits, trimmed to cold rows plus one
-    sized row per hot bucket); the probe, the within-batch cap and the
-    skew report all read those pins. The scan behind the slice still
-    opens every index file, so the per-batch floor grows with the
-    index's file count; compaction bounds that. An uncapped call pins
-    only the batch and reads the index once, in the probe join.
+    The body is ``dedup._banded_dedup``, shared with
+    ``dedup.minhash_incremental_dedup``."""
+    from .dedup import _banded_dedup
 
-    ``log_skew`` (late r17): per-batch bucket-skew measurement into
-    the ``{table}_skew_log`` companion (``dedup._bucket_skew_report``:
-    one aggregate over the pins' one-row-per-bucket rows, no join, no
-    groupBy, no extra index read; ``n_capped_buckets`` counts hit index
-    buckets whose every member this probe just excluded) — defaults ON
-    exactly when a probe cap is set (uncapped probes keep their plan;
-    an explicit ``log_skew=True`` takes the pinned path). ``skew_sink``
-    buffers the report dict instead of writing (the streaming wrapper
-    batches per-micro-batch reports into one post-drain flush)."""
-    from ..sources.io import check_table_meta, write_table
-    from .dedup import (
-        _bucket_sizes,
-        _bucket_skew_report,
-        _index_hit_slice,
-        append_skew_reports,
+    fam = _hamming_family(id_col, hash_col, max_hamming)
+    return _banded_dedup(
+        spark, table, fam, new_df, id_col, append, max_bucket_size, log_skew,
+        skew_sink,
     )
-
-    meta = check_table_meta(spark, table, kind="hamming_fp")
-    band_bits = int(meta["band_bits"])
-    n_buckets = int(meta["n_buckets"])
-    cap = max_bucket_size
-    if log_skew is None:
-        log_skew = cap is not None
-    keys = ["band", "val"]
-
-    # ONE materialization of the batch itself: the (id, fp) projection,
-    # the within-batch self-join, the survivor anti-join, and the
-    # append all re-read the pinned blocks instead of re-running the
-    # caller's upstream decode/FFT mapInPandas (the dominant per-batch
-    # cost for media batches)
-    new_df = new_df.localCheckpoint()
-    fps = new_df.select(F.col(id_col), F.col(hash_col)).filter(
-        F.col(hash_col).isNotNull()
-    )
-    banded = _fp_band_explode(fps, id_col, hash_col, band_bits)
-    idx = spark.table(table)
-    if cap is not None or log_skew:
-        # One pin per side, one index read per batch: the banded batch
-        # with its bucket sizes, and the index's hit slice with its own.
-        # The probe, the within-batch cap and the skew report read these.
-        banded = _bucket_sizes(banded, keys, "_id").localCheckpoint()
-        idx = _index_hit_slice(idx, banded, keys, id_col, cap).localCheckpoint()
-    cold_idx, within_banded = idx, banded
-    if cap is not None:
-        # a hot bucket is excluded from candidate generation on both sides
-        cold_idx = idx.filter(F.col("_bsz") <= cap)
-        within_banded = banded.filter(F.col("_bsz") <= cap)
-    vs_corpus = _hamming_probe_pairs(banded, cold_idx, id_col, max_hamming).select(
-        F.col("new_id").alias(id_col)
-    )
-    within = (
-        within_banded.alias("a")
-        .join(
-            within_banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .filter(
-            F.bit_count(F.col("a._ph").bitwiseXOR(F.col("b._ph")))
-            <= max_hamming
-        )
-        .select(F.col("b._id").alias(id_col))
-    )
-    losers = vs_corpus.unionByName(within).distinct()
-    # materialize BEFORE the append: the survivor plan reads the index
-    # table, and an un-pinned plan re-evaluated after the append would
-    # see the survivors' own just-appended fingerprints and drop them
-    # as dups of themselves (the same hazard minhash_incremental_dedup
-    # pins the same way)
-    survivors = new_df.join(losers, id_col, "left_anti").localCheckpoint()
-
-    if log_skew:
-        report = _bucket_skew_report(
-            idx.filter(F.col("_brn") == 1),
-            banded.filter(F.col("_brn") == 1),
-            cap,
-        )
-        if skew_sink is not None:
-            skew_sink.append(report)
-        else:
-            append_skew_reports(spark, table, [report])
-
-    if append:
-        surv_banded = banded.join(
-            survivors.select(F.col(id_col).alias("_id")), "_id"
-        ).select(
-            F.col("_id").alias(id_col), F.col("_ph").alias("fp"), "band", "val"
-        )
-        write_table(
-            surv_banded, table, mode="append", bucket_by=(n_buckets, ["val"])
-        )
-    return survivors
 
 
 def audio_quality_stats(

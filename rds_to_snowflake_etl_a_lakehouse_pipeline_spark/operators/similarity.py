@@ -679,7 +679,7 @@ def ivf_append_index(
     re-clustering, no corpus re-scan) and append into the same
     cell-partitioned layout, so :func:`ivf_query_index` probes see old
     and new vectors alike. The streaming-ingest form of the vector
-    index, mirroring ``dedup.minhash_incremental_dedup`` for text.
+    index.
 
     Quantizer drift: appended data is binned by the ORIGINAL centroids.
     If the new distribution shifts far from the fit, cells skew and

@@ -548,11 +548,8 @@ def index_table_health(
     directory), so a long append chain turns each into dozens of small
     files and probe-side scan cost creeps. Returns ``{n_files,
     n_buckets, files_per_bucket, compact_recommended}`` (for the IVF
-    family ``n_buckets`` is the recorded cell count) — the
-    minhash/span/IVF twin of ``VersionedTable.health`` /
-    ``er_index_health``, completing the contract's health verb for
-    every index family. Constant-time metadata: a file listing, no
-    data scan."""
+    family ``n_buckets`` is the recorded cell count). Constant-time
+    metadata: a file listing, no data scan."""
     df = spark.table(table)
     n_files = len(df.inputFiles())
     meta = get_table_meta(spark, table)
@@ -726,6 +723,16 @@ def rewrite_layout(
         spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
     set_table_meta(spark, table, **contract)
     clear_layout_pending(spark, table)
+
+
+def append_layout(rows: DataFrame, table: str, contract: dict) -> None:
+    """Append ``rows`` to a standing index in the layout its recorded
+    ``contract`` fixes (:func:`_contract_layout`), so an append can
+    never split the bucketing a build chose."""
+    partition_by, bucket_by = _contract_layout(contract, rows.columns)
+    write_table(
+        rows, table, mode="append", partition_by=partition_by, bucket_by=bucket_by
+    )
 
 
 def compact_index_table(spark: SparkSession, table: str) -> None:

@@ -351,7 +351,10 @@ def stream_corpus_dedup(
     query_name: str = "stream_corpus_dedup",
     append: bool = True,
     log_skew: bool | None = None,
-    **sig_kwargs,
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_n: int = 5,
+    impl: str = "arrow",
 ):
     """Streaming corpus curation: every micro-batch of arriving
     documents is near-dup-checked against the persisted MinHash index
@@ -376,13 +379,13 @@ def stream_corpus_dedup(
     signatures don't extend the index — used by the bench's streaming
     steady-state query so regression re-times measure identical work.
 
-    ``log_skew`` (round 17): per-batch bucket-skew reports — defaulted
-    ON when ``max_bucket_size`` is set, like the batch API — are
-    buffered and flushed once per drain by :func:`_stream_probe`. Each
-    report is one aggregate job over the batch's two pins (no join, no
-    groupBy, no index read); the bench's q22 still passes
-    ``log_skew=False`` so it keeps timing the same per-batch body as
-    earlier rounds."""
+    ``log_skew``: per-batch bucket-skew reports (default: on when
+    ``max_bucket_size`` is set) are buffered and flushed once per drain
+    by :func:`_stream_probe`. Each report is one aggregate job over the
+    batch's two pins, with no index read; the bench's q22 passes
+    ``log_skew=False`` to time the probe alone. The signature
+    parameters (``num_hashes``, ``bands``, ``shingle_n``, ``impl``)
+    pass through to ``minhash_incremental_dedup``."""
     from ..operators.dedup import minhash_incremental_dedup
 
     _stream_probe(
@@ -390,7 +393,8 @@ def stream_corpus_dedup(
         partial(
             minhash_incremental_dedup, id_col=id_col, text_col=text_col,
             threshold=threshold, append=append,
-            max_bucket_size=max_bucket_size, **sig_kwargs,
+            max_bucket_size=max_bucket_size, num_hashes=num_hashes,
+            bands=bands, shingle_n=shingle_n, impl=impl,
         ),
     )
 
@@ -469,25 +473,23 @@ def stream_media_dedup(
     Hamming index (and within itself) through
     ``operators.multimodal.hamming_incremental_dedup``; survivors'
     banded fingerprints append to the index so later batches dedup
-    against everything seen — the media twin of
-    :func:`stream_corpus_dedup`, with the same state story: state
-    lives in a bucketed catalog table, not the streaming state store,
-    so it survives restarts and is queryable/compactable like any
-    table (``maintenance.py`` sweeps it like the MinHash index). Each
-    batch pays its fingerprints plus ONE read of the bucketed index,
-    capped or not (see ``hamming_incremental_dedup``).
+    against everything seen. State lives in a bucketed catalog table,
+    not the streaming state store, so it survives restarts and is
+    queryable and compactable like any table (``maintenance.py`` sweeps
+    it). Each batch pays its fingerprints plus ONE read of the bucketed
+    index, capped or not (see ``hamming_incremental_dedup``).
 
     The stream carries the HASH column (compute it in the stream
     transform via ``image_perceptual_hash`` / ``audio_spectral_hash``
     — both are plain ``mapInPandas``, streaming-legal); this wrapper
     stays modality-agnostic. Runs with trigger=availableNow and blocks
     until input is drained. ``append=False`` is the measure/dry-run
-    mode, as on the MinHash twin.
+    mode: batches are probed but survivors do not extend the index.
 
-    ``log_skew`` (late r17): per-batch bucket-skew reports — defaulted
-    ON when ``max_bucket_size`` is set, like the batch API; one
-    aggregate job over the batch's pins, no index read — are buffered
-    and flushed once per drain by :func:`_stream_probe`."""
+    ``log_skew``: per-batch bucket-skew reports (default: on when
+    ``max_bucket_size`` is set; one aggregate job over the batch's
+    pins, no index read) are buffered and flushed once per drain by
+    :func:`_stream_probe`."""
     from ..operators.multimodal import hamming_incremental_dedup
 
     _stream_probe(
@@ -527,9 +529,9 @@ def stream_entity_resolution(
     id already carries their entity, similarity 1.0 → same label).
     Runs with trigger=availableNow and blocks until input is drained.
 
-    ``log_skew`` (late r17): per-batch block-skew reports — defaulted
-    ON when ``max_block_size`` is set, like the batch API — are
-    buffered and flushed once per drain by :func:`_stream_probe`."""
+    ``log_skew``: per-batch block-skew reports (default: on when
+    ``max_block_size`` is set) are buffered and flushed once per drain
+    by :func:`_stream_probe`."""
     from ..operators.entity import er_incremental
 
     _stream_probe(

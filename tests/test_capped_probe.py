@@ -1,15 +1,18 @@
 """Capped standing-index probes against an independent derivation.
 
-``minhash_incremental_dedup`` and ``hamming_incremental_dedup`` size the
-buckets a batch hits once per side and read the index once per batch.
-These tests plant a flood bucket in the index and a flood inside the
-batch, run two appending batches at caps None, 2 and one at least as
-large as any bucket, and check against values derived here from the
-index table and the banded batch before each call:
+``minhash_incremental_dedup``, ``hamming_incremental_dedup`` and
+``er_incremental`` size the buckets a batch hits once per side and read
+the index once per batch. These tests plant a flood bucket in the index
+and a flood inside the batch, run appending batches at caps None, 2 and
+one at least as large as any bucket, and check against values derived
+here from the index table and the banded (or blocked) batch before each
+call:
 
 - survivor ids (MinHash: cold pairs over the threshold plus the min-id
   star rule in hot buckets; Hamming: pairs within ``max_hamming`` in
-  cold buckets only, hot buckets excluded);
+  cold buckets only, hot buckets excluded) or, for ER, the ``(id,
+  entity_id)`` assignment (hot blocks contribute no edge on either
+  side);
 - every skew-report field, from a direct ``groupBy`` of both sides;
 - exactly one final-plan scan of the index table per call, counted in
   the SQL executions the call started.
@@ -27,12 +30,17 @@ from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
     minhash_incremental_dedup,
     minhash_query_index,
 )
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.entity import (
+    er_build_index,
+    er_incremental,
+)
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.multimodal import (
     _fp_band_explode,
     hamming_incremental_dedup,
     hamming_index_build,
     hamming_index_probe,
 )
+
 
 def _execution_ids(spark) -> set[int]:
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
@@ -87,7 +95,7 @@ def _by_bucket(rows):
 
 
 def _drop(spark, t: str) -> None:
-    for s in (t, f"{t}_skew_log"):
+    for s in (t, f"{t}_skew_log", f"{t}__relabel"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 
@@ -285,3 +293,108 @@ def test_hamming_capped_probe_matches_derivation(spark):
         value=("fp", "_ph"),
     )
     assert 1002 in survivors_at["none"][0]  # NULL hash survives, unindexed
+
+
+# ---------------------------------------------------------------------- ER
+
+def _er_assignment(idx, batch, cap):
+    """``{id: entity_id}`` for the batch: an edge joins two batch rows
+    with equal text in a shared block, or a batch row to the entity of
+    an index row with equal text in a shared block; a block over the
+    cap on either side contributes no edge. Each batch id resolves to
+    the min id of its component over batch ids and anchor entities."""
+    def hot(n):
+        return cap is not None and n > cap
+
+    idx_by, bat_by = defaultdict(list), defaultdict(list)
+    for i, text, entity, blk in idx:
+        idx_by[blk].append((text, entity))
+    for i, text, blk in batch:
+        bat_by[blk].append((i, text))
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    def union(a, b):
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+
+    for blk, members in bat_by.items():
+        if hot(len(members)):
+            continue
+        if not hot(len(idx_by[blk])):
+            for i, text in members:
+                for ctext, entity in idx_by[blk]:
+                    if text == ctext:
+                        union(i, entity)
+        for a, ta in members:
+            for b, tb in members:
+                if a < b and ta == tb:
+                    union(a, b)
+    return {i: find(i) for i, _, _ in batch}
+
+
+def test_er_capped_probe_matches_derivation(spark):
+    """ER skips a hot block on both sides. At caps None, 2 and one at
+    least as large as any block, with ``append=False`` and then
+    ``append=True``, the assignment, the skew report and the single
+    index scan match the derivation."""
+    corpus = [(1, "acme", "F", 1), (2, "acme", "F", 1)]  # index flood: 6 in F
+    corpus += [(3, "bolt", "F", 3), (4, "cog", "F", 4), (5, "dent", "F", 5)]
+    corpus += [(6, "echo", "F", 6), (10, "fig", "C", 10), (11, "fig", "C", 10)]
+    corpus += [(12, "gum", "D", 12), (14, "kit", "K", 14), (15, "kit", "K", 15)]
+    batch = [(100, "acme", "F"), (101, "fig", "C"), (120, "gum", "D")]
+    batch += [(121, "gum", "D"), (140, "kit", "K")]  # 140 bridges 14 and 15
+    batch += [(110 + i, "hat", "H") for i in range(3)]  # batch flood in H
+    schema = "id bigint, name string, blk string"
+    same = lambda a, b: (a == b).cast("double")  # noqa: E731
+    big = len(corpus) + len(batch)
+    assigned_at = {}
+    for label, cap, log in (
+        ("none", None, False), ("nonelog", None, True), ("two", 2, True),
+        ("big", big, True),
+    ):
+        t = f"cap_er_{label}"
+        _drop(spark, t)
+        er_build_index(
+            spark.createDataFrame(corpus, schema + ", entity_id bigint"),
+            t, "id", "name", "blk",
+        )
+        b = spark.createDataFrame(batch, schema)
+        for append in (False, True):
+            idx_now = spark.table(t)
+            want_report = _report(
+                idx_now, b.withColumnRenamed("blk", "_blk"), ["_blk"], cap
+            )
+            want = _er_assignment(
+                [(r["id"], r["text"], r["entity"], r["_blk"]) for r in idx_now.collect()],
+                batch,
+                cap,
+            )
+            sink: list = []
+            before = _execution_ids(spark)
+            got = {
+                r["id"]: r["entity_id"]
+                for r in er_incremental(
+                    spark, t, b, "id", "name", "blk", threshold=0.9,
+                    max_block_size=cap, similarity=same, append=append,
+                    log_skew=log, skew_sink=sink,
+                ).collect()
+            }
+            if log:
+                assert _index_scans(spark, t, before) == 1, (label, append)
+            assert got == want, (label, append, got, want)
+            assert sink == ([want_report] if log else []), (label, sink, want_report)
+            assigned_at[label, append] = got
+        _drop(spark, t)
+
+    assert assigned_at["two", False] != assigned_at["none", False]
+    for append in (False, True):
+        assert (
+            assigned_at["big", append] == assigned_at["none", append]
+            == assigned_at["nonelog", append]
+        )

@@ -2121,6 +2121,41 @@ def test_index_contract_metadata_validation(spark):
         )
 
 
+def test_minhash_incremental_dedup_rejects_unknown_keywords(spark, tmp_path):
+    """A misspelt signature parameter (``band=`` for ``bands=``) or a
+    removed option raises ``TypeError`` instead of running with the
+    defaults, on the batch call and on its streaming wrapper."""
+    import pytest
+
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
+        minhash_build_index,
+        minhash_incremental_dedup,
+    )
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
+        stream_corpus_dedup,
+    )
+
+    t = "mh_idx_kwargs"
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta")], "doc_id long, text string"
+    )
+    minhash_build_index(docs, t, num_hashes=32, bands=8)
+    for bad in ({"band": 8}, {"storage": "persist"}):
+        with pytest.raises(TypeError):
+            minhash_incremental_dedup(
+                spark, t, docs, num_hashes=32, bands=8, append=False, **bad
+            )
+        with pytest.raises(TypeError):
+            stream_corpus_dedup(
+                spark.readStream.schema("doc_id long, text string").parquet(
+                    str(tmp_path)
+                ),
+                t, str(tmp_path / "ck"), **bad,
+            )
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_ivf_centroid_fingerprint_contract(spark):
     """The IVF index records a fingerprint of its centroid matrix;
     probes/appends passing centroids from a DIFFERENT build (stale or

@@ -268,6 +268,58 @@ def test_built_index_bucket_count_follows_its_data(spark, tmp_path):
     assert _bucket_spec(spark, t) == (sized, "_h")
     _drop(spark, t)
 
+    # MinHash, exact and ER appends (uncapped and capped) land in the
+    # count their build recorded. The Arrow signature kernel hides the
+    # MinHash rows' size and the ER rows come out of a checkpointed
+    # clustering, so those two builds may keep 32.
+    docs = spark.read.parquet(doc_path)
+    new_docs = spark.createDataFrame(
+        [(1000 + i, f"an appended note {i} on tides and estuaries " * 2)
+         for i in range(4)],
+        "doc_id bigint, text string",
+    )
+    corpus = spark.createDataFrame(
+        [(1, "Acme Corporation"), (2, "Initech Ltd"), (3, "Acme Corp")],
+        "id long, name string",
+    )
+    records = spark.createDataFrame(
+        [(10, "Acme Corporatio"), (11, "Globex Ltd"), (12, "Umbrella Ltd")],
+        "id long, name string",
+    )
+    families = (
+        ("minhash", "bucket",
+         lambda t: dd.minhash_build_index(docs, t),
+         lambda t, k, cap: dd.minhash_incremental_dedup(
+             spark, t, new_docs.withColumn("doc_id", F.col("doc_id") + 100 * k),
+             max_bucket_size=cap)),
+        ("exact", "fp",
+         lambda t: dd.exact_build_index(docs, t, ["text"]),
+         lambda t, k, cap: dd.exact_incremental_dedup(
+             spark, t, new_docs.withColumn("text", F.concat("text", F.lit(k))),
+             ["text"])),
+        ("er", "_blk",
+         lambda t: ent.er_build_index(
+             ent.resolve_entities(corpus, "id", "name", _er_key(), 0.9),
+             t, "id", "name", _er_key()),
+         lambda t, k, cap: ent.er_incremental(
+             spark, t, records.withColumn("id", F.col("id") + 100 * k), "id",
+             "name", _er_key(), max_block_size=cap)),
+    )
+    for family, col, build, append in families:
+        t = f"sizing_{family}_idx"
+        _drop(spark, t)
+        build(t)
+        n = int(io.get_table_meta(spark, t)["n_buckets"])
+        assert n == sized or (family != "exact" and n == 32), family
+        assert _bucket_spec(spark, t) == (n, col)
+        rows = spark.table(t).count()
+        for k, cap in enumerate((None, 2)):
+            append(t, k, cap).collect()
+        assert spark.table(t).count() > rows, family
+        assert io.get_table_meta(spark, t)["n_buckets"] == str(n)
+        assert _bucket_spec(spark, t) == (n, col), family
+        _drop(spark, t)
+
     # unknown statistics (an RDD-backed frame) keep the fixed 32
     t = "sizing_rdd_idx"
     _drop(spark, t)
