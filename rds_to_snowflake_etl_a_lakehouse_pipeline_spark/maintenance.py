@@ -146,57 +146,14 @@ def _skew_log_health(spark: SparkSession, table: str, rep: dict) -> None:
     rep["cap_truncating"] = bool(agg["any_capped"])
 
 
-def _layout_pending_health(spark: SparkSession, table: str, rep: dict) -> None:
-    """Surface an interrupted layout rewrite (``io.rewrite_layout``
-    crashed between its data swap and its contract commit) on any
-    family the rewrite serves. While pending, every probe refuses via
-    ``check_table_meta``, so the index is effectively DOWN until the
-    rewrite converges; the sweep resumes the recorded verb when it is
-    replayable (:func:`_resume_layout`) and otherwise surfaces the
-    marker for the operator (builds need the corpus, er reblocks need
-    the caller's key expression)."""
-    from .sources.io import get_layout_pending
-
-    pending = get_layout_pending(spark, table)
-    if pending is not None:
-        rep["layout_pending"] = pending
-
-
 def _rewrite_distinct_state(spark: SparkSession, table: str) -> None:
-    """The distinct-state compaction: the same guarded rewrite as
+    """The distinct-state compaction: the same layout rewrite as
     ``io.compact_index_table``, bucketed on every column by the
     recorded ``state_buckets`` (the tuple IS the key)."""
-    from .sources.io import recorded_contract, rewrite_layout
+    from .sources.io import get_table_meta, rewrite_layout
 
     rows = spark.table(table).distinct().localCheckpoint(eager=True)
-    rewrite_layout(
-        spark, table, rows, "distinct_state_rewrite",
-        recorded_contract(spark, table),
-    )
-
-
-def _resume_layout(spark: SparkSession, table: str, pending: dict) -> bool:
-    """Re-run an interrupted layout rewrite when its verb is replayable
-    from the marker alone — the integer-target rebands and the
-    layout-preserving compactions; False for the rest (builds need the
-    corpus, er reblocks the caller's key expression)."""
-    from .operators.dedup import minhash_reband_index
-    from .operators.entity import er_compact_index
-    from .operators.multimodal import hamming_reband_index
-    from .sources.io import compact_index_table
-
-    verbs = {
-        "minhash_reband_index": lambda t: minhash_reband_index(spark, table, int(t)),
-        "hamming_reband_index": lambda t: hamming_reband_index(spark, table, int(t)),
-        "compact_index_table": lambda t: compact_index_table(spark, table),
-        "er_compact_index": lambda t: er_compact_index(spark, table),
-        "distinct_state_rewrite": lambda t: _rewrite_distinct_state(spark, table),
-    }
-    resume = verbs.get(pending["verb"])
-    if resume is None:
-        return False
-    resume(pending["target"])
-    return True
+    rewrite_layout(spark, table, rows, get_table_meta(spark, table))
 
 
 def table_health(spark: SparkSession, table: str, family: str) -> dict:
@@ -206,7 +163,6 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
 
     if family in ("minhash", "span", "ivf", "hamming_fp", "exact"):
         rep = index_table_health(spark, table, MAX_FILES_PER_BUCKET)
-        _layout_pending_health(spark, table, rep)
         if family in ("minhash", "hamming_fp"):
             _skew_log_health(spark, table, rep)
         if family == "ivf" and spark.catalog.tableExists(f"{table}_drift_stats"):
@@ -331,7 +287,6 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
         rep.update(er)
         rep["compact_recommended"] = files_flag or er["compact_recommended"]
         _skew_log_health(spark, table, rep)
-        _layout_pending_health(spark, table, rep)
         return rep
     if family == "session_state":
         meta = get_table_meta(spark, table)
@@ -352,14 +307,12 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
         df = spark.table(table)
         n_buckets = int(meta.get("state_buckets", 0)) or 1
         n_files = len(df.inputFiles())
-        rep = {
+        return {
             "n_buckets": n_buckets,
             "n_files": n_files,
             "files_per_bucket": round(n_files / n_buckets, 2),
             "compact_recommended": n_files / n_buckets > MAX_FILES_PER_BUCKET,
         }
-        _layout_pending_health(spark, table, rep)
-        return rep
     if family == "batch_sink":
         live = _batch_partition_ids(spark, table)
         pending = _pending_fold(spark, table)
@@ -442,37 +395,6 @@ def health_sweep(
             continue
         family = classify_table(spark, name)
         if family is None:
-            # a layout rewrite (build/reband/reblock) that crashed
-            # after its swap destroyed the table's properties: the
-            # table is unclassifiable from metadata, but its pending
-            # marker carries the verb, target, and contract snapshot
-            # — report it so the sweep can resume/surface it (probes
-            # refuse via check_table_meta until then)
-            if name.endswith("_retune_pending"):
-                # a marker whose BASE table is gone (index dropped
-                # while a rewrite was pending, or a first build that
-                # crashed before its table ever committed) is an
-                # orphan: nothing can resume it, and a later index
-                # REUSING the name would be spuriously refused by
-                # check_table_meta. Flag for reclaim.
-                base = name[: -len("_retune_pending")]
-                if not spark.catalog.tableExists(base):
-                    reports[name] = {
-                        "family": "orphan_retune_marker",
-                        "base_table": base,
-                        "action": "drop_orphan_retune_marker",
-                    }
-                    attention.append(name)
-            else:
-                from .sources.io import get_layout_pending
-
-                pending = get_layout_pending(spark, name)
-                if pending is not None:
-                    reports[name] = {
-                        "family": "layout_pending",
-                        "layout_pending": pending,
-                    }
-                    attention.append(name)
             continue
         rep = {"family": family, **table_health(spark, name, family)}
         reports[name] = rep
@@ -482,7 +404,6 @@ def health_sweep(
             or rep.get("merge_recommended")
             or rep.get("cap_truncating")
             or rep.get("stranded_cells")
-            or rep.get("layout_pending")
         ):
             attention.append(name)
     versioned: dict[str, dict] = {}
@@ -674,13 +595,6 @@ def run_maintenance(
                 continue
             rep = sweep["tables"][name]
             family = rep["family"]
-            if family == "orphan_retune_marker":
-                # the base index is gone; nothing can resume the
-                # rewrite, and a future index reusing the name would
-                # be spuriously refused — reclaim the marker
-                spark.sql(f"DROP TABLE IF EXISTS {name}")
-                applied[name] = "drop_orphan_retune_marker"
-                continue
             if family == "interrupted_swap":
                 # a write_table stage-and-swap that never finished:
                 # dangling base -> complete the rename (strictly
@@ -700,26 +614,6 @@ def run_maintenance(
             acts: list[str] = []
             retrained = False
             merge_acted = False
-            resumed_layout = False
-            if rep.get("layout_pending"):
-                # a guarded layout rewrite crashed between its data
-                # swap and its contract commit: probes refuse via
-                # check_table_meta until the rewrite converges, so
-                # this outranks every other verb for these families.
-                # Replayable verbs re-derive from state surviving both
-                # layouts; the rest only get the note.
-                p = rep["layout_pending"]
-                if _resume_layout(spark, name, p):
-                    acts.append(f"{p['verb']} (resumed)")
-                    resumed_layout = True
-                else:
-                    acts.append(
-                        f"layout_pending_noted ({p['verb']} was "
-                        f"interrupted, target {p['target']!r}; probes "
-                        "refuse until it is re-run — builds need the "
-                        "corpus, er reblocks the caller's key "
-                        "expression)"
-                    )
             if family == "ivf" and rep.get("pending_merge"):
                 # a crashed merge's pending manifest MUST resume before
                 # any drift remediation: retrain/split read the
@@ -856,15 +750,12 @@ def run_maintenance(
                     compact_flag = index_table_health(
                         spark, name, MAX_FILES_PER_BUCKET
                     )["compact_recommended"]
-                if compact_flag and not retrained and not resumed_layout:
-                    # a resumed reband just rewrote every file through
-                    # the stage-and-swap — compaction is subsumed
+                if compact_flag and not retrained:
                     from .sources.io import compact_index_table
 
                     compact_index_table(spark, name)
                     acts.append("compact_index_table")
-            elif family == "distinct_state" and not resumed_layout:
-                # a resumed rewrite just compacted the table
+            elif family == "distinct_state":
                 _rewrite_distinct_state(spark, name)
                 applied[name] = "distinct_state_rewrite"
             elif family == "er":

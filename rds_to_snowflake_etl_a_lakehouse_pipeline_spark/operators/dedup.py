@@ -115,8 +115,8 @@ def exact_build_index(
     ever match. (The digest, not the raw list: Spark's property
     redaction masks read-back values matching ``(?i)url`` etc., and
     'url' is exactly the column a frontier index keys on.) Written
-    through ``io.rewrite_layout``, so a crash before the contract
-    commit leaves probes refusing instead of validating nothing.
+    through ``io.rewrite_layout``, which commits the digest with the
+    fingerprints, so no probe ever sees one without the other.
 
     ``n_buckets=None`` sizes the bucket count from the fingerprints
     (``io._sized_buckets``: at least one per core, at most 32, and 32
@@ -131,7 +131,7 @@ def exact_build_index(
         F.lit(None).cast("bigint").alias("_src_batch"),
     ).distinct()
     rewrite_layout(
-        df.sparkSession, table, fps, "exact_build_index",
+        df.sparkSession, table, fps,
         {
             "kind": "exact", "n_buckets": n_buckets, "bucket_cols": "fp",
             "content_sig": _content_cols_sig(content_cols),
@@ -441,13 +441,13 @@ def minhash_build_index(
     ``impl``) hides their size from Catalyst, so such a build keeps
     32 buckets. An explicit count wins; rebands and appends keep the
     recorded one.
-    The write goes through ``io.rewrite_layout``, which also advances
-    ``skew_epoch`` and clears the skew log (bucket keys re-derive from
-    the fresh corpus).
+    The write goes through ``io.rewrite_layout``, which commits the
+    contract with the data, advances ``skew_epoch`` and clears the skew
+    log (bucket keys re-derive from the fresh corpus).
     """
     fam = _minhash_family(id_col, text_col, num_hashes, bands, shingle_n, impl)
     _rewrite_banded(
-        df.sparkSession, table, fam, fam.sign(df), id_col, "minhash_build_index",
+        df.sparkSession, table, fam, fam.sign(df), id_col,
         {
             "kind": "minhash", **fam.contract, "n_buckets": n_buckets,
             "bucket_cols": "bucket",
@@ -459,7 +459,7 @@ def minhash_reband_index(spark, table: str, bands: int) -> None:
     """Re-derive a standing MinHash index's banding at ``bands`` bands
     from its stored signatures, without touching the corpus text: the
     retune verb the ``cap_truncating`` health flag points to. One scan
-    of the ``band = 0`` slice, one re-explode, one guarded rewrite
+    of the ``band = 0`` slice, one re-explode, one rewrite
     (:func:`_banded_reband`, shared with
     ``multimodal.hamming_reband_index``).
 
@@ -471,11 +471,11 @@ def minhash_reband_index(spark, table: str, bands: int) -> None:
 
     ``bands`` must divide the recorded ``num_hashes``. A caller still
     probing with the old band count fails the contract check. The
-    rewrite rotates ``skew_epoch`` and clears the skew log, and a
-    crash in any window leaves probes refusing until a re-run (or
-    ``run_maintenance(apply=True)``) converges.
+    rewrite rotates ``skew_epoch`` and clears the skew log. Data and
+    contract commit together, so a crash at any step leaves the old
+    banding or the new one, and a re-run converges.
     """
-    _banded_reband(spark, table, _minhash_family(), "minhash_reband_index", bands)
+    _banded_reband(spark, table, _minhash_family(), bands)
 
 
 def _bucket_skew_report(
@@ -829,31 +829,28 @@ def _stored(fam: _BandedFamily, banded: DataFrame, id_col: str) -> DataFrame:
 
 def _rewrite_banded(
     spark, table: str, fam: _BandedFamily, rows: DataFrame, id_col: str,
-    verb: str, contract: dict,
+    contract: dict,
 ) -> None:
     """Band ``(_id, batch_value)`` rows under ``contract`` and rewrite
     ``table`` with them through ``io.rewrite_layout``, rotating the skew
-    epoch: the one write of a build and a reband. The marker's target
-    is the contract's band parameter, which a resume re-applies."""
+    epoch: the one write of a build and a reband."""
     from ..sources.io import rewrite_layout
 
     rewrite_layout(
-        spark, table, _stored(fam, fam.band(rows, contract), id_col), verb,
-        contract, target=str(contract[fam.band_param]), rotate_skew=True,
+        spark, table, _stored(fam, fam.band(rows, contract), id_col),
+        contract, rotate_skew=True,
     )
 
 
-def _banded_reband(
-    spark, table: str, fam: _BandedFamily, verb: str, value: int
-) -> None:
+def _banded_reband(spark, table: str, fam: _BandedFamily, value: int) -> None:
     """Re-band a standing index at ``fam.band_param = value`` from the
     values it stores: the ``band = 0`` slice holds one row per document
-    with its full value, so the corpus is never re-read. A crash in any
-    window leaves probes refusing, and a re-run converges (both layouts
-    keep the full values)."""
-    from ..sources.io import recorded_contract
+    with its full value, so the corpus is never re-read, and a re-run
+    after a failed reband converges (both layouts keep the full
+    values)."""
+    from ..sources.io import get_table_meta
 
-    meta = recorded_contract(spark, table)
+    meta = get_table_meta(spark, table)
     if meta.get("kind") != fam.kind:
         raise ValueError(
             f"{table} is not a {fam.kind} index (kind={meta.get('kind')!r})"
@@ -864,7 +861,7 @@ def _banded_reband(
         F.col(id_col).alias("_id"), F.col(fam.value).alias(fam.batch_value)
     )
     contract = {**meta, fam.band_param: value}
-    _rewrite_banded(spark, table, fam, docs, id_col, verb, contract)
+    _rewrite_banded(spark, table, fam, docs, id_col, contract)
 
 
 def minhash_query_index(
@@ -2181,11 +2178,10 @@ def span_build_index(
     be self-deduped before becoming the standard; the index then
     memorializes whatever text the caller passed here.
 
-    ``k`` and ``n_buckets`` are recorded as table properties
-    (:func:`~..sources.io.set_table_meta`); probes and appends validate
-    against them — a silent ``k`` mismatch would never match any gram
-    and pass everything through undeduped. Written through
-    ``io.rewrite_layout`` (fail-loud if it crashes before the commit).
+    ``k`` and ``n_buckets`` are recorded as table properties in the
+    same commit as the fingerprints (``io.rewrite_layout``); probes and
+    appends validate against them — a silent ``k`` mismatch would
+    never match any gram and pass everything through undeduped.
     ``n_buckets=None`` sizes the count from the fingerprints
     (``io._sized_buckets``: at least one per core, at most 32, and 32
     when the size is unknown); an explicit count wins, and appends and
@@ -2204,9 +2200,8 @@ def span_build_index(
         .withColumn("_src_batch", F.lit(None).cast("bigint"))
     )
     rewrite_layout(
-        df.sparkSession, table, fps, "span_build_index",
+        df.sparkSession, table, fps,
         {"kind": "span", "k": k, "n_buckets": n_buckets, "bucket_cols": "_h"},
-        target=str(k),
     )
 
 

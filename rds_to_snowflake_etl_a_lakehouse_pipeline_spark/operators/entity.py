@@ -325,9 +325,9 @@ def er_build_index(
     least one per core, at most 32, and 32 when the size is unknown);
     an explicit count wins. It is recorded as a table property, and
     appends, reblocks and compactions keep it. Written through
-    ``io.rewrite_layout``: a crash before the contract commit leaves
-    probes refusing, and a rebuild advances ``skew_epoch`` and clears
-    the skew log (every block key re-derives from the new corpus)."""
+    ``io.rewrite_layout``, which commits the contract with the rows; a
+    rebuild advances ``skew_epoch`` and clears the skew log (every
+    block key re-derives from the new corpus)."""
     from ..sources.io import rewrite_layout
 
     bk = F.col(block_key) if isinstance(block_key, str) else block_key
@@ -341,9 +341,7 @@ def er_build_index(
         rows = rows.withColumn("_blk", F.explode("_blk"))
     rewrite_layout(
         resolved.sparkSession, table, rows.filter(F.col("_blk").isNotNull()),
-        "er_build_index",
         {"kind": "er", "n_buckets": n_buckets, "bucket_cols": "_blk"},
-        target=str(block_key),
         rotate_skew=True,
     )
 
@@ -376,16 +374,14 @@ def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
     contract stays caller-owned. Rotation bumps ``skew_epoch`` and
     clears the skew log like a rebuild.
 
-    Crash-safe through ``io.rewrite_layout``: a crash between the swap
-    and the contract commit leaves the marker, probes refuse instead of
-    silently resolving standalone, and re-running the verb converges
-    from any window (the stored text survives both layouts). Because
-    the key is a Column expression the sweep cannot replay it — the
-    sweep surfaces the pending marker as a note; re-run with YOUR key
-    to converge."""
-    from ..sources.io import recorded_contract, rewrite_layout
+    Crash-safe through ``io.rewrite_layout``: the new blocks and the
+    rotated contract commit together, so a crash at any step leaves the
+    old blocking or the new one, never new blocks under the old
+    contract. Re-running the verb with YOUR key converges from either
+    (the stored text survives both layouts)."""
+    from ..sources.io import get_table_meta, rewrite_layout
 
-    meta = recorded_contract(spark, table)
+    meta = get_table_meta(spark, table)
     if meta.get("kind") != "er":
         raise ValueError(
             f"{table} is not an er index (kind={meta.get('kind')!r})"
@@ -401,9 +397,7 @@ def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
         rows = rows.withColumn("_blk", F.explode("_blk"))
     rewrite_layout(
         spark, table, rows.filter(F.col("_blk").isNotNull()),
-        "er_reblock_index",
         {**meta, "bucket_cols": "_blk"},
-        target=str(block_key),
         rotate_skew=True,
     )
 
@@ -598,16 +592,16 @@ def er_compact_index(spark, table: str) -> None:
     cost doesn't grow with relabels (they apply as a tiny broadcast
     map), but an unbounded relabel log makes the driver-side closure
     collect grow; compaction resets it."""
-    from ..sources.io import recorded_contract, rewrite_layout
+    from ..sources.io import get_table_meta, rewrite_layout
 
-    meta = recorded_contract(spark, table)
+    meta = get_table_meta(spark, table)
     rel = _relabel_closure(spark, table, enforce_cap=False)
     rows = _apply_relabels(spark.table(table), "entity", rel)
     # write_table's stage-and-swap materializes before dropping, so
     # reading the target is safe. The recorded contract is kept as it
     # is: compaction folds labels but does NOT re-derive block keys, so
     # the skew history and its epoch stay valid (no rotation)
-    rewrite_layout(spark, table, rows, "er_compact_index", meta)
+    rewrite_layout(spark, table, rows, meta)
     spark.sql(f"DROP TABLE IF EXISTS {_relabel_tbl(table)}")
 
 

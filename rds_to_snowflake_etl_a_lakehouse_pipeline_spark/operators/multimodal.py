@@ -1090,12 +1090,12 @@ def hamming_index_build(
     reports buffered under a retired epoch are dropped at flush instead
     of re-arming ``cap_truncating`` against the fresh index, and a
     rebuild also clears the skew log (both done by
-    ``io.rewrite_layout``)."""
+    ``io.rewrite_layout``, which commits the contract with the data)."""
     from .dedup import _rewrite_banded
 
     fam = _hamming_family(id_col, hash_col)
     _rewrite_banded(
-        df.sparkSession, table, fam, fam.sign(df), id_col, "hamming_index_build",
+        df.sparkSession, table, fam, fam.sign(df), id_col,
         {
             "kind": "hamming_fp", "band_bits": band_bits,
             "n_buckets": n_buckets, "bucket_cols": "val",
@@ -1107,7 +1107,7 @@ def hamming_reband_index(spark, table: str, band_bits: int) -> None:
     """Re-derive a standing Hamming index's banding at ``band_bits``
     bits per band from its stored fingerprints, without re-decoding
     any media: one scan of the ``band = 0`` slice, one re-explode, one
-    guarded rewrite (``dedup._banded_reband``, shared with
+    rewrite (``dedup._banded_reband``, shared with
     ``dedup.minhash_reband_index``). It is the retune verb the
     family's ``cap_truncating`` health flag points to.
 
@@ -1118,12 +1118,12 @@ def hamming_reband_index(spark, table: str, band_bits: int) -> None:
 
     ``band_bits`` must divide 64. A caller still probing at the old
     width fails the contract check. The rewrite rotates
-    ``skew_epoch`` and clears the skew log, and a crash in any window
-    leaves probes refusing until a re-run (or
-    ``run_maintenance(apply=True)``) converges."""
+    ``skew_epoch`` and clears the skew log. Data and contract commit
+    together, so a crash at any step leaves the old banding or the new
+    one, and a re-run converges."""
     from .dedup import _banded_reband
 
-    _banded_reband(spark, table, _hamming_family(), "hamming_reband_index", band_bits)
+    _banded_reband(spark, table, _hamming_family(), band_bits)
 
 
 def _hamming_family(

@@ -2148,7 +2148,7 @@ def pq_save_codebook(spark, table: str, codebook: PQCodebook) -> None:
     to hold the trained object. Doubles round-trip parquet exactly, so
     the loaded codebook encodes bit-identically to the saved one.
     :func:`ivf_build_index` calls this whenever it writes PQ codes."""
-    from ..sources.io import set_table_meta, write_table
+    from ..sources.io import write_table
 
     rows = [
         (j, c, [float(x) for x in codebook.codebooks[j, c]])
@@ -2160,15 +2160,13 @@ def pq_save_codebook(spark, table: str, codebook: PQCodebook) -> None:
             rows, "subspace int, code int, centroid array<double>"
         ),
         _pq_codebook_table(table),
-    )
-    set_table_meta(
-        spark,
-        _pq_codebook_table(table),
-        kind="pq_codebook",
-        m=codebook.m,
-        n_codes=codebook.n_codes,
-        dim=codebook.dim,
-        seed=codebook.seed,
+        properties={
+            "kind": "pq_codebook",
+            "m": codebook.m,
+            "n_codes": codebook.n_codes,
+            "dim": codebook.dim,
+            "seed": codebook.seed,
+        },
     )
 
 

@@ -3,27 +3,28 @@
 The reference reads RDS tables through the Glue Catalog and writes
 S3 Parquet with catalog registration (bronze/crm_cust_info_bronze.py:24-47)
 plus a Snowflake sink for gold (dim_customers_gold.py:72-81). Here the
-Spark session catalog plays the Glue Catalog's role: ``saveAsTable``
-registers, ``spark.table`` resolves. JDBC reads are partitioned so a
+Spark session catalog plays the Glue Catalog's role: :func:`write_table`
+creates and registers a table in one ``CREATE TABLE … AS SELECT``,
+``spark.table`` resolves. JDBC reads are partitioned so a
 1000-executor cluster ingests in parallel instead of through one
 connection.
 
 Standing-index contract (shared by every incremental index family —
 ``minhash_*_index``, ``span_*_index``, ``ivf_*_index``, ``er_*_index``):
 
-- **build** writes the bucketed/partitioned table, then records its
-  immutable parameters via :func:`set_table_meta` (``kind`` plus the
-  layout/signature params: ``k``, ``n_buckets``, ``num_hashes``,
-  ``bands``, ``shingle_n``, ``n_clusters``, ``centroid_fp``, …);
+- **build / reband / compact** rewrite through :func:`rewrite_layout`,
+  which writes the rows in the bucket layout the contract records and
+  commits the contract as the new table's properties in the same
+  statement (``kind`` plus the layout/signature params: ``k``,
+  ``n_buckets``, ``num_hashes``, ``bands``, ``shingle_n``, …), so data
+  and contract are one commit; a build that leaves ``n_buckets`` unset
+  gets a count sized from its rows (:func:`_sized_buckets`), and every
+  later rewrite keeps it (IVF, which rotates its cells in place, still
+  stamps its contract with :func:`set_table_meta`);
 - **probe / append** call :func:`check_table_meta` first — explicit
   parameters must MATCH the recorded contract (mismatches raise,
   because a silent mismatch deduplicates/probes nothing), and layout
   parameters left as ``None`` DEFAULT from it;
-- **build / reband / compact** rewrite through :func:`rewrite_layout`,
-  which takes the bucket layout from the contract it commits and keeps
-  the swap-then-commit window fail-loud; a build that leaves
-  ``n_buckets`` unset gets a count sized from its rows
-  (:func:`_sized_buckets`), and every later rewrite keeps it;
 - **health** is a cheap dict (``*_index_health`` / ``health()`` /
   the append's returned drift dict) with a ``*_recommended`` flag the
   pipeline can act on (or an ``auto_*`` knob that acts on it).
@@ -36,6 +37,7 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -208,6 +210,7 @@ def write_table(
     compression: str = "snappy",
     bloom_filter_cols: list[str] | None = None,
     format: str = "parquet",
+    properties: dict | None = None,
 ) -> None:
     """S6: Parquet+Snappy table write with catalog registration — the
     Spark-native form of the reference's ``getSink(...glueparquet,
@@ -221,16 +224,24 @@ def write_table(
     over every later join — the co-located-join strategy for repeated
     fact⋈fact joins at 100 TB).
 
+    Every table is created by one ``CREATE TABLE … AS SELECT``
+    (:func:`_create_as_select`) that carries its layout and
+    ``properties``: the table appears in the catalog only once its
+    data is written, already stamped with its contract (recorded
+    under ``spark_graft.index.*``, read back by :func:`get_table_meta`).
+    An append to an existing table keeps that table's properties.
+
     Overwrite is fail-safe (write-then-swap): when the target already
     exists, the new data is fully materialized into a ``__stage`` table
     first, and only then is the old table dropped and the stage renamed
-    into place (``ALTER TABLE RENAME`` moves the managed location). A
-    failed write therefore never destroys existing data, and a plan that
-    READS the target table overwrites it correctly — the read is consumed
-    by the stage write before the drop. The only destructive-before-write
-    path left is the LOCATION_ALREADY_EXISTS retry, which clears a stale
-    directory that is provably unregistered (an orphan from a previous
-    session whose in-memory catalog is gone).
+    into place (``ALTER TABLE RENAME`` moves the managed location and
+    keeps the stage's properties). A failed write therefore never
+    destroys existing data, and a plan that READS the target table
+    overwrites it correctly — the read is consumed by the stage write
+    before the drop. The only destructive-before-write path left is
+    the LOCATION_ALREADY_EXISTS retry, which clears a stale directory
+    that is provably unregistered (an orphan from a previous session
+    whose in-memory catalog is gone).
 
     ``format``: ``"parquet"`` (default) or ``"orc"`` — both columnar
     with snappy compression, stats-based skipping, and per-column bloom
@@ -240,46 +251,47 @@ def write_table(
     if format not in ("parquet", "orc"):
         raise ValueError(f"unsupported table format {format!r} (parquet|orc)")
     spark = df.sparkSession
-    writer = df.write.mode(mode).format(format).option("compression", compression)
+    options = {"compression": compression}
     if bloom_filter_cols and format == "orc":
-        writer = writer.option(
-            "orc.bloom.filter.columns", ",".join(bloom_filter_cols)
-        )
+        options["orc.bloom.filter.columns"] = ",".join(bloom_filter_cols)
     elif format == "parquet":
         for c in bloom_filter_cols or []:
             # point-lookup row-group skipping on unsorted high-cardinality
             # keys (see sources/layout.py::bloom_filtered_write for the
             # rationale + the reader-level proof test)
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if bucket_by:
-        n, cols = bucket_by
-        writer = writer.bucketBy(n, *cols).sortBy(*cols)
+            options[f"parquet.bloom.filter.enabled#{c}"] = "true"
+
+    def create(name: str) -> None:
+        _create_as_select(
+            df, name, format, options, partition_by, bucket_by, properties
+        )
+
     # self-heal a swap interrupted between its DROP and RENAME: the
-    # stage holds the fully-materialized new data (saveAsTable
-    # registers the stage only on commit) and the table name dangles —
-    # complete the rename so this write (and any reader racing it)
-    # sees the committed table again. EVERY mode heals first: an
-    # append to a dangling base would otherwise create a fresh table
-    # of just the appended rows and flip the committed stage into
-    # "stale" — exactly the content the sweep would then reclaim.
-    # Memoized per process: the interrupted states the heal repairs
-    # can only PREDATE this session (a crash killed the session that
-    # created them; our own completed writes below leave the catalog
-    # consistent, and a write that raises mid-swap un-memoizes so its
-    # retry re-probes) — so one catalog probe per table amortizes the
-    # per-write cost to zero on the streaming append hot path.
-    # maintenance.health_sweep flags the same state for tables that
-    # are never written again.
+    # stage holds the fully-materialized new data and its contract
+    # (the create registers the stage only on commit) and the table
+    # name dangles — complete the rename so this write (and any reader
+    # racing it) sees the committed table again. EVERY mode heals
+    # first: an append to a dangling base would otherwise create a
+    # fresh table of just the appended rows and flip the committed
+    # stage into "stale" — exactly the content the sweep would then
+    # reclaim. Memoized per process: the interrupted states the heal
+    # repairs can only PREDATE this session (a crash killed the
+    # session that created them; our own completed writes below leave
+    # the catalog consistent, and a write that raises mid-swap
+    # un-memoizes so its retry re-probes) — so one catalog probe per
+    # table amortizes the per-write cost to zero on the streaming
+    # append hot path. maintenance.health_sweep flags the same state
+    # for tables that are never written again.
     if table not in _HEAL_CHECKED:
         heal_interrupted_swap(spark, table)
         _HEAL_CHECKED.add(table)
     try:
-        if mode == "overwrite" and spark.catalog.tableExists(table):
+        if not spark.catalog.tableExists(table):
+            _save_with_orphan_retry(spark, create, table)
+        elif mode == "overwrite":
             stage = f"{table}__stage"
             spark.sql(f"DROP TABLE IF EXISTS {stage}")
-            _save_with_orphan_retry(spark, writer, stage)
+            _save_with_orphan_retry(spark, create, stage)
             spark.sql(f"DROP TABLE IF EXISTS {table}")
             spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
             if partition_by:
@@ -289,7 +301,13 @@ def write_table(
                 # reads empty
                 spark.sql(f"MSCK REPAIR TABLE {table}")
         else:
-            _save_with_orphan_retry(spark, writer, table)
+            writer = df.write.mode(mode).format(format).options(**options)
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            if bucket_by:
+                n, cols = bucket_by
+                writer = writer.bucketBy(n, *cols).sortBy(*cols)
+            _save_with_orphan_retry(spark, writer.saveAsTable, table)
     except BaseException:
         # the write may have died inside the swap (stage committed,
         # base dropped) — a caught-and-retried write must re-probe
@@ -297,13 +315,70 @@ def write_table(
         raise
 
 
+def _kv_sql(kv: dict) -> str:
+    """``'k'='v', …`` for an OPTIONS or TBLPROPERTIES clause, each
+    key and value a quoted Spark SQL string literal."""
+
+    def q(v) -> str:
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    return ", ".join(f"{q(k)}={q(v)}" for k, v in kv.items())
+
+
+def _meta_props(props: dict) -> dict:
+    """Index-contract keys namespaced as table properties."""
+    return {f"{_INDEX_META_PREFIX}{k}": v for k, v in props.items()}
+
+
+def _create_as_select(
+    df: DataFrame,
+    table: str,
+    format: str,
+    options: dict,
+    partition_by: list[str] | None,
+    bucket_by: tuple[int, list[str]] | None,
+    properties: dict | None,
+) -> None:
+    """Create ``table`` from ``df`` in one ``CREATE TABLE … AS SELECT``
+    that carries the options, partitioning, bucketing and properties —
+    the one create path of :func:`write_table`. ``df`` is read through
+    a temp view named uniquely per call (the medallion runner writes
+    from concurrent threads) and dropped afterwards."""
+    spark = df.sparkSession
+
+    def cols(names: list[str]) -> str:
+        return ", ".join(f"`{c}`" for c in names)
+
+    clauses = [f"USING {format}", f"OPTIONS ({_kv_sql(options)})"]
+    if partition_by:
+        clauses.append(f"PARTITIONED BY ({cols(partition_by)})")
+    if bucket_by:
+        n, bcols = bucket_by
+        clauses.append(
+            f"CLUSTERED BY ({cols(bcols)}) SORTED BY ({cols(bcols)}) "
+            f"INTO {int(n)} BUCKETS"
+        )
+    if properties:
+        clauses.append(f"TBLPROPERTIES ({_kv_sql(_meta_props(properties))})")
+    view = f"_sg_create_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(view)
+    try:
+        spark.sql(
+            f"CREATE TABLE {table} {' '.join(clauses)} AS SELECT * FROM {view}"
+        )
+    finally:
+        spark.catalog.dropTempView(view)
+
+
 def heal_interrupted_swap(spark: SparkSession, table: str) -> bool:
     """Complete a :func:`write_table` overwrite that crashed between
     dropping the old table and renaming ``{table}__stage`` into place:
-    the stage is the COMMITTED new content (``saveAsTable`` registers
-    it only after the write succeeds), so when the base name dangles
-    the rename is strictly recovery — without it the data is
-    unreachable and every read of ``table`` fails. Partition entries
+    the stage is the COMMITTED new content with its properties (the
+    create registers it only after the write succeeds), so when the
+    base name dangles the rename is strictly recovery — without it the
+    data is unreachable and every read of ``table`` fails, and after
+    it the table carries the data and contract the overwrite
+    committed. Partition entries
     are re-derived after the move (the rename relocates the managed
     directory but not the catalog's partition list). Returns True when
     a swap was completed. The OTHER interrupted state — base AND stage
@@ -377,15 +452,15 @@ def _partitions_stale(spark: SparkSession, table: str) -> bool:
         return True
 
 
-def _save_with_orphan_retry(spark: SparkSession, writer, table: str) -> None:
-    """``saveAsTable`` with one retry for LOCATION_ALREADY_EXISTS: the
+def _save_with_orphan_retry(spark: SparkSession, save, table: str) -> None:
+    """``save(table)`` with one retry for LOCATION_ALREADY_EXISTS: the
     table is absent from the catalog but its managed directory survives on
     local disk (previous session's in-memory catalog is gone). Clear
     exactly that stale directory and retry; every other error re-raises
     untouched with no deletion.
     """
     try:
-        writer.saveAsTable(table)
+        save(table)
         return
     except Exception as e:  # noqa: BLE001 — re-raised unless the orphan case
         error_class = getattr(e, "getErrorClass", lambda: None)() or ""
@@ -404,7 +479,7 @@ def _save_with_orphan_retry(spark: SparkSession, writer, table: str) -> None:
         stale = os.path.join(loc.path, parts[-1])
         if os.path.exists(stale):
             shutil.rmtree(stale)
-    writer.saveAsTable(table)
+    save(table)
 
 
 _INDEX_META_PREFIX = "spark_graft.index."
@@ -412,19 +487,22 @@ _INDEX_META_PREFIX = "spark_graft.index."
 
 def set_table_meta(spark: SparkSession, table: str, **props) -> None:
     """Record index-contract parameters (k, n_buckets, num_hashes, …) as
-    table properties on a catalog table, namespaced under
-    ``spark_graft.index.*``. Standing-index builders call this at build
-    time so probes/appends can validate their parameters against the
-    table's actual contract instead of trusting the caller (a ``k``
-    mismatch on a fingerprint index is otherwise SILENTLY wrong: the
-    grams never match and everything passes through undeduped)."""
-    kv = ", ".join(f"'{_INDEX_META_PREFIX}{k}'='{v}'" for k, v in props.items())
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
+    table properties on an existing catalog table, namespaced under
+    ``spark_graft.index.*``, so probes/appends can validate their
+    parameters against the table's actual contract instead of trusting
+    the caller (a ``k`` mismatch on a fingerprint index is otherwise
+    SILENTLY wrong: the grams never match and everything passes
+    through undeduped). A table's first contract rides its create
+    (``write_table(..., properties=)``); this stamps later changes to
+    a table that is not rewritten."""
+    spark.sql(
+        f"ALTER TABLE {table} SET TBLPROPERTIES ({_kv_sql(_meta_props(props))})"
+    )
 
 
 def get_table_meta(spark: SparkSession, table: str) -> dict[str, str]:
     """Read back the ``spark_graft.index.*`` properties set by
-    :func:`set_table_meta`. Empty dict for tables that predate metadata
+    :func:`write_table` or :func:`set_table_meta`. Empty dict for tables that predate metadata
     (or were built elsewhere) — callers treat missing keys as
     unvalidatable, not as a mismatch."""
     rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
@@ -436,91 +514,14 @@ def get_table_meta(spark: SparkSession, table: str) -> dict[str, str]:
     }
 
 
-def mark_layout_pending(
-    spark: SparkSession,
-    table: str,
-    verb: str,
-    target: str,
-    snapshot: dict | None = None,
-) -> None:
-    """Persist a one-row ``{table}_retune_pending`` marker BEFORE a
-    layout rewrite (:func:`rewrite_layout`: index build, reband,
-    reblock, compaction) mutates the table. The rewrite's stage-and-swap is old-or-new per table,
-    but the CONTRACT update (``set_table_meta``) is a separate
-    statement — a crash between them leaves data derived under the new
-    parameters with the old parameters still recorded, and every later
-    probe then joins DISJOINT key spaces (old-width bands vs new-width
-    buckets, right-6 vs right-8 blocks) and silently returns nothing:
-    dedup passes everything through, ER resolves records standalone.
-    While the marker exists, :func:`check_table_meta` — the gate every
-    probe/append already passes through — refuses with recovery
-    advice, and :func:`clear_layout_pending` is called only after the
-    contract commit, so the window is fail-loud instead of
-    fail-silent. The verbs re-derive from state that survives both
-    the old and new layout (band-0 signature slice / stored
-    fingerprints / stored text), so a re-run from ANY window converges.
-
-    ``snapshot`` carries the contract the rewrite commits: the swap
-    destroys the table's properties along with the table, so without
-    the snapshot a resume could not recover the invariant parameters
-    (num_hashes, n_buckets, shingle_n, …) the re-run needs.
-    """
-    import json
-
-    spark.createDataFrame(
-        [(verb, target, json.dumps(snapshot or {}))],
-        "verb string, target string, snapshot string",
-    ).write.mode("overwrite").saveAsTable(f"{table}_retune_pending")
-
-
-def clear_layout_pending(spark: SparkSession, table: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {table}_retune_pending")
-
-
-def get_layout_pending(spark: SparkSession, table: str) -> dict | None:
-    """The pending layout rewrite recorded for ``table``, or None:
-    ``{"verb", "target", "snapshot"}`` with ``snapshot`` the
-    pre-rewrite contract metadata (empty dict on legacy markers)."""
-    import json
-
-    t = f"{table}_retune_pending"
-    if not spark.catalog.tableExists(t):
-        return None
-    row = spark.table(t).first()
-    if row is None:
-        return None
-    snap = {}
-    if "snapshot" in row.__fields__:
-        try:
-            snap = json.loads(row["snapshot"])
-        except Exception:  # noqa: BLE001 — diagnostics only
-            snap = {}
-    return {"verb": row["verb"], "target": row["target"], "snapshot": snap}
-
-
 def check_table_meta(spark: SparkSession, table: str, **expected) -> dict[str, str]:
     """Validate probe/append parameters against a standing index's
     recorded contract. Raises ``ValueError`` listing every mismatching
     key; keys absent from the table's metadata are skipped (pre-metadata
     indexes stay usable). Returns the full recorded metadata so callers
     can default unspecified parameters (e.g. ``n_buckets``) from it.
-
-    Also refuses (``RuntimeError``) while a ``{table}_retune_pending``
-    marker exists: an index build/reband/reblock crashed between its
-    data swap and its contract commit, so the recorded parameters may
-    not describe the data — probing would silently join disjoint key
-    spaces (see :func:`mark_layout_pending`). Re-run the recorded verb
-    (or ``maintenance.run_maintenance(apply=True)``, which resumes
-    integer retune targets automatically) to converge."""
-    pending = get_layout_pending(spark, table)
-    if pending is not None:
-        raise RuntimeError(
-            f"index {table!r} has an interrupted layout rewrite "
-            f"({pending['verb']}, target {pending['target']!r}): its data "
-            "and recorded contract may disagree, and probing would "
-            "silently join disjoint key spaces. Re-run the verb (or "
-            "maintenance.run_maintenance(apply=True)) to converge."
-        )
+    The recorded contract always describes the data: both were
+    committed by the same create (:func:`rewrite_layout`)."""
     meta = get_table_meta(spark, table)
     bad = {
         k: (meta[k], str(v))
@@ -567,18 +568,6 @@ def index_table_health(
         "files_per_bucket": round(ratio, 2),
         "compact_recommended": ratio > max_files_per_bucket,
     }
-
-
-def recorded_contract(spark: SparkSession, table: str) -> dict[str, str]:
-    """The contract recorded on ``table`` — or, when a crashed
-    :func:`rewrite_layout` swap wiped the table's properties, the
-    pending marker's snapshot of it (empty when neither exists)."""
-    meta = get_table_meta(spark, table)
-    if not meta:
-        pending = get_layout_pending(spark, table)
-        if pending is not None:
-            meta = dict(pending["snapshot"])
-    return meta
 
 
 # Optimized-plan nodes whose size Catalyst cannot know: RDD-backed
@@ -680,25 +669,26 @@ def rewrite_layout(
     spark: SparkSession,
     table: str,
     rows: DataFrame,
-    verb: str,
     contract: dict,
-    target: str = "",
     rotate_skew: bool = False,
 ) -> None:
-    """The one guarded layout rewrite every standing-index family runs
-    (build, reband/reblock, compaction, the distinct-state rewrite):
-    mark ``{table}_retune_pending`` → stage-and-swap ``rows`` into the
-    layout ``contract`` records (:func:`_contract_layout`) → commit
-    ``contract`` → clear the marker. The swap destroys the table's
-    properties, so a crash before the commit leaves the marker behind
-    and every probe refuses (see :func:`mark_layout_pending`) instead
-    of joining disjoint key spaces. The marker snapshots ``contract``,
-    so a resume (or :func:`recorded_contract`) can restore it.
+    """The one layout rewrite every standing-index family runs (build,
+    reband/reblock, compaction, the distinct-state rewrite): write
+    ``rows`` in the layout ``contract`` records (:func:`_contract_layout`)
+    with ``contract`` as the new table's properties. Data and contract
+    are one commit (:func:`write_table` creates the table, or the
+    ``__stage`` it swaps in, with both), so a crash at any step leaves
+    the old data under the old contract, or — once
+    :func:`heal_interrupted_swap` completes a rename the crash cut
+    off — the new data under the new contract. Probes never see one
+    without the other.
 
     ``rotate_skew`` is for rewrites that re-derive bucket keys: the
     ``{table}_skew_log`` is dropped and ``skew_epoch`` advances past
     the table's current one, so a stream holding buffered reports from
-    the retired keys drops them at flush.
+    the retired keys drops them at flush. The log goes before the
+    write: a failed rewrite loses only diagnostics, and never leaves
+    reports about retired keys next to the new contract.
 
     A build passes ``n_buckets=None`` to have the count sized from
     ``rows`` (:func:`_sized_buckets`); the sized count is what the
@@ -708,7 +698,7 @@ def rewrite_layout(
         contract = {**contract, "n_buckets": _sized_buckets(rows)}
     if rotate_skew:
         prior = (
-            recorded_contract(spark, table)
+            get_table_meta(spark, table)
             if spark.catalog.tableExists(table)
             else {}
         )
@@ -716,13 +706,12 @@ def rewrite_layout(
             **contract,
             "skew_epoch": int(prior.get("skew_epoch", 0) or 0) + 1,
         }
-    partition_by, bucket_by = _contract_layout(contract, rows.columns)
-    mark_layout_pending(spark, table, verb, target, snapshot=contract)
-    write_table(rows, table, partition_by=partition_by, bucket_by=bucket_by)
-    if rotate_skew:
         spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
-    set_table_meta(spark, table, **contract)
-    clear_layout_pending(spark, table)
+    partition_by, bucket_by = _contract_layout(contract, rows.columns)
+    write_table(
+        rows, table, partition_by=partition_by, bucket_by=bucket_by,
+        properties=contract,
+    )
 
 
 def append_layout(rows: DataFrame, table: str, contract: dict) -> None:
@@ -743,10 +732,8 @@ def compact_index_table(spark: SparkSession, table: str) -> None:
     Resets the small-file creep :func:`index_table_health` measures;
     semantics are unchanged — existence-set indexes (span, exact) and
     signature indexes (minhash) both tolerate row dedup by
-    construction. A crashed compaction is resumed from the marker's
-    snapshot (the layout is unchanged by compaction, so the resume is
-    exact)."""
-    meta = recorded_contract(spark, table)
+    construction."""
+    meta = get_table_meta(spark, table)
     rows = spark.table(table).distinct()
     if _contract_layout(meta, rows.columns) == (None, None):
         raise ValueError(
@@ -754,7 +741,7 @@ def compact_index_table(spark: SparkSession, table: str) -> None:
             "indexes built by this library's *_build_index functions are "
             "compactable generically"
         )
-    rewrite_layout(spark, table, rows, "compact_index_table", meta)
+    rewrite_layout(spark, table, rows, meta)
 
 
 def connection_config(prefix: str, keys: tuple[str, ...]) -> dict[str, str]:
@@ -798,7 +785,7 @@ class WarehouseSink:
     is invalid PySpark).
 
     backend="catalog" (default) writes to the session catalog via
-    ``saveAsTable`` — the locally-testable stand-in. backend="jdbc" is
+    :func:`write_table` — the locally-testable stand-in. backend="jdbc" is
     tested against embedded Derby
     (``tests/test_io.py::test_jdbc_roundtrip_embedded_derby``);
     backend="snowflake" builds the real connector write. The live

@@ -851,16 +851,13 @@ def _land_batch_partition(
     spark = df.sparkSession
     stamped = df.withColumn("_batch_id", F.lit(batch_id))
     if not spark.catalog.tableExists(sink):
-        write_table(stamped, sink, partition_by=["_batch_id"])
         # fold_scheme marks the sink as manifest-protocol from birth,
         # so the legacy crashed-fold guard in _fold_batch_partitions
         # can never false-positive on a table this code created
+        props = {"fold_scheme": "manifest"}
         if stream_id is not None:
-            set_table_meta(
-                spark, sink, stream_id=stream_id, fold_scheme="manifest"
-            )
-        else:
-            set_table_meta(spark, sink, fold_scheme="manifest")
+            props["stream_id"] = stream_id
+        write_table(stamped, sink, partition_by=["_batch_id"], properties=props)
         return
     if "_batch_id" not in spark.table(sink).columns:
         write_table(df, sink, mode="append")
@@ -1789,10 +1786,7 @@ def _frontier_schedule_merge_batch(
             out.select("fetch_domain", "next_slot", "_applied_batch", "_kb"),
             state_table,
             partition_by=["_kb"],
-        )
-        set_table_meta(
-            spark, state_table,
-            state_partitions=state_partitions,
+            properties={"state_partitions": state_partitions},
         )
         return
     todo_kb = [k for k in touched_kb if k not in done_kb]
@@ -2032,16 +2026,18 @@ def _sessionize_merge_batch(
             .withColumn("_applied_batch", F.lit(stamp).cast("bigint"))
             .withColumn("_kb", bucket)
         )
-        write_table(merged, table, partition_by=["_kb"])
-        set_table_meta(
-            spark,
+        write_table(
+            merged,
             table,
-            state_partitions=state_partitions,
-            # stamp_mode records whether this table has ever been
-            # written with hashed (checkpoint-scoped) stamps; the
-            # replay guard only honors legacy bare batch ids while
-            # this says otherwise (see the upgrade-window note below)
-            stamp_mode="hashed" if stamp != batch_id else "bare",
+            partition_by=["_kb"],
+            properties={
+                "state_partitions": state_partitions,
+                # stamp_mode records whether this table has ever been
+                # written with hashed (checkpoint-scoped) stamps; the
+                # replay guard only honors legacy bare batch ids while
+                # this says otherwise (see the upgrade-window note below)
+                "stamp_mode": "hashed" if stamp != batch_id else "bare",
+            },
         )
         return
 
@@ -2259,7 +2255,7 @@ def stream_incremental_distinct(
     tuple level. Runs with trigger=availableNow and blocks."""
     import re
 
-    from ..sources.io import get_table_meta, set_table_meta, write_table
+    from ..sources.io import get_table_meta, write_table
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -2285,7 +2281,9 @@ def stream_incremental_distinct(
             write_table(fresh, table, mode="append", bucket_by=bb)
         else:
             bucket_by = (state_buckets, list(cols)) if state_buckets else None
-            write_table(fresh, table, bucket_by=bucket_by)
-            set_table_meta(spark, table, state_buckets=state_buckets or 0)
+            write_table(
+                fresh, table, bucket_by=bucket_by,
+                properties={"state_buckets": state_buckets or 0},
+            )
 
     _drain(sdf, _merge, checkpoint_dir, query_name)

@@ -2,18 +2,20 @@
 (``io.rewrite_layout``): the bucket layout a build writes is the one
 its contract records, a key-re-deriving rewrite rotates the skew
 epoch and drops the skew log, compaction leaves the contract exactly
-as it was, and an interrupted rewrite is fail-loud and resumable for
-every family the rewrite serves."""
+as it was, and data and contract are one commit — a rewrite that fails
+at any step leaves the old data under the old contract or the new data
+under the new one, and probes work with no resume step."""
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-    health_sweep,
-    run_maintenance,
-)
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark import maintenance
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import dedup as dd
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import entity as ent
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
@@ -77,7 +79,7 @@ def _bucket_spec(spark, t):
 
 
 def _drop(spark, t):
-    for s in (t, f"{t}_skew_log", f"{t}_retune_pending", f"{t}__relabel"):
+    for s in (t, f"{t}_skew_log", f"{t}__relabel", f"{t}__stage"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 
@@ -109,109 +111,309 @@ def test_index_lifecycle_layout_epoch_and_compaction(spark, family):
     io.compact_index_table(spark, t)
     assert io.get_table_meta(spark, t) == meta
     assert _bucket_spec(spark, t) == (int(meta["n_buckets"]), meta["bucket_cols"])
-    assert not spark.catalog.tableExists(f"{t}_retune_pending")
-    _drop(spark, t)
-
-
-def test_layout_pending_span_and_exact_surface_and_resume(spark):
-    """A compaction that crashed between its contract commit and its
-    marker clear leaves a marker on a table whose contract is intact.
-    For the span and exact families the sweep must surface it and
-    resume the compaction, or every probe keeps refusing."""
-    t_span, t_exact = "lifecycle_span_pending", "lifecycle_exact_pending"
-    for t in (t_span, t_exact):
-        _drop(spark, t)
-    _build(spark, "span", t_span)
-    _build(spark, "exact", t_exact)
-    for t in (t_span, t_exact):
-        io.mark_layout_pending(
-            spark, t, "compact_index_table", "",
-            snapshot=io.get_table_meta(spark, t),
-        )
-    batch = spark.createDataFrame(DOCS[:2], "doc_id bigint, text string")
-    with pytest.raises(RuntimeError, match="interrupted layout rewrite"):
-        dd.span_incremental_dedup(spark, t_span, batch, k=4, append=False)
-
-    sweep = health_sweep(spark, tables=(t_span, t_exact))
-    for t in (t_span, t_exact):
-        rep = sweep["tables"][f"default.{t}"]
-        assert rep["layout_pending"]["verb"] == "compact_index_table"
-        assert f"default.{t}" in sweep["attention"]
-
-    out = run_maintenance(spark, apply=True, tables=(t_span, t_exact))
-    for t in (t_span, t_exact):
-        assert out["applied"][f"default.{t}"] == "compact_index_table (resumed)"
-        assert not spark.catalog.tableExists(f"{t}_retune_pending")
-
-    # probes are live again and still see the indexed content
-    masked = dd.span_incremental_dedup(spark, t_span, batch, k=4, append=False)
-    assert all(r["n_tokens_removed"] > 0 for r in masked.collect())
-    survivors = dd.exact_incremental_dedup(
-        spark, t_exact, batch, ["text"], append=False
+    # no rewrite leaves a bookkeeping table behind
+    assert not any(
+        x.name.endswith("_retune_pending") for x in spark.catalog.listTables()
     )
-    assert survivors.count() == 0
-    for t in (t_span, t_exact):
-        _drop(spark, t)
-
-
-def test_layout_pending_exact_build_crash_fails_loud(spark, monkeypatch):
-    """A crash between the exact build's data swap and its contract
-    commit must leave a marker: without it the table has no recorded
-    ``content_sig``, and a probe with the wrong columns would pass
-    every duplicate through instead of refusing."""
-    t = "lifecycle_exact_crash"
-    _drop(spark, t)
-    real_set = io.set_table_meta
-
-    def bomb(spark_, table_, **props):
-        if table_ == t:
-            raise RuntimeError("injected")
-        return real_set(spark_, table_, **props)
-
-    monkeypatch.setattr(io, "set_table_meta", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        dd.exact_build_index(_docs(spark), t, ["text"], n_buckets=4)
-    monkeypatch.setattr(io, "set_table_meta", real_set)
-
-    batch = spark.createDataFrame(DOCS[:2], "doc_id bigint, text string")
-    with pytest.raises(RuntimeError, match="interrupted layout rewrite"):
-        dd.exact_incremental_dedup(spark, t, batch, ["doc_id"], append=False)
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["family"] == "layout_pending"
-    assert rep["layout_pending"]["verb"] == "exact_build_index"
     _drop(spark, t)
 
 
-def test_layout_pending_distinct_state_rewrite_and_resume(spark):
-    """The sweep's distinct-state compaction runs the same guarded
+def test_distinct_state_rewrite_keeps_contract(spark):
+    """The sweep's distinct-state compaction runs the same layout
     rewrite (bucket spec from the recorded ``state_buckets``, contract
-    unchanged), and a marker it left behind is surfaced and resumed."""
+    unchanged)."""
     t = "lifecycle_distinct_state"
     _drop(spark, t)
     spec = (1, ["user_id", "cohort"])
     for i in range(10):  # one small file per append
         row = spark.createDataFrame([(i, i % 3)], "user_id long, cohort long")
-        io.write_table(row, t, mode="append", bucket_by=spec)
-    io.set_table_meta(spark, t, state_buckets=1)
+        io.write_table(
+            row, t, mode="append", bucket_by=spec, properties={"state_buckets": 1}
+        )
     meta = io.get_table_meta(spark, t)
+    assert meta == {"state_buckets": "1"}  # recorded by the first write
     rows = sorted(map(tuple, spark.table(t).collect()))
 
-    out = run_maintenance(spark, apply=True, tables=(t,))
+    out = maintenance.run_maintenance(spark, apply=True, tables=(t,))
     assert out["applied"][f"default.{t}"] == "distinct_state_rewrite"
     assert len(spark.table(t).inputFiles()) == 1
     assert io.get_table_meta(spark, t) == meta
     assert _bucket_spec(spark, t) == (1, "user_id,cohort")
-
-    io.mark_layout_pending(spark, t, "distinct_state_rewrite", "", snapshot=meta)
-    sweep = health_sweep(spark, tables=(t,))
-    assert sweep["tables"][f"default.{t}"]["layout_pending"]["verb"] == (
-        "distinct_state_rewrite"
-    )
-    out = run_maintenance(spark, apply=True, tables=(t,))
-    assert out["applied"][f"default.{t}"] == "distinct_state_rewrite (resumed)"
-    assert not spark.catalog.tableExists(f"{t}_retune_pending")
-    assert io.get_table_meta(spark, t) == meta
     assert sorted(map(tuple, spark.table(t).collect())) == rows
+    _drop(spark, t)
+
+
+def _warehouse_dir(spark, t):
+    db = spark.catalog.getDatabase(spark.catalog.currentDatabase())
+    return os.path.join(urlparse(db.locationUri).path, t)
+
+
+def test_first_build_create_failure_leaves_no_table(spark):
+    """A first build that fails inside its create registers no table,
+    rather than a table without its contract (a probe with the wrong
+    columns would then pass every duplicate through). A failed job
+    cleans its directory up; a killed driver does not, and the re-run
+    over that leftover succeeds through the orphan-location retry."""
+    t = "lifecycle_first_build_fail"
+    _drop(spark, t)
+    boom = F.udf(
+        lambda s: s if "document 7 " not in s else s[int("x")], "string"
+    )
+    docs = _docs(spark)
+    with pytest.raises(Exception, match="invalid literal"):
+        dd.exact_build_index(
+            docs.withColumn("text", boom("text")), t, ["text"], n_buckets=4
+        )
+    assert not [x for x in spark.catalog.listTables() if x.name.startswith(t)]
+
+    leftover = _warehouse_dir(spark, t)
+    os.makedirs(leftover, exist_ok=True)
+    with open(os.path.join(leftover, "part-00000.parquet"), "w") as f:
+        f.write("stale bytes")
+    dd.exact_build_index(docs, t, ["text"], n_buckets=4)
+    assert io.get_table_meta(spark, t)["kind"] == "exact"
+    batch = spark.createDataFrame(DOCS[:2], "doc_id bigint, text string")
+    with pytest.raises(ValueError, match="content_sig"):
+        dd.exact_incremental_dedup(spark, t, batch, ["doc_id"], append=False)
+    assert dd.exact_incremental_dedup(
+        spark, t, batch, ["text"], append=False
+    ).count() == 0
+    _drop(spark, t)
+
+
+# -- failure-injection matrix ------------------------------------------
+#
+# Each verb rewrites a standing table through ``io.rewrite_layout``. A
+# wrapper around ``SparkSession.sql`` raises in place of one statement
+# of the rewrite; the table must then hold the old data under the old
+# contract or, once ``heal_interrupted_swap`` completes the rename,
+# the new data under the new contract, and a probe must work with no
+# resume step. A re-run of the verb then converges.
+
+
+class _Crash(Exception):
+    pass
+
+
+def _statement(t, step):
+    return {
+        "skew_log": f"DROP TABLE IF EXISTS {t}_skew_log",
+        "create": f"CREATE TABLE {t}__stage ",
+        "drop": f"DROP TABLE IF EXISTS {t}",
+        "rename": f"ALTER TABLE {t}__stage RENAME TO {t}",
+    }[step]
+
+
+def _crash_at(monkeypatch, statement, verb):
+    real = SparkSession.sql
+
+    def sql(self, query, *args, **kwargs):
+        q = " ".join(query.split())
+        if q == statement.strip() or (
+            statement.endswith(" ") and q.startswith(statement)
+        ):
+            raise _Crash(statement)
+        return real(self, query, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "sql", sql)
+        with pytest.raises(_Crash):
+            verb()
+
+
+def _state(spark, t):
+    """(rows, file count, contract) of ``t``: the file count tells a
+    compaction's output from its input."""
+    df = spark.table(t)
+    rows = sorted(str(tuple(r)) for r in df.collect())
+    return rows, len(df.inputFiles()), io.get_table_meta(spark, t)
+
+
+_ER_OLD, _ER_NEW = "right(name, 4)", "right(text, 8)"
+
+
+def _er_corpus(spark):
+    return spark.createDataFrame(
+        [(1, "Acme Corporation"), (2, "Initech Ltd"), (3, "Acme Corp")],
+        "id long, name string",
+    )
+
+
+def _er_probe(spark, t, key):
+    batch = spark.createDataFrame([(100, "Acm Corporation")], "id long, name string")
+    got = {
+        r.id: r.entity_id
+        for r in ent.er_incremental(
+            spark, t, batch, "id", "name", F.expr(key), threshold=0.9,
+            append=False,
+        ).collect()
+    }
+    return got[100] == 1
+
+
+def _minhash_hits(spark, t):
+    batch = spark.createDataFrame([(100, DOCS[3][1])], "doc_id bigint, text string")
+    bands = int(io.get_table_meta(spark, t)["bands"])
+    return sorted(
+        map(tuple, dd.minhash_query_index(
+            spark, t, batch, bands=bands, threshold=0.5
+        ).collect())
+    )
+
+
+def _case(spark, verb, t):
+    """Build the old state of ``t`` for ``verb``; return ``(run, probe)``:
+    the verb itself and a probe that must work on either state."""
+    if verb == "minhash_reband":
+        dd.minhash_build_index(_docs(spark), t, bands=8, n_buckets=4)
+        return (
+            lambda: dd.minhash_reband_index(spark, t, bands=16),
+            lambda: len(_minhash_hits(spark, t)) > 0,
+        )
+    if verb == "hamming_reband":
+        mm.hamming_index_build(_fps(spark, 8), t, band_bits=16, n_buckets=4)
+        batch = spark.createDataFrame(
+            [(100, (0x1234_5678_9ABC_0000 + 3 * 7919) ^ 1)],
+            "doc_id bigint, phash bigint",
+        )
+        return (
+            lambda: mm.hamming_reband_index(spark, t, band_bits=8),
+            lambda: mm.hamming_index_probe(spark, t, batch).count() > 0,
+        )
+    if verb in ("er_reblock", "er_compact"):
+        resolved = ent.resolve_entities(
+            _er_corpus(spark), "id", "name", F.expr(_ER_OLD), 0.9
+        )
+        ent.er_build_index(resolved, t, "id", "name", F.expr(_ER_OLD), n_buckets=4)
+        if verb == "er_compact":
+            spark.createDataFrame([(3, 1)], "old_id long, new_id long").write.mode(
+                "overwrite"
+            ).saveAsTable(f"{t}__relabel")
+            return (
+                lambda: ent.er_compact_index(spark, t),
+                lambda: _er_probe(spark, t, _ER_OLD),
+            )
+        old = _state(spark, t)
+        return (
+            lambda: ent.er_reblock_index(spark, t, F.expr(_ER_NEW)),
+            lambda: _er_probe(
+                spark, t, _ER_OLD if _state(spark, t) == old else "right(name, 8)"
+            ),
+        )
+    if verb == "compact_index_table":
+        dd.span_build_index(_docs(spark), t, k=4, n_buckets=4)
+        new_docs = spark.createDataFrame(
+            [(50, "an appended note on tides and estuaries " * 2)],
+            "doc_id bigint, text string",
+        )
+        dd.span_incremental_dedup(spark, t, new_docs, k=4).collect()
+        batch = spark.createDataFrame(DOCS[:2], "doc_id bigint, text string")
+        return (
+            lambda: io.compact_index_table(spark, t),
+            lambda: all(
+                r["n_tokens_removed"] > 0
+                for r in dd.span_incremental_dedup(
+                    spark, t, batch, k=4, append=False
+                ).collect()
+            ),
+        )
+    if verb == "distinct_state_rewrite":
+        for i in range(4):
+            row = spark.createDataFrame([(i, i % 3)], "user_id long, cohort long")
+            io.write_table(
+                row, t, mode="append", bucket_by=(1, ["user_id", "cohort"]),
+                properties={"state_buckets": 1},
+            )
+        return (
+            lambda: maintenance._rewrite_distinct_state(spark, t),
+            lambda: maintenance.classify_table(spark, t) == "distinct_state"
+            and spark.table(t).count() == 4,
+        )
+    assert verb == "exact_rebuild"
+    first = spark.createDataFrame(DOCS[:4], "doc_id bigint, text string")
+    dd.exact_build_index(first, t, ["text"], n_buckets=4)
+    batch = spark.createDataFrame(DOCS[:2], "doc_id bigint, text string")
+    return (
+        lambda: dd.exact_build_index(_docs(spark), t, ["text"], n_buckets=2),
+        lambda: dd.exact_incremental_dedup(
+            spark, t, batch, ["text"], append=False
+        ).count() == 0,
+    )
+
+
+_ROTATING = ("minhash_reband", "hamming_reband", "er_reblock")
+_VERBS = _ROTATING + (
+    "compact_index_table", "er_compact", "distinct_state_rewrite", "exact_rebuild",
+)
+_NEW_STATE: dict = {}
+
+
+def _new_state(spark, verb):
+    """The state an uninterrupted run of ``verb`` leaves (computed once
+    per verb on a twin table: the state names no table)."""
+    if verb not in _NEW_STATE:
+        t = f"lifecycle_twin_{verb}"
+        _drop(spark, t)
+        run, _ = _case(spark, verb, t)
+        run()
+        _NEW_STATE[verb] = _state(spark, t)
+        _drop(spark, t)
+    return _NEW_STATE[verb]
+
+
+def _no_epoch(state):
+    """Rows and contract, less the epoch and the file count: a re-run
+    from the new state rotates the epoch again, and a bucketed write's
+    file count follows its input's partitioning."""
+    rows, _, meta = state
+    return rows, {k: v for k, v in meta.items() if k != "skew_epoch"}
+
+
+@pytest.mark.parametrize(
+    "verb,step",
+    [
+        (v, s)
+        for v in _VERBS
+        for s in ("skew_log", "create", "drop", "rename")
+        if s != "skew_log" or v in _ROTATING
+    ],
+)
+def test_rewrite_failure_leaves_old_or_new_contract(spark, monkeypatch, verb, step):
+    t = f"lifecycle_crash_{verb}"
+    _drop(spark, t)
+    new = _new_state(spark, verb)
+    run, probe = _case(spark, verb, t)
+    old = _state(spark, t)
+    assert old != new
+
+    _crash_at(monkeypatch, _statement(t, step), run)
+    healed = io.heal_interrupted_swap(spark, t)
+    assert healed == (step == "rename")
+    got = _state(spark, t)
+    if step == "rename":
+        assert got == new  # the stage carried its own contract
+    else:
+        assert got == old
+    assert probe()
+    # a stale stage (crash before the DROP) is swept, and the base kept
+    sweep = maintenance.run_maintenance(spark, apply=True, tables=(f"{t}__stage",))
+    assert sweep["applied"].get(f"default.{t}__stage") == (
+        "drop_stale_stage" if step == "drop" else None
+    )
+    assert _state(spark, t) == got
+
+    # a re-run converges (a rotating rewrite advances the epoch again)
+    run()
+    assert _no_epoch(_state(spark, t)) == _no_epoch(new)
+    assert probe()
+    if verb == "minhash_reband":
+        direct = f"{t}_direct"
+        _drop(spark, direct)
+        dd.minhash_build_index(_docs(spark), direct, bands=16, n_buckets=4)
+        assert _minhash_hits(spark, t) == _minhash_hits(spark, direct)
+        _drop(spark, direct)
+    if verb == "er_reblock":
+        assert _er_probe(spark, t, "right(name, 8)")
     _drop(spark, t)
 
 

@@ -1485,247 +1485,3 @@ def test_stranded_detection_covers_k1_and_drift_outranks_adoption(
     assert spark.table(t).count() == 42
     for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_layout_pending_marker_fails_loud_and_sweep_resumes(
-    spark, monkeypatch
-):
-    """Round 17 final audit: the retune/build verbs' swap-then-meta
-    window. A crash between the data swap and the contract commit
-    leaves new-banding data under the old recorded parameters — probes
-    would silently join DISJOINT bucket spaces and pass every
-    duplicate through. The {t}_retune_pending marker turns that into
-    fail-loud: probes refuse, health surfaces layout_pending, and the
-    sweep RESUMES the recorded reband (its target is replayable; the
-    band-0 slice it re-derives from survives both layouts)."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        health_sweep,
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        dedup as dd,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources import io
-
-    t = "maint_layout_pending"
-    for s in (t, f"{t}_skew_log", f"{t}_retune_pending", f"{t}_direct"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-    corpus = spark.createDataFrame(
-        [(i, base * 3 + f"tail {i % 7}") for i in range(24)],
-        "doc_id bigint, text string",
-    )
-    dd.minhash_build_index(corpus, t, bands=8)
-    assert not spark.catalog.tableExists(f"{t}_retune_pending")
-
-    # crash the reband between its swap and its contract commit
-    real_set = io.set_table_meta
-    state = {"armed": True}
-
-    def bomb(spark_, table_, **props):
-        if table_ == t and state["armed"]:
-            state["armed"] = False
-            raise RuntimeError("injected")
-        return real_set(spark_, table_, **props)
-
-    monkeypatch.setattr(io, "set_table_meta", bomb)
-    monkeypatch.setattr(dd, "set_table_meta", bomb, raising=False)
-    with pytest.raises(RuntimeError, match="injected"):
-        dd.minhash_reband_index(spark, t, bands=16)
-    monkeypatch.setattr(io, "set_table_meta", real_set)
-
-    # the window is now FAIL-LOUD: data is 16-banded, meta says 8,
-    # and every probe refuses instead of silently missing
-    import rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup as dedup_mod
-
-    batch = spark.createDataFrame(
-        [(100, base * 3 + "tail 3")], "doc_id bigint, text string"
-    )
-    with pytest.raises(RuntimeError, match="interrupted layout rewrite"):
-        dedup_mod.minhash_query_index(spark, t, batch, bands=8, threshold=0.5)
-
-    # health surfaces it and the sweep resumes the recorded target
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["layout_pending"]["verb"] == "minhash_reband_index"
-    assert rep["layout_pending"]["target"] == "16"
-    out = run_maintenance(spark, apply=True, tables=(t,))
-    assert "minhash_reband_index (resumed)" in out["applied"][f"default.{t}"]
-    assert not spark.catalog.tableExists(f"{t}_retune_pending")
-
-    # converged: probes at 16 bands match a direct 16-band build
-    dd.minhash_build_index(corpus, f"{t}_direct", bands=16)
-    hits = lambda tb: sorted(  # noqa: E731
-        map(
-            tuple,
-            dedup_mod.minhash_query_index(
-                spark, tb, batch, bands=16, threshold=0.5
-            ).collect(),
-        )
-    )
-    assert hits(t) == hits(f"{t}_direct") and len(hits(t)) > 0
-    for s in (t, f"{t}_skew_log", f"{t}_retune_pending", f"{t}_direct"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_layout_pending_er_notes_and_manual_rerun_converges(
-    spark, monkeypatch
-):
-    """The ER reblock's window: the key is a caller-owned Column
-    expression the sweep cannot replay, so a crashed reblock gets the
-    fail-loud marker + a sweep NOTE, and the operator's re-run (any
-    key) converges — the stored text it re-derives from survives both
-    layouts."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        entity as ent_mod,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources import io
-
-    t = "maint_er_layout_pending"
-    for s in (t, f"{t}__relabel", f"{t}_skew_log", f"{t}_retune_pending"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    corpus = spark.createDataFrame(
-        [(1, "Acme Corporation"), (2, "Initech Ltd")], "id long, name string"
-    )
-    key = F.expr("right(name, 4)")
-    ent_mod.er_build_index(
-        ent_mod.resolve_entities(corpus, "id", "name", key, threshold=0.9),
-        t, "id", "name", key,
-    )
-
-    real_set = io.set_table_meta
-    state = {"armed": True}
-
-    def bomb(spark_, table_, **props):
-        if table_ == t and state["armed"]:
-            state["armed"] = False
-            raise RuntimeError("injected")
-        return real_set(spark_, table_, **props)
-
-    monkeypatch.setattr(io, "set_table_meta", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        ent_mod.er_reblock_index(spark, t, F.expr("right(text, 8)"))
-    monkeypatch.setattr(io, "set_table_meta", real_set)
-
-    batch = spark.createDataFrame([(100, "Acm Corporation")], "id long, name string")
-    with pytest.raises(RuntimeError, match="interrupted layout rewrite"):
-        ent_mod.er_incremental(
-            spark, t, batch, "id", "name", key, threshold=0.9, append=False
-        )
-    out = run_maintenance(spark, apply=True, tables=(t,))
-    applied = out["applied"][f"default.{t}"]
-    assert "layout_pending_noted" in applied
-    assert "er_reblock_index" in applied  # the note names the verb
-    # marker survives the sweep (only the operator can replay the key)
-    assert spark.catalog.tableExists(f"{t}_retune_pending")
-
-    ent_mod.er_reblock_index(spark, t, F.expr("right(text, 8)"))
-    assert not spark.catalog.tableExists(f"{t}_retune_pending")
-    got = {
-        r.id: r.entity_id
-        for r in ent_mod.er_incremental(
-            spark, t, batch, "id", "name", F.expr("right(name, 8)"),
-            threshold=0.9, append=False,
-        ).collect()
-    }
-    assert got[100] == 1  # converged: probe under the new key matches
-    for s in (t, f"{t}__relabel", f"{t}_skew_log", f"{t}_retune_pending"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-def test_layout_pending_compact_crash_resumes_with_contract(
-    spark, monkeypatch
-):
-    """compact_index_table shares the swap-then-meta window: a crash
-    after its swap wipes the table's properties, leaving a
-    contract-less index probes would mis-validate and the sweep could
-    not even classify. The marker makes it fail-loud and the sweep
-    resumes the compaction, restoring the FULL contract (including
-    skew_epoch) from the snapshot."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        health_sweep,
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        dedup as dd,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources import io
-
-    t = "maint_compact_pending"
-    for s in (t, f"{t}_skew_log", f"{t}_retune_pending"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    corpus = spark.createDataFrame(
-        [(i, f"compact pending fixture doc {i} " * 3) for i in range(12)],
-        "doc_id bigint, text string",
-    )
-    dd.minhash_build_index(corpus, t)
-    meta_before = io.get_table_meta(spark, t)
-
-    real_set = io.set_table_meta
-    state = {"armed": True}
-
-    def bomb(spark_, table_, **props):
-        if table_ == t and state["armed"]:
-            state["armed"] = False
-            raise RuntimeError("injected")
-        return real_set(spark_, table_, **props)
-
-    monkeypatch.setattr(io, "set_table_meta", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        io.compact_index_table(spark, t)
-    monkeypatch.setattr(io, "set_table_meta", real_set)
-
-    assert io.get_table_meta(spark, t) == {}  # the wipe is real
-    batch = spark.createDataFrame(
-        [(100, "compact pending fixture doc 3 " * 3)],
-        "doc_id bigint, text string",
-    )
-    with pytest.raises(RuntimeError, match="interrupted layout rewrite"):
-        dd.minhash_query_index(spark, t, batch, threshold=0.5)
-
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["family"] == "layout_pending"
-    out = run_maintenance(spark, apply=True, tables=(t,))
-    assert "compact_index_table (resumed)" in out["applied"][f"default.{t}"]
-    assert not spark.catalog.tableExists(f"{t}_retune_pending")
-    assert io.get_table_meta(spark, t) == meta_before  # contract restored
-    hits = dd.minhash_query_index(spark, t, batch, threshold=0.5)
-    assert hits.count() > 0  # probes live again, index correct
-    for s in (t, f"{t}_skew_log", f"{t}_retune_pending"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-def test_sweep_reclaims_orphan_retune_marker(spark):
-    """A pending marker whose base index was dropped (or whose first
-    build crashed before the table ever committed) can never be
-    resumed — and a future index REUSING the name would be spuriously
-    refused by check_table_meta. The sweep flags and reclaims it."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        health_sweep,
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources import io
-
-    t = "maint_orphan_marker"
-    for s in (t, f"{t}_retune_pending"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    io.mark_layout_pending(
-        spark, t, "minhash_build_index", "16", snapshot={"kind": "minhash"}
-    )
-    # base never committed: the marker is an orphan
-    sweep = health_sweep(spark, tables=(t, f"{t}_retune_pending"))
-    rep = sweep["tables"][f"default.{t}_retune_pending"]
-    assert rep["family"] == "orphan_retune_marker"
-    assert rep["base_table"] == f"default.{t}"
-    out = run_maintenance(
-        spark, apply=True, tables=(t, f"{t}_retune_pending")
-    )
-    assert (
-        out["applied"][f"default.{t}_retune_pending"]
-        == "drop_orphan_retune_marker"
-    )
-    assert not spark.catalog.tableExists(f"{t}_retune_pending")
