@@ -502,9 +502,9 @@ def set_table_meta(spark: SparkSession, table: str, **props) -> None:
 
 def get_table_meta(spark: SparkSession, table: str) -> dict[str, str]:
     """Read back the ``spark_graft.index.*`` properties set by
-    :func:`write_table` or :func:`set_table_meta`. Empty dict for tables that predate metadata
-    (or were built elsewhere) — callers treat missing keys as
-    unvalidatable, not as a mismatch."""
+    :func:`write_table` or :func:`set_table_meta`. Empty dict for tables
+    that predate metadata (or were built elsewhere) — callers treat
+    missing keys as unvalidatable, not as a mismatch."""
     rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     plen = len(_INDEX_META_PREFIX)
     return {
