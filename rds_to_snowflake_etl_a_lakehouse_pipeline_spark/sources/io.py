@@ -343,7 +343,10 @@ def _create_as_select(
     that carries the options, partitioning, bucketing and properties —
     the one create path of :func:`write_table`. ``df`` is read through
     a temp view named uniquely per call (the medallion runner writes
-    from concurrent threads) and dropped afterwards."""
+    from concurrent threads). The view is dropped from the session
+    catalog directly: ``Catalog.dropTempView`` would also uncache
+    ``df``, and a caller that cached it for a second write (the
+    runner's warehouse copy) would recompute it."""
     spark = df.sparkSession
 
     def cols(names: list[str]) -> str:
@@ -367,7 +370,7 @@ def _create_as_select(
             f"CREATE TABLE {table} {' '.join(clauses)} AS SELECT * FROM {view}"
         )
     finally:
-        spark.catalog.dropTempView(view)
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
 
 
 def heal_interrupted_swap(spark: SparkSession, table: str) -> bool:

@@ -39,6 +39,27 @@ def test_write_table_roundtrip(spark):
     assert spark.table("io_test_roundtrip").count() == 1
 
 
+def test_write_table_keeps_a_cached_input_cached(spark):
+    """``write_table`` creates through a temp view it drops afterwards;
+    dropping the view must not uncache the caller's frame, or a second
+    write of it (the runner's warehouse copy) recomputes its plan. The
+    create also leaves no temp view behind."""
+    from pyspark import StorageLevel
+
+    df = spark.range(0, 200).groupBy((F.col("id") % 7).alias("k")).count().cache()
+    for t in ("io_cached_a", "io_cached_b"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        write_table(df, t)
+        assert df.storageLevel != StorageLevel.NONE
+    assert spark.table("io_cached_b").count() == 7
+    assert not [
+        v for v in spark.catalog.listTables() if v.name.startswith("_sg_create_")
+    ]
+    df.unpersist()
+    for t in ("io_cached_a", "io_cached_b"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_write_table_partitioned(spark):
     df = spark.createDataFrame(
         [(1, "2021-01", 5.0), (2, "2021-02", 6.0)], "id int, month string, v double"
