@@ -4138,13 +4138,9 @@ def _q_s7_warehouse_sink(spark, sf_dir):
     interface carries JDBC/Snowflake options on a real cluster)."""
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import WarehouseSink
 
-    path = "/tmp/sg_wh_" + _fixture_key(sf_dir) + "/nation"
     sink = WarehouseSink(backend="catalog")
     df = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    df.write.mode("overwrite").format("parquet").option("path", path).saveAsTable(
-        "sg_wh_nation"
-    )
-    # WarehouseSink.write exercises the same saveAsTable path; read back:
+    sink.write(df, "sg_wh_nation")
     return spark.table("sg_wh_nation")
 
 
@@ -4299,8 +4295,8 @@ def _q_v_ivf_split_topk(spark, sf_dir):
     storage and the ×2^20 quantization are EXACT in both engines) that
     crams into one cell past the 0.3 hot fraction, run
     ``ivf_split_hot_cells`` (bounded grid 2-means over the hot cell's
-    own rows + dynamic partition overwrite of only the hot and new
-    cell directories), then probe the 5-cell index at n_probe=2. The
+    own rows, committed as one index rewrite), then probe the 5-cell
+    index at n_probe=2. The
     DuckDB oracle replays every stage: the k=4 grid fit, the append
     assignment, the size/fraction hot-cell detection, the k=2 sub-fit
     (same md5-seeded init over the hot rows), the child reassignment
@@ -4316,7 +4312,7 @@ def _q_v_ivf_split_topk(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     t = "ivf_split_q_" + _fixture_key(sf_dir)
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     a = e.filter((F.col("vec_id") >= 3) & (F.col("vec_id") % 4 != 0)).select(
         "vec_id", "embedding"
@@ -4370,7 +4366,7 @@ def _q_v_ivf_maintain_topk(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     t = "ivf_maint_q_" + _fixture_key(sf_dir)
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     a = e.filter((F.col("vec_id") >= 3) & (F.col("vec_id") % 4 != 0)).select(
         "vec_id", "embedding"
@@ -4440,7 +4436,7 @@ def _q_v_ivf_merge_topk(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     t = "ivf_merge_q_" + _fixture_key(sf_dir)
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     m = F.col("vec_id") % 100
     pat = (
@@ -4497,10 +4493,7 @@ def _q_v_ivf_maintain_merge_topk(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     t = "ivf_maintmerge_q_" + _fixture_key(sf_dir)
-    for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-        f"{t}_merge_manifest",
-    ):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     m = F.col("vec_id") % 100
     pat = (

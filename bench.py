@@ -502,7 +502,6 @@ def main() -> None:
     ivf_bench_table = "bench_ivf_idx"
     for _t in (
         ivf_bench_table,
-        f"{ivf_bench_table}_drift_stats",
         f"{ivf_bench_table}_drift_log",
         f"{ivf_bench_table}_centroids",
     ):

@@ -25,8 +25,9 @@ What each family reports / applies:
 family (how recognized)    health                                      apply action
 ========================  ==========================================  ==============================
 minhash / span / ivf /     ``io.index_table_health`` (files per        ``io.compact_index_table``
-hamming_fp / exact         bucket/cell); ivf adds quantizer drift
-(``kind`` property)        from the ``*_drift_stats`` companion
+hamming_fp / exact         bucket/cell); ivf adds quantizer drift      (ivf: + split / retrain /
+(``kind`` property)        (``*_drift_log`` against the contract's     merge under ``retrain_ivf``)
+                           baseline) and cold-cell fragmentation
 er (``kind='er'``)         the above + ``entity.er_index_health``      ``entity.er_compact_index``
                            (relabel-log size)
 sessionize state           partition count + files per partition       — (state compacts itself as
@@ -165,17 +166,22 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
         rep = index_table_health(spark, table, MAX_FILES_PER_BUCKET)
         if family in ("minhash", "hamming_fp"):
             _skew_log_health(spark, table, rep)
-        if family == "ivf" and spark.catalog.tableExists(f"{table}_drift_stats"):
-            # the build-time quantizer baseline; per-append drift ratios
-            # are measured (and reported) by ivf_append_index itself
-            row = spark.table(f"{table}_drift_stats").first()
-            rep["build_stats"] = row.asDict() if row is not None else None
         if family == "ivf":
+            meta = get_table_meta(spark, table)
+            # the quantizer baseline the last rotation recorded in the
+            # contract; per-append drift ratios are measured (and
+            # reported) by ivf_append_index itself
+            if "p95_dist" in meta:
+                rep["build_stats"] = {
+                    "mean_dist": float(meta["mean_dist"]),
+                    "p95_dist": float(meta["p95_dist"]),
+                    "n_vectors": int(meta["n_vectors"]),
+                }
             # per-append drift reports persist in the {table}_drift_log
             # companion (ivf_append_index log_drift=True — the default,
             # so streamed ingests leave a trail); the flag resets when
-            # ivf_retrain_index clears the log. Constant-time: the log
-            # is one row per append, aggregated, never a data scan.
+            # a rotation drops the log. Constant-time: the log is one
+            # row per append, aggregated, never a data scan.
             rep["retrain_recommended"] = False
             if spark.catalog.tableExists(f"{table}_drift_log"):
                 from pyspark.sql import functions as F
@@ -225,24 +231,18 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
                     )
                     rep["drift_localized"] = localized
                     rep["remediation"] = "split" if localized else "retrain"
-        if family == "ivf":
             # fragmentation: per-cell row counts over the FULL matrix
             # range (an empty matrix slot is maximally cold). The
             # groupBy is on the PARTITION column with a bare count —
             # a zero-data-column scan whose cost is proportional to
             # the file count (parquet row counts come from footers),
             # the same order as the file listing above, never a data
-            # read. A pending {table}_merge_manifest means a prior
-            # merge crashed mid-plan: flag it so the sweep RESUMES it
-            # (ivf_merge_cold_cells picks the recorded plan back up).
+            # read.
             from pyspark.sql import functions as F
 
             rep["merge_recommended"] = False
-            rep["pending_merge"] = spark.catalog.tableExists(
-                f"{table}_merge_manifest"
-            )
-            k = int(get_table_meta(spark, table).get("n_clusters", 0) or 0)
-            if k >= 1:
+            k = int(meta.get("n_clusters", 0) or 0)
+            if k > 1:
                 counts = {
                     r["_cell"]: r["n"]
                     for r in spark.table(table)
@@ -250,17 +250,6 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
                     .agg(F.count("*").alias("n"))
                     .collect()
                 }
-                # STRANDED cells: partition ids at/beyond the matrix —
-                # a split crashed between its child write and the
-                # contract rotation, so those rows are invisible to
-                # every probe (no centroid routes there). Recovery is
-                # ivf_adopt_stranded_cells, applied by run_maintenance
-                # under the retrain_ivf opt-in. Computed for ANY k —
-                # a crashed split of a k=1 index strands cell 1 just
-                # the same (fragmentation below needs k > 1; this
-                # doesn't).
-                rep["stranded_cells"] = sum(1 for c in counts if c >= k)
-            if k > 1:
                 total = sum(counts.values())
                 n_cold = sum(
                     1
@@ -272,8 +261,6 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
                 # a merge must leave a survivor — all-cold (an empty
                 # index) is not fragmentation, it's absence of data
                 rep["merge_recommended"] = 0 < n_cold < k
-            if rep["pending_merge"]:
-                rep["merge_recommended"] = True
         return rep
     if family == "er":
         from .operators.entity import er_index_health
@@ -403,7 +390,6 @@ def health_sweep(
             or rep.get("retrain_recommended")
             or rep.get("merge_recommended")
             or rep.get("cap_truncating")
-            or rep.get("stranded_cells")
         ):
             attention.append(name)
     versioned: dict[str, dict] = {}
@@ -428,11 +414,10 @@ def _remediate_ivf(
     """Pick and run the drift remediation the log's SHAPE calls for:
 
     - localized drift (``rep["remediation"] == "split"`` — every
-      flagged append crammed into one hot cell) → hot-cell split,
-      rewriting only the hot partitions (measured 5.2× cheaper than a
-      retrain at the 10× smoke; PQ codes ride through untouched) —
-      bounded by the split budget (``split_budget_factor ×
-      base_n_clusters`` cells);
+      flagged append crammed into one hot cell) → hot-cell split: a
+      2-means fit per hot cell instead of a full refit, no other row
+      changes cell, PQ codes ride through untouched — bounded by the
+      split budget (``split_budget_factor × base_n_clusters`` cells);
     - global drift, an exhausted split budget, or a localized flag
       with no currently-hot cell (the split is a no-op there and would
       never clear the flag) → full :func:`ivf_retrain_index` at the
@@ -450,14 +435,6 @@ def _remediate_ivf(
     base_k = int(
         meta.get("base_n_clusters", 0) or meta.get("n_clusters", 16)
     )
-    if "base_n_clusters" not in meta:
-        # legacy index built (and possibly already split) before the
-        # base anchor existed: its current k is the best base we have,
-        # but RECORD it now so repeated sweeps ratchet the budget off a
-        # FIXED anchor instead of each round's freshly inflated k
-        from .sources.io import set_table_meta
-
-        set_table_meta(spark, name, base_n_clusters=base_k)
     cur_k = int(meta.get("n_clusters", 0) or base_k)
     budget = max(base_k + 1, int(split_budget_factor * base_k))
     if rep.get("remediation") == "split" and cur_k < budget:
@@ -489,33 +466,22 @@ def _remediate_ivf(
 
 def _apply_merge(
     spark: SparkSession, name: str, ivf_merge_fraction: float
-) -> tuple[str, bool]:
-    """Run ``ivf_merge_cold_cells`` for the sweep; return
-    ``(act_string, acted)``. ``ivf_merge_fraction`` is relative to the
+) -> str:
+    """Run ``ivf_merge_cold_cells`` for the sweep; return the act
+    string. ``ivf_merge_fraction`` is relative to the
     MEAN cell size (like the health bar); the verb takes a fraction of
-    TOTAL — divide by the current k. Truthful act accounting (round 17
-    review): a RESUMABLE pending manifest counts as acted even when k
-    no longer shrinks (a crash after finalize's meta write leaves k
-    already at the merged value, but partitions were rewritten either
-    way — the compaction re-measure must fire); a stale plan the verb
-    retired without a fresh merge is reported as the noop it was."""
-    from .operators.similarity import (
-        _merge_manifest_resumable,
-        ivf_merge_cold_cells,
-    )
+    TOTAL — divide by the current k. A merge acted exactly when k
+    shrank."""
+    from .operators.similarity import ivf_merge_cold_cells
     from .sources.io import get_table_meta
 
-    pending = spark.catalog.tableExists(f"{name}_merge_manifest")
-    resumable = pending and _merge_manifest_resumable(spark, name)
     before = int(get_table_meta(spark, name).get("n_clusters", 0) or 0)
     merged = ivf_merge_cold_cells(
         spark, name, min_cell_fraction=ivf_merge_fraction / max(before, 1)
     )
-    if resumable or len(merged) < before:
-        return "ivf_merge_cold_cells", True
-    if pending:
-        return "merge_noop (stale plan retired; nothing cold re-decided)", False
-    return "merge_noop (no cell below ivf_merge_fraction)", False
+    if len(merged) < before:
+        return "ivf_merge_cold_cells"
+    return "merge_noop (no cell below ivf_merge_fraction)"
 
 
 def run_maintenance(
@@ -564,25 +530,18 @@ def run_maintenance(
     persisted codebook companion; only a PRE-companion PQ index is
     skipped with a note.
 
-    IVF fragmentation (round 17): a table whose health reports
+    IVF fragmentation: a table whose health reports
     ``merge_recommended`` (sliver/empty cells at the
-    ``IVF_MERGE_COLD_FRACTION`` bar, or a crashed merge's pending
-    manifest) gets ``ivf_merge_cold_cells`` at ``ivf_merge_fraction``
-    under the same ``retrain_ivf`` opt-in — the merge rotates the
-    centroid matrix exactly like the drift remediations, and a pending
-    manifest is RESUMED rather than re-planned — and resumed FIRST,
-    before any drift remediation: retrain/split over a half-merged
-    layout would bake duplicated rows into the rebuilt index (the verbs
-    themselves refuse to run over a pending manifest), so the resume
-    takes the sweep's one matrix rotation and drift remediates next
-    sweep. A full retrain otherwise subsumes the merge (it reassigns
-    every row at the base k).
+    ``IVF_MERGE_COLD_FRACTION`` bar) gets ``ivf_merge_cold_cells`` at
+    ``ivf_merge_fraction`` under the same ``retrain_ivf`` opt-in — the
+    merge rotates the centroid matrix exactly like the drift
+    remediations. One rotation per sweep: a retrain subsumes the merge
+    (it reassigns every row at the base k), and a split invalidates
+    the cell sizes the report measured, so the next sweep re-measures.
 
-    A full retrain rewrites every file and subsumes compaction; a
-    split/merge rewrites only the touched partitions, so the
-    compaction decision is RE-MEASURED after one ran (the
-    pre-remediation ratio is stale) and the compactor runs when the
-    fresh ratio warrants it."""
+    A full retrain subsumes compaction. After a split or merge the
+    compaction decision is RE-MEASURED (the pre-remediation ratio is
+    stale) and the compactor runs when the fresh ratio warrants it."""
     sweep = health_sweep(spark, versioned_roots, database, tables=tables)
     applied: dict[str, str] = {}
     if apply:
@@ -613,28 +572,7 @@ def run_maintenance(
                 continue
             acts: list[str] = []
             retrained = False
-            merge_acted = False
-            if family == "ivf" and rep.get("pending_merge"):
-                # a crashed merge's pending manifest MUST resume before
-                # any drift remediation: retrain/split read the
-                # half-merged layout (cold rows possibly duplicated
-                # into survivors) and would bake the duplication into
-                # the rebuilt index — ivf_retrain_index itself refuses
-                # to run over a pending manifest. One matrix rotation
-                # per sweep: the resume wins this sweep, drift (if
-                # still flagged) remediates next sweep.
-                if not retrain_ivf:
-                    acts.append("merge_skipped (pass retrain_ivf=True)")
-                else:
-                    act, merge_acted = _apply_merge(
-                        spark, name, ivf_merge_fraction
-                    )
-                    acts.append(act)
-            if (
-                family == "ivf"
-                and rep.get("retrain_recommended")
-                and not merge_acted
-            ):
+            if family == "ivf" and rep.get("retrain_recommended"):
                 if not retrain_ivf:
                     acts.append("retrain_skipped (pass retrain_ivf=True)")
                 else:
@@ -654,40 +592,10 @@ def run_maintenance(
             )
             if (
                 family == "ivf"
-                and rep.get("stranded_cells")
-                and not drift_acted
-                and not merge_acted
-            ):
-                # a split crashed between its child write and the
-                # contract rotation: the stranded rows are invisible to
-                # every probe until adopted. Runs AFTER the drift
-                # branch on purpose — both drift remediations heal
-                # strands on their own (a retrain refits over every
-                # row including the stranded ones; a split begins by
-                # adopting), whereas adopting FIRST would clear the
-                # drift log and re-baseline the already-drifted data,
-                # silencing a pending global retrain forever. Same
-                # retrain_ivf opt-in (adoption rotates the contract
-                # like the other remediations).
-                if not retrain_ivf:
-                    acts.append("adopt_skipped (pass retrain_ivf=True)")
-                else:
-                    from .operators.similarity import (
-                        ivf_adopt_stranded_cells,
-                    )
-
-                    ivf_adopt_stranded_cells(spark, name)
-                    acts.append("ivf_adopt_stranded_cells")
-                    merge_acted = True  # a rotation ran this sweep
-            if (
-                family == "ivf"
                 and rep.get("merge_recommended")
-                and not rep.get("pending_merge")  # handled above
                 and not drift_acted
-                and not merge_acted
             ):
-                # fragmentation (sliver/empty cells, or a crashed
-                # merge's pending manifest to resume): fold the cold
+                # fragmentation (sliver/empty cells): fold the cold
                 # cells under the SAME matrix-rotation opt-in as the
                 # drift remediations — the merge rotates the contract
                 # too. ONE rotation per sweep: a retrain subsumes the
@@ -698,10 +606,7 @@ def run_maintenance(
                 if not retrain_ivf:
                     acts.append("merge_skipped (pass retrain_ivf=True)")
                 else:
-                    act, merge_acted = _apply_merge(
-                        spark, name, ivf_merge_fraction
-                    )
-                    acts.append(act)
+                    acts.append(_apply_merge(spark, name, ivf_merge_fraction))
             if family == "minhash" and rep.get("cap_truncating"):
                 # no safe AUTOMATIC verb: the pairs the probe cap
                 # already star-capped are gone, and retuning trades
@@ -732,12 +637,9 @@ def run_maintenance(
                 )
             if family in ("minhash", "span", "ivf", "hamming_fp", "exact"):
                 # a full retrain just rewrote every file — compaction is
-                # subsumed; a split/merge (or a skipped retrain) leaves
-                # file creep in untouched partitions, so the compactor
-                # still runs when flagged — but re-measure AFTER a
-                # split/merge: those rewrote partitions, so the
+                # subsumed; after a split/merge re-measure: the
                 # pre-remediation file/bucket ratio is stale in both
-                # directions (a split's extra per-cell files may now
+                # directions (the rewrite's per-cell files may now
                 # warrant the compaction the old report skipped, and
                 # vice versa)
                 compact_flag = rep.get("compact_recommended")

@@ -124,10 +124,9 @@ def _quantized_vec(vec_col: str, impl: str):
     centroids live in quantized units (coordinate × ``GRID_QUANT``),
     so grid-impl measurements re-quantize the stored floats to match;
     mllib uses the raw vector. ONE definition shared by the drift
-    baseline (:func:`_finalize_index_contract`), the per-append drift
-    measure (:func:`ivf_append_index`), and stranded-cell adoption
-    (:func:`_adopt_stranded_cells`) — a drifted copy in any one of
-    them would silently break comparability between build stats and
+    baseline (:func:`_commit_rotation`) and the per-append drift
+    measure (:func:`ivf_append_index`) — a drifted copy in either
+    would silently break comparability between build stats and
     append batches."""
     if impl == "grid":
         return F.transform(
@@ -398,10 +397,6 @@ def _centroid_dist(vec_col: str, cell_col: str, centroids: list[list[float]]) ->
     )
 
 
-def _drift_stats_table(table: str) -> str:
-    return f"{table}_drift_stats"
-
-
 def _drift_log_table(table: str) -> str:
     return f"{table}_drift_log"
 
@@ -411,37 +406,45 @@ def _centroids_table(table: str) -> str:
 
 
 def ivf_load_centroids(spark, table: str) -> list[list[float]]:
-    """Recover the centroid matrix :func:`ivf_build_index` persisted
-    beside ``table`` (the ``{table}_centroids`` companion), validated
-    against the index's recorded fingerprint — the session-independent
-    way for probes to obtain the CURRENT matrix, including after a
-    maintenance :func:`ivf_retrain_index` rotated it (probes still
-    holding the pre-retrain matrix are rejected by every entry point;
-    this is how they re-sync). k × dim rows — a driver-side collect by
-    design."""
-    rows = spark.table(_centroids_table(table)).orderBy("cell").collect()
+    """The centroid matrix ``table``'s rows are binned by, read from the
+    ``{table}_centroids`` companion: the rows whose ``centroid_fp`` is
+    the fingerprint the table records. The companion holds the
+    recorded matrix and, during a rotation, the next one
+    (:func:`_commit_rotation`), so a crash on either side of the
+    commit still loads the matrix that matches the rows. The
+    session-independent way for probes and appends to get the CURRENT
+    matrix, including after maintenance rotated it. k × dim values —
+    a driver-side collect by design."""
+    from ..sources.io import get_table_meta
+
+    comp = _centroids_table(table)
+    fp = get_table_meta(spark, table).get("centroid_fp")
+    rows = sorted(
+        spark.table(comp).filter(F.col("centroid_fp") == fp).collect(),
+        key=lambda r: r["cell"],
+    )
+    # the companion stores doubles and parquet's double roundtrip is
+    # lossless, so the loaded matrix is bit-identical to the built one
+    # and reproduces the recorded fingerprint
     centroids = [list(r["centroid"]) for r in rows]
-    if [r["cell"] for r in rows] != list(range(len(rows))):
+    if (
+        [r["cell"] for r in rows] != list(range(len(rows)))
+        or _centroid_fingerprint(centroids) != fp
+    ):
         raise ValueError(
-            f"{_centroids_table(table)} is not a dense 0..k-1 cell map; "
-            "rebuild the index"
+            f"{comp} holds no dense 0..k-1 matrix for {table}'s recorded "
+            f"centroid_fp {fp!r}; rebuild the index"
         )
-    # the companion stores doubles; build-time centroids are doubles
-    # for BOTH impls (grid Lloyd means are exact-integer-sum divisions,
-    # still fractional doubles), and parquet double roundtrip is
-    # lossless — so the loaded matrix is bit-identical to the built one
-    # and the fingerprint check below proves it
-    _check_centroids(spark, table, centroids)
     return centroids
 
 
 def _centroid_fingerprint(centroids: list[list[float]]) -> str:
     """Stable md5 of the centroid matrix (values rounded to 9 dp) —
-    recorded as index metadata at build time and validated on every
-    probe/append, because both take ``centroids`` as an ARGUMENT: a
-    caller passing the matrix from a different (older, rebuilt) run
-    would otherwise bin/probe against cells that don't match the
-    on-disk layout, silently destroying recall."""
+    recorded in the index contract by every rotation and validated on
+    every probe/append, because both take ``centroids`` as an
+    ARGUMENT: a caller passing the matrix from a different (older,
+    rebuilt) run would otherwise bin/probe against cells that don't
+    match the on-disk layout, silently destroying recall."""
     import hashlib
     import json
 
@@ -451,12 +454,59 @@ def _centroid_fingerprint(centroids: list[list[float]]) -> str:
     return hashlib.md5(payload).hexdigest()
 
 
-def _check_centroids(spark, table: str, centroids: list[list[float]]) -> None:
+def _check_centroids(spark, table: str, centroids: list[list[float]]) -> dict:
     from ..sources.io import check_table_meta
 
-    check_table_meta(
+    return check_table_meta(
         spark, table, centroid_fp=_centroid_fingerprint(centroids)
     )
+
+
+def _drift_baseline(meta: dict) -> tuple:
+    """``(mean_dist, p95_dist)`` the last rotation recorded in the
+    contract; ``None`` where it recorded none (an empty index), which
+    leaves drift unmeasured."""
+    return tuple(
+        float(meta[k]) if k in meta else None for k in ("mean_dist", "p95_dist")
+    )
+
+
+def _ivf_meta(spark, table: str) -> dict:
+    from ..sources.io import get_table_meta
+
+    meta = get_table_meta(spark, table)
+    if meta.get("kind") != "ivf":
+        raise ValueError(
+            f"{table!r} is not an IVF index (kind={meta.get('kind')!r})"
+        )
+    return meta
+
+
+def _cell_sizes(rows: DataFrame) -> dict[int, int]:
+    return {
+        r["_cell"]: r["n"]
+        for r in rows.groupBy("_cell").agg(F.count("*").alias("n")).collect()
+    }
+
+
+def _nearest_cell_udf(C: "np.ndarray"):
+    """pandas UDF: each vector's nearest row of ``C`` (squared L2, one
+    numpy matmul against the tiny matrix per Arrow batch). NULL and
+    wrong-dimension vectors get the sentinel cell ``-1``, so a caller
+    can count and drop them from the same pass."""
+    dim = C.shape[1]
+
+    @pandas_udf("int")
+    def nearest_cell(vecs: pd.Series) -> pd.Series:
+        out = np.full(len(vecs), -1, dtype=np.int32)
+        ok = [i for i, v in enumerate(vecs) if v is not None and len(v) == dim]
+        if ok:
+            V = np.stack([np.asarray(vecs.iloc[i], dtype=np.float64) for i in ok])
+            d = (V**2).sum(1)[:, None] - 2 * V @ C.T + (C**2).sum(1)[None, :]
+            out[np.asarray(ok)] = np.argmin(d, axis=1).astype("int32")
+        return pd.Series(out)
+
+    return nearest_cell
 
 
 def ivf_build_index(
@@ -482,67 +532,46 @@ def ivf_build_index(
     (``fit_fraction``, else the size-aware ``fit_target_rows`` bound of
     :func:`_bounded_fit`), the assignment is one JVM model.transform pass,
     and queries (:func:`ivf_query_index`) never rescan or re-cluster.
-    Returns the centroid matrix to hand to ``ivf_query_index``, and
-    ALSO persists it beside the table as the ``{table}_centroids``
-    companion (n_clusters × dim floats — tiny), so probes in other
-    sessions — and probes resuming after a maintenance retrain rotated
-    the matrix — recover it with :func:`ivf_load_centroids` instead of
-    holding driver state.
+    Returns the centroid matrix to hand to ``ivf_query_index``; probes
+    in other sessions, or after maintenance rotated the matrix, recover
+    it with :func:`ivf_load_centroids`.
 
-    Also records the BUILD-TIME quantization-distance distribution
-    (mean / p95 distance of each corpus vector to its assigned
-    centroid) in a one-row companion table ``{table}_drift_stats``:
-    :func:`ivf_append_index` compares every appended batch against it
-    and recommends a rebuild when the quantizer has drifted. The stats
-    pass scans the just-written index table, not the raw corpus — no
-    second ``model.transform``.
+    Rows and contract are one commit (:func:`_commit_rotation`): the
+    table is created, or swapped in over an existing index, with the
+    centroid fingerprint, the layout and the build-time drift baseline
+    (mean / p95 distance of each vector to its centroid, which
+    :func:`ivf_append_index` measures every batch against) as its
+    properties. The baseline is one more pass of the assignment, not a
+    scan of the written index.
 
-    ``impl="grid"`` (round 14) trains with the deterministic
+    ``impl="grid"`` trains with the deterministic
     :func:`grid_kmeans_fit` and assigns with :func:`grid_assign_cells`
     instead of MLlib, making the whole index replayable by any ANSI
     engine (the v_ivf_index_topk oracle). Grid centroids — including
-    the RETURNED matrix, the fingerprint, and the drift stats — live
+    the RETURNED matrix, the fingerprint, and the drift baseline — live
     in QUANTIZED units (coordinate × 2^20); the ``impl`` is recorded
-    in the table meta so appends re-quantize their batches to match.
+    in the contract so appends re-quantize their batches to match.
 
     The layout is cell-partitioned AND id-bucketed
     (``n_id_buckets`` hash buckets on ``id_col``, recorded in the
-    table meta so appends match the spec): probes prune by the
-    ``_cell`` directories as before, while the streaming-ingest
+    contract so appends match the spec; ``0`` records none): probes
+    prune by the ``_cell`` directories, while the streaming-ingest
     replay guard (:func:`~..streaming.events.stream_ivf_append`'s id
     anti-join) streams the id column out of the bucketed layout
     PRE-SHUFFLED — per-batch probe cost tracks the batch, not the
     monotonically growing index, the same flat-probe property the
     exact seen-set measures (``dedup.exact_build_index``).
     """
-    from ..sources.io import write_table
-
-    _spark = corpus.sparkSession
-    if _spark.catalog.tableExists(table):
-        # rebuilding over an existing index: a crashed merge's pending
-        # plan fences this too — dropping it here and overwriting would
-        # be safe for the DATA, but a crash between the overwrite and
-        # the manifest drop would leave the old plan resumable against
-        # the brand-new rows (replaying fold/renumber decided for the
-        # retired layout). Resume the merge first; it converges from
-        # any crash state, then the rebuild proceeds clean.
-        _refuse_pending_merge(_spark, table, "a rebuild")
-    else:
-        # no index table: a manifest here is an orphan of a dropped
-        # index (companions outlive a manual DROP TABLE) — retire it
-        _drop_merge_manifest(_spark, table)
-
     if impl == "grid":
-        centroids_q = grid_kmeans_fit(corpus, id_col, vec_col, k=n_clusters)
+        centroids = grid_kmeans_fit(corpus, id_col, vec_col, k=n_clusters)
         indexed = (
             grid_assign_cells(
-                corpus, id_col, vec_col, centroids_q, keep_cols=[vec_col]
+                corpus, id_col, vec_col, centroids, keep_cols=[vec_col]
             )
             .drop("_vq")
             .withColumnRenamed("cell", "_cell")
             .select(F.col(id_col), F.col(vec_col), F.col("_cell"))
         )
-        centroids = centroids_q
     elif impl == "mllib":
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
@@ -563,103 +592,133 @@ def ivf_build_index(
         # reads only (id, _cell, pq_code) — the m-byte column — and
         # never touches the float vectors at query time
         indexed = pq_encode(indexed, pq_codebook, vec_col=vec_col)
-    write_table(
+    # pre-bucketing indexes (n_id_buckets=0) record NO bucket spec:
+    # bucket keys for files that are not bucket-aligned would make
+    # appends bucket into an unbucketed table
+    buckets = (
+        {"n_buckets": n_id_buckets, "bucket_cols": id_col} if n_id_buckets else {}
+    )
+    _commit_rotation(
+        corpus.sparkSession,
+        table,
         indexed,
-        table,
-        partition_by=["_cell"],
-        bucket_by=(n_id_buckets, [id_col]),
-    )
-
-    spark = corpus.sparkSession
-    _finalize_index_contract(
-        spark,
-        table,
         centroids,
-        impl=impl,
-        pq=pq_codebook is not None,
-        n_id_buckets=n_id_buckets,
-        id_col=id_col,
-        vec_col=vec_col,
+        # base_n_clusters: the k of the LAST FULL FIT, kept by splits
+        # and merges — maintenance's split budget is a multiple of it,
+        # so repeated drift cannot ratchet the budget up
+        {
+            "impl": impl,
+            "pq": str(pq_codebook is not None).lower(),
+            "base_n_clusters": n_clusters,
+            **buckets,
+        },
+        vec_col,
+        pq_codebook=pq_codebook,
     )
-    from ..sources.io import set_table_meta
-
-    # the k of the LAST FULL FIT, preserved verbatim by hot-cell splits
-    # (which only append cells): maintenance's split budget is a
-    # multiple of this, so repeated drift cannot ratchet the budget up
-    set_table_meta(spark, table, base_n_clusters=n_clusters)
-    if pq_codebook is not None:
-        # persist the codebook beside the index so retrains and
-        # other-session appends need no caller-held object
-        pq_save_codebook(spark, table, pq_codebook)
     return centroids
 
 
-def _finalize_index_contract(
+def _commit_rotation(
     spark,
     table: str,
+    rows: DataFrame,
     centroids: list[list[float]],
-    impl: str,
-    pq: bool,
-    n_id_buckets: int,
-    id_col: str,
+    contract: dict,
     vec_col: str,
+    pq_codebook: "PQCodebook | None" = None,
 ) -> None:
-    """Record everything that makes an IVF table self-describing after
-    its rows changed quantizer: contract metadata (incl. the rotated
-    centroid fingerprint — stale matrices are rejected from here on),
-    the persisted ``{table}_centroids`` companion other sessions
-    resolve, a FRESH drift baseline (one read-only scan of the index),
-    and a cleared per-append drift log (reports against the old
-    centroids are meaningless, and this resets maintenance's
-    ``retrain_recommended``). Shared by build, retrain, and hot-cell
-    split — the three paths that rotate the matrix."""
-    from ..sources.io import set_table_meta, write_table
+    """Commit ``rows`` — ``(id, vec, _cell[, pq_code])`` binned by
+    ``centroids`` — as the IVF index ``table``: the one path every
+    verb that rotates the centroid matrix (build, retrain, split,
+    merge) takes. In order:
 
-    # pre-bucketing indexes (n_id_buckets=0) record NO bucket spec:
-    # writing n_buckets/bucket_cols for files that are not actually
-    # bucket-aligned would make ivf_append_index attempt a bucketed
-    # append into an unbucketed table and inflate index_table_health's
-    # fanout denominator
-    bucket_meta = (
-        {"n_buckets": n_id_buckets, "bucket_cols": id_col}
-        if n_id_buckets
-        else {}
-    )
-    set_table_meta(
-        spark,
-        table,
-        kind="ivf",
-        n_clusters=len(centroids),
-        dim=len(centroids[0]),
-        pq=str(pq).lower(),
-        impl=impl,
-        centroid_fp=_centroid_fingerprint(centroids),
-        partition_cols="_cell",
-        **bucket_meta,
-    )
-    write_table(
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, centroid array<double>",
-        ),
-        _centroids_table(table),
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {_drift_log_table(table)}")
-    # grid centroids live in quantized units: measure drift in the
-    # same units so build stats and append batches stay comparable
-    dist_vec = _quantized_vec(vec_col, impl)
+    1. the drift baseline — mean / p95 distance of each vector to its
+       cell's centroid, and the row count — from one aggregate over
+       ``rows``, recorded in the contract;
+    2. the ``{table}_centroids`` companion is overwritten with the
+       matrix the table records now AND the new one, each under its
+       ``centroid_fp`` (:func:`ivf_load_centroids` reads the recorded
+       one), plus a PQ index's codebook companion;
+    3. the ``{table}_drift_log`` is dropped — reports measured against
+       the retired matrix mean nothing — before the write, so a failed
+       rotation loses only diagnostics;
+    4. ``rewrite_layout`` creates the table (or the stage it swaps in)
+       with the rows and the contract — centroid fingerprint included —
+       in one statement.
+
+    A crash before step 4 commits leaves the old rows under the old
+    fingerprint; after it, the new rows under the new one. Probes
+    never see one without the other."""
+    from ..sources.io import get_table_meta, rewrite_layout, write_table
+
+    fp = _centroid_fingerprint(centroids)
+    # grid centroids live in quantized units: measure in the same
+    # units so the baseline and append batches stay comparable
     stats = (
-        spark.table(table)
-        .withColumn("_qv", dist_vec)
-        .withColumn("_dist", _centroid_dist("_qv", "_cell", centroids))
-        .drop("_qv")
+        rows.select(
+            F.col("_cell"),
+            _quantized_vec(vec_col, contract.get("impl", "mllib")).alias("_qv"),
+        )
+        .select(_centroid_dist("_qv", "_cell", centroids).alias("_dist"))
         .agg(
             F.avg("_dist").alias("mean_dist"),
             F.expr("approx_percentile(_dist, 0.95, 10000)").alias("p95_dist"),
             F.count("*").alias("n_vectors"),
         )
+        .first()
+        .asDict()
     )
-    write_table(stats, _drift_stats_table(table))
+    contract = {
+        "kind": "ivf",
+        **contract,
+        "dim": len(centroids[0]),
+        "n_clusters": len(centroids),
+        "centroid_fp": fp,
+        "partition_cols": "_cell",
+        **{k: v for k, v in stats.items() if v is not None},
+    }
+
+    comp = _centroids_table(table)
+    matrices = spark.createDataFrame(
+        [(fp, i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "centroid_fp string, cell int, centroid array<double>",
+    )
+    recorded = (
+        get_table_meta(spark, table).get("centroid_fp")
+        if spark.catalog.tableExists(table)
+        else None
+    )
+    if recorded not in (None, fp) and spark.catalog.tableExists(comp):
+        matrices = (
+            spark.table(comp)
+            .filter(F.col("centroid_fp") == recorded)
+            .unionByName(matrices)
+        )
+    write_table(matrices, comp)
+    if pq_codebook is not None:
+        pq_save_codebook(spark, table, pq_codebook)
+    spark.sql(f"DROP TABLE IF EXISTS {_drift_log_table(table)}")
+    rewrite_layout(spark, table, rows, contract)
+
+
+def _carried_contract(meta: dict) -> dict:
+    """The contract keys a split or merge carries over; the rotation
+    re-derives the rest. An index that predates ``base_n_clusters``
+    anchors it at its current k, so later splits cannot ratchet the
+    budget."""
+    return {
+        **{k: meta[k] for k in ("impl", "pq", "n_buckets", "bucket_cols") if k in meta},
+        "base_n_clusters": meta.get("base_n_clusters", meta.get("n_clusters")),
+    }
+
+
+def _pinned_by_cell(rows: DataFrame) -> DataFrame:
+    """``rows`` pinned and hash-partitioned by cell. A split or merge
+    reads the index's own files, where every task holds rows of every
+    cell and bucket, and a rewrite from that writes a file per task,
+    cell and bucket; grouped by cell, it writes one per cell and
+    bucket."""
+    return rows.repartition("_cell").localCheckpoint(eager=True)
 
 
 def ivf_append_index(
@@ -685,14 +744,14 @@ def ivf_append_index(
     If the new distribution shifts far from the fit, cells skew and
     probe recall decays. Every append therefore MEASURES drift — the
     batch's mean/p95 distance to its assigned centroids vs the
-    build-time distribution :func:`ivf_build_index` recorded — and the
+    baseline the last rotation recorded in the contract — and the
     returned dict carries ``rebuild_recommended=True`` when the batch
     p95 exceeds ``drift_threshold ×`` the build p95 (an
     out-of-distribution batch quantizes visibly worse; an
     in-distribution one tracks the build stats). Rebuild cost is one
     fit on a bounded sample plus one assignment pass
     (:func:`ivf_retrain_index` is that action, runnable straight off
-    the standing table). Indexes built before stats existed yield
+    the standing table). An index with no recorded baseline yields
     ``build_p95=None`` and no recommendation.
 
     ``log_drift=True`` also APPENDS the report as one row to the
@@ -700,9 +759,9 @@ def ivf_append_index(
     past the caller (the streaming ingest's per-batch dict is
     otherwise dropped on the floor) and ``maintenance.table_health``
     can flag ``retrain_recommended`` from a constant-time read of the
-    log instead of rescanning any data. :func:`ivf_retrain_index`
-    clears the log, resetting the flag. One extra one-row write per
-    append; pass ``log_drift=False`` on paths that cannot afford it.
+    log instead of rescanning any data. Every rotation drops the log,
+    resetting the flag. One extra one-row write per append; pass
+    ``log_drift=False`` on paths that cannot afford it.
 
     Input hygiene: external incremental batches are the one path fed by
     arbitrary upstreams, so NULL or wrong-dimension embeddings are
@@ -710,39 +769,32 @@ def ivf_append_index(
     the whole append inside the UDF) — the returned dict counts them in
     ``n_dropped``. Empty batches write nothing.
 
-    Per-batch job shape (r17 optimization round): the default (mllib)
-    path runs ONE checkpointed pass over the batch — invalid rows are
-    assigned the sentinel cell ``-1`` inside the kernel instead of a
-    separate Catalyst filter, so the single drift rollup also yields
-    ``n_dropped`` and the old per-append ``count()`` job is gone. The
-    drift-vs-build comparison reads the ``{table}_drift_stats``
-    companion unless ``build_stats=(mean, p95)`` is passed — streaming
-    ingest resolves it once per held centroid fingerprint instead of
-    one ``first()`` job per micro-batch (it rotates exactly when the
-    matrix does, so the fingerprint resync is the right invalidation
-    point).
+    Per-batch job shape: the default (mllib) path runs ONE checkpointed
+    pass over the batch — invalid rows are assigned the sentinel cell
+    ``-1`` inside the kernel instead of a separate Catalyst filter, so
+    the single drift rollup also yields ``n_dropped`` with no count
+    job. The baseline comes from the contract (no job), or from
+    ``build_stats=(mean, p95)`` when the caller already holds it.
     """
     from ..sources.io import write_table
 
+    spark = new_vectors.sparkSession
     if centroids is None:
         # no-driver-state form: resolve the CURRENT matrix from the
         # persisted companion (also how appenders resume after a
-        # maintenance retrain rotated it)
-        centroids = ivf_load_centroids(new_vectors.sparkSession, table)
-    _check_centroids(new_vectors.sparkSession, table, centroids)
+        # maintenance rotation)
+        centroids = ivf_load_centroids(spark, table)
+    _meta = _check_centroids(spark, table, centroids)
     C = np.asarray(centroids, dtype=np.float64)
     dim = C.shape[1]
     # grid-built indexes store centroids in quantized units (see
     # ivf_build_index impl="grid"): re-quantize batch vectors to match
     # before the nearest-centroid assignment
-    from ..sources.io import get_table_meta
-
-    _meta = get_table_meta(new_vectors.sparkSession, table)
     _is_grid = _meta.get("impl") == "grid"
-    # indexes built since the id-bucketed layout landed record their
-    # bucket spec; appends MUST match it (Spark rejects an unbucketed
-    # append into a bucketed table). Pre-bucketing indexes record none
-    # and keep appending plain cell-partitioned files.
+    # indexes built with the id-bucketed layout record their bucket
+    # spec; appends MUST match it (Spark rejects an unbucketed append
+    # into a bucketed table). Pre-bucketing indexes record none and
+    # keep appending plain cell-partitioned files.
     _n_id_buckets = int(_meta.get("n_buckets", 0) or 0)
     _id_bucket_spec = (
         (_n_id_buckets, _meta["bucket_cols"].split(","))
@@ -767,39 +819,17 @@ def ivf_append_index(
             .localCheckpoint(eager=True)
         )
     else:
-        n_input = None  # derived from the drift rollup (r17: one fewer job)
-
-        @pandas_udf("int")
-        def nearest_cell(vecs: pd.Series) -> pd.Series:
-            # invalid rows (NULL / wrong-dim — the same rows the old
-            # Catalyst `size(vec) == dim` filter dropped) assign to the
-            # sentinel cell -1, so ONE checkpointed pass yields the
-            # write set, the drift stats AND the dropped-row count —
-            # the per-batch count job this replaced measured ~0.1 s of
-            # pure scheduling overhead in the streaming steady state
-            out = np.full(len(vecs), -1, dtype=np.int32)
-            ok = [
-                i for i, v in enumerate(vecs)
-                if v is not None and len(v) == dim
-            ]
-            if ok:
-                V = np.stack(
-                    [np.asarray(vecs.iloc[i], dtype=np.float64) for i in ok]
-                )
-                d = (V**2).sum(1)[:, None] - 2 * V @ C.T + (C**2).sum(1)[None, :]
-                out[np.asarray(ok)] = np.argmin(d, axis=1).astype("int32")
-            return pd.Series(out)
-
+        n_input = None  # derived from the drift rollup (no count job)
         # one narrow checkpoint so the assignment kernel runs once for
-        # the write AND the drift agg (batch-sized, not corpus-sized)
+        # the write AND the drift agg (batch-sized, not corpus-sized);
+        # invalid rows carry the sentinel cell -1
         stats_src = new_vectors.select(
             F.col(id_col),
             F.col(vec_col),
-            nearest_cell(F.col(vec_col)).alias("_cell"),
+            _nearest_cell_udf(C)(F.col(vec_col)).alias("_cell"),
         ).localCheckpoint(eager=True)
         assigned = stats_src.filter(F.col("_cell") >= 0)
     to_write = assigned
-    spark = new_vectors.sparkSession
     index_has_codes = "pq_code" in spark.table(table).columns
     if index_has_codes and pq_codebook is None:
         # resolve the build's persisted companion (bit-identical to
@@ -834,12 +864,10 @@ def ivf_append_index(
     # per-cell skew: rollup("_cell") emits every per-cell row PLUS the
     # grand-total grouping set (grouping()=1) — _cell is never NULL by
     # construction, but the grouping flag is what distinguishes the
-    # total, not the NULL marker. Was two jobs per append before r16;
-    # in the streaming steady state every per-batch job is overhead.
-    # r17: the mllib path's sentinel-cell (-1) rows ride the SAME
-    # rollup — their NULL-guarded _dist keeps mean/p95 identical to
-    # the old valid-only aggregation (avg/approx_percentile ignore
-    # NULLs), and their group's n IS the old n_dropped.
+    # total, not the NULL marker. The mllib path's sentinel-cell (-1)
+    # rows ride the SAME rollup — their NULL-guarded _dist keeps
+    # mean/p95 those of the valid rows (avg/approx_percentile ignore
+    # NULLs), and their group's n IS n_dropped.
     stats_rows = (
         stats_src.withColumn("_qv", _dv)
         .withColumn(
@@ -869,16 +897,9 @@ def ivf_append_index(
     cell_rows = [
         r for r in stats_rows if r["_is_total"] == 0 and r["_cell"] != -1
     ]
-    if build_stats is not None:
-        build_mean, build_p95 = build_stats
-    else:
-        build_mean = build_p95 = None
-        try:
-            srow = spark.table(_drift_stats_table(table)).first()
-            if srow is not None:
-                build_mean, build_p95 = srow["mean_dist"], srow["p95_dist"]
-        except Exception:
-            pass  # pre-stats index: drift unmeasurable, never fail append
+    build_mean, build_p95 = (
+        build_stats if build_stats is not None else _drift_baseline(_meta)
+    )
     batch_p95 = row["p95_dist"]
     drift_ratio = (
         batch_p95 / build_p95 if batch_p95 is not None and build_p95 else None
@@ -886,9 +907,9 @@ def ivf_append_index(
     # the batch's CELL SKEW — what fraction crammed into its single
     # hottest cell — is the signal that distinguishes LOCALIZED drift
     # (an out-of-distribution blob whose vectors all bin to one nearest
-    # old cell: ivf_split_hot_cells fixes it by rewriting only that
-    # partition) from GLOBAL drift (far-from-centroid vectors spread
-    # across many cells: only a full ivf_retrain_index helps).
+    # old cell: ivf_split_hot_cells fixes it by splitting that cell)
+    # from GLOBAL drift (far-from-centroid vectors spread across many
+    # cells: only a full ivf_retrain_index helps).
     # maintenance.table_health reads it off the log to CHOOSE the
     # remediation. cell_rows came free with the rollup above.
     n_assigned = sum(r["n"] for r in cell_rows)
@@ -981,35 +1002,25 @@ def ivf_retrain_index(
     """The quantizer-drift REMEDIATION :func:`ivf_append_index`'s
     report recommends: re-fit the coarse quantizer over the standing
     index's CURRENT contents (old + every streamed append), re-assign
-    every vector to the new cells, and swap the rebuilt layout into
-    place — recall decayed by out-of-distribution appends is restored
-    because the new centroids cover where the data actually lives now.
-    Everything is read off the table itself: no raw-corpus access, no
-    caller-held state. Cost = one bounded-sample fit + one assignment
-    pass + one write — the same shape as the original build.
+    every vector to the new cells, and commit the rebuilt layout —
+    recall decayed by out-of-distribution appends is restored because
+    the new centroids cover where the data actually lives now. It is
+    :func:`ivf_build_index` over the pinned table: no raw-corpus
+    access, no caller-held state, one bounded-sample fit + one
+    assignment pass + one write.
 
     Parameters default from the table's recorded contract
     (``n_clusters`` / ``impl`` / id-bucket spec), so
     ``ivf_retrain_index(spark, table)`` is the whole runbook call;
-    PQ-coded indexes must pass the SAME codebook the build used (codes
-    are re-derived for the new layout). The rebuild is fail-safe
-    (``write_table``'s stage-then-swap) and updates the recorded
-    centroid fingerprint, so probes still holding the PRE-drift
-    centroid matrix are REJECTED rather than silently probing the
-    wrong cells — callers pick up the returned matrix. The
-    ``{table}_drift_log`` companion is cleared, resetting
-    ``maintenance.table_health``'s ``retrain_recommended`` flag; the
-    build-time ``{table}_drift_stats`` baseline is re-recorded by the
-    rebuild so future appends measure drift against the NEW quantizer.
+    a PQ-coded index resolves its persisted codebook (or takes the
+    SAME codebook the build used) and re-derives codes for the new
+    layout. Like every rotation, rows, fingerprint and drift baseline
+    are one commit (:func:`_commit_rotation`): probes still holding
+    the PRE-drift matrix are REJECTED rather than silently probing the
+    wrong cells, and the drift log is dropped, resetting
+    ``maintenance.table_health``'s ``retrain_recommended``.
     """
-    from ..sources.io import get_table_meta
-
-    meta = get_table_meta(spark, table)
-    if meta.get("kind") != "ivf":
-        raise ValueError(
-            f"{table!r} is not an IVF index (kind={meta.get('kind')!r})"
-        )
-    _refuse_pending_merge(spark, table, "a retrain")
+    meta = _ivf_meta(spark, table)
     if meta.get("pq") == "true" and pq_codebook is None:
         try:
             pq_codebook = pq_load_codebook(spark, table)
@@ -1020,31 +1031,25 @@ def ivf_retrain_index(
                 "retrain must pass the SAME codebook so rebuilt rows "
                 "carry codes"
             )
-    k = n_clusters or int(meta.get("n_clusters", 16))
-    impl = meta.get("impl", "mllib")
-    nb = n_id_buckets or int(meta.get("n_buckets", 0) or 8)
     # build writes (id_col, vec_col, _cell[, pq_code]) in that order —
     # the column order IS the contract (names are caller-chosen)
     cols = spark.table(table).columns
     id_col, vec_col = cols[0], cols[1]
-    # materialize the corpus before the swap: the rebuild overwrites
-    # the very table this plan reads
+    # pinned: the rebuild overwrites the very table this plan reads
     corpus = (
         spark.table(table).select(id_col, vec_col).localCheckpoint(eager=True)
     )
-    centroids = ivf_build_index(
+    return ivf_build_index(
         corpus,
         table,
-        n_clusters=k,
+        n_clusters=n_clusters or int(meta.get("n_clusters", 16)),
         seed=seed,
         id_col=id_col,
         vec_col=vec_col,
         pq_codebook=pq_codebook,
-        impl=impl,
-        n_id_buckets=nb,
+        impl=meta.get("impl", "mllib"),
+        n_id_buckets=n_id_buckets or int(meta.get("n_buckets", 0) or 8),
     )
-    spark.sql(f"DROP TABLE IF EXISTS {_drift_log_table(table)}")
-    return centroids
 
 
 def ivf_split_hot_cells(
@@ -1057,18 +1062,16 @@ def ivf_split_hot_cells(
     max_cells: int | None = None,
 ) -> list[list[float]]:
     """The INCREMENTAL drift remediation: split only the cells that
-    got hot, touching only their partitions. Where
-    :func:`ivf_retrain_index` re-fits and rewrites the WHOLE index
-    (one fit + one assignment pass + one full write — the right call
-    when the quantizer is globally stale), a drifted ingest more often
-    produces one or two overfull cells (every out-of-distribution
-    vector crams into its nearest old cell); splitting those in place
-    costs a bounded 2-means fit per hot cell plus a DYNAMIC PARTITION
-    OVERWRITE of just the hot and newly-created cell directories — at
-    100 TB that is a rewrite of the skewed percent, not the corpus.
-    Untouched cells' files are left byte-identical (pinned by test),
-    and the id-bucket spec is preserved because ``insertInto`` on a
-    bucketed catalog table writes bucket-aligned files (also pinned).
+    got hot. Where :func:`ivf_retrain_index` re-fits the WHOLE matrix
+    (the right call when the quantizer is globally stale), a drifted
+    ingest more often produces one or two overfull cells (every
+    out-of-distribution vector crams into its nearest old cell);
+    splitting those costs a bounded 2-means fit per hot cell, and no
+    other row changes cell. The split runs on one pinned copy of the
+    index and commits once (:func:`_commit_rotation`): rows, the new
+    matrix's fingerprint and a fresh drift baseline in one create,
+    with the id-bucket spec the contract records (or none, for an
+    index that records none), and the drift log dropped.
 
     Mechanics per hot cell (row count > ``max_cell_fraction`` × index
     rows, needs ≥ 2 rows): fit k=2 on the cell's own vectors, impl-aware
@@ -1076,33 +1079,18 @@ def ivf_split_hot_cells(
     units over ALL of the cell's rows by design (the full-cell fit is
     what makes the DuckDB oracle replay exact; a hot cell is already a
     bounded fraction of the index), mllib cells with seeded KMeans on a
-    ``fit_target_rows``-bounded sample (the only sample-bounded path);
-    child
-    A keeps the old cell id, child B appends as cell ``len(matrix)``;
-    a split where one child ends up empty (all-identical vectors) is
-    skipped. PQ codes ride along untouched — they encode the vector,
-    not the cell. Finishes by rotating the index contract
-    (:func:`_finalize_index_contract`): new ``{table}_centroids``
-    companion + fingerprint (stale matrices rejected), fresh drift
-    baseline, cleared drift log. Returns the new centroid matrix;
-    probes pick it up via :func:`ivf_load_centroids`.
-
-    CRASH RECOVERY (round 17 audit): a split killed between its child
-    write and the contract rotation strands the child partition beyond
-    the matrix — invisible to every probe. Every split therefore
-    begins by ADOPTING stranded cells (:func:`_adopt_stranded_cells`:
-    re-attach each with its own mean vector, force the rotation), and
-    :func:`ivf_adopt_stranded_cells` is the adoption-only recovery
-    verb ``maintenance.run_maintenance`` applies when ``table_health``
-    reports ``stranded_cells``.
+    ``fit_target_rows``-bounded sample; child A keeps the old cell id,
+    child B becomes cell ``len(matrix)``; a split where one child ends
+    up empty (all-identical vectors) is skipped. PQ codes ride along
+    untouched — they encode the vector, not the cell. Returns the new
+    centroid matrix; probes pick it up via :func:`ivf_load_centroids`.
 
     One pass may leave a CHILD still over the fraction (a 70% cell
     splitting 40/30 against a 0.25 bound): ``rounds > 1`` re-detects
     and re-splits until no cell is hot, every split produced no
-    progress (all degenerate), or the round budget runs out — each
-    extra round touches only the still-hot partitions, so cost stays
-    proportional to the remaining skew. If nothing split at all, the
-    contract is left untouched (no fingerprint rotation).
+    progress (all degenerate), or the round budget runs out. If
+    nothing split at all, nothing is written (no fingerprint
+    rotation).
 
     ``max_cells`` bounds centroid-matrix growth: splits only ever
     APPEND a cell, so a long-lived drifting ingest that is repeatedly
@@ -1115,314 +1103,79 @@ def ivf_split_hot_cells(
     base k when the budget is exhausted — the fit-everything
     remediation is also the one that resets k.
     """
-    from ..sources.io import get_table_meta
-
-    meta = get_table_meta(spark, table)
-    if meta.get("kind") != "ivf":
-        raise ValueError(
-            f"{table!r} is not an IVF index (kind={meta.get('kind')!r})"
-        )
-    _refuse_pending_merge(spark, table, "a hot-cell split")
+    meta = _ivf_meta(spark, table)
     centroids = [list(c) for c in ivf_load_centroids(spark, table)]
     impl = meta.get("impl", "mllib")
-    # `or 0`, matching ivf_append_index: a legacy pre-bucketing index
-    # has unbucketed files, and recording a fabricated spec here would
-    # poison every later append (bucketed append into unbucketed files)
-    n_id_buckets = int(meta.get("n_buckets", 0) or 0)
     cols = spark.table(table).columns
     id_col, vec_col = cols[0], cols[1]
     data_cols = [c for c in cols if c != "_cell"]
-
-    # adopt any STRANDED cells first (partition ids beyond the recorded
-    # matrix — a previous split crashed between its child-partition
-    # write and the contract rotation, leaving those rows invisible to
-    # every probe and, were one hot, an index error waiting in the loop
-    # below). Adoption extends the matrix with the stranded partitions'
-    # own mean vectors and forces the finalize, restoring visibility.
-    centroids, adopted = _adopt_stranded_cells(
-        spark, table, centroids, impl, vec_col
-    )
-    changed = bool(adopted)
-    budget_hit = False
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for _ in range(max(1, rounds)):
-            if budget_hit:
+    work = _pinned_by_cell(spark.table(table))
+    changed = budget_hit = False
+    for _ in range(max(1, rounds)):
+        sizes = _cell_sizes(work)
+        total = sum(sizes.values())
+        hot = sorted(
+            c
+            for c, n in sizes.items()
+            if total and n > max_cell_fraction * total and n >= 2
+        )
+        children: dict[int, DataFrame] = {}
+        for cell in hot:
+            if max_cells is not None and len(centroids) >= max_cells:
+                budget_hit = True
                 break
-            spark.catalog.refreshTable(table)
-            sizes = {
-                r["_cell"]: r["n"]
-                for r in spark.table(table)
-                .groupBy("_cell")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            total = sum(sizes.values())
-            hot = sorted(
-                c
-                for c, n in sizes.items()
-                if total and n > max_cell_fraction * total and n >= 2
-            )
-            if not hot:
-                break
-            round_changed = False
-            for cell in hot:
-                if max_cells is not None and len(centroids) >= max_cells:
-                    budget_hit = True
-                    break
-                rows_c = spark.table(table).filter(F.col("_cell") == cell)
-                if impl == "grid":
-                    sub = grid_kmeans_fit(
-                        rows_c, id_col, vec_col, k=2, iters=2
+            rows_c = work.filter(F.col("_cell") == cell)
+            if impl == "grid":
+                sub = grid_kmeans_fit(rows_c, id_col, vec_col, k=2, iters=2)
+                assigned = (
+                    grid_assign_cells(
+                        rows_c,
+                        id_col,
+                        vec_col,
+                        sub,
+                        keep_cols=[c for c in data_cols if c != id_col],
                     )
-                    assigned = (
-                        grid_assign_cells(
-                            rows_c,
-                            id_col,
-                            vec_col,
-                            sub,
-                            keep_cols=[c for c in data_cols if c != id_col],
-                        )
-                        .drop("_vq")
-                        .withColumnRenamed("cell", "_child")
-                    )
-                else:
-                    from pyspark.ml.clustering import KMeans
-                    from pyspark.ml.functions import array_to_vector
-
-                    c_vec = rows_c.withColumn(
-                        "_v", array_to_vector(F.col(vec_col))
-                    )
-                    fit_df = _bounded_fit(c_vec, None, seed, fit_target_rows)
-                    model = KMeans(
-                        k=2, seed=seed, featuresCol="_v",
-                        predictionCol="_child",
-                    ).fit(fit_df)
-                    assigned = model.transform(c_vec).drop("_v")
-                    sub = [
-                        list(map(float, ct)) for ct in model.clusterCenters()
-                    ]
-                assigned = assigned.localCheckpoint(eager=True)
-                counts = {
-                    r["_child"]: r["n"]
-                    for r in assigned.groupBy("_child")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-                if len(counts) < 2:
-                    # degenerate cell (all-identical vectors): nothing
-                    # to split; keep the old centroid and move on
-                    continue
-                new_id = len(centroids)
-                out = assigned.select(
-                    *data_cols,
-                    F.when(F.col("_child") == 0, F.lit(cell))
-                    .otherwise(F.lit(new_id))
-                    .cast("int")
-                    .alias("_cell"),
+                    .drop("_vq")
+                    .withColumnRenamed("cell", "_child")
                 )
-                # positional insert: out's column order matches the
-                # table (data cols in table order, partition col last)
-                out.write.mode("overwrite").insertInto(table)
-                centroids[cell] = list(sub[0])
-                centroids.append(list(sub[1]))
-                round_changed = changed = True
-            if not round_changed:
-                break  # every hot cell degenerate: no progress possible
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-    if not changed:
-        return centroids
-    spark.catalog.refreshTable(table)
-    _finalize_index_contract(
-        spark,
-        table,
-        centroids,
-        impl=impl,
-        pq=meta.get("pq") == "true",
-        n_id_buckets=n_id_buckets,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    return centroids
+            else:
+                from pyspark.ml.clustering import KMeans
+                from pyspark.ml.functions import array_to_vector
 
-
-def _adopt_stranded_cells(
-    spark,
-    table: str,
-    centroids: list[list[float]],
-    impl: str,
-    vec_col: str,
-) -> tuple[list[list[float]], list[int]]:
-    """Adopt STRANDED cells — partition ids at/beyond the recorded
-    matrix length. The one way these arise is a hot-cell split crashing
-    between its child-partition write and the contract rotation: the
-    child rows live under ``_cell = old_k`` but the matrix still has
-    ``old_k`` slots, so no probe ever routes there (silent recall
-    loss) and a later split that found the stranded cell hot would
-    index past the matrix. Recovery is positional adoption: stranded
-    ids are contiguous from ``len(centroids)`` (children are appended
-    sequentially), and each adopted centroid is the partition's own
-    per-dimension mean — for a converged 2-means child that IS its
-    center, and the matrix entry is only a probe-routing hint either
-    way. Grid-impl means are taken in quantized units, matching the
-    rest of the grid contract (:func:`_quantized_vec`). Empty stranded
-    partitions (a crash after the directory was created but before
-    rows landed) are simply dropped.
-
-    The SAME mean pass also refreshes every in-range cell that has
-    rows (round 17 review): the crashed split rewrote its parent
-    cell's rows (child A) but the matrix update recording the new
-    parent centroid was lost with the crash, so the recorded centroid
-    is the mean of BOTH modes — queries near the surviving mode could
-    rank other cells ahead of it at realistic ``n_probe``. Since the
-    matrix entry is only a probe-routing hint, each present cell's
-    current mean is the best available value (a Lloyd position update
-    without reassignment; for unsplit cells the mean is what KMeans
-    recorded anyway, up to fit sampling). Cells with no partition keep
-    their recorded centroid. This runs ONLY when something is stranded
-    — a healthy split never takes this path, so oracle-replayed
-    matrices are untouched.
-
-    Returns (extended_matrix, adopted_ids); the caller must finalize
-    the contract when any were adopted. Raises (with retrain advice)
-    on non-contiguous stranded ids — unreachable through this
-    library's own verbs, but adopting positionally past a gap would
-    mis-route every probe."""
-    present = _cell_partition_ids(spark, table)
-    stranded = sorted(c for c in present if c >= len(centroids))
-    if not stranded:
-        return centroids, []
-    dim = len(centroids[0])
-    qv = _quantized_vec(vec_col, impl)
-    stats = {
-        r["_cell"]: r
-        for r in spark.table(table)
-        .select(F.col("_cell"), qv.alias("_v"))
-        .groupBy("_cell")
-        .agg(
-            *[
-                F.avg(F.element_at("_v", d + 1)).alias(f"m{d}")
-                for d in range(dim)
-            ]
-        )
-        .collect()
-    }
-    empty = [s for s in stranded if s not in stats]
-    if empty:
-        _drop_cell_partitions(spark, table, empty)
-    live = [s for s in stranded if s in stats]
-    out = [
-        [float(stats[c][f"m{d}"]) for d in range(dim)]
-        if c in stats
-        else list(cent)
-        for c, cent in enumerate(centroids)
-    ]
-    for s in live:
-        if s != len(out):
-            raise ValueError(
-                f"stranded cells {live} of {table} are not contiguous "
-                f"with the matrix (k={len(centroids)}); positional "
-                "adoption would mis-route probes — run ivf_retrain_index"
+                c_vec = rows_c.withColumn("_v", array_to_vector(F.col(vec_col)))
+                fit_df = _bounded_fit(c_vec, None, seed, fit_target_rows)
+                model = KMeans(
+                    k=2, seed=seed, featuresCol="_v", predictionCol="_child",
+                ).fit(fit_df)
+                assigned = model.transform(c_vec).drop("_v")
+                sub = [list(map(float, ct)) for ct in model.clusterCenters()]
+            assigned = assigned.localCheckpoint(eager=True)
+            if assigned.select("_child").distinct().count() < 2:
+                # degenerate cell (all-identical vectors): nothing to
+                # split; keep the old centroid and move on
+                continue
+            children[cell] = assigned.select(
+                *data_cols,
+                F.when(F.col("_child") == 0, F.lit(cell))
+                .otherwise(F.lit(len(centroids)))
+                .cast("int")
+                .alias("_cell"),
             )
-        out.append([float(stats[s][f"m{d}"]) for d in range(dim)])
-    return out, live
-
-
-def ivf_adopt_stranded_cells(spark, table: str) -> list[list[float]]:
-    """Recovery verb for the split's crash window: re-attach any
-    stranded cell partitions (see :func:`_adopt_stranded_cells`) and
-    rotate the contract, WITHOUT splitting anything new —
-    ``max_cell_fraction=2.0`` can never flag a hot cell, so the call
-    is adoption + finalize only. ``maintenance.table_health`` reports
-    ``stranded_cells`` and ``run_maintenance`` applies this verb under
-    the ``retrain_ivf`` opt-in (it rotates the matrix like the other
-    remediations). Idempotent: a table with nothing stranded returns
-    the matrix unchanged without rotating."""
-    return ivf_split_hot_cells(spark, table, max_cell_fraction=2.0)
-
-
-def _merge_manifest_table(table: str) -> str:
-    return f"{table}_merge_manifest"
-
-
-def _refuse_pending_merge(spark, table: str, verb: str) -> None:
-    """Matrix-rotating verbs that READ the existing layout must not run
-    over a crashed merge's pending manifest: the half-merged table can
-    hold cold rows both in their original partitions and folded into
-    survivors, and a retrain/split would reassign BOTH copies — baking
-    the duplication into the rebuilt index permanently. Resume the
-    merge first (``ivf_merge_cold_cells`` picks the recorded plan back
-    up; ``run_maintenance`` orders it before drift remediation)."""
-    if spark.catalog.tableExists(_merge_manifest_table(table)):
-        raise ValueError(
-            f"{table} has a pending {_merge_manifest_table(table)} (a "
-            f"prior ivf_merge_cold_cells crashed mid-plan); {verb} over "
-            "the half-merged layout would bake duplicated rows into the "
-            "rebuilt index — resume the merge first (ivf_merge_cold_cells"
-            " or run_maintenance with retrain_ivf=True)"
+            centroids[cell] = list(sub[0])
+            centroids.append(list(sub[1]))
+        if not children:
+            break  # nothing hot, or every hot cell degenerate
+        changed = True
+        work = work.filter(~F.col("_cell").isin(list(children)))
+        for out in children.values():
+            work = work.unionByName(out)
+        if budget_hit:
+            break
+    if changed:
+        _commit_rotation(
+            spark, table, work, centroids, _carried_contract(meta), vec_col
         )
-
-
-def _merge_fold_marker_table(table: str) -> str:
-    return f"{table}_merge_fold_done"
-
-
-def _drop_merge_manifest(spark, table: str) -> None:
-    """Retire a merge plan: marker FIRST, manifest second. A crash
-    between the two leaves manifest-without-marker (the next call
-    resumes through the idempotent repair fold, a no-op once the cold
-    partitions are gone) — never marker-without-manifest, which would
-    suppress a future merge's fold."""
-    spark.sql(f"DROP TABLE IF EXISTS {_merge_fold_marker_table(table)}")
-    spark.sql(f"DROP TABLE IF EXISTS {_merge_manifest_table(table)}")
-
-
-def _merge_manifest_resumable(spark, table: str) -> bool:
-    """True when a pending merge manifest exists AND is valid to
-    resume: the table's recorded centroid fingerprint still matches
-    the matrix the plan was decided against — the pre-merge print
-    (rotation not yet committed) or the post-merge one (a crash landed
-    after finalize's meta write). A manifest predating the fingerprint
-    columns is treated as RESUMABLE (resuming a legacy plan is the
-    safe default; retiring it and re-deciding from the half-mutated
-    table is the round-16 duplication bug). With build/retrain/split
-    all refusing to rotate over a pending manifest, a mismatch here
-    means out-of-band interference (manual meta edits, restored
-    backups) — defense-in-depth, not a normal path. Shared with
-    ``maintenance.run_maintenance`` so the applied report can tell a
-    resumed merge from a retired stale plan."""
-    man_t = _merge_manifest_table(table)
-    if not spark.catalog.tableExists(man_t):
-        return False
-    man = spark.table(man_t).first().asDict()
-    if man.get("pre_fp") is None and man.get("post_fp") is None:
-        return True
-    from ..sources.io import get_table_meta
-
-    recorded = get_table_meta(spark, table).get("centroid_fp")
-    return recorded in (man.get("pre_fp"), man.get("post_fp"))
-
-
-def _mark_fold_done(spark, table: str) -> None:
-    """Commit point between the fold and the cold-partition drops: the
-    marker's existence is what lets a resume distinguish 'moved rows
-    all appended' (skip the fold) from 'append may be partial' (run
-    the anti-join repair). Module-level so the crash-safety tests can
-    fault-inject it. Append-mode creation of a fresh single-row table:
-    the marker is either absent (resume repairs — safe) or present
-    (append completed first — safe); there is no torn middle state the
-    way an overwrite of the manifest itself would have."""
-    from ..sources.io import write_table
-
-    write_table(
-        spark.createDataFrame([(1,)], "done int"),
-        _merge_fold_marker_table(table),
-        mode="append",
-    )
+    return centroids
 
 
 def _merge_renumber_plan(
@@ -1451,170 +1204,11 @@ def _merged_matrix(
     plan: hole ``h`` takes source ``m``'s centroid (written holes and
     read survivors are disjoint, so the mapping applies from the
     ORIGINAL matrix regardless of order), then truncate to the survivor
-    count. Deterministic, so the manifest can record the post-merge
-    fingerprint up front."""
+    count."""
     new_centroids = [list(c) for c in centroids]
     for h, m in moves:
         new_centroids[h] = list(centroids[m])
     return new_centroids[: len(survivors)]
-
-
-def _cell_partition_ids(spark, table: str) -> set[int]:
-    """Cell ids that currently have a partition directory — one
-    constant-time ``SHOW PARTITIONS`` (metadata listing, no scan)."""
-    return {
-        int(r[0].split("_cell=", 1)[1])
-        for r in spark.sql(f"SHOW PARTITIONS {table}").collect()
-    }
-
-
-def _drop_cell_partitions(spark, table: str, cells: list[int]) -> None:
-    """Drop a set of cell partitions in ONE metadata statement (not a
-    per-cell loop — the statement is the atom the merge's crash story
-    counts, so fewer statements = fewer crash windows). Module-level so
-    the crash-safety tests can fault-inject it."""
-    if not cells:
-        return
-    specs = ", ".join(f"PARTITION (_cell={c})" for c in sorted(cells))
-    spark.sql(f"ALTER TABLE {table} DROP IF EXISTS {specs}")
-
-
-def _merge_fold_cold_rows(
-    spark,
-    table: str,
-    cold: list[int],
-    survivors: list[int],
-    centroids: list[list[float]],
-    impl: str,
-    data_cols: list[str],
-    id_col: str,
-    vec_col: str,
-    repair: bool = False,
-) -> None:
-    """Phase 1 of the merge: re-assign every row of the still-present
-    cold partitions to its nearest SURVIVING cell and fold it in.
-
-    Clean path (``repair=False``): ONE append of just the moved rows —
-    cold cells are slivers by definition, so the fold costs the sliver,
-    never a destination-partition rewrite (a cold sliver folding into
-    the corpus's largest cell must not rewrite that whole partition).
-    Crash safety comes from the caller's ``{table}_merge_fold_done``
-    marker, written immediately AFTER this append: a resume that finds
-    the marker skips the fold entirely (the append committed), and one
-    that doesn't runs the repair path.
-
-    Repair path (``repair=True`` — resuming a manifest with no marker,
-    i.e. the append may have landed partially or fully without its
-    commit marker): each destination partition is rewritten as
-
-        (its current rows ANTI-JOINED on id against the moved rows)
-        UNION (the moved rows)
-
-    which strips any previously appended copies before folding again —
-    the destination converges to exactly one copy per id no matter how
-    many times the fold crashed mid-append. The assignment itself is
-    deterministic (same kernel, same survivor matrix), which is what
-    makes the recomputation safe. The rewrite is repair-only by design:
-    round 17's first cut ran it on EVERY merge, turning a sliver fold
-    into a potential full-corpus rewrite (VERDICT r17 review).
-    """
-    present = sorted(set(cold) & _cell_partition_ids(spark, table))
-    if not present:
-        return  # fold already completed (or every cold cell was empty)
-    cold_rows = spark.table(table).filter(F.col("_cell").isin(present))
-    if impl == "grid":
-        surv_cents = [centroids[c] for c in survivors]
-        moved = (
-            grid_assign_cells(
-                cold_rows,
-                id_col,
-                vec_col,
-                surv_cents,
-                keep_cols=[c for c in data_cols if c != id_col],
-            )
-            .drop("_vq")
-            .withColumnRenamed("cell", "_surv_pos")
-        )
-    else:
-        C = np.asarray([centroids[c] for c in survivors], dtype=np.float64)
-
-        @pandas_udf("int")
-        def nearest_surv(vecs: pd.Series) -> pd.Series:
-            if len(vecs) == 0:
-                return pd.Series([], dtype="int32")
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            d = (V**2).sum(1)[:, None] - 2 * V @ C.T + (C**2).sum(1)[None, :]
-            return pd.Series(np.argmin(d, axis=1).astype("int32"))
-
-        moved = cold_rows.select(
-            *data_cols, nearest_surv(F.col(vec_col)).alias("_surv_pos")
-        )
-    pos_to_cell = F.create_map(
-        *[F.lit(x) for i, c in enumerate(survivors) for x in (i, c)]
-    )
-    # checkpoint BEFORE the write: the fold writes the very table the
-    # assignment reads (self-read hazard, same reason the split
-    # checkpoints its assignment)
-    moved = moved.select(
-        *data_cols,
-        pos_to_cell[F.col("_surv_pos")].cast("int").alias("_cell"),
-    ).localCheckpoint(eager=True)
-    if not repair:
-        # positional insert: data cols in table order, partition col
-        # last — appends only the sliver rows, never a dest rewrite
-        moved.write.mode("append").insertInto(table)
-        return
-    dest = sorted(
-        r["_cell"] for r in moved.select("_cell").distinct().collect()
-    )  # bounded by |survivors| <= k
-    existing = (
-        spark.table(table)
-        .filter(F.col("_cell").isin(dest))
-        .join(moved.select(id_col), on=id_col, how="left_anti")
-        .select(*data_cols, "_cell")
-    )
-    payload = (
-        existing.unionByName(moved)
-        .select(*data_cols, F.col("_cell").cast("int").alias("_cell"))
-        .localCheckpoint(eager=True)
-    )
-    payload.write.mode("overwrite").insertInto(table)
-
-
-def _merge_renumber_holes(
-    spark,
-    table: str,
-    moves: list[tuple[int, int]],
-    data_cols: list[str],
-) -> None:
-    """Phase 2: restore the dense 0..k-1 cell-id invariant by
-    swap-remove — each hole (a retired id below S=|survivors|) is
-    filled by the highest surviving id. ONE dynamic-overwrite job for
-    ALL moved partitions (round 16 ran one Spark job per hole — the
-    driver-side sequential loop VERDICT r16 flagged) plus one metadata
-    drop statement. IDEMPOTENT: overwriting hole ``h`` with the rows
-    of source ``m`` converges as long as ``m``'s partition still
-    exists, and sources whose partition is already gone were fully
-    processed (their holes hold the rows), so a resume re-runs only
-    the remaining pairs."""
-    pending = [
-        (h, m) for h, m in moves if m in _cell_partition_ids(spark, table)
-    ]
-    if not pending:
-        return
-    src_to_hole = F.create_map(
-        *[F.lit(x) for h, m in pending for x in (m, h)]
-    )
-    movers = (
-        spark.table(table)
-        .filter(F.col("_cell").isin([m for _, m in pending]))
-        .select(
-            *data_cols, src_to_hole[F.col("_cell")].cast("int").alias("_cell")
-        )
-        .localCheckpoint(eager=True)
-    )
-    movers.write.mode("overwrite").insertInto(table)
-    _drop_cell_partitions(spark, table, [m for _, m in pending])
 
 
 def ivf_merge_cold_cells(
@@ -1636,188 +1230,86 @@ def ivf_merge_cold_cells(
     applies this verb under the same ``retrain_ivf`` opt-in as the
     other matrix-rotating remediations.
 
-    Partition-scoped like the split: the cold rows (small by
-    definition) are re-assigned with one bounded kernel pass, the
-    destination partitions are rewritten once (dynamic partition
-    overwrite), the cold partitions are dropped, and the dense 0..k-1
-    cell-id invariant (what lets the matrix be positional everywhere)
-    is restored by swap-remove renumbering — ONE job rewriting all
-    moved partitions, never a corpus rewrite. PQ codes ride through
-    untouched — they encode the vector, not the cell. Ends with the
-    same contract rotation as build/retrain/split (fingerprint,
-    centroid companion, fresh drift baseline, cleared log); a merge
-    that finds nothing cold leaves the contract untouched and returns
-    the matrix unchanged.
-
-    CRASH-SAFE and idempotent (round 17 — the round-16 fold appended
-    cold rows before dropping the cold partitions, so a crash between
-    the two duplicated every cold row and a re-run doubled it): the
-    decided plan (cold cells, survivors, renumber moves, pre/post
-    fingerprints) is persisted to a ``{table}_merge_manifest``
-    companion BEFORE any mutation — the same pending-manifest pattern
-    as the batch-sink fold. The clean-path fold stays the cheap
-    moved-row APPEND (a sliver fold must not rewrite its destination
-    partition), committed by a ``{table}_merge_fold_done`` marker;
-    a resume without the marker runs the anti-join repair rewrite
-    instead (strips any partially appended copies), and every later
-    phase is individually re-runnable (renumber = overwrite-then-drop,
-    finalize = rewrite). A merge invoked while a manifest is pending
-    RESUMES the recorded plan instead of re-deciding from the
-    half-mutated table — but ONLY while the table still carries the
-    matrix the plan was decided against (pre- or post-merge
-    fingerprint; legacy manifests without fingerprints resume
-    unconditionally); out-of-band interference having rotated the
-    matrix retires the manifest and the merge re-decides fresh.
-    ``ivf_build_index`` / ``ivf_retrain_index`` /
-    ``ivf_split_hot_cells`` ALL refuse to rotate over a pending
-    manifest (a retrain/split would bake the half-folded duplicates
-    into the rebuilt layout; a rebuild crashing before it could retire
-    the plan would leave it resumable against brand-new rows) — resume
-    the merge first, it converges from any crash state.
-    ``maintenance.run_maintenance`` resumes a pending merge BEFORE
-    considering drift remediation for the same reason. The manifest is
-    dropped only after the contract rotation commits.
+    One pass over the index assigns each cold row its nearest
+    survivor and renumbers every row: the dense 0..k-1 cell-id
+    invariant (what lets the matrix be positional everywhere) is kept
+    by swap-remove — each retired id below the survivor count takes
+    the highest surviving id (:func:`_merge_renumber_plan`,
+    :func:`_merged_matrix`). PQ codes ride through untouched — they
+    encode the vector, not the cell. The pinned result commits once,
+    like every rotation (:func:`_commit_rotation`), so a crash leaves
+    the old index or the merged one, never a half-merged one; a merge
+    that finds nothing cold writes nothing and returns the matrix
+    unchanged.
 
     Raises if the fraction would retire EVERY cell (fraction ≥ 1/k
     territory) — a merge must leave at least one survivor."""
-    from ..sources.io import get_table_meta, write_table
-
-    import json
-
-    meta = get_table_meta(spark, table)
-    if meta.get("kind") != "ivf":
-        raise ValueError(
-            f"{table!r} is not an IVF index (kind={meta.get('kind')!r})"
-        )
+    meta = _ivf_meta(spark, table)
     impl = meta.get("impl", "mllib")
-    n_id_buckets = int(meta.get("n_buckets", 0) or 0)
     cols = spark.table(table).columns
     id_col, vec_col = cols[0], cols[1]
     data_cols = [c for c in cols if c != "_cell"]
-
-    man_t = _merge_manifest_table(table)
-    resuming = False
-    if spark.catalog.tableExists(man_t):
-        # STALENESS GUARD (round 17 review): resume only while the
-        # table still carries the matrix the plan was decided against
-        # (pre- or post-merge fingerprint; legacy manifests without
-        # fingerprints resume unconditionally — see
-        # _merge_manifest_resumable). A mismatch means out-of-band
-        # interference rotated the matrix under the manifest; resuming
-        # would reassign healthy cells against retired centroids and
-        # overwrite the fresh companion with the retired matrix —
-        # retire the plan and re-decide from the current table instead.
-        if _merge_manifest_resumable(spark, table):
-            # resume the recorded plan — NEVER re-decide from the
-            # table: a crashed fold/renumber leaves row counts
-            # mid-flight, and a fresh cold detection against them
-            # would pick a different (wrong) plan for the same merge.
-            # The ORIGINAL matrix comes from the manifest too, not the
-            # companion: a crash inside _finalize_index_contract may
-            # have already rotated the fingerprint (or the companion
-            # itself), and the recorded plan indexes the pre-merge
-            # matrix.
-            resuming = True
-            man = spark.table(man_t).first().asDict()
-            centroids = [list(c) for c in json.loads(man["cents"])]
-            cold = [int(x) for x in man["cold"].split(",") if x != ""]
-            survivors = [
-                int(x) for x in man["survivors"].split(",") if x != ""
-            ]
-            moves = [
-                (int(h), int(m))
-                for h, m in (
-                    p.split(":") for p in man["moves"].split(",") if p != ""
-                )
-            ]
-        else:
-            _drop_merge_manifest(spark, table)
-    if not resuming:
-        centroids = [list(c) for c in ivf_load_centroids(spark, table)]
-        sizes = {
-            r["_cell"]: r["n"]
-            for r in spark.table(table)
-            .groupBy("_cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        total = sum(sizes.values())
-        # a matrix cell with NO partition directory is maximally cold
-        cold = sorted(
-            c
-            for c in range(len(centroids))
-            if sizes.get(c, 0) < min_cell_fraction * total
-        )
-        if not cold:
-            return centroids
-        survivors = [c for c in range(len(centroids)) if c not in set(cold)]
-        if not survivors:
-            raise ValueError(
-                f"min_cell_fraction={min_cell_fraction} would retire every "
-                f"cell of {table}; a merge must leave a survivor"
-            )
-        moves = _merge_renumber_plan(cold, survivors)
-        write_table(
-            spark.createDataFrame(
-                [
-                    (
-                        ",".join(str(c) for c in cold),
-                        ",".join(str(s) for s in survivors),
-                        ",".join(f"{h}:{m}" for h, m in moves),
-                        json.dumps(centroids),
-                        _centroid_fingerprint(centroids),
-                        _centroid_fingerprint(
-                            _merged_matrix(centroids, moves, survivors)
-                        ),
-                    )
-                ],
-                "cold string, survivors string, moves string, "
-                "cents string, pre_fp string, post_fp string",
-            ),
-            man_t,
-        )
-
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # the fold-done marker is the commit point of the clean path's
-        # moved-row append: present → the append landed whole, skip the
-        # fold; absent on a resume → the append may be partial, run the
-        # anti-join repair rewrite instead
-        if not spark.catalog.tableExists(_merge_fold_marker_table(table)):
-            _merge_fold_cold_rows(
-                spark, table, cold, survivors, centroids,
-                impl, data_cols, id_col, vec_col,
-                repair=resuming,
-            )
-            _mark_fold_done(spark, table)
-        # drop the folded cold partitions — EXCEPT holes the renumber
-        # already filled: a resume landing after the renumber's source
-        # drops finds hole h repopulated with source m's rows (m gone
-        # is the completion signal for that pair), and re-dropping it
-        # would destroy the renumbered partition, not cold residue
-        present = _cell_partition_ids(spark, table)
-        filled = {h for h, m in moves if m not in present}
-        _drop_cell_partitions(
-            spark, table, sorted((set(cold) & present) - filled)
-        )
-        spark.catalog.refreshTable(table)
-        _merge_renumber_holes(spark, table, moves, data_cols)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    new_centroids = _merged_matrix(centroids, moves, survivors)
-    spark.catalog.refreshTable(table)
-    _finalize_index_contract(
-        spark,
-        table,
-        new_centroids,
-        impl=impl,
-        pq=meta.get("pq") == "true",
-        n_id_buckets=n_id_buckets,
-        id_col=id_col,
-        vec_col=vec_col,
+    centroids = [list(c) for c in ivf_load_centroids(spark, table)]
+    sizes = _cell_sizes(spark.table(table))
+    total = sum(sizes.values())
+    # a matrix cell with no rows is maximally cold
+    cold = sorted(
+        c
+        for c in range(len(centroids))
+        if sizes.get(c, 0) < min_cell_fraction * total
     )
-    _drop_merge_manifest(spark, table)
+    if not cold:
+        return centroids
+    survivors = [c for c in range(len(centroids)) if c not in set(cold)]
+    if not survivors:
+        raise ValueError(
+            f"min_cell_fraction={min_cell_fraction} would retire every "
+            f"cell of {table}; a merge must leave a survivor"
+        )
+    moves = _merge_renumber_plan(cold, survivors)
+    # each survivor's id after the renumber: itself, or the hole it fills
+    renumbered = {s: s for s in survivors} | {m: h for h, m in moves}
+
+    def cell_map(pairs):
+        return F.create_map(*[F.lit(x) for pair in pairs for x in pair])
+
+    index = spark.table(table)
+    is_cold = F.col("_cell").isin(cold)
+    cold_rows = index.filter(is_cold)
+    surv_cents = [centroids[s] for s in survivors]
+    if impl == "grid":
+        moved = (
+            grid_assign_cells(
+                cold_rows,
+                id_col,
+                vec_col,
+                surv_cents,
+                keep_cols=[c for c in data_cols if c != id_col],
+            )
+            .drop("_vq")
+            .withColumnRenamed("cell", "_pos")
+        )
+    else:
+        nearest = _nearest_cell_udf(np.asarray(surv_cents, dtype=np.float64))
+        moved = cold_rows.select(*data_cols, nearest(F.col(vec_col)).alias("_pos"))
+    pos_to_cell = cell_map((i, renumbered[s]) for i, s in enumerate(survivors))
+    rows = (
+        index.filter(~is_cold)
+        .select(
+            *data_cols,
+            cell_map(renumbered.items())[F.col("_cell")].cast("int").alias("_cell"),
+        )
+        .unionByName(
+            moved.select(
+                *data_cols, pos_to_cell[F.col("_pos")].cast("int").alias("_cell")
+            )
+        )
+    )
+    rows = _pinned_by_cell(rows)
+    new_centroids = _merged_matrix(centroids, moves, survivors)
+    _commit_rotation(
+        spark, table, rows, new_centroids, _carried_contract(meta), vec_col
+    )
     return new_centroids
 
 

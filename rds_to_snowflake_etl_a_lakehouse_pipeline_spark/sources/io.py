@@ -12,15 +12,15 @@ connection.
 Standing-index contract (shared by every incremental index family —
 ``minhash_*_index``, ``span_*_index``, ``ivf_*_index``, ``er_*_index``):
 
-- **build / reband / compact** rewrite through :func:`rewrite_layout`,
-  which writes the rows in the bucket layout the contract records and
+- **build / reband / compact** (and IVF's centroid-matrix rotations:
+  build, retrain, split, merge) rewrite through :func:`rewrite_layout`,
+  which writes the rows in the layout the contract records and
   commits the contract as the new table's properties in the same
   statement (``kind`` plus the layout/signature params: ``k``,
-  ``n_buckets``, ``num_hashes``, ``bands``, ``shingle_n``, …), so data
-  and contract are one commit; a build that leaves ``n_buckets`` unset
-  gets a count sized from its rows (:func:`_sized_buckets`), and every
-  later rewrite keeps it (IVF, which rotates its cells in place, still
-  stamps its contract with :func:`set_table_meta`);
+  ``n_buckets``, ``num_hashes``, ``bands``, ``shingle_n``,
+  ``centroid_fp``, …), so data and contract are one commit; a build
+  that leaves ``n_buckets`` unset gets a count sized from its rows
+  (:func:`_sized_buckets`), and every later rewrite keeps it;
 - **probe / append** call :func:`check_table_meta` first — explicit
   parameters must MATCH the recorded contract (mismatches raise,
   because a silent mismatch deduplicates/probes nothing), and layout
@@ -676,7 +676,8 @@ def rewrite_layout(
     rotate_skew: bool = False,
 ) -> None:
     """The one layout rewrite every standing-index family runs (build,
-    reband/reblock, compaction, the distinct-state rewrite): write
+    reband/reblock, compaction, the distinct-state rewrite, IVF's
+    centroid-matrix rotations): write
     ``rows`` in the layout ``contract`` records (:func:`_contract_layout`)
     with ``contract`` as the new table's properties. Data and contract
     are one commit (:func:`write_table` creates the table, or the

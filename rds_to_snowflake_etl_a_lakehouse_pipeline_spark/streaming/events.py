@@ -1272,17 +1272,18 @@ def stream_ivf_append(
     ``{table}_centroids`` companion at stream start. The held matrix is
     additionally RE-CHECKED every micro-batch against the table's
     recorded fingerprint (one constant-time SHOW TBLPROPERTIES — no
-    Spark job): when a maintenance ``ivf_retrain_index`` /
-    ``ivf_split_hot_cells`` rotates the matrix mid-stream, the next
-    batch reloads the companion and bins against the NEW cells instead
-    of dying on the stale-matrix check — maintenance is non-disruptive
-    to running ingests (rows are never mis-binned: the reload happens
-    BEFORE assignment, and the rotation itself is stage-and-swap).
+    Spark job): when a maintenance retrain, split or merge rotates the
+    matrix mid-stream, the next batch reloads the companion and bins
+    against the NEW cells instead of dying on the stale-matrix check —
+    maintenance is non-disruptive to running ingests (rows are never
+    mis-binned: the reload happens BEFORE assignment, and a rotation
+    commits rows and fingerprint in one create). The drift baseline
+    comes from the same contract read, at stream start and on each
+    resync, so it costs no Spark job.
     """
     from ..operators.similarity import (
         _centroid_fingerprint,
-        _drift_stats_table,
-        ivf_append_drift_reports,
+        _drift_baseline,
         ivf_append_index,
         ivf_load_centroids,
         pq_load_codebook,
@@ -1294,21 +1295,8 @@ def stream_ivf_append(
     spark0 = sdf.sparkSession
     if centroids is None:
         centroids = ivf_load_centroids(spark0, table)
-    _is_grid = get_table_meta(spark0, table).get("impl") == "grid"
-
-    def _build_stats():
-        # resolve the build-time drift baseline ONCE per held matrix
-        # (r17): it rotates exactly when the centroid matrix does, so
-        # the fingerprint resync below is the right invalidation point
-        # — reading it per batch was one fixed-cost job per micro-batch
-        try:
-            srow = spark0.table(_drift_stats_table(table)).first()
-            if srow is not None:
-                return (srow["mean_dist"], srow["p95_dist"])
-        except Exception:
-            pass  # pre-stats index: drift unmeasurable (same fallback
-            # as ivf_append_index's own companion read)
-        return (None, None)
+    meta = get_table_meta(spark0, table)
+    _is_grid = meta.get("impl") == "grid"
 
     def _codebook():
         # resolve the PQ companion ONCE per stream (and again on
@@ -1331,7 +1319,9 @@ def stream_ivf_append(
         "cents": centroids,
         "fp": _centroid_fingerprint(centroids),
         "cb": _codebook(),
-        "stats": _build_stats(),
+        # the drift baseline rotates with the matrix: the contract
+        # records both, so the fingerprint resync below refreshes it
+        "stats": _drift_baseline(meta),
     }
     reports: list[dict] = []
 
@@ -1339,7 +1329,8 @@ def stream_ivf_append(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        recorded = get_table_meta(spark, table).get("centroid_fp")
+        meta = get_table_meta(spark, table)
+        recorded = meta.get("centroid_fp")
         if recorded and recorded != held["fp"]:
             # maintenance rotated the quantizer since the last batch:
             # resync from the companion instead of failing the batch.
@@ -1351,7 +1342,7 @@ def stream_ivf_append(
             held["cents"] = ivf_load_centroids(spark, table)
             held["fp"] = _centroid_fingerprint(held["cents"])
             held["cb"] = _codebook()
-            held["stats"] = _build_stats()
+            held["stats"] = _drift_baseline(meta)
             reports.clear()
         existing = spark.table(table).select(F.col(id_col))
         # the replay-guard anti-join feeds ivf_append_index LAZILY: the

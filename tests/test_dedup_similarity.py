@@ -1224,7 +1224,8 @@ def test_ivf_append_index_extends_probes(spark):
 
 def test_ivf_append_drift_detection(spark):
     """ivf_build_index records the build-time quantization-distance
-    distribution; ivf_append_index measures each batch against it. An
+    distribution in the index contract; ivf_append_index measures each
+    batch against it. An
     in-distribution append must NOT recommend a rebuild; a shifted
     batch (every component +25) quantizes far worse and must trip the
     recommendation."""
@@ -1232,16 +1233,19 @@ def test_ivf_append_drift_detection(spark):
         ivf_append_index,
         ivf_build_index,
     )
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
+        get_table_meta,
+    )
 
     t = "ivf_drift_test"
     spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {t}_drift_stats")
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = emb.filter(F.col("vec_id") < 400)
     centroids = ivf_build_index(base, t, n_clusters=8)
 
-    srow = spark.table(f"{t}_drift_stats").first()
-    assert srow["p95_dist"] > 0 and srow["n_vectors"] == base.count()
+    meta = get_table_meta(spark, t)
+    build_p95 = float(meta["p95_dist"])
+    assert build_p95 > 0 and int(meta["n_vectors"]) == base.count()
 
     in_dist = emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 450))
     m1 = ivf_append_index(in_dist, t, centroids)
@@ -1258,7 +1262,7 @@ def test_ivf_append_drift_detection(spark):
     m2 = ivf_append_index(shifted, t, centroids)
     assert m2["rebuild_recommended"] is True
     assert m2["drift_ratio"] > 1.5
-    assert m2["build_p95_dist"] == srow["p95_dist"]
+    assert m2["build_p95_dist"] == build_p95
 
 
 def test_ivf_append_index_tolerates_dirty_batches(spark):
@@ -2171,7 +2175,6 @@ def test_ivf_centroid_fingerprint_contract(spark):
     rows = [(i, [float(i % 4), float((i * 7) % 5), 1.0]) for i in range(40)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     spark.sql("DROP TABLE IF EXISTS ivf_fp_idx")
-    spark.sql("DROP TABLE IF EXISTS ivf_fp_idx_drift_stats")
     cents = ivf_build_index(corpus, "ivf_fp_idx", n_clusters=4, seed=1)
     q = spark.createDataFrame(
         [(100, [1.0, 2.0, 1.0])], "query_id long, embedding array<double>"
@@ -2343,7 +2346,6 @@ def test_ivf_index_generic_compact_and_health(spark):
     rows = [(i, [float(i % 4), float((i * 7) % 5), 1.0]) for i in range(40)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     spark.sql("DROP TABLE IF EXISTS ivf_gc_idx")
-    spark.sql("DROP TABLE IF EXISTS ivf_gc_idx_drift_stats")
     cents = ivf_build_index(
         corpus, "ivf_gc_idx", n_clusters=4, seed=1, n_id_buckets=2
     )
@@ -2511,7 +2513,6 @@ def test_ivf_retrain_pq_index_keeps_codes(spark):
     t = "ivfpq_rt"
     for s in (
         t,
-        f"{t}_drift_stats",
         f"{t}_drift_log",
         f"{t}_centroids",
         f"{t}_pq_codebook",
@@ -2550,7 +2551,7 @@ def test_ivf_companion_centroids_resolve_when_none(spark):
     rows = [(i, [float(i % 7), float((i * 3) % 5)]) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     t = "ivf_none_cents"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     cents = ivf_build_index(df, t, n_clusters=4, impl="grid")
     loaded = ivf_load_centroids(spark, t)
@@ -2575,11 +2576,11 @@ def test_ivf_companion_centroids_resolve_when_none(spark):
 def test_ivf_split_hot_cells_partition_scoped(spark):
     """Hot-cell split: a drifted blob crams one cell past the hot
     threshold; ivf_split_hot_cells splits ONLY that cell (2-means on
-    its own rows), rewriting just the hot + new cell directories —
-    untouched cells' files stay byte-identical — while rows are
-    preserved exactly, the matrix grows to k+1, the stale matrix is
-    rejected, and probes with the rotated matrix find the drifted
-    region in its own cell."""
+    its own rows) — untouched cells keep their row sets under their
+    cell ids, and the rewrite keeps the recorded id-bucket spec — while
+    rows are preserved exactly, the matrix grows to k+1, the stale
+    matrix is rejected, and probes with the rotated matrix find the
+    drifted region in its own cell."""
     import pytest
 
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.similarity import (
@@ -2589,9 +2590,25 @@ def test_ivf_split_hot_cells_partition_scoped(spark):
         ivf_query_index,
         ivf_split_hot_cells,
     )
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
+        get_table_meta,
+    )
+
+    def bucket_spec():
+        rows = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
+        }
+        return rows["Num Buckets"], rows["Bucket Columns"]
+
+    def cell_rows():
+        by_cell: dict = {}
+        for r in spark.table(t).select("_cell", "vec_id").collect():
+            by_cell.setdefault(r["_cell"], set()).add(r["vec_id"])
+        return by_cell
 
     t = "ivf_split_hot"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     import random
 
@@ -2624,11 +2641,9 @@ def test_ivf_split_hot_cells_partition_scoped(spark):
     hot_cell = max(sizes, key=sizes.get)
     assert sizes[hot_cell] == 50  # its own blob + all 30 drifted rows
     ids_before = sorted(r["vec_id"] for r in spark.table(t).collect())
-    files_before = {
-        c: sorted(f for f in spark.table(t).inputFiles() if f"_cell={c}/" in f)
-        for c in sizes
-        if c != hot_cell
-    }
+    rows_before = cell_rows()
+    spec_before = bucket_spec()
+    assert spec_before == ("8", "[`vec_id`]")
 
     new_cents = ivf_split_hot_cells(spark, t, max_cell_fraction=0.25)
     assert len(new_cents) == 4
@@ -2642,12 +2657,16 @@ def test_ivf_split_hot_cells_partition_scoped(spark):
     }
     assert len(sizes2) == 4
     assert {sizes2[hot_cell], sizes2[3]} == {20, 30}
-    # untouched cells' files are byte-identical (partition-scoped write)
-    for c, before in files_before.items():
-        after = sorted(
-            f for f in spark.table(t).inputFiles() if f"_cell={c}/" in f
-        )
-        assert after == before, c
+    # untouched cells keep their rows under their ids, and the rewrite
+    # kept the recorded id-bucket spec
+    rows_after = cell_rows()
+    for c, before in rows_before.items():
+        if c != hot_cell:
+            assert rows_after[c] == before, c
+    assert rows_after[hot_cell] | rows_after[3] == rows_before[hot_cell]
+    assert bucket_spec() == spec_before
+    meta = get_table_meta(spark, t)
+    assert (meta["n_buckets"], meta["bucket_cols"]) == ("8", "vec_id")
 
     # stale matrix rejected; rotated matrix finds the drifted region
     q = spark.createDataFrame(
@@ -2678,7 +2697,7 @@ def test_ivf_split_preserves_pq_codes(spark):
     )
 
     t = "ivfpq_split"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     rng = np.random.default_rng(13)
     rows = [(i, rng.standard_normal(16).tolist()) for i in range(60)]
@@ -2719,7 +2738,7 @@ def test_ivf_split_skips_degenerate_hot_cell(spark):
     )
 
     t = "ivf_split_degen"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     # three point-masses: the (0,0) mass is hot (20 of 30 rows) AND
     # all-identical — the degenerate case a 2-means cannot separate
@@ -2750,7 +2769,7 @@ def test_ivf_split_rounds_until_no_hot_cell(spark):
     )
 
     t = "ivf_split_rounds"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     import random
 
@@ -2784,11 +2803,11 @@ def test_ivf_split_rounds_until_no_hot_cell(spark):
 
 def test_ivf_split_preserves_missing_bucket_spec(spark):
     """Splitting a LEGACY pre-bucketing index (no recorded bucket spec,
-    unbucketed files) must not fabricate one: _finalize_index_contract
-    would otherwise record n_buckets=8/bucket_cols for files that are
-    not bucket-aligned, making the next ivf_append_index attempt a
-    bucketed append into an unbucketed table and inflating
-    index_table_health's fanout denominator."""
+    unbucketed files) must not fabricate one: the split's rewrite
+    takes its layout from the recorded contract (io._contract_layout),
+    so recording n_buckets=8/bucket_cols here would make the next
+    ivf_append_index attempt a bucketed append into an unbucketed
+    table and inflate index_table_health's fanout denominator."""
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.similarity import (
         ivf_append_index,
         ivf_build_index,
@@ -2801,7 +2820,7 @@ def test_ivf_split_preserves_missing_bucket_spec(spark):
     )
 
     t = "ivf_split_legacy"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     import random
 
@@ -2853,8 +2872,7 @@ def test_ivf_merge_cold_cells_retires_and_renumbers(spark):
     """Round 16: ivf_merge_cold_cells retires underfull cells —
     their rows fold into the nearest SURVIVING cell, the cold
     partitions are dropped, the dense 0..k-1 id invariant is restored
-    by swap-remove renumbering (one partition rewrite per hole), the
-    contract rotates (stale matrices rejected), and probes over the
+    by swap-remove renumbering, the contract rotates (stale matrices rejected), and probes over the
     shrunk matrix return the exact top-k. A second merge with nothing
     cold is a no-op that leaves the contract untouched."""
     import random
@@ -2870,7 +2888,7 @@ def test_ivf_merge_cold_cells_retires_and_renumbers(spark):
     )
 
     t = "ivf_merge_cold"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     rng = random.Random(41)
     rows, vid = [], 0
@@ -2931,8 +2949,8 @@ def test_ivf_merge_cold_cells_retires_and_renumbers(spark):
 def test_ivf_merge_cold_cells_preserves_pq_codes_and_buckets(spark):
     """Merged (moved + renumbered) rows keep their PQ codes untouched
     (codes encode the vector, not the cell) and the id-bucket spec
-    survives the append + renumber — the same layout-contract rides
-    the split already guarantees."""
+    survives the merge's rewrite — the same layout contract the split
+    keeps."""
     import numpy as np
 
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.similarity import (
@@ -2946,7 +2964,7 @@ def test_ivf_merge_cold_cells_preserves_pq_codes_and_buckets(spark):
 
     t = "ivf_merge_pq"
     for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
+        t, f"{t}_drift_log", f"{t}_centroids",
         f"{t}_pq_codebook",
     ):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
@@ -2971,415 +2989,3 @@ def test_ivf_merge_cold_cells_preserves_pq_codes_and_buckets(spark):
     meta = get_table_meta(spark, t)
     assert meta["n_clusters"] == "2"
     assert meta["bucket_cols"] == "vec_id"  # bucket spec survived
-
-
-def _build_merge_crash_fixture(spark, t):
-    """A deterministically fragmented index for the merge crash-safety
-    tests: four 40-row blobs build four healthy cells, then partition
-    ``_cell=0`` is thinned to 2 rows by a dynamic partition overwrite
-    (the engine's own delete mechanics) — forcing cold == [0] with
-    survivors [1, 2, 3] REGARDLESS of which blob the fit put where, so
-    the plan always has a real renumber move (hole 0 <- cell 3). Relying
-    on KMeans to land a sliver blob on a low cell id is partitioning-
-    dependent and flaky. Returns the post-thinning corpus (122 rows)."""
-    import random
-
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.similarity import (
-        ivf_build_index,
-    )
-
-    for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-        f"{t}_merge_manifest", f"{t}_merge_fold_done",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    rng = random.Random(41)
-    rows, vid = [], 0
-    for cx, cy in ((0.0, 0.0), (10.0, 0.0), (0.0, 10.0), (10.0, 10.0)):
-        for _ in range(40):
-            rows.append(
-                (vid, [cx + rng.uniform(-0.2, 0.2), cy + rng.uniform(-0.2, 0.2)])
-            )
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ivf_build_index(df, t, n_clusters=4, seed=19)
-    keep = (
-        spark.table(t)
-        .filter(F.col("_cell") == 0)
-        .orderBy("vec_id")
-        .limit(2)
-        .select("vec_id", "embedding", "_cell")
-        .localCheckpoint(eager=True)
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        keep.write.mode("overwrite").insertInto(t)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    spark.catalog.refreshTable(t)
-    return spark.table(t).select("vec_id", "embedding").localCheckpoint(
-        eager=True
-    )
-
-
-def _assert_merged_converged(spark, t, df):
-    """Post-merge invariants every crash-resume must restore: every row
-    exactly once, dense 0..2 cells, rotated contract, exact probes."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_load_centroids,
-        ivf_query_index,
-    )
-
-    assert not spark.catalog.tableExists(f"{t}_merge_manifest")
-    assert not spark.catalog.tableExists(f"{t}_merge_fold_done")
-    assert spark.table(t).count() == 122
-    dup = (
-        spark.table(t).groupBy("vec_id").count().filter(F.col("count") > 1)
-    )
-    assert dup.count() == 0  # a crashed fold/renumber duplicated nothing
-    cells = {
-        r["_cell"] for r in spark.table(t).select("_cell").distinct().collect()
-    }
-    assert cells == {0, 1, 2}
-    merged = ivf_load_centroids(spark, t)
-    assert len(merged) == 3
-    qs = spark.createDataFrame(
-        [(0, [0.0, 10.0]), (1, [10.0, 10.0]), (2, [0.0, 0.0])],
-        "query_id long, embedding array<double>",
-    )
-    truth = {
-        (r["query_id"], r["vec_id"])
-        for r in brute_force_topk(df, qs, k=5).collect()
-    }
-    got = {
-        (r["query_id"], r["vec_id"])
-        for r in ivf_query_index(spark, t, qs, merged, k=5, n_probe=3).collect()
-    }
-    assert got == truth
-
-
-@pytest.mark.slow
-def test_ivf_merge_crash_windows_resume_and_converge(spark, monkeypatch):
-    """Round 17 (ADVICE r16): ivf_merge_cold_cells is crash-safe and
-    idempotent. The decided plan persists to a {table}_merge_manifest
-    before any mutation; the clean-path fold is a cheap moved-row
-    APPEND committed by the {table}_merge_fold_done marker (a resume
-    without the marker runs the anti-join repair rewrite instead); the
-    renumber is one overwrite job + one drop statement — so a merge
-    killed at ANY of its four windows (before the fold's commit marker,
-    after it but before the cold drops, after the renumber write,
-    inside the contract rotation) resumes the recorded plan on re-run
-    and converges to exactly the clean-run state. The round-16 design
-    appended cold rows with NO commit marker: a crash between the
-    append and the drops duplicated every cold row PERMANENTLY
-    (re-running appended a second copy). This test fault-injects each
-    window and pins WHICH fold path the resume takes: the expensive
-    anti-join rewrite runs ONLY when the marker is missing (repair),
-    never on a clean merge or a post-marker resume — the VERDICT r17
-    review caught the first cut running it on every merge."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    real_drop = sim._drop_cell_partitions
-    real_finalize = sim._finalize_index_contract
-    real_mark = sim._mark_fold_done
-    real_fold = sim._merge_fold_cold_rows
-    fold_calls: list[bool] = []
-
-    def spy_fold(*a, **kw):
-        fold_calls.append(bool(kw.get("repair", False)))
-        return real_fold(*a, **kw)
-
-    monkeypatch.setattr(sim, "_merge_fold_cold_rows", spy_fold)
-
-    def crash_at(which, t):
-        """Return (attr_name, bomb) arming a one-shot fault."""
-        state = {"n": 0}
-        if which == "fold_marker":  # after the fold append, before its
-            def bomb(spark_, table):  # commit marker -> resume repairs
-                if table == t and state["n"] == 0:
-                    state["n"] = 1
-                    raise RuntimeError("injected: crash before fold marker")
-                return real_mark(spark_, table)
-            return ("_mark_fold_done", bomb)
-        if which == "fold_drop":  # after the fold commit, before drops
-            def bomb(spark_, table, cells):
-                if table == t and cells:
-                    state["n"] += 1
-                    if state["n"] == 1:
-                        raise RuntimeError("injected: crash before cold drops")
-                return real_drop(spark_, table, cells)
-            return ("_drop_cell_partitions", bomb)
-        if which == "renumber_drop":  # after renumber write, before drops
-            def bomb(spark_, table, cells):
-                # first drop call = cold partitions (let it through),
-                # second = renumber source partitions (crash)
-                if table == t and cells:
-                    state["n"] += 1
-                    if state["n"] == 2:
-                        raise RuntimeError("injected: crash before source drops")
-                return real_drop(spark_, table, cells)
-            return ("_drop_cell_partitions", bomb)
-        def bomb(spark_, table, *a, **kw):  # inside the contract rotation
-            if table == t and state["n"] == 0:
-                state["n"] = 1
-                raise RuntimeError("injected: crash inside finalize")
-            return real_finalize(spark_, table, *a, **kw)
-        return ("_finalize_index_contract", bomb)
-
-    reals = {
-        "_mark_fold_done": real_mark,
-        "_drop_cell_partitions": real_drop,
-        "_finalize_index_contract": real_finalize,
-    }
-    # window -> the fold-path sequence (crashed run + resume) to pin:
-    # False = clean append, True = anti-join repair, absent = skipped
-    expected_folds = {
-        "fold_marker": [False, True],  # marker missing -> resume repairs
-        "fold_drop": [False],  # marker committed -> resume skips the fold
-        "renumber_drop": [False],
-        "finalize": [False],
-    }
-    for i, which in enumerate(
-        ("fold_marker", "fold_drop", "renumber_drop", "finalize")
-    ):
-        t = f"ivf_merge_crash_{i}"
-        df = _build_merge_crash_fixture(spark, t)
-        fold_calls.clear()
-        name, bomb = crash_at(which, t)
-        monkeypatch.setattr(sim, name, bomb)
-        with pytest.raises(RuntimeError, match="injected"):
-            sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)
-        monkeypatch.setattr(sim, name, reals[name])
-        # the pending plan is visible (maintenance flags it for resume)
-        assert spark.catalog.tableExists(f"{t}_merge_manifest")
-        sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)
-        assert fold_calls == expected_folds[which], (which, fold_calls)
-        _assert_merged_converged(spark, t, df)
-        for s in (
-            t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_ivf_pending_merge_fences_other_rotations(spark, monkeypatch):
-    """Round 17 review: a crashed merge's pending manifest must not be
-    rotated out from under — a retrain/split over the half-merged
-    layout would reassign the duplicated cold rows into the rebuilt
-    index permanently, and a rebuild crashing before it could retire
-    the plan would leave it resumable against brand-new rows. ALL
-    THREE matrix-rotating verbs therefore REFUSE while the manifest is
-    pending; resuming the merge (which converges from any crash state)
-    is the one path forward, after which every verb runs normally. An
-    orphaned manifest whose index table was dropped out from under it
-    is retired by a fresh build (nothing half-merged remains)."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    t = "ivf_merge_fence"
-    df = _build_merge_crash_fixture(spark, t)
-    real_drop = sim._drop_cell_partitions
-
-    def bomb(spark_, table, cells):
-        if table == t and cells:
-            raise RuntimeError("injected: crash before cold drops")
-        return real_drop(spark_, table, cells)
-
-    monkeypatch.setattr(sim, "_drop_cell_partitions", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)
-    monkeypatch.setattr(sim, "_drop_cell_partitions", real_drop)
-    assert spark.catalog.tableExists(f"{t}_merge_manifest")
-
-    with pytest.raises(ValueError, match="pending.*merge_manifest"):
-        sim.ivf_retrain_index(spark, t)
-    with pytest.raises(ValueError, match="pending.*merge_manifest"):
-        sim.ivf_split_hot_cells(spark, t, max_cell_fraction=0.25)
-    with pytest.raises(ValueError, match="pending.*merge_manifest"):
-        sim.ivf_build_index(df, t, n_clusters=4, seed=19)
-    # all three refused before mutating anything: plan still pending,
-    # index rows untouched by the refused verbs
-    assert spark.catalog.tableExists(f"{t}_merge_manifest")
-
-    # the one path forward: resume the merge — it converges — and the
-    # fences lift
-    sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)
-    _assert_merged_converged(spark, t, df)
-    sim.ivf_build_index(df, t, n_clusters=4, seed=19)
-    assert spark.table(t).count() == 122
-    dups = (
-        spark.table(t).groupBy("vec_id").count().filter(F.col("count") > 1)
-    )
-    assert dups.count() == 0  # the rebuild holds exactly one copy per id
-
-    # an ORPHANED manifest (index table dropped, companion left) does
-    # not block a fresh build: nothing half-merged remains, so the
-    # build retires it and proceeds
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        write_table,
-    )
-
-    write_table(
-        spark.createDataFrame(
-            [("", "", "", "[]", None, None)],
-            "cold string, survivors string, moves string, "
-            "cents string, pre_fp string, post_fp string",
-        ),
-        f"{t}_merge_manifest",
-    )
-    sim.ivf_build_index(df, t, n_clusters=4, seed=19)
-    assert not spark.catalog.tableExists(f"{t}_merge_manifest")
-    assert spark.table(t).count() == 122
-    for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-def _stranded_split_state(spark, t, monkeypatch):
-    """Build the split's crash-window state: a hot two-mode cell whose
-    split wrote the child partitions but crashed inside the contract
-    rotation — partition ids {0..4} with a 4-slot matrix, so the rows
-    under the stranded id are invisible to every probe. Returns
-    (full_corpus_df, stranded_vec_ids)."""
-    import random
-
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-        f"{t}_merge_manifest", f"{t}_merge_fold_done",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    rng = random.Random(47)
-    rows, vid = [], 0
-    for cx, cy in ((0.0, 0.0), (10.0, 0.0), (0.0, 10.0), (10.0, 10.0)):
-        for _ in range(40):
-            rows.append(
-                (vid, [cx + rng.uniform(-0.2, 0.2), cy + rng.uniform(-0.2, 0.2)])
-            )
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    sim.ivf_build_index(df, t, n_clusters=4, seed=19)
-    # overfill the (0,0) cell with a SECOND mode at (2,2) — still
-    # nearest to the (0,0) centroid, so direct assignment matches the
-    # argmin contract — making that cell hot (120 of 280 rows) and its
-    # 2-means split non-degenerate
-    cents = sim.ivf_load_centroids(spark, t)
-    c0 = min(
-        range(len(cents)),
-        key=lambda i: (cents[i][0] - 0.0) ** 2 + (cents[i][1] - 0.0) ** 2,
-    )
-    extra = [
-        (1000 + i, [2.0 + rng.uniform(-0.2, 0.2), 2.0 + rng.uniform(-0.2, 0.2)])
-        for i in range(80)
-    ]
-    extra_df = spark.createDataFrame(
-        [(v, e, c0) for v, e in extra],
-        "vec_id long, embedding array<double>, _cell int",
-    )
-    extra_df.write.mode("append").insertInto(t)
-    spark.catalog.refreshTable(t)
-    full = df.unionByName(
-        spark.createDataFrame(extra, "vec_id long, embedding array<double>")
-    ).localCheckpoint(eager=True)
-
-    real_finalize = sim._finalize_index_contract
-    state = {"n": 0}
-
-    def bomb(spark_, table, *a, **kw):
-        if table == t and state["n"] == 0:
-            state["n"] = 1
-            raise RuntimeError("injected: crash inside finalize")
-        return real_finalize(spark_, table, *a, **kw)
-
-    monkeypatch.setattr(sim, "_finalize_index_contract", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        sim.ivf_split_hot_cells(spark, t, max_cell_fraction=0.25, rounds=1)
-    monkeypatch.setattr(sim, "_finalize_index_contract", real_finalize)
-
-    assert len(sim.ivf_load_centroids(spark, t)) == 4  # rotation lost
-    parts = sim._cell_partition_ids(spark, t)
-    assert parts == {0, 1, 2, 3, 4}  # ...but the child partition landed
-    stranded = {
-        r["vec_id"]
-        for r in spark.table(t).filter(F.col("_cell") == 4).collect()
-    }
-    assert stranded  # rows really live beyond the matrix
-    return full, stranded
-
-
-@pytest.mark.slow
-def test_ivf_split_crash_strands_cells_and_adoption_recovers(
-    spark, monkeypatch
-):
-    """Round 17 crash-window audit: a split crashing between its child
-    write and the contract rotation strands the child partition beyond
-    the matrix — no probe routes there (silent recall loss), and a
-    later split that found it hot would index past the matrix. First
-    DEMONSTRATE the hole (probes miss every stranded row that
-    brute-force truth includes), then pin the recovery:
-    ivf_adopt_stranded_cells re-attaches the partition with its own
-    mean vector and rotates the contract, after which probes are exact
-    again. A plain re-run of ivf_split_hot_cells adopts the same way
-    (the adoption runs at split start)."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    t = "ivf_split_strand"
-    full, stranded = _stranded_split_state(spark, t, monkeypatch)
-    qs = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [2.0, 2.0])],
-        "query_id long, embedding array<double>",
-    )
-    truth = {
-        (r["query_id"], r["vec_id"])
-        for r in sim.brute_force_topk(full, qs, k=5).collect()
-    }
-    cents = sim.ivf_load_centroids(spark, t)
-    got = {
-        (r["query_id"], r["vec_id"])
-        for r in sim.ivf_query_index(
-            spark, t, qs, cents, k=5, n_probe=len(cents)
-        ).collect()
-    }
-    # the hole: truth reaches stranded rows, probes cannot
-    assert {v for _, v in truth} & stranded
-    assert not {v for _, v in got} & stranded
-    assert got != truth
-
-    adopted = sim.ivf_adopt_stranded_cells(spark, t)
-    assert len(adopted) == 5  # matrix extended over the stranded cell
-    got2 = {
-        (r["query_id"], r["vec_id"])
-        for r in sim.ivf_query_index(
-            spark, t, qs, adopted, k=5, n_probe=len(adopted)
-        ).collect()
-    }
-    assert got2 == truth
-    # the adoption also refreshed the crashed split's PARENT cell (its
-    # rows were rewritten but the matrix update was lost, leaving the
-    # recorded centroid at the mean of BOTH modes — a routing hazard
-    # at realistic n_probe): every present cell's centroid must now be
-    # its partition's own mean
-    by_cell: dict[int, list[list[float]]] = {}
-    for r in spark.table(t).select("_cell", "embedding").collect():
-        by_cell.setdefault(r["_cell"], []).append(list(r["embedding"]))
-    for c, vecs in by_cell.items():
-        want = [sum(v[d] for v in vecs) / len(vecs) for d in range(2)]
-        assert all(
-            abs(adopted[c][d] - want[d]) < 1e-9 for d in range(2)
-        ), (c, adopted[c], want)
-    # idempotent: nothing stranded -> matrix unchanged, no rotation
-    assert sim.ivf_adopt_stranded_cells(spark, t) == adopted
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")

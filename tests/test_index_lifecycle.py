@@ -1,14 +1,16 @@
-"""The standing-index lifecycle shared by every bucketed family
+"""The standing-index lifecycle shared by every family
 (``io.rewrite_layout``): the bucket layout a build writes is the one
 its contract records, a key-re-deriving rewrite rotates the skew
 epoch and drops the skew log, compaction leaves the contract exactly
-as it was, and data and contract are one commit — a rewrite that fails
-at any step leaves the old data under the old contract or the new data
-under the new one, and probes work with no resume step."""
+as it was, and data and contract are one commit — a rewrite (or an
+IVF centroid-matrix rotation) that fails at any step leaves the old
+data under the old contract or the new data under the new one, and
+probes work with no resume step."""
 
 from __future__ import annotations
 
 import os
+import random
 from urllib.parse import urlparse
 
 import pytest
@@ -20,6 +22,9 @@ from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import dedup as d
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import entity as ent
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
     multimodal as mm,
+)
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
+    similarity as sim,
 )
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources import io
 
@@ -79,7 +84,10 @@ def _bucket_spec(spark, t):
 
 
 def _drop(spark, t):
-    for s in (t, f"{t}_skew_log", f"{t}__relabel", f"{t}__stage"):
+    for s in (
+        t, f"{t}_skew_log", f"{t}__relabel", f"{t}__stage", f"{t}_drift_log",
+        f"{t}_centroids",
+    ):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 
@@ -189,6 +197,14 @@ def test_first_build_create_failure_leaves_no_table(spark):
 # contract or, once ``heal_interrupted_swap`` completes the rename,
 # the new data under the new contract, and a probe must work with no
 # resume step. A re-run of the verb then converges.
+#
+# The IVF verbs (build over an existing index, retrain, split, merge)
+# rotate the centroid matrix. Before their commit they rewrite the
+# ``{t}_centroids`` companion (old and new matrix, keyed by
+# fingerprint) and drop the drift log, so those two statements are
+# failure steps too. They run the grid impl, which makes a rotation a
+# pure function of the rows, so an interrupted run can be compared
+# with an uninterrupted twin.
 
 
 class _Crash(Exception):
@@ -198,9 +214,12 @@ class _Crash(Exception):
 def _statement(t, step):
     return {
         "skew_log": f"DROP TABLE IF EXISTS {t}_skew_log",
+        "centroids": f"CREATE TABLE {t}_centroids__stage ",
+        "drift_log": f"DROP TABLE IF EXISTS {t}_drift_log",
         "create": f"CREATE TABLE {t}__stage ",
         "drop": f"DROP TABLE IF EXISTS {t}",
         "rename": f"ALTER TABLE {t}__stage RENAME TO {t}",
+        "msck": f"MSCK REPAIR TABLE {t}",
     }[step]
 
 
@@ -223,10 +242,19 @@ def _crash_at(monkeypatch, statement, verb):
 
 def _state(spark, t):
     """(rows, file count, contract) of ``t``: the file count tells a
-    compaction's output from its input."""
+    compaction's output from its input. An IVF index's contract is
+    taken as its recorded fingerprint and the matrix
+    ``ivf_load_centroids`` resolves: that pair is what routes probes
+    (the drift baseline beside it is an approximate aggregate)."""
     df = spark.table(t)
     rows = sorted(str(tuple(r)) for r in df.collect())
-    return rows, len(df.inputFiles()), io.get_table_meta(spark, t)
+    meta = io.get_table_meta(spark, t)
+    if meta.get("kind") == "ivf":
+        meta = {
+            "centroid_fp": meta["centroid_fp"],
+            "matrix": sim.ivf_load_centroids(spark, t),
+        }
+    return rows, len(df.inputFiles()), meta
 
 
 _ER_OLD, _ER_NEW = "right(name, 4)", "right(text, 8)"
@@ -261,9 +289,74 @@ def _minhash_hits(spark, t):
     )
 
 
+def _blobs(spark, spec, start=0):
+    rng = random.Random(3)
+    rows, vid = [], start
+    for cx, cy, n in spec:
+        for _ in range(n):
+            rows.append(
+                (vid, [cx + rng.uniform(-0.2, 0.2), cy + rng.uniform(-0.2, 0.2)])
+            )
+            vid += 1
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _ivf_build(spark, t, corpus, k):
+    sim.ivf_build_index(corpus, t, n_clusters=k, impl="grid", n_id_buckets=2)
+
+
+def _ivf_probe(spark, t):
+    q = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [40.0, 40.0])], "query_id long, embedding array<double>"
+    )
+    return sim.ivf_query_index(
+        spark, t, q, sim.ivf_load_centroids(spark, t), k=3, n_probe=2, impl="grid"
+    ).count() == 6
+
+
+def _ivf_case(spark, verb, t):
+    """The old state of an IVF verb: a grid index with a drift-log row
+    (so the log drop has something to drop). Each verb is idempotent
+    from its own new state, so a re-run converges."""
+    three = [(0.0, 0.0, 20), (10.0, 0.0, 20), (0.0, 10.0, 20)]
+    if verb == "ivf_build":
+        corpus = _blobs(spark, three + [(10.0, 10.0, 20)])
+        _ivf_build(spark, t, corpus, 3)
+        run = lambda: _ivf_build(spark, t, corpus, 4)  # noqa: E731
+    elif verb == "ivf_merge":
+        spec = [(0.0, 0.0, 40), (10.0, 0.0, 40), (0.0, 10.0, 18), (10.0, 10.0, 2)]
+        _ivf_build(spark, t, _blobs(spark, spec), 4)
+        run = lambda: sim.ivf_merge_cold_cells(  # noqa: E731
+            spark, t, min_cell_fraction=0.1
+        )
+    else:
+        # a far blob appended under the old matrix: the retrain refits
+        # around it, the split finds its cell hot (50 of 90 rows)
+        _ivf_build(spark, t, _blobs(spark, three), 3)
+        n = 20 if verb == "ivf_retrain" else 30
+        sim.ivf_append_index(_blobs(spark, [(40.0, 40.0, n)], start=100), t)
+        run = (
+            (lambda: sim.ivf_retrain_index(spark, t))
+            if verb == "ivf_retrain"
+            else (lambda: sim.ivf_split_hot_cells(spark, t, max_cell_fraction=0.35))
+        )
+    if not spark.catalog.tableExists(f"{t}_drift_log"):
+        sim.ivf_append_drift_reports(spark, t, [dict(DRIFT_REPORT)])
+    return run, lambda: _ivf_probe(spark, t)
+
+
+DRIFT_REPORT = {
+    "n_appended": 1, "n_dropped": 0, "batch_mean_dist": 1.0,
+    "batch_p95_dist": 1.0, "drift_ratio": 1.0, "rebuild_recommended": False,
+    "batch_top_cell": 0, "batch_top_cell_fraction": 1.0, "batch_n_cells": 1,
+}
+
+
 def _case(spark, verb, t):
     """Build the old state of ``t`` for ``verb``; return ``(run, probe)``:
     the verb itself and a probe that must work on either state."""
+    if verb in _IVF:
+        return _ivf_case(spark, verb, t)
     if verb == "minhash_reband":
         dd.minhash_build_index(_docs(spark), t, bands=8, n_buckets=4)
         return (
@@ -342,10 +435,19 @@ def _case(spark, verb, t):
 
 
 _ROTATING = ("minhash_reband", "hamming_reband", "er_reblock")
+_IVF = ("ivf_build", "ivf_retrain", "ivf_split", "ivf_merge")
 _VERBS = _ROTATING + (
     "compact_index_table", "er_compact", "distinct_state_rewrite", "exact_rebuild",
-)
+) + _IVF
 _NEW_STATE: dict = {}
+
+
+def _steps(verb):
+    """The statements of ``verb``'s rewrite a crash is injected at."""
+    before = ("skew_log",) if verb in _ROTATING else ()
+    if verb in _IVF:
+        before = ("centroids", "drift_log")
+    return before + ("create", "drop", "rename")
 
 
 def _new_state(spark, verb):
@@ -370,13 +472,7 @@ def _no_epoch(state):
 
 
 @pytest.mark.parametrize(
-    "verb,step",
-    [
-        (v, s)
-        for v in _VERBS
-        for s in ("skew_log", "create", "drop", "rename")
-        if s != "skew_log" or v in _ROTATING
-    ],
+    "verb,step", [(v, s) for v in _VERBS for s in _steps(v)]
 )
 def test_rewrite_failure_leaves_old_or_new_contract(spark, monkeypatch, verb, step):
     t = f"lifecycle_crash_{verb}"
@@ -414,6 +510,27 @@ def test_rewrite_failure_leaves_old_or_new_contract(spark, monkeypatch, verb, st
         _drop(spark, direct)
     if verb == "er_reblock":
         assert _er_probe(spark, t, "right(name, 8)")
+    if verb in _IVF:
+        assert not spark.catalog.tableExists(f"{t}_drift_log")
+    _drop(spark, t)
+
+
+def test_ivf_build_crash_after_data_commit_keeps_rows_and_matrix_together(
+    spark, monkeypatch
+):
+    """A rebuild killed right after its rows are committed (at the
+    MSCK that follows the RENAME) leaves the new rows under the new
+    fingerprint: the fingerprint rides the create, so no step after
+    the data commit can leave rows binned by one matrix under another
+    matrix's fingerprint."""
+    t = "lifecycle_crash_ivf_after_commit"
+    _drop(spark, t)
+    new = _new_state(spark, "ivf_build")
+    run, probe = _case(spark, "ivf_build", t)
+    _crash_at(monkeypatch, _statement(t, "msck"), run)
+    io.heal_interrupted_swap(spark, t)  # re-lists the renamed partitions
+    assert _state(spark, t) == new
+    assert probe()
     _drop(spark, t)
 
 

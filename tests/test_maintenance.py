@@ -219,7 +219,7 @@ def test_ivf_drift_retrain_restores_recall(spark):
     )
 
     t = "maint_ivf_drift"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
     rng = random.Random(7)
@@ -348,7 +348,7 @@ def test_ivf_localized_drift_chooses_split(spark):
     )
 
     t = "maint_ivf_local"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
     rng = random.Random(11)
@@ -442,7 +442,6 @@ def test_ivf_pq_remediated_through_sweep(spark):
     t = "maint_ivf_pq"
     for s in (
         t,
-        f"{t}_drift_stats",
         f"{t}_drift_log",
         f"{t}_centroids",
         f"{t}_pq_codebook",
@@ -537,7 +536,7 @@ def test_ivf_split_budget_escalates_to_retrain(spark):
     )
 
     t = "maint_ivf_budget"
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     import random
 
@@ -621,8 +620,7 @@ def _fragmented_ivf(spark, t):
     )
 
     for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-        f"{t}_merge_manifest", f"{t}_merge_fold_done",
+        t, f"{t}_drift_log", f"{t}_centroids",
     ):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
     rng = random.Random(43)
@@ -681,7 +679,6 @@ def test_maintenance_merges_cold_cells(spark):
     assert rep["merge_recommended"] is True
     assert rep["n_cold_cells"] == 1
     assert rep["retrain_recommended"] is False  # fragmentation != drift
-    assert rep["pending_merge"] is False
 
     out = run_maintenance(spark, apply=True, retrain_ivf=False, tables=(t,))
     applied = out["applied"].get(f"default.{t}", "")
@@ -710,178 +707,7 @@ def test_maintenance_merges_cold_cells(spark):
 
     rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
     assert rep["merge_recommended"] is False  # the flag cleared
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_maintenance_resumes_crashed_merge(spark, monkeypatch):
-    """A merge that crashed mid-plan leaves its {table}_merge_manifest
-    pending; the sweep reports pending_merge (merge_recommended rides
-    along regardless of current cell sizes) and an apply-mode
-    run_maintenance RESUMES the recorded plan to convergence."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        health_sweep,
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    t = "maint_merge_resume"
-    _fragmented_ivf(spark, t)
-    real_drop = sim._drop_cell_partitions
-
-    def bomb(spark_, table, cells):
-        if table == t and cells:
-            raise RuntimeError("injected: crash before cold drops")
-        return real_drop(spark_, table, cells)
-
-    monkeypatch.setattr(sim, "_drop_cell_partitions", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)
-    monkeypatch.setattr(sim, "_drop_cell_partitions", real_drop)
-
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["pending_merge"] is True
-    assert rep["merge_recommended"] is True
-
-    out = run_maintenance(spark, apply=True, retrain_ivf=True, tables=(t,))
-    applied = out["applied"].get(f"default.{t}", "")
-    assert applied.startswith("ivf_merge_cold_cells"), applied
-    assert not spark.catalog.tableExists(f"{t}_merge_manifest")
-    assert spark.table(t).count() == 122
-    dups = spark.table(t).groupBy("vec_id").count().filter(F.col("count") > 1)
-    assert dups.count() == 0  # the crashed fold duplicated nothing
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_maintenance_pending_merge_wins_over_drift(spark, monkeypatch):
-    """Round 17 review: a crashed merge's pending manifest resumes
-    BEFORE drift remediation — a retrain over the half-merged layout
-    (cold rows duplicated into survivors by the crashed fold) would
-    bake the duplication into the rebuilt index, which is why
-    ivf_retrain_index itself refuses a pending manifest. One matrix
-    rotation per sweep: the resume takes it; the merge's contract
-    rotation clears the (now retired-matrix) drift log, so drift
-    re-measures from fresh appends."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        health_sweep,
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    t = "maint_merge_vs_drift"
-    _fragmented_ivf(spark, t)
-    real_drop = sim._drop_cell_partitions
-
-    def bomb(spark_, table, cells):
-        if table == t and cells:
-            raise RuntimeError("injected: crash before cold drops")
-        return real_drop(spark_, table, cells)
-
-    monkeypatch.setattr(sim, "_drop_cell_partitions", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)
-    monkeypatch.setattr(sim, "_drop_cell_partitions", real_drop)
-
-    # drift is ALSO flagged (a fabricated global-drift append report)
-    sim.ivf_append_drift_reports(
-        spark,
-        t,
-        [{
-            "n_appended": 10, "n_dropped": 0,
-            "batch_mean_dist": 9.0, "batch_p95_dist": 12.0,
-            "drift_ratio": 8.0, "rebuild_recommended": True,
-            "batch_top_cell": 1, "batch_top_cell_fraction": 0.5,
-            "batch_n_cells": 3,
-        }],
-    )
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["pending_merge"] is True
-    assert rep["retrain_recommended"] is True
-
-    out = run_maintenance(spark, apply=True, retrain_ivf=True, tables=(t,))
-    applied = out["applied"].get(f"default.{t}", "")
-    # the resume won the sweep's one rotation; no retrain/split ran
-    assert applied.startswith("ivf_merge_cold_cells"), applied
-    assert "ivf_retrain_index" not in applied
-    assert "ivf_split_hot_cells" not in applied
-    assert not spark.catalog.tableExists(f"{t}_merge_manifest")
-    assert spark.table(t).count() == 122
-    dups = spark.table(t).groupBy("vec_id").count().filter(F.col("count") > 1)
-    assert dups.count() == 0
-
-    # the merge's contract rotation retired the old-matrix drift log;
-    # the flag re-arms only from fresh appends measured on the NEW matrix
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["pending_merge"] is False
-    assert rep["retrain_recommended"] is False
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_maintenance_records_resumed_merge_after_finalize_crash(
-    spark, monkeypatch
-):
-    """Round 17 review: a merge that crashed AFTER the contract
-    rotation committed (meta already holds the merged k) but before the
-    manifest drop must still be recorded as ivf_merge_cold_cells by the
-    resuming sweep — the k-shrank heuristic alone would call it a noop,
-    misstating the applied report and skipping the post-merge
-    compaction re-measure."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources import io as sio
-
-    t = "maint_merge_late_crash"
-    _fragmented_ivf(spark, t)
-    real_retire = sim._drop_merge_manifest
-
-    def bomb(spark_, table):
-        if table == t:
-            raise RuntimeError("injected: crash before manifest drop")
-        return real_retire(spark_, table)
-
-    monkeypatch.setattr(sim, "_drop_merge_manifest", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)
-    monkeypatch.setattr(sim, "_drop_merge_manifest", real_retire)
-    # the rotation already committed: meta holds the merged k
-    assert int(sio.get_table_meta(spark, t)["n_clusters"]) == 3
-    assert spark.catalog.tableExists(f"{t}_merge_manifest")
-
-    # the re-measure must fire even though k no longer shrinks: pin it
-    # by making the fresh post-merge measurement recommend compaction
-    real_health = sio.index_table_health
-    calls = {"n": 0}
-
-    def fresh_says_yes(spark_, table, max_ratio=8.0):
-        rep = real_health(spark_, table, max_ratio)
-        if table.split(".")[-1] == t:
-            calls["n"] += 1
-            if calls["n"] > 1:  # 1st = health_sweep, later = re-measure
-                rep = {**rep, "compact_recommended": True}
-        return rep
-
-    monkeypatch.setattr(sio, "index_table_health", fresh_says_yes)
-    out = run_maintenance(spark, apply=True, retrain_ivf=True, tables=(t,))
-    applied = out["applied"].get(f"default.{t}", "")
-    assert applied == "ivf_merge_cold_cells; compact_index_table", applied
-    assert calls["n"] >= 2
-    assert not spark.catalog.tableExists(f"{t}_merge_manifest")
-    assert spark.table(t).count() == 122
-    monkeypatch.setattr(sio, "index_table_health", real_health)
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 
@@ -905,8 +731,8 @@ def test_maintenance_remeasures_compaction_after_merge(spark, monkeypatch):
         rep = real(spark_, table, max_ratio)
         # the sweep passes db-qualified names ("default.<t>")
         if table.split(".")[-1] == t:
-            # post-merge re-measure: the merge dropped the manifest by
-            # the time run_maintenance re-asks, so key off call order
+            # the sweep and the post-merge re-measure ask about the
+            # same table, so key off call order
             calls["post"] += 1
             if calls["post"] > 1:  # 1st call = health_sweep, later = re-measure
                 rep = {**rep, "compact_recommended": True}
@@ -920,7 +746,7 @@ def test_maintenance_remeasures_compaction_after_merge(spark, monkeypatch):
     assert applied == "ivf_merge_cold_cells; compact_index_table", applied
     assert calls["post"] >= 2  # the re-measure actually happened
     monkeypatch.setattr(sio, "index_table_health", real)
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
+    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")
 
 
@@ -1293,195 +1119,4 @@ def test_sweep_flags_and_heals_interrupted_swaps(spark):
     assert {r["v"] for r in spark.table(stale).collect()} == {"v1"}
     assert not spark.catalog.tableExists(f"{stale}__stage")
     for s in (dangle, stale):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_sweep_detects_and_adopts_stranded_cells(spark, monkeypatch):
-    """Round 17 crash-window audit, sweep side: rows stranded beyond
-    the matrix by a split that crashed before its contract rotation are
-    DETECTED by table_health (stranded_cells — the per-cell count scan
-    already walks every partition id) and re-attached by
-    run_maintenance under the retrain_ivf opt-in
-    (ivf_adopt_stranded_cells — a matrix rotation like the other
-    remediations). Without the opt-in the sweep only notes the skip."""
-    import random
-
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        health_sweep,
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    t = "maint_stranded_ivf"
-    for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-        f"{t}_merge_manifest", f"{t}_merge_fold_done",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    rng = random.Random(53)
-    rows, vid = [], 0
-    for cx, cy in ((0.0, 0.0), (10.0, 0.0), (0.0, 10.0), (10.0, 10.0)):
-        for _ in range(40):
-            rows.append(
-                (vid, [cx + rng.uniform(-0.2, 0.2), cy + rng.uniform(-0.2, 0.2)])
-            )
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    sim.ivf_build_index(df, t, n_clusters=4, seed=19)
-    cents = sim.ivf_load_centroids(spark, t)
-    c0 = min(
-        range(len(cents)),
-        key=lambda i: cents[i][0] ** 2 + cents[i][1] ** 2,
-    )
-    spark.createDataFrame(
-        [
-            (1000 + i, [2.0 + rng.uniform(-0.2, 0.2), 2.0 + rng.uniform(-0.2, 0.2)], c0)
-            for i in range(80)
-        ],
-        "vec_id long, embedding array<double>, _cell int",
-    ).write.mode("append").insertInto(t)
-    spark.catalog.refreshTable(t)
-
-    real_finalize = sim._finalize_index_contract
-    state = {"n": 0}
-
-    def bomb(spark_, table, *a, **kw):
-        if table == t and state["n"] == 0:
-            state["n"] = 1
-            raise RuntimeError("injected")
-        return real_finalize(spark_, table, *a, **kw)
-
-    monkeypatch.setattr(sim, "_finalize_index_contract", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        sim.ivf_split_hot_cells(spark, t, max_cell_fraction=0.25, rounds=1)
-    monkeypatch.setattr(sim, "_finalize_index_contract", real_finalize)
-
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["stranded_cells"] == 1
-
-    out = run_maintenance(spark, apply=True, retrain_ivf=False, tables=(t,))
-    assert "adopt_skipped" in out["applied"].get(f"default.{t}", "")
-    assert len(sim.ivf_load_centroids(spark, t)) == 4  # nothing rotated
-
-    out = run_maintenance(spark, apply=True, retrain_ivf=True, tables=(t,))
-    assert "ivf_adopt_stranded_cells" in out["applied"].get(f"default.{t}", "")
-    adopted = sim.ivf_load_centroids(spark, t)
-    assert len(adopted) == 5
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["stranded_cells"] == 0  # the flag cleared
-    # the visibility invariant is restored: every partition id routes
-    # through the matrix again (probe-level recovery — exact parity
-    # with brute force — is pinned by the verb-level test,
-    # test_ivf_split_crash_strands_cells_and_adoption_recovers)
-    assert max(sim._cell_partition_ids(spark, t)) < len(adopted)
-    assert spark.table(t).count() == 240  # no row lost by the adoption
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-
-
-@pytest.mark.slow
-def test_stranded_detection_covers_k1_and_drift_outranks_adoption(
-    spark, monkeypatch
-):
-    """Round 17 review, two policy pins. (1) stranded_cells is computed
-    for ANY k — a crashed split of a k=1 index (its one cell is always
-    hot) strands cell 1 just the same, and the k>1 fragmentation guard
-    must not hide it. (2) When drift is ALSO flagged, the sweep runs
-    the drift remediation INSTEAD of adoption: a retrain refits over
-    every row including the stranded ones (healing them as a side
-    effect), whereas adopting first would clear the drift log and
-    re-baseline the drifted data, silencing the retrain forever."""
-    import random
-
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.maintenance import (
-        health_sweep,
-        run_maintenance,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
-        similarity as sim,
-    )
-
-    t = "maint_stranded_k1"
-    for s in (
-        t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids",
-        f"{t}_merge_manifest", f"{t}_merge_fold_done",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    rng = random.Random(59)
-    rows = [
-        (i, [rng.uniform(-0.2, 0.2), rng.uniform(-0.2, 0.2)])
-        for i in range(40)
-    ] + [
-        (100 + i, [8.0 + rng.uniform(-0.2, 0.2), 8.0 + rng.uniform(-0.2, 0.2)])
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # k=1 indexes arise through the engine's own verbs via a merge
-    # (MLlib refuses a k=1 fit): build k=2, thin one blob to a sliver,
-    # merge it away — one cell left holding both modes
-    sim.ivf_build_index(df, t, n_clusters=2, seed=19)
-    cents = sim.ivf_load_centroids(spark, t)
-    c_b = max(range(2), key=lambda i: cents[i][0] + cents[i][1])
-    keep = (
-        spark.table(t)
-        .filter(F.col("_cell") == c_b)
-        .orderBy("vec_id")
-        .limit(2)
-        .select("vec_id", "embedding", "_cell")
-        .localCheckpoint(eager=True)
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        keep.write.mode("overwrite").insertInto(t)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    spark.catalog.refreshTable(t)
-    assert len(sim.ivf_merge_cold_cells(spark, t, min_cell_fraction=0.1)) == 1
-
-    real_finalize = sim._finalize_index_contract
-    state = {"n": 0}
-
-    def bomb(spark_, table, *a, **kw):
-        if table == t and state["n"] == 0:
-            state["n"] = 1
-            raise RuntimeError("injected")
-        return real_finalize(spark_, table, *a, **kw)
-
-    monkeypatch.setattr(sim, "_finalize_index_contract", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        sim.ivf_split_hot_cells(spark, t, max_cell_fraction=0.25, rounds=1)
-    monkeypatch.setattr(sim, "_finalize_index_contract", real_finalize)
-
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["stranded_cells"] == 1  # detected even at k=1
-    assert "merge_recommended" in rep  # and k=1 never recommends a merge
-    assert rep["merge_recommended"] is False
-
-    # drift ALSO flagged: the remediation must be the retrain, which
-    # heals the strand as a side effect — never adoption-first
-    sim.ivf_append_drift_reports(
-        spark,
-        t,
-        [{
-            "n_appended": 10, "n_dropped": 0,
-            "batch_mean_dist": 9.0, "batch_p95_dist": 12.0,
-            "drift_ratio": 8.0, "rebuild_recommended": True,
-            "batch_top_cell": 0, "batch_top_cell_fraction": 0.5,
-            "batch_n_cells": 1,
-        }],
-    )
-    out = run_maintenance(spark, apply=True, retrain_ivf=True, tables=(t,))
-    applied = out["applied"].get(f"default.{t}", "")
-    assert "ivf_retrain_index" in applied, applied
-    assert "ivf_adopt_stranded_cells" not in applied
-    rep = health_sweep(spark, tables=(t,))["tables"][f"default.{t}"]
-    assert rep["stranded_cells"] == 0  # the retrain healed the strand
-    assert rep["retrain_recommended"] is False
-    # every row survived (40 blob-A + the 2 kept sliver rows)
-    assert spark.table(t).count() == 42
-    for s in (t, f"{t}_drift_stats", f"{t}_drift_log", f"{t}_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {s}")

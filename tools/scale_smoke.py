@@ -569,7 +569,7 @@ def main() -> None:
 
     ivf_n = mult * 20_000
     ivf_table = f"scale_ivf_idx_{mult}x"
-    for suffix in ("", "_drift_stats", "_drift_log", "_centroids"):
+    for suffix in ("", "_drift_log", "_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {ivf_table}{suffix}")
     dim8 = [
         (
@@ -611,7 +611,7 @@ def main() -> None:
             "ivf_seen_append_5k_batch",
             lambda: ivf_append_index(fresh, ivf_table, ivf_cents)["n_appended"],
         )
-    for suffix in ("", "_drift_stats", "_drift_log", "_centroids"):
+    for suffix in ("", "_drift_log", "_centroids"):
         spark.sql(f"DROP TABLE IF EXISTS {ivf_table}{suffix}")
 
     # streaming-ANN steady-state per-batch overhead A/B (round 16):
@@ -641,7 +641,7 @@ def main() -> None:
 
         for variant in ("before", "after"):
             st = f"scale_ann_steady_{variant}_{mult}x"
-            for suffix in ("", "_drift_stats", "_drift_log", "_centroids"):
+            for suffix in ("", "_drift_log", "_centroids"):
                 spark.sql(f"DROP TABLE IF EXISTS {st}{suffix}")
             st_cents = ivf_build_index(ivf_corpus, st, n_clusters=16)
             feed = tempfile.mkdtemp(prefix=f"ann_steady_{variant}_")
@@ -693,7 +693,7 @@ def main() -> None:
             )
             stats[f"ann_steady_{variant}_jobs"] = _total_jobs() - j0
             stats[f"ann_steady_{variant}_rows"] = spark.table(st).count()
-            for suffix in ("", "_drift_stats", "_drift_log", "_centroids"):
+            for suffix in ("", "_drift_log", "_centroids"):
                 spark.sql(f"DROP TABLE IF EXISTS {st}{suffix}")
 
     # drift remediation A/B (round 15): the SAME drifted index state
@@ -727,14 +727,14 @@ def main() -> None:
         if not enabled("ivf_remed"):
             break
         rt = f"scale_ivf_remed_{variant}_{mult}x"
-        for suffix in ("", "_drift_stats", "_drift_log", "_centroids"):
+        for suffix in ("", "_drift_log", "_centroids"):
             spark.sql(f"DROP TABLE IF EXISTS {rt}{suffix}")
         cents = ivf_build_index(ivf_corpus, rt, n_clusters=16)
         ivf_append_index(driftvec, rt, cents)
         out = stage(f"ivf_remed_{variant}", lambda a=act, t=rt: a(t))
         stats[f"ivf_remed_{variant}_k"] = len(out) if out else None
         stats[f"ivf_remed_{variant}_rows"] = spark.table(rt).count()
-        for suffix in ("", "_drift_stats", "_drift_log", "_centroids"):
+        for suffix in ("", "_drift_log", "_centroids"):
             spark.sql(f"DROP TABLE IF EXISTS {rt}{suffix}")
 
     print(json.dumps({"multiplier": mult, "timings": timings, "stats": stats}))
