@@ -125,20 +125,15 @@ def _skew_log_health(spark: SparkSession, table: str, rep: dict) -> None:
         return
     from pyspark.sql import functions as F
 
-    log = spark.table(f"{table}_skew_log")
-    batch_capped = (
-        F.col("n_capped_batch_buckets")
-        if "n_capped_batch_buckets" in log.columns
-        else F.lit(0)  # legacy log predating the batch-side stat
-    )
-    agg = log.agg(
+    agg = spark.table(f"{table}_skew_log").agg(
         F.count("*").alias("n_probes_logged"),
         F.max("max_bucket_rows").alias("max_bucket_rows"),
         F.max("sum_sq_bucket_rows").alias("max_sum_sq_bucket_rows"),
         F.max(
-            ((F.col("n_capped_buckets") > 0) | (batch_capped > 0)).cast(
-                "int"
-            )
+            (
+                (F.col("n_capped_buckets") > 0)
+                | (F.col("n_capped_batch_buckets") > 0)
+            ).cast("int")
         ).alias("any_capped"),
     ).first()
     rep["n_probes_logged"] = agg["n_probes_logged"]
@@ -186,46 +181,30 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
             if spark.catalog.tableExists(f"{table}_drift_log"):
                 from pyspark.sql import functions as F
 
-                log = spark.table(f"{table}_drift_log")
                 flagged = F.col("rebuild_recommended")
-                aggs = [
+                top_frac = F.col("batch_top_cell_fraction")
+                # per-append cell skew distinguishes localized from
+                # global drift; a flagged append whose skew was not
+                # measured can only say "retrain" (the always-correct
+                # remediation)
+                agg = spark.table(f"{table}_drift_log").agg(
                     F.count("*").alias("n_appends"),
                     F.max("drift_ratio").alias("max_drift_ratio"),
                     F.max(flagged.cast("int")).alias("any_flagged"),
-                ]
-                # per-append cell skew (logged by ivf_append_index since
-                # the skew columns landed) distinguishes localized from
-                # global drift; a legacy log without them can only say
-                # "retrain" (the always-correct remediation)
-                has_skew = "batch_top_cell_fraction" in log.columns
-                if has_skew:
-                    aggs.append(
-                        F.min(
-                            F.when(
-                                flagged, F.col("batch_top_cell_fraction")
-                            )
-                        ).alias("min_flagged_top_frac")
-                    )
-                    aggs.append(
-                        F.sum(
-                            F.when(
-                                flagged
-                                & F.col(
-                                    "batch_top_cell_fraction"
-                                ).isNull(),
-                                1,
-                            ).otherwise(0)
-                        ).alias("n_flagged_unmeasured")
-                    )
-                agg = log.agg(*aggs).first()
+                    F.min(F.when(flagged, top_frac)).alias(
+                        "min_flagged_top_frac"
+                    ),
+                    F.sum(
+                        F.when(flagged & top_frac.isNull(), 1).otherwise(0)
+                    ).alias("n_flagged_unmeasured"),
+                ).first()
                 rep["n_appends_logged"] = agg["n_appends"]
                 rep["max_drift_ratio"] = agg["max_drift_ratio"]
                 rep["retrain_recommended"] = bool(agg["any_flagged"])
                 if rep["retrain_recommended"]:
-                    frac = agg["min_flagged_top_frac"] if has_skew else None
+                    frac = agg["min_flagged_top_frac"]
                     localized = bool(
-                        has_skew
-                        and not agg["n_flagged_unmeasured"]
+                        not agg["n_flagged_unmeasured"]
                         and frac is not None
                         and frac >= SPLIT_TOP_CELL_FRACTION
                     )
@@ -432,9 +411,7 @@ def _remediate_ivf(
     from .sources.io import get_table_meta
 
     meta = get_table_meta(spark, name)
-    base_k = int(
-        meta.get("base_n_clusters", 0) or meta.get("n_clusters", 16)
-    )
+    base_k = int(meta["base_n_clusters"])
     cur_k = int(meta.get("n_clusters", 0) or base_k)
     budget = max(base_k + 1, int(split_budget_factor * base_k))
     if rep.get("remediation") == "split" and cur_k < budget:

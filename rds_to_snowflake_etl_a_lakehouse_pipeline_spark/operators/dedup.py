@@ -204,7 +204,7 @@ def exact_incremental_dedup(
     ).localCheckpoint()
     if append:
         # the replay anti-join stays LAZY and runs inside the append
-        # write job itself (r17): its index scan snapshots the file set
+        # write job itself: its index scan snapshots the file set
         # at plan time, append mode may read the destination table (only
         # overwrite forbids it), and `survivors` is already materialized
         # — so fusing saves one full checkpoint pass per batch, which in

@@ -348,7 +348,7 @@ def er_build_index(
 
 def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
     """Re-derive a standing ER index's blocking from its STORED record
-    text — the ER member of the r17 retune family
+    text — the ER member of the retune family
     (``dedup.minhash_reband_index`` / ``multimodal.hamming_reband_index``)
     and the verb the family's skipped-block health note points to.
     Blocking is a pure function of (record text, key expression), and

@@ -521,7 +521,7 @@ def hamming_hash_pairs(
     a value whose every band bucket is flooded contributes no pairs, not
     even within its own group.
 
-    Regime trade (measured, r17): with value multiplicity the collapse
+    Regime trade (measured): with value multiplicity the collapse
     is decisive (mult 8 at 400k rows: 2.14 s → 1.36 s; the mult ≈ 140
     registry fixture: 0.28×), while an ALL-UNIQUE fingerprint corpus —
     which generates ~no pairs either way — pays the extra value-grain
@@ -538,8 +538,8 @@ def hamming_hash_pairs(
     # within-group self-join) — without materialization each branch
     # re-executes the caller's UPSTREAM plan, which for perceptual
     # hashes is the full media decode chain (~6 re-decodes of the
-    # corpus: the r17 after-plan showed the MapInPandas chain six
-    # times). At 100 TB the decode IS the dominant cost, so the two
+    # corpus: a physical plan without it shows the MapInPandas chain
+    # six times). At 100 TB the decode IS the dominant cost, so the two
     # longs per row are checkpointed LAZILY (zero extra jobs: the
     # pair query's own first pass materializes the blocks, exactly
     # the surrogate-key/connected-components pattern) and every

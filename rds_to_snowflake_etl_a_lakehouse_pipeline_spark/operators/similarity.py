@@ -703,12 +703,11 @@ def _commit_rotation(
 
 def _carried_contract(meta: dict) -> dict:
     """The contract keys a split or merge carries over; the rotation
-    re-derives the rest. An index that predates ``base_n_clusters``
-    anchors it at its current k, so later splits cannot ratchet the
-    budget."""
+    re-derives the rest. ``base_n_clusters`` rides through unchanged,
+    so later splits cannot ratchet the budget."""
     return {
         **{k: meta[k] for k in ("impl", "pq", "n_buckets", "bucket_cols") if k in meta},
-        "base_n_clusters": meta.get("base_n_clusters", meta.get("n_clusters")),
+        "base_n_clusters": meta["base_n_clusters"],
     }
 
 
@@ -975,20 +974,11 @@ def ivf_append_drift_reports(spark, table: str, reports: list[dict]) -> None:
         "rebuild_recommended boolean, batch_top_cell int, "
         "batch_top_cell_fraction double, batch_n_cells int",
     ).withColumn("logged_at", F.current_timestamp())
-    tgt = _drift_log_table(table)
-    # a LEGACY log (written before the skew columns existed) keeps
-    # its narrower schema — saveAsTable append rejects new columns,
-    # and widening someone's standing log in place is not ours to do
-    if spark.catalog.tableExists(tgt):
-        have = set(spark.table(tgt).columns)
-        missing = [c for c in log_row.columns if c not in have]
-        if missing:
-            log_row = log_row.drop(*missing)
     # through write_table for the orphan-directory retry: a prior
     # session's dropped index can leave an unregistered
     # {table}_drift_log directory behind, and a raw saveAsTable
     # append would die on LOCATION_ALREADY_EXISTS
-    write_table(log_row, tgt, mode="append")
+    write_table(log_row, _drift_log_table(table), mode="append")
 
 
 def ivf_retrain_index(

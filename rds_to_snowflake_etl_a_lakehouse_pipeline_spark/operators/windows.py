@@ -169,7 +169,7 @@ def surrogate_key_two_phase(
     if materialize:
         # lazy: the phase-0 count below is a full scan, so it
         # materializes every checkpoint partition as a side effect —
-        # one job stands up the blocks AND the count (r17)
+        # one job stands up the blocks AND the count
         df = df.localCheckpoint(eager=False)
     cnt = df.select(keys[0]).count()  # narrow: column-pruned scan
     max_buckets = num_partitions or spark.sparkContext.defaultParallelism

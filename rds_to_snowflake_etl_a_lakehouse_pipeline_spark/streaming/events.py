@@ -751,22 +751,16 @@ def _stream_stamp(stream_id: str, batch_id: int) -> int:
     restarts); stream-scoped so a FRESH checkpoint whose batch ids
     restart at 0 can never collide with stamps a previous stream left
     in a reused state table (bare-id stamps silently DROPPED such a
-    batch). Emits a bigint; state written pre-upgrade needs care at
-    the boundary — whole-table guards honor a legacy bare-id match
-    (:func:`_replay_guarded_state`), and legacy sessionize tables
-    whose ``_applied_batch`` column is 32-bit keep bare-id stamps
-    outright (``_sessionize_merge_batch`` detects the dtype) since a
-    positional insertInto of a 64-bit hash would fail ANSI store
-    assignment there."""
+    batch). Emits a bigint, the type of every ``_applied_batch``
+    column; every replay guard matches this exact stamp and nothing
+    else."""
     import hashlib
 
     h = hashlib.sha256(f"{stream_id}\x00{batch_id}".encode()).digest()
     return int.from_bytes(h[:8], "big", signed=True)
 
 
-def _replay_guarded_state(
-    spark: SparkSession, table: str, stamp: int, batch_id: int | None = None
-):
+def _replay_guarded_state(spark: SparkSession, table: str, stamp: int):
     """Whole-table crash-replay guard for additive state (sketches):
     the state carries the last applied stamp (``_applied_batch``,
     atomic with the data — same stage-and-swap); returns None when this
@@ -775,30 +769,11 @@ def _replay_guarded_state(
     redelivered after a crash-before-checkpoint would re-ADD its
     counts into the sketch. ``stamp`` is the checkpoint-scoped
     :func:`_stream_stamp`, never a bare batch id — see its docstring
-    for the fresh-checkpoint collision this prevents.
-
-    ``batch_id`` closes the upgrade window: state last stamped by
-    PRE-upgrade code carries a bare batch id, and a batch applied
-    then crash-redelivered across the upgrade must still skip — so a
-    legacy ``last == batch_id`` match is honored too. This is exactly
-    pre-upgrade semantics, INCLUDING its known flaw: while the stamp
-    is still legacy, a brand-new stream (fresh checkpoint, ids restart
-    at 0) whose batch N coincides with the stale bare id N is skipped
-    — the same behavior the old code had, held only until the first
-    post-upgrade merge rewrites the stamp as a 64-bit hash (after
-    which a bare-id collision has ~2^-33 probability). Re-pointing a
-    NEW stream at an OLD state table without resetting it was already
-    outside the state-table contract; this keeps the failure no worse
-    than before while fixing the crash-redelivery over-count."""
+    for the fresh-checkpoint collision this prevents."""
     state = spark.table(table)
-    if "_applied_batch" in state.columns:
-        last = state.select(F.first("_applied_batch")).first()[0]
-        if last is not None and (
-            last == stamp or (batch_id is not None and last == batch_id)
-        ):
-            return None
-        state = state.drop("_applied_batch")
-    return state
+    if state.select(F.first("_applied_batch")).first()[0] == stamp:
+        return None
+    return state.drop("_applied_batch")
 
 
 def _dynamic_partition_overwrite(
@@ -838,29 +813,17 @@ def _land_batch_partition(
     non-negative partition is first folded into an archive partition
     (:func:`_fold_batch_partitions` — the old stream will never replay
     into this sink again, so its replay window may close), then the new
-    id is recorded and landing proceeds. Sinks that predate the
-    metadata adopt the current stream id on first contact (the past is
-    unverifiable; collisions before adoption are undetectable).
-
-    LEGACY sinks (created by the pre-partitioning append path, no
-    ``_batch_id`` column) keep plain appends — their original
-    at-least-once contract — instead of failing the stream on a
-    column-count mismatch."""
+    id is recorded and landing proceeds. A sink created without a
+    stream id (a direct call with ``stream_id=None``) adopts the first
+    stream id that lands in it; collisions before adoption are
+    undetectable."""
     from ..sources.io import get_table_meta, set_table_meta, write_table
 
     spark = df.sparkSession
     stamped = df.withColumn("_batch_id", F.lit(batch_id))
     if not spark.catalog.tableExists(sink):
-        # fold_scheme marks the sink as manifest-protocol from birth,
-        # so the legacy crashed-fold guard in _fold_batch_partitions
-        # can never false-positive on a table this code created
-        props = {"fold_scheme": "manifest"}
-        if stream_id is not None:
-            props["stream_id"] = stream_id
+        props = {} if stream_id is None else {"stream_id": stream_id}
         write_table(stamped, sink, partition_by=["_batch_id"], properties=props)
-        return
-    if "_batch_id" not in spark.table(sink).columns:
-        write_table(df, sink, mode="append")
         return
     if stream_id is not None:
         recorded = get_table_meta(spark, sink).get("stream_id")
@@ -966,49 +929,7 @@ def _fold_batch_partitions(
     ids = [b for b in _batch_partition_ids(spark, table) if b <= max_fold]
     if not ids:
         return {"folded_partitions": 0, "archived_rows": 0, "archive_id": None}
-    # LEGACY upgrade guard: the pre-manifest fold archived into
-    # -(max_folded+1) and healed crashes by re-deriving that same id.
-    # A table carrying exactly that crash state (the derived negative
-    # partition exists, sources undropped, NO manifest) must not fold
-    # under a fresh id — the stale partial archive would keep its copy
-    # and the rows would be double-counted. But the state is ambiguous
-    # (the negative could be a COMPLETED legacy archive whose id the
-    # restarted stream's batch ids re-reached), so neither silent
-    # reuse (may overwrite real history) nor silent fresh-id (may
-    # duplicate) is safe: fail loud with the operator's two options.
-    from ..sources.io import get_table_meta, set_table_meta
-
-    legacy_candidate = -(max(ids) + 1)
-    part_rows = spark.sql(f"SHOW PARTITIONS {table}").collect()
-    negs = {
-        bid
-        for r in part_rows
-        for bid in [int(r[0].split("=", 1)[1])]
-        if bid < 0
-    }
-    # ...but only for tables that have never folded under THIS scheme:
-    # every manifest-scheme fold stamps fold_scheme below, and a table
-    # whose archives are all manifest-scheme can legitimately reach
-    # the candidate id again after a batch-id restart (the stream-id
-    # rebase path) — raising there would be a false positive forever.
-    if (
-        legacy_candidate in negs
-        and get_table_meta(spark, table).get("fold_scheme") != "manifest"
-    ):
-        raise RuntimeError(
-            f"{table}: partition _batch_id={legacy_candidate} looks like a "
-            "pre-manifest fold's archive for exactly the live batches about "
-            "to fold, with no fold manifest — either a legacy crashed fold "
-            "(re-archiving would duplicate its rows) or a completed legacy "
-            "archive after a batch-id restart (reusing its slot would "
-            "overwrite history). Resolve once by hand: if the live batch "
-            "partitions' rows are already IN that archive, drop the live "
-            f"partitions; otherwise ALTER TABLE {table} PARTITION "
-            f"(_batch_id={legacy_candidate}) RENAME to a lower id, then "
-            "re-run compaction."
-        )
     archive_id = _next_archive_id(spark, table)
-    set_table_meta(spark, table, fold_scheme="manifest")
     _set_pending_fold(spark, table, max_fold, archive_id, "staged")
     return _execute_fold(spark, table, max_fold, archive_id, "staged")
 
@@ -1153,7 +1074,7 @@ def stream_frequency_sketch(
             _checkpoint_stream_id(spark, checkpoint_dir), batch_id
         )
         if spark.catalog.tableExists(table):
-            state = _replay_guarded_state(spark, table, stamp, batch_id)
+            state = _replay_guarded_state(spark, table, stamp)
             if state is None:  # this exact batch already merged
                 return
             merged = cms_merge(state.unionByName(batch_sketch), keys)
@@ -1209,7 +1130,7 @@ def stream_distinct_sketch(
             _checkpoint_stream_id(spark, checkpoint_dir), batch_id
         )
         if spark.catalog.tableExists(table):
-            state = _replay_guarded_state(spark, table, stamp, batch_id)
+            state = _replay_guarded_state(spark, table, stamp)
             if state is None:  # this exact batch already merged
                 return
             merged = hll_register_merge(
@@ -1348,11 +1269,10 @@ def stream_ivf_append(
         # the replay-guard anti-join feeds ivf_append_index LAZILY: the
         # default (mllib) append consumes its input exactly once, inside
         # its own assignment checkpoint, so anti-join + nearest-cell
-        # kernel fuse into ONE job per batch (r17; the r16 shape paid a
-        # separate checkpoint job here because the old append body
-        # executed its input twice — drop-count + assignment). Grid
-        # appends still count their input, so the guard stays
-        # checkpointed on that path.
+        # kernel fuse into ONE job per batch (a checkpoint here would
+        # add a job for nothing). Grid appends count their input
+        # before assigning it, so the guard stays checkpointed on that
+        # path.
         fresh = batch_df.join(existing, on=id_col, how="left_anti")
         if _is_grid:
             fresh = fresh.localCheckpoint(eager=True)
@@ -1434,7 +1354,7 @@ def stream_histogram_sketch(
             _checkpoint_stream_id(spark, checkpoint_dir), batch_id
         )
         if spark.catalog.tableExists(table):
-            state = _replay_guarded_state(spark, table, stamp, batch_id)
+            state = _replay_guarded_state(spark, table, stamp)
             if state is None:  # this exact batch already merged
                 return
             merged = hist_merge(
@@ -1627,19 +1547,16 @@ def _frontier_schedule_merge_batch(
        not yet stamped advance (bystander domains sharing a rewritten
        partition copy forward unchanged).
 
-    Unlike sessionize state, the replay guard honors ONLY the exact
-    stamp — no legacy bare-id window: this operator was born with
-    hashed stamps (no pre-hashed state exists), and a bare-id false
-    collision would not merely skip a batch but corrupt the base
-    arithmetic (a partition wrongly counted "advanced by this batch"
-    under-schedules every slot by the batch count)."""
+    The replay guard honors ONLY the exact stamp: a false stamp match
+    would not merely skip a batch but corrupt the base arithmetic (a
+    partition wrongly counted "advanced by this batch" under-schedules
+    every slot by the batch count). ``stamp`` defaults to the bare
+    batch id for direct calls; ``crawl_tick`` stamps with its tick id
+    and the streaming wrapper with :func:`_stream_stamp`. The
+    ``state_partitions`` modulus is recorded at creation and validated
+    on every batch."""
     from ..operators.curation import _url_host
-    from ..sources.io import (
-        check_table_meta,
-        get_table_meta,
-        set_table_meta,
-        write_table,
-    )
+    from ..sources.io import check_table_meta, write_table
 
     reserved = {
         "fetch_domain", "fetch_slot", "fetch_offset_seconds",
@@ -1709,20 +1626,14 @@ def _frontier_schedule_merge_batch(
     exists = spark.catalog.tableExists(state_table)
     done_kb: set = set()
     if exists:
-        meta = get_table_meta(spark, state_table)
-        if "state_partitions" in meta:
-            check_table_meta(spark, state_table, state_partitions=state_partitions)
-        else:
-            set_table_meta(spark, state_table, state_partitions=state_partitions)
+        check_table_meta(spark, state_table, state_partitions=state_partitions)
         state = spark.table(state_table)
         touched_kb = sorted(r[0] for r in b.select("_kb").distinct().collect())
-        # the replay guard honors ONLY the exact stamp — no legacy
-        # bare-id window: this operator is new with hashed stamps, so
-        # no pre-hashed state exists to honor, and a bare-id false
-        # collision would not merely skip (as in sessionize) but
-        # corrupt the base arithmetic below (a partition wrongly
-        # counted "advanced by this batch" computes base =
-        # next_slot − count and under-schedules every slot)
+        # the replay guard honors ONLY the exact stamp: a false match
+        # would not merely skip but corrupt the base arithmetic below
+        # (a partition wrongly counted "advanced by this batch"
+        # computes base = next_slot − count and under-schedules every
+        # slot)
         done_kb = {
             r[0]
             for r in state.filter(
@@ -1750,7 +1661,6 @@ def _frontier_schedule_merge_batch(
         ).otherwise(ns)
         joined = joined.withColumn("_base", base).drop("next_slot")
     else:
-        meta = {}
         joined = b.withColumn("_base", F.lit(0).cast("bigint"))
     slot = (F.col("_base") + F.col("_bslot")).cast("bigint")
     sched = joined.select(
@@ -1907,7 +1817,7 @@ def stream_sessionize(
     always equals batch sessionization of everything streamed —
     regardless of how events were split across batches.
 
-    PARTITION-SCOPED state rewrites (round 9): the state table is
+    PARTITION-SCOPED state rewrites: the state table is
     hash-partitioned on ``pmod(xxhash64(key), state_partitions)``, and
     each batch rewrites ONLY the partitions holding its keys via
     dynamic partition overwrite — per-batch cost is O(touched
@@ -1919,11 +1829,13 @@ def stream_sessionize(
     sessions.
 
     CRASH-REPLAY IDEMPOTENT per partition: every rewritten partition
-    is stamped with the batch id it applied (``_applied_batch``,
-    atomic with the partition's data), and a redelivered batch id
-    skips exactly the partitions already stamped — so a crash anywhere
-    between the sink write and the checkpoint commit never
-    double-counts ``n_events``. Source-level redelivery (the same
+    is stamped with the checkpoint-scoped stamp of the batch it
+    applied (``_applied_batch``, :func:`_stream_stamp`, atomic with
+    the partition's data), and a redelivered batch skips exactly the
+    partitions carrying its stamp — so a crash anywhere between the
+    sink write and the checkpoint commit never double-counts
+    ``n_events``, and a fresh checkpoint whose batch ids restart at 0
+    never matches an old stream's stamp. Source-level redelivery (the same
     EVENT arriving under a new batch id) is still additive: an
     at-least-once source must dedup upstream (:func:`dedup_events`).
 
@@ -1932,8 +1844,6 @@ def stream_sessionize(
     ``session_stats`` emits. Runs with trigger=availableNow and blocks.
     """
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         stamp = _stream_stamp(
             _checkpoint_stream_id(batch_df.sparkSession, checkpoint_dir),
             batch_id,
@@ -1958,11 +1868,12 @@ def _sessionize_merge_batch(
 ) -> None:
     """One :func:`stream_sessionize` micro-batch, exposed at module
     level so the crash-replay contract is directly testable: firing the
-    SAME batch id twice must leave the state table unchanged, and a
+    SAME stamp twice must leave the state table unchanged, and a
     batch must rewrite only the state partitions its keys hash into.
-    ``stamp`` is the checkpoint-scoped replay stamp (defaults to the
-    bare batch id for direct batch-mode calls; the streaming wrapper
-    always passes :func:`_stream_stamp`).
+    ``stamp`` is the replay stamp: the streaming wrapper passes the
+    checkpoint-scoped :func:`_stream_stamp`, and direct batch-mode
+    calls default it to the bare batch id. A partition skips a batch
+    only when its ``_applied_batch`` equals this exact stamp.
 
     The state table's partition modulus is part of its physical
     contract: a key's state row lives in the partition the modulus in
@@ -1970,11 +1881,9 @@ def _sessionize_merge_batch(
     ``state_partitions`` would silently miss existing rows and accrue
     duplicate sessions. The modulus is therefore recorded in table
     metadata at creation and VALIDATED on every batch — a mismatch
-    raises instead of corrupting (tables from before the metadata
-    existed adopt the caller's value on first contact, which is only
-    safe if the caller kept it constant — documented caveat)."""
+    raises instead of corrupting."""
     from ..operators.windows import sessionize
-    from ..sources.io import check_table_meta, get_table_meta, set_table_meta, write_table
+    from ..sources.io import check_table_meta, write_table
 
     if batch_df.isEmpty():
         return
@@ -1982,20 +1891,6 @@ def _sessionize_merge_batch(
         stamp = batch_id
     gap_us = gap_seconds * 1_000_000
     spark = batch_df.sparkSession
-    if spark.catalog.tableExists(table):
-        # LEGACY state tables (pre-stamp-upgrade) carry a 32-bit
-        # _applied_batch column: the partition-scoped write below is a
-        # positional insertInto, so a 64-bit hashed stamp would fail
-        # ANSI store assignment (or silently truncate under LEGACY
-        # policy, breaking the replay guard). Those tables keep their
-        # original bare-batch-id guard semantics; tables created by
-        # this version stamp bigint from birth.
-        fields = {
-            f.name: f.dataType.simpleString()
-            for f in spark.table(table).schema.fields
-        }
-        if fields.get("_applied_batch") == "int":
-            stamp = batch_id
     bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(state_partitions))
     s = sessionize(
         batch_df.select(key_col, ts_col), key_col, ts_col, gap_seconds
@@ -2021,41 +1916,14 @@ def _sessionize_merge_batch(
             merged,
             table,
             partition_by=["_kb"],
-            properties={
-                "state_partitions": state_partitions,
-                # stamp_mode records whether this table has ever been
-                # written with hashed (checkpoint-scoped) stamps; the
-                # replay guard only honors legacy bare batch ids while
-                # this says otherwise (see the upgrade-window note below)
-                "stamp_mode": "hashed" if stamp != batch_id else "bare",
-            },
+            properties={"state_partitions": state_partitions},
         )
         return
 
-    state = spark.table(table)
-    if "_kb" not in state.columns:
-        # legacy unpartitioned state (pre-round-9 layout): full
-        # stage-and-swap rewrite with the whole-table replay stamp
-        state = _replay_guarded_state(spark, table, stamp, batch_id)
-        if state is None:  # this exact batch already applied
-            return
-        touched_keys = batch_iv.select(key_col).distinct()
-        touched = state.join(F.broadcast(touched_keys), key_col, "leftsemi")
-        untouched = state.join(F.broadcast(touched_keys), key_col, "leftanti")
-        fused = _fuse_intervals(touched.unionByName(batch_iv), key_col, gap_us)
-        merged = untouched.unionByName(fused).localCheckpoint(eager=True)
-        write_table(merged.withColumn("_applied_batch", F.lit(stamp)), table)
-        return
-
     # raises on a state_partitions mismatch with the recorded physical
-    # modulus (silent mis-bucketing would duplicate sessions); tables
-    # from before the metadata adopt the caller's value here
-    meta = get_table_meta(spark, table)
-    if "state_partitions" in meta:
-        check_table_meta(spark, table, state_partitions=state_partitions)
-    else:
-        set_table_meta(spark, table, state_partitions=state_partitions)
-
+    # modulus (silent mis-bucketing would duplicate sessions)
+    check_table_meta(spark, table, state_partitions=state_partitions)
+    state = spark.table(table)
     batch_iv = batch_iv.withColumn("_kb", bucket)
     # touched partitions: bounded by state_partitions, tiny collect
     touched_kb = sorted(
@@ -2063,54 +1931,13 @@ def _sessionize_merge_batch(
     )
     # per-partition replay guard: a partition already stamped with this
     # batch's stamp was fully rewritten before the crash — skip exactly
-    # it. A legacy bare-batch-id stamp (bigint state written by
-    # pre-hashed-stamp code) is honored ONLY while the table's
-    # stamp_mode metadata says it predates hashed stamps — the
-    # one-batch upgrade window where a batch applied pre-upgrade can
-    # be crash-redelivered post-upgrade (its n_events would double).
-    # The flag flips to 'hashed' on the first successful post-upgrade
-    # write below, closing the window: without the gate, a state
-    # table reused under a NEW checkpoint (batch ids restart at 0)
-    # whose untouched partitions still carry bare stamps would
-    # forever skip colliding batch ids and silently drop events
-    honor_bare = stamp != batch_id and meta.get("stamp_mode") != "hashed"
-    guard = F.col("_applied_batch") == stamp
-    if honor_bare:
-        guard = guard | (F.col("_applied_batch") == batch_id)
+    # it
     done_kb = {
         r[0]
         for r in state.filter(
-            F.col("_kb").isin(touched_kb) & guard
+            F.col("_kb").isin(touched_kb) & (F.col("_applied_batch") == stamp)
         ).select("_kb").distinct().collect()
     }
-    if honor_bare and done_kb:
-        # close the window ON THE SKIP PATH too: partitions whose
-        # guard hit was the legacy BARE id get restamped with the
-        # hashed stamp (rows otherwise unchanged), then the flag
-        # flips. Without this, a batch fully skipped by bare-id
-        # collisions would return before the post-write flip and the
-        # "one-batch" window could stay open indefinitely (repeating
-        # the new-checkpoint drop on every restart); restamping —
-        # rather than only flipping the flag — keeps a crash-refire
-        # of a GENUINE cross-upgrade redelivery idempotent (the
-        # refire skips via the hashed stamp instead of re-applying).
-        legacy_kb = sorted(
-            r[0]
-            for r in state.filter(
-                F.col("_kb").isin(sorted(done_kb))
-                & (F.col("_applied_batch") == batch_id)
-                & (F.col("_applied_batch") != stamp)
-            ).select("_kb").distinct().collect()
-        )
-        if legacy_kb:
-            restamped = (
-                state.filter(F.col("_kb").isin(legacy_kb))
-                .withColumn("_applied_batch", F.lit(stamp).cast("bigint"))
-                .localCheckpoint(eager=True)
-            )
-            _dynamic_partition_overwrite(restamped, table, "_kb")
-        set_table_meta(spark, table, stamp_mode="hashed")
-        meta = {**meta, "stamp_mode": "hashed"}
     todo_kb = [b for b in touched_kb if b not in done_kb]
     if not todo_kb:
         return
@@ -2131,10 +1958,6 @@ def _sessionize_merge_batch(
     # (touched-partitions-sized, not total-state-sized)
     out = out.localCheckpoint(eager=True)
     _dynamic_partition_overwrite(out, table, "_kb")
-    if stamp != batch_id and meta.get("stamp_mode") != "hashed":
-        # first successful hashed-stamp write: close the legacy
-        # bare-id upgrade window for every future batch
-        set_table_meta(spark, table, stamp_mode="hashed")
 
 
 def session_table_stats(spark: SparkSession, table: str, key_col: str = "user_id") -> DataFrame:
@@ -2244,8 +2067,6 @@ def stream_incremental_distinct(
     State grows only with NEW tuples — redelivered or repeated events
     are absorbed by the anti-join, making the sink idempotent at the
     tuple level. Runs with trigger=availableNow and blocks."""
-    import re
-
     from ..sources.io import get_table_meta, write_table
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -2254,20 +2075,14 @@ def stream_incremental_distinct(
         spark = batch_df.sparkSession
         fresh = batch_df.select(*cols).distinct()
         if spark.catalog.tableExists(table):
-            # the bucket spec is FIXED at table creation: appends must
-            # reuse the table's actual bucket count, IGNORING the
-            # caller's state_buckets — a caller restarting with a
-            # different value would otherwise fail every batch with a
-            # bucket-spec mismatch. Recorded in table metadata at
-            # creation; tables from before the metadata fall back to
-            # parsing the DDL ("INTO n BUCKETS"), and legacy
-            # pre-bucketing tables keep appending unbucketed.
-            n = get_table_meta(spark, table).get("state_buckets")
-            if n is None:
-                ddl = spark.sql(f"SHOW CREATE TABLE {table}").first()[0]
-                m = re.search(r"INTO (\d+) BUCKETS", ddl)
-                n = m.group(1) if m and "CLUSTERED BY" in ddl else "0"
-            bb = (int(n), list(cols)) if int(n) else None
+            # the bucket spec is FIXED at table creation (recorded as
+            # state_buckets, 0 = unbucketed): appends must reuse the
+            # table's actual bucket count, IGNORING the caller's
+            # state_buckets — a caller restarting with a different
+            # value would otherwise fail every batch with a
+            # bucket-spec mismatch
+            n = int(get_table_meta(spark, table)["state_buckets"])
+            bb = (n, list(cols)) if n else None
             fresh = fresh.join(spark.table(table), cols, "left_anti")
             write_table(fresh, table, mode="append", bucket_by=bb)
         else:

@@ -1712,7 +1712,7 @@ def test_ivf_append_requires_matching_pq_codebook(spark):
     assert out["n_appended"] == 1
     got = spark.table("ivfpq_app").filter(F.col("vec_id") == 200).collect()
     assert got[0].pq_code == want and len(got[0].pq_code) == 4
-    # legacy PQ index (predates the companion): still a hard error
+    # PQ index whose codebook companion is missing: still a hard error
     spark.sql("DROP TABLE IF EXISTS ivfpq_app_pq_codebook")
     batch2 = spark.createDataFrame(
         [(201, rng.standard_normal(16).tolist())], "vec_id long, embedding array<double>"

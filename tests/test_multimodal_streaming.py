@@ -1671,21 +1671,14 @@ def test_stream_frontier_schedule_duplicate_rows_replay_identical(spark):
     spark.sql(f"DROP TABLE IF EXISTS {sk}")
 
 
-@pytest.mark.slow
 def test_stream_sessionize_legacy_stamp_window_closes(spark):
-    """Round-12 fix: the legacy bare-batch-id replay guard is a
-    one-batch UPGRADE WINDOW, not forever. A bucketed state table
-    written with bare stamps honors a colliding bare id on the first
-    hashed-stamp batch (crash redelivery across the upgrade), but once
-    any hashed-stamp batch commits, the window closes: a later batch
-    whose id collides with a stale bare stamp in an untouched
-    partition must APPLY, not silently drop its events (the
-    new-checkpoint batch-id-restart scenario)."""
+    """A sessionize partition skips a batch only on that batch's exact
+    stamp. Partitions stamped with bare batch ids (what a direct call
+    writes) do NOT skip a hashed-stamp batch whose bare id equals the
+    stored stamp: the batch is applied, never silently dropped, and
+    only its own crash-refire (same hashed stamp) is a no-op."""
     from pyspark.sql import functions as F
 
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        get_table_meta,
-    )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
         _sessionize_merge_batch,
         _stream_stamp,
@@ -1704,47 +1697,39 @@ def test_stream_sessionize_legacy_stamp_window_closes(spark):
     assert len(set(kb.values())) == 3
     t = "sess_stamp_window_t"
     spark.sql(f"DROP TABLE IF EXISTS {t}")
-    # legacy era: bare batch ids 0 (user 1) and 1 (user 2)
+    # bare stamps: batch ids 0 (user 1) and 1 (user 2)
     _sessionize_merge_batch(mk([(1, 0)]), 0, t, "user_id", "ts", 100)
     _sessionize_merge_batch(mk([(2, 0)]), 1, t, "user_id", "ts", 100)
-    assert get_table_meta(spark, t).get("stamp_mode") == "bare"
     ev = lambda u: (
         spark.table(t).filter(F.col("user_id") == u)
         .agg(F.sum("n_events")).first()[0]
     )
-    # upgrade window: first hashed-stamp batch whose id collides with
-    # user 1's bare stamp is treated as a cross-upgrade redelivery —
-    # skipped, AND the window closes IMMEDIATELY (the colliding
-    # partition restamps to the hashed stamp, the flag flips) even
-    # though the batch wrote nothing: a fully-skipped batch must not
-    # leave the window open for the next restart (round-12 review fix)
+    # hashed-stamp batch 0 lands in user 1's partition, stamped bare 0:
+    # applied
     _sessionize_merge_batch(
         mk([(1, 500)]), 0, t, "user_id", "ts", 100,
         stamp=_stream_stamp("ckpt-a", 0),
     )
-    assert ev(1) == 1  # skipped (cross-upgrade redelivery honored)
-    assert get_table_meta(spark, t).get("stamp_mode") == "hashed"
-    # crash-refire of that same skipped batch: still skipped, via the
-    # hashed restamp (idempotent skip, no double-apply)
+    assert ev(1) == 2
+    # crash-refire of that batch: skipped via its hashed stamp
     _sessionize_merge_batch(
         mk([(1, 500)]), 0, t, "user_id", "ts", 100,
         stamp=_stream_stamp("ckpt-a", 0),
     )
-    assert ev(1) == 1
-    # post-closure: batch id 1 collides with user 2's stale bare stamp
-    # in an untouched partition — it must apply (pre-fix: dropped)
+    assert ev(1) == 2
+    # hashed-stamp batch 1 over user 2's bare stamp 1: applied
     _sessionize_merge_batch(
         mk([(2, 500)]), 1, t, "user_id", "ts", 100,
         stamp=_stream_stamp("ckpt-a", 1),
     )
     assert ev(2) == 2
-    # genuinely new keys still apply after the closure
+    # genuinely new keys apply
     _sessionize_merge_batch(
         mk([(3, 0)]), 7, t, "user_id", "ts", 100,
         stamp=_stream_stamp("ckpt-a", 7),
     )
     assert ev(3) == 1
-    # hashed-stamp replay (same stamp) still a no-op after closure
+    # hashed-stamp replay (same stamp) is a no-op
     before = _snap(spark, t)
     _sessionize_merge_batch(
         mk([(2, 500)]), 1, t, "user_id", "ts", 100,
@@ -2610,128 +2595,40 @@ def test_checkpoint_stream_id_tracks_recreated_metadata(spark, tmp_path):
     assert _checkpoint_stream_id(spark, str(ck2)) == "stream-C"
 
 
-def test_replay_guard_honors_legacy_bare_id_stamp(spark):
-    """State last stamped by PRE-upgrade code carries a bare batch id;
-    a batch applied then crash-redelivered across the upgrade must
-    still skip (legacy last == batch_id), while a different batch
-    merges normally."""
+def test_replay_guard_honors_legacy_bare_id_stamp(spark, tmp_path):
+    """The whole-table sketch guard skips a batch only on its exact
+    stamp. A sketch table whose stored stamp is a bare batch id does
+    NOT skip a streamed batch whose bare id equals it: a fresh
+    checkpoint's batch 0 over that table is applied, not silently
+    dropped."""
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
         write_table,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
-        _replay_guarded_state,
-        _stream_stamp,
-    )
-    from pyspark.sql import functions as F
-
-    t = "legacy_sketch_state"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    write_table(
-        spark.range(3).withColumn("_applied_batch", F.lit(5)), t
-    )
-    stamp5 = _stream_stamp("some-stream", 5)
-    assert _replay_guarded_state(spark, t, stamp5, 5) is None  # skip
-    got = _replay_guarded_state(spark, t, _stream_stamp("some-stream", 6), 6)
-    assert got is not None and "_applied_batch" not in got.columns
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_sessionize_legacy_int_stamp_column_keeps_working(spark):
-    """A partitioned sessionize state table written by PRE-upgrade code
-    (32-bit _applied_batch) keeps accepting batches: the merge falls
-    back to bare-id stamps instead of failing the positional
-    insertInto with a long->int overflow, and replaying the same batch
-    id is still a no-op."""
-    import datetime as dt
-
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
-        _sessionize_merge_batch,
-        _stream_stamp,
+        stream_histogram_sketch,
     )
 
-    t = "legacy_sess_state"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    t = "bare_stamp_sketch_state"
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(float(v),) for v in range(10)], "value double"
+    ).coalesce(1).write.parquet(src)
 
-    def batch(rows):
-        return spark.createDataFrame(rows, "user_id long, ts timestamp")
-
-    # create the table as post-upgrade code would, then DOWNGRADE the
-    # stamp column to int in place (what a round-9 table looks like)
-    _sessionize_merge_batch(
-        batch([(1, dt.datetime(2024, 1, 1, 0, 0, 0))]), 0, t,
-        "user_id", "ts", 1800, state_partitions=4, stamp=0,
-    )
-    legacy = spark.table(t).withColumn(
-        "_applied_batch", F.col("_applied_batch").cast("int")
-    )
-    legacy_rows = legacy.collect()
-    spark.sql(f"DROP TABLE {t}")
-    cols = [f"{f.name} {f.dataType.simpleString()}" for f in legacy.schema.fields]
-    spark.createDataFrame(legacy_rows, ", ".join(cols)).write.partitionBy(
-        "_kb"
-    ).saveAsTable(t)
-    spark.sql(
-        "ALTER TABLE legacy_sess_state SET TBLPROPERTIES "
-        "('spark_graft.index.state_partitions'='4')"
-    )
-    # a hashed-stamp batch against the legacy table must not blow up
-    hashed = _stream_stamp("new-stream", 1)
-    _sessionize_merge_batch(
-        batch([(1, dt.datetime(2024, 1, 1, 2, 0, 0))]), 1, t,
-        "user_id", "ts", 1800, state_partitions=4, stamp=hashed,
-    )
-    after = spark.table(t).count()
-    assert after == 2  # two sessions for user 1
-    # replaying the same batch id is a no-op (bare-id guard)
-    _sessionize_merge_batch(
-        batch([(1, dt.datetime(2024, 1, 1, 2, 0, 0))]), 1, t,
-        "user_id", "ts", 1800, state_partitions=4, stamp=hashed,
-    )
-    assert spark.table(t).count() == after
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_fold_raises_on_ambiguous_legacy_partial_archive(spark):
-    """A pre-manifest table whose derived archive id exists beside
-    undropped sources (the legacy crashed-fold signature) fails LOUD
-    instead of silently duplicating or overwriting; once a table has
-    folded under the manifest scheme, the same partition shape is
-    legitimate (batch-id restart) and folds normally."""
-    import pytest as _pytest
-
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        set_table_meta,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
-        _fold_batch_partitions,
-        _land_batch_partition,
-    )
-
-    t = "legacy_fold_sink"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    for bid in (0, 1, 2):
-        _land_batch_partition(
-            spark.createDataFrame([(bid,)], "v long"), t, bid
+    def run(ck):
+        stream_histogram_sketch(
+            spark.readStream.schema("value double").parquet(src), t,
+            str(tmp_path / ck), lo=0.0, hi=100.0, n_bins=10,
         )
-    # plant the legacy derived archive -(max+1) = -3 with no manifest,
-    # and strip the birth stamp to simulate a PRE-manifest table
-    # (sinks this code creates are stamped fold_scheme at birth and
-    # can never reach this guard)
-    _land_batch_partition(spark.createDataFrame([(99,)], "v long"), t, -3)
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        _INDEX_META_PREFIX,
-    )
 
-    spark.sql(
-        f"ALTER TABLE {t} UNSET TBLPROPERTIES IF EXISTS "
-        f"('{_INDEX_META_PREFIX}fold_scheme')"
-    )
-    with _pytest.raises(RuntimeError, match="pre-manifest"):
-        _fold_batch_partitions(spark, t, max_fold=2)
-    # a manifest-scheme table with the same shape folds fine
-    set_table_meta(spark, t, fold_scheme="manifest")
-    res = _fold_batch_partitions(spark, t, max_fold=2)
-    assert res["folded_partitions"] == 3
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    run("ck1")
+    # restamp with the bare id 0, as a direct call with no stamp writes
+    bare = spark.table(t).withColumn(
+        "_applied_batch", F.lit(0).cast("bigint")
+    ).localCheckpoint(eager=True)
+    write_table(bare, t)
+    run("ck2")  # a fresh checkpoint: its batch 0 again
+    assert spark.table(t).agg(F.sum("cnt")).first()[0] == 20
     spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
