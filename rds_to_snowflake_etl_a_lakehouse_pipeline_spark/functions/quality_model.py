@@ -153,7 +153,7 @@ def score_quality(
 
 # ---------------------------------------------------------------------------
 # Nearest-centroid quality model: the deterministic, engine-replayable
-# trainer (round 14 — the grid-KMeans pattern applied to classification)
+# trainer (the grid-KMeans pattern applied to classification)
 # ---------------------------------------------------------------------------
 #
 # LBFGS logistic regression (above) is the scale-path default, but its

@@ -644,10 +644,11 @@ def canonicalize_url(
     .. note:: **Canonical-key compatibility.** The canonical form is a
        persistence key: dedup state, frontier tables and corpora keyed
        on it only match across versions if the tracking lists match.
-       Round 11 REMOVED ``ref`` from the default ``tracking_keys`` (it
-       collides with semantic ``ref=`` parameters), so canonical forms
-       of ``ref=``-bearing URLs differ from earlier rounds' output —
-       duplicates can survive dedup against pre-round-11 state. When
+       The default ``tracking_keys`` leave out ``ref`` (it collides
+       with semantic ``ref=`` parameters), so canonical forms of
+       ``ref=``-bearing URLs differ from those of a list that strips
+       it — duplicates can survive dedup against state built that
+       way. When
        upgrading an existing pipeline, either re-canonicalize persisted
        keys with the current defaults or pin ``tracking_keys``
        explicitly to the list the state was built with."""

@@ -7,9 +7,8 @@ quarantine/span sinks, versioned tables), and the runbook question is
 always the same: *which of my standing tables need attention, and do
 it*. :func:`health_sweep` answers the first half in one call by
 auto-discovering the engine's tables from the catalog (every standing
-index records its family under the ``spark_graft.index.kind`` table
-property; state tables are recognized by their recorded contract keys
-and partition layout); :func:`run_maintenance` optionally executes the
+table records its family as the ``kind`` of its contract,
+``io.read_contract``); :func:`run_maintenance` optionally executes the
 recommended compactions.
 
 Everything here is CONSTANT-TIME per table relative to data size —
@@ -30,12 +29,13 @@ hamming_fp / exact         bucket/cell); ivf adds quantizer drift      (ivf: + s
                            baseline) and cold-cell fragmentation
 er (``kind='er'``)         the above + ``entity.er_index_health``      ``entity.er_compact_index``
                            (relabel-log size)
-sessionize state           partition count + files per partition       — (state compacts itself as
-(``state_partitions``)                                                 sessions fuse; report only)
-distinct state             files per bucket                            ``io.compact_index_table``
-(``state_buckets``)                                                    semantics via bucket rewrite
-batch sinks                live ``_batch_id`` partitions + a pending   ``events.compact_batch_
-(``_batch_id`` partition)  crashed-fold manifest                       partitions`` (+ fold resume)
+sessionize / frontier      partition count + files per partition       — (state compacts itself as
+state (``kind=             (the recorded ``state_partitions``)         sessions fuse; report only)
+'session_state'``)
+distinct state (``kind=    files per bucket                            ``io.compact_index_table``
+'distinct_state'``)                                                    semantics via bucket rewrite
+batch sinks (``kind=       live ``_batch_id`` partitions + a pending   ``events.compact_batch_
+'batch_sink'``)            crashed-fold manifest                       partitions`` (+ fold resume)
 versioned tables           ``VersionedTable.health`` (manifest creep)  ``VersionedTable.compact``
 (explicit ``roots``)
 ========================  ==========================================  ==============================
@@ -81,27 +81,22 @@ IVF_SPLIT_BUDGET_FACTOR = 4.0
 IVF_MERGE_COLD_FRACTION = 0.1
 
 
-def _partition_cols(spark: SparkSession, table: str) -> list[str]:
-    return [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+# the table kinds the sweep maintains; sketches and PQ codebooks
+# record a kind too but have nothing to maintain
+_FAMILIES = (
+    "minhash", "span", "ivf", "er", "hamming_fp", "exact", "session_state",
+    "distinct_state", "batch_sink",
+)
 
 
 def classify_table(spark: SparkSession, table: str) -> str | None:
-    """The standing-state family of a catalog table, or None for tables
-    this engine doesn't maintain (user data, sinks without state
-    contracts). Constant-time: one SHOW TBLPROPERTIES + column listing."""
-    from .sources.io import get_table_meta
+    """The standing-state family of a catalog table — the ``kind`` its
+    contract records — or None for tables this engine doesn't maintain
+    (user data, sketches). Constant-time: one SHOW TBLPROPERTIES."""
+    from .sources.io import recorded_kind
 
-    meta = get_table_meta(spark, table)
-    kind = meta.get("kind")
-    if kind in ("minhash", "span", "ivf", "er", "hamming_fp", "exact"):
-        return kind
-    if "state_partitions" in meta:
-        return "session_state"
-    if "state_buckets" in meta:
-        return "distinct_state"
-    if "_batch_id" in _partition_cols(spark, table):
-        return "batch_sink"
-    return None
+    kind = recorded_kind(spark, table)
+    return kind if kind in _FAMILIES else None
 
 
 def _skew_log_health(spark: SparkSession, table: str, rep: dict) -> None:
@@ -146,15 +141,15 @@ def _rewrite_distinct_state(spark: SparkSession, table: str) -> None:
     """The distinct-state compaction: the same layout rewrite as
     ``io.compact_index_table``, bucketed on every column by the
     recorded ``state_buckets`` (the tuple IS the key)."""
-    from .sources.io import get_table_meta, rewrite_layout
+    from .sources.io import read_contract, rewrite_layout
 
     rows = spark.table(table).distinct().localCheckpoint(eager=True)
-    rewrite_layout(spark, table, rows, get_table_meta(spark, table))
+    rewrite_layout(spark, table, rows, read_contract(spark, table, "distinct_state"))
 
 
 def table_health(spark: SparkSession, table: str, family: str) -> dict:
     """One table's health report (family from :func:`classify_table`)."""
-    from .sources.io import get_table_meta, index_table_health
+    from .sources.io import index_table_health, read_contract
     from .streaming.events import _batch_partition_ids, _pending_fold
 
     if family in ("minhash", "span", "ivf", "hamming_fp", "exact"):
@@ -162,16 +157,13 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
         if family in ("minhash", "hamming_fp"):
             _skew_log_health(spark, table, rep)
         if family == "ivf":
-            meta = get_table_meta(spark, table)
+            meta = read_contract(spark, table, "ivf")
             # the quantizer baseline the last rotation recorded in the
             # contract; per-append drift ratios are measured (and
             # reported) by ivf_append_index itself
-            if "p95_dist" in meta:
-                rep["build_stats"] = {
-                    "mean_dist": float(meta["mean_dist"]),
-                    "p95_dist": float(meta["p95_dist"]),
-                    "n_vectors": int(meta["n_vectors"]),
-                }
+            rep["build_stats"] = {
+                k: meta[k] for k in ("mean_dist", "p95_dist", "n_vectors")
+            }
             # per-append drift reports persist in the {table}_drift_log
             # companion (ivf_append_index log_drift=True — the default,
             # so streamed ingests leave a trail); the flag resets when
@@ -220,7 +212,7 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
             from pyspark.sql import functions as F
 
             rep["merge_recommended"] = False
-            k = int(meta.get("n_clusters", 0) or 0)
+            k = meta["n_clusters"]
             if k > 1:
                 counts = {
                     r["_cell"]: r["n"]
@@ -255,10 +247,8 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
         _skew_log_health(spark, table, rep)
         return rep
     if family == "session_state":
-        meta = get_table_meta(spark, table)
-        df = spark.table(table)
-        n_parts = int(meta.get("state_partitions", 0)) or 1
-        n_files = len(df.inputFiles())
+        n_parts = read_contract(spark, table, "session_state")["state_partitions"]
+        n_files = len(spark.table(table).inputFiles())
         return {
             "state_partitions": n_parts,
             "n_files": n_files,
@@ -269,10 +259,9 @@ def table_health(spark: SparkSession, table: str, family: str) -> dict:
             "compact_recommended": n_files / n_parts > MAX_FILES_PER_BUCKET,
         }
     if family == "distinct_state":
-        meta = get_table_meta(spark, table)
-        df = spark.table(table)
-        n_buckets = int(meta.get("state_buckets", 0)) or 1
-        n_files = len(df.inputFiles())
+        # an unbucketed state (0 buckets) counts as one bucket
+        n_buckets = max(1, read_contract(spark, table, "distinct_state")["state_buckets"])
+        n_files = len(spark.table(table).inputFiles())
         return {
             "n_buckets": n_buckets,
             "n_files": n_files,
@@ -307,7 +296,10 @@ def health_sweep(
     health}, "attention": [names whose report recommends action]}``.
     Discovery walks the catalog (``database`` or the current one) and
     classifies by recorded metadata — user tables are skipped, never
-    scanned. Constant-time per table (see module docstring).
+    scanned. Constant-time per table (see module docstring). A table
+    whose contract ``io.read_contract`` refuses is reported as
+    ``{"family", "contract_error"}`` and needs attention; the sweep
+    goes on with the other tables.
     ``tables`` scopes the sweep to the named tables only (bare or
     db-qualified) — the "maintain just this index" form, and how a
     caller sharing a warehouse avoids sweeping (let alone compacting)
@@ -362,13 +354,19 @@ def health_sweep(
         family = classify_table(spark, name)
         if family is None:
             continue
-        rep = {"family": family, **table_health(spark, name, family)}
+        try:
+            rep = {"family": family, **table_health(spark, name, family)}
+        except ValueError as e:
+            # a contract io.read_contract refuses is this table's
+            # finding, not the end of the sweep over every other table
+            rep = {"family": family, "contract_error": str(e)}
         reports[name] = rep
         if (
             rep.get("compact_recommended")
             or rep.get("retrain_recommended")
             or rep.get("merge_recommended")
             or rep.get("cap_truncating")
+            or "contract_error" in rep
         ):
             attention.append(name)
     versioned: dict[str, dict] = {}
@@ -408,11 +406,11 @@ def _remediate_ivf(
         ivf_split_hot_cells,
         pq_load_codebook,
     )
-    from .sources.io import get_table_meta
+    from .sources.io import read_contract
 
-    meta = get_table_meta(spark, name)
-    base_k = int(meta["base_n_clusters"])
-    cur_k = int(meta.get("n_clusters", 0) or base_k)
+    meta = read_contract(spark, name, "ivf")
+    base_k = meta["base_n_clusters"]
+    cur_k = meta["n_clusters"]
     budget = max(base_k + 1, int(split_budget_factor * base_k))
     if rep.get("remediation") == "split" and cur_k < budget:
         new_cents = ivf_split_hot_cells(
@@ -426,14 +424,13 @@ def _remediate_ivf(
             return "ivf_split_hot_cells"
         # nothing actually split (no currently-hot cell, or only
         # degenerate ones): the flag would never clear — escalate
-    if meta.get("pq") == "true":
+    if meta["pq"]:
         try:
             cb = pq_load_codebook(spark, name)
         except Exception:
             return (
-                "retrain_skipped (PQ index predates the persisted "
-                f"{name}_pq_codebook companion; call ivf_retrain_index "
-                "with the codebook directly)"
+                f"retrain_skipped (PQ index has no readable {name}_pq_codebook "
+                "companion; call ivf_retrain_index with the codebook directly)"
             )
         ivf_retrain_index(spark, name, n_clusters=base_k, pq_codebook=cb)
     else:
@@ -450,11 +447,11 @@ def _apply_merge(
     TOTAL — divide by the current k. A merge acted exactly when k
     shrank."""
     from .operators.similarity import ivf_merge_cold_cells
-    from .sources.io import get_table_meta
+    from .sources.io import read_contract
 
-    before = int(get_table_meta(spark, name).get("n_clusters", 0) or 0)
+    before = read_contract(spark, name, "ivf")["n_clusters"]
     merged = ivf_merge_cold_cells(
-        spark, name, min_cell_fraction=ivf_merge_fraction / max(before, 1)
+        spark, name, min_cell_fraction=ivf_merge_fraction / before
     )
     if len(merged) < before:
         return "ivf_merge_cold_cells"
@@ -504,8 +501,8 @@ def run_maintenance(
     (``ivf_split_budget_factor × base_n_clusters`` cells — the bound
     that keeps k finite under long-lived drifting ingest) → full
     ``ivf_retrain_index`` at the base k, resolving a PQ index's
-    persisted codebook companion; only a PRE-companion PQ index is
-    skipped with a note.
+    persisted codebook companion; a PQ index whose companion cannot be
+    read is skipped with a note.
 
     IVF fragmentation: a table whose health reports
     ``merge_recommended`` (sliver/empty cells at the
@@ -531,6 +528,10 @@ def run_maintenance(
                 continue
             rep = sweep["tables"][name]
             family = rep["family"]
+            if "contract_error" in rep:
+                # no verb runs on a table whose contract is refused;
+                # its create path has to rebuild it
+                continue
             if family == "interrupted_swap":
                 # a write_table stage-and-swap that never finished:
                 # dangling base -> complete the rename (strictly

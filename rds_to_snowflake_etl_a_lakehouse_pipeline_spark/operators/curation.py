@@ -581,7 +581,7 @@ def cluster_split(
     there (under-deleting is a soft failure), but here a split
     component puts near-duplicates of test documents into train — the
     exact leakage this operator exists to prevent. Measured on a 200k-
-    node CHAIN (the adversarial worst case, SCALE.md round 10): label
+    node CHAIN (the adversarial worst case, in SCALE.md): label
     propagation split it into thousands of pieces at max_iter=20 while
     star converged. Pass ``algorithm="label"`` only when the pair
     graph is known shallow (ordinary near-dup quasi-cliques).
@@ -679,8 +679,8 @@ def robots_rules(
 ):
     """Parse per-domain ``robots.txt`` text into one row per
     Allow/Disallow rule for the chosen ``agent`` group — the frontier
-    side of crawl compliance. Full RFC 9309 matching semantics
-    (round 11): ``*`` matches any octet sequence and a trailing ``$``
+    side of crawl compliance. Full RFC 9309 matching semantics:
+    ``*`` matches any octet sequence and a trailing ``$``
     anchors the end of the path (both MUST-support per the RFC;
     elsewhere ``$`` is literal, the de-facto Google-parser reading);
     group = consecutive ``User-agent`` lines followed by rules. A
@@ -815,7 +815,7 @@ def robots_allowed(
             f"robots_allowed reserves the '__rb_' column prefix: {clash}"
         )
     # the matched string is everything after the authority, QUERY
-    # INCLUDED (RFC 9309 matches path+query — round-12 fix; the
+    # INCLUDED (RFC 9309 matches path+query; the
     # query-stripped form mis-applied every '?'-bearing wildcard
     # rule). hp_raw is the raw host[:port] slice of `rest`, so the
     # tail after it is '', '/path[?q]' or '?q'; a query-only URL
@@ -842,7 +842,7 @@ def robots_allowed(
         # candidate join and re-run its regexp; the winner is a max_by
         # over the candidates, invariant to duplicates, so dropping
         # them is free semantics-wise and linear savings cost-wise
-        # (round 14 A/B in SCALE.md: 8x duplication ≈ 6x candidate
+        # (A/B in SCALE.md: 8x duplication ≈ 6x candidate
         # work removed). The dedup itself is one tiny shuffle of the
         # rules table — domains × unique rules, never frontier-sized.
         rule_side = rule_side.dropDuplicates(
@@ -1239,7 +1239,7 @@ def crawl_tick(
     state_partitions: int = 64,
 ):
     """ONE tick of a continuous crawler — the end-to-end composition of
-    the crawl tier over standing state, driver-facing (round 14; the
+    the crawl tier over standing state, driver-facing (the
     reference has no crawl tier, this extends it for LLM-corpus
     construction):
 

@@ -139,6 +139,17 @@ def exact_build_index(
     )
 
 
+def _before_batch(idx: DataFrame, batch_id: int | None) -> DataFrame:
+    """The replay view of an exact or span index: the rows as they
+    stood before batch ``batch_id`` first ran (rows it stamped in
+    ``_src_batch`` excluded), so a crash-redelivered batch is not
+    masked by its own rows. The whole index when ``batch_id`` is
+    None."""
+    if batch_id is None:
+        return idx
+    return idx.filter(F.col("_src_batch").isNull() | (F.col("_src_batch") != batch_id))
+
+
 def _content_cols_sig(content_cols: list[str]) -> str:
     import hashlib
 
@@ -179,7 +190,7 @@ def exact_incremental_dedup(
     from ..sources.io import append_layout, check_table_meta
 
     meta = check_table_meta(
-        spark, table, content_sig=_content_cols_sig(content_cols)
+        spark, table, "exact", content_sig=_content_cols_sig(content_cols)
     )
     if "_fp" in new_df.columns:
         raise ValueError(
@@ -194,11 +205,7 @@ def exact_incremental_dedup(
         .drop("_rn")
     )
     idx = spark.table(table)
-    probe_idx = idx
-    if batch_id is not None and "_src_batch" in idx.columns:
-        probe_idx = idx.filter(
-            F.col("_src_batch").isNull() | (F.col("_src_batch") != batch_id)
-        )
+    probe_idx = _before_batch(idx, batch_id)
     survivors = self_kept.join(
         probe_idx, self_kept["_fp"] == probe_idx["fp"], "left_anti"
     ).localCheckpoint()
@@ -250,7 +257,7 @@ def _minhash_signature_udf(
     :func:`minhash_signature` needs num_hashes interpreted higher-order
     passes instead (~60× slower measured at sf0.01).
 
-    ``hash_impl="md5"`` (round 14) swaps every engine-opaque piece for
+    ``hash_impl="md5"`` swaps every engine-opaque piece for
     md5-derived arithmetic so the WHOLE signature is replayable by any
     ANSI engine (the CMS/simhash/LSH family pattern): base hash x =
     first 8 md5 hex chars of the shingle (32-bit, crc32's range),
@@ -699,18 +706,6 @@ def _minhash_family(
     )
 
 
-def _family_contract(spark, table: str, fam: _BandedFamily) -> dict:
-    """The index's recorded contract, validated against ``fam``'s
-    (:func:`~..sources.io.check_table_meta`); the caller's values fill
-    keys an older index did not record."""
-    from ..sources.io import check_table_meta
-
-    return {
-        **fam.contract,
-        **check_table_meta(spark, table, kind=fam.kind, **fam.contract),
-    }
-
-
 def _corpus_hits(
     fam: _BandedFamily, banded: DataFrame, idx: DataFrame, cap: int | None
 ) -> DataFrame:
@@ -734,7 +729,9 @@ def _banded_probe(
     """``(new_id, corpus_id, <score_col>)``, one row per batch document
     and indexed document that :func:`_corpus_hits` pairs. Lazy: each
     action on the result scans the index once."""
-    meta = _family_contract(spark, table, fam)
+    from ..sources.io import check_table_meta
+
+    meta = check_table_meta(spark, table, fam.kind, **fam.contract)
     banded = fam.band(fam.sign(new_df), meta)
     idx = spark.table(table)
     if cap is not None:
@@ -771,7 +768,9 @@ def _banded_dedup(
     compaction. Survivors are pinned before the append: a lazy
     survivor plan re-read after it would find the batch's own rows in
     the index and drop them as duplicates of themselves."""
-    meta = _family_contract(spark, table, fam)
+    from ..sources.io import append_layout, check_table_meta
+
+    meta = check_table_meta(spark, table, fam.kind, **fam.contract)
     if log_skew is None:
         log_skew = cap is not None
     if fam.pin_batch:
@@ -813,8 +812,6 @@ def _banded_dedup(
     if log_skew:
         _log_skew(spark, table, banded, idx, cap, skew_sink)
     if append:
-        from ..sources.io import append_layout
-
         kept = banded.join(survivors.select(F.col(id_col).alias("_id")), "_id")
         append_layout(_stored(fam, kept, id_col), table, meta)
     return survivors
@@ -848,13 +845,9 @@ def _banded_reband(spark, table: str, fam: _BandedFamily, value: int) -> None:
     with its full value, so the corpus is never re-read, and a re-run
     after a failed reband converges (both layouts keep the full
     values)."""
-    from ..sources.io import get_table_meta
+    from ..sources.io import read_contract
 
-    meta = get_table_meta(spark, table)
-    if meta.get("kind") != fam.kind:
-        raise ValueError(
-            f"{table} is not a {fam.kind} index (kind={meta.get('kind')!r})"
-        )
+    meta = read_contract(spark, table, fam.kind)
     idx = spark.table(table)
     id_col = next(c for c in idx.columns if c not in (fam.value, *fam.keys))
     docs = idx.filter(F.col("band") == 0).select(
@@ -1385,7 +1378,7 @@ def simhash(
     ``hash_impl``: ``"xxhash64"`` (default, fastest JVM path) or
     ``"md5"`` (first 16 hex chars → 64 bits via ``conv``) — the
     md5 family is recomputable by any ANSI engine, so md5-family
-    simhashes are DuckDB-oracle replayable bit for bit (round 14, the
+    simhashes are DuckDB-oracle replayable bit for bit (the
     same pattern as the CMS hash family: the registry entry
     hash-checks the sign-sum/bucket/Hamming machinery on the md5
     family; the default stays the scale path under pytest pins)."""
@@ -1479,7 +1472,7 @@ def embedding_cosine_pairs(
     :func:`~.similarity.lsh_topk` — "md5" swaps the gaussian
     hyperplanes for ±1 Rademacher planes regenerated from md5 parity
     (table t uses ``sign_matrix(dim, n_planes, seed + t)``), making
-    the bucketing DuckDB-oracle replayable (round 14).
+    the bucketing DuckDB-oracle replayable.
     """
     from ..functions.vectors import sign_matrix
     from .similarity import _hyperplanes, lsh_signature
@@ -1755,7 +1748,7 @@ def semantic_pairs(
     :func:`embedding_cosine_pairs` oracle on samples). Deterministic
     for a fixed seed/data.
 
-    ``impl="grid"`` (round 14): cells come from the deterministic
+    ``impl="grid"``: cells come from the deterministic
     :func:`~.similarity.grid_kmeans_fit` trainer and the within-cell
     cosines from a Catalyst fold instead of the numpy matmul — every
     step replayable by any ANSI engine (the v_semantic_dedup oracle).
@@ -2233,8 +2226,7 @@ def span_incremental_dedup(
     before the sink committed, the redelivered batch probes the index
     exactly as it stood before the first attempt (instead of masking
     itself against its own spans), and the re-append is a no-op
-    (anti-join). Indexes built before the ``_src_batch`` column
-    existed degrade gracefully: no exclusion, unstamped append.
+    (anti-join).
 
     The hit set is pinned with ``localCheckpoint`` before the append
     touches the index — the returned DataFrame is lazy, and an
@@ -2258,15 +2250,10 @@ def span_incremental_dedup(
     """
     from ..sources.io import append_layout, check_table_meta
 
-    meta = check_table_meta(spark, table, k=k)
+    meta = check_table_meta(spark, table, "span", k=k)
 
     idx = spark.table(table)
-    probe_idx = idx
-    if batch_id is not None and "_src_batch" in idx.columns:
-        # replay view: the index as it stood BEFORE this batch first ran
-        probe_idx = idx.filter(
-            F.col("_src_batch").isNull() | (F.col("_src_batch") != batch_id)
-        )
+    probe_idx = _before_batch(idx, batch_id)
     # exploded ONCE and materialized: the historical probe, the
     # within-batch groupBy + join-back, and the append all reuse these
     # blocks (the per-row k-token join + md5 pass is the dominant
@@ -2285,10 +2272,9 @@ def span_incremental_dedup(
         # anti-join against the FULL index (not the replay view): a
         # redelivered batch's fingerprints are already present, so the
         # re-append is a no-op
-        new_fps = sb.select("_h").distinct().join(idx, "_h", "leftanti")
-        if "_src_batch" in idx.columns:
-            new_fps = new_fps.withColumn(
-                "_src_batch", F.lit(batch_id).cast("bigint")
-            )
+        new_fps = (
+            sb.select("_h").distinct().join(idx, "_h", "leftanti")
+            .withColumn("_src_batch", F.lit(batch_id).cast("bigint"))
+        )
         append_layout(new_fps, table, meta)
     return masked

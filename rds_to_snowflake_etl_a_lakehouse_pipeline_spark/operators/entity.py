@@ -379,13 +379,9 @@ def er_reblock_index(spark, table: str, block_key: Column | str) -> None:
     old blocking or the new one, never new blocks under the old
     contract. Re-running the verb with YOUR key converges from either
     (the stored text survives both layouts)."""
-    from ..sources.io import get_table_meta, rewrite_layout
+    from ..sources.io import read_contract, rewrite_layout
 
-    meta = get_table_meta(spark, table)
-    if meta.get("kind") != "er":
-        raise ValueError(
-            f"{table} is not an er index (kind={meta.get('kind')!r})"
-        )
+    meta = read_contract(spark, table, "er")
     bk = F.col(block_key) if isinstance(block_key, str) else block_key
     rows = (
         spark.table(table)
@@ -468,7 +464,7 @@ def er_incremental(
     """
     from ..sources.io import append_layout, check_table_meta, write_table
 
-    meta = check_table_meta(spark, table)
+    meta = check_table_meta(spark, table, "er")
     sim_fn = similarity or levenshtein_similarity
     rel = _relabel_closure(spark, table)
     idx = _apply_relabels(spark.table(table), "entity", rel)
@@ -592,9 +588,9 @@ def er_compact_index(spark, table: str) -> None:
     cost doesn't grow with relabels (they apply as a tiny broadcast
     map), but an unbounded relabel log makes the driver-side closure
     collect grow; compaction resets it."""
-    from ..sources.io import get_table_meta, rewrite_layout
+    from ..sources.io import read_contract, rewrite_layout
 
-    meta = get_table_meta(spark, table)
+    meta = read_contract(spark, table, "er")
     rel = _relabel_closure(spark, table, enforce_cap=False)
     rows = _apply_relabels(spark.table(table), "entity", rel)
     # write_table's stage-and-swap materializes before dropping, so

@@ -79,7 +79,7 @@ def asof_join(
     attachment instead of being silently replaced by the previous
     non-null value — ``last(col, ignorenulls=True)`` per column cannot
     distinguish "no match yet" from "matched row holds NULL here"
-    (round 9; caught by scd2_pit_join's open-ended ``end_dt``).
+    (caught by scd2_pit_join's open-ended ``end_dt``).
 
     ``right_cols`` are the value columns to attach (default: all
     non-key, non-ts columns), each emitted as ``right_<name>``; the

@@ -967,7 +967,7 @@ def require_real_decode(
     BMP and WAV via pure-Python/stdlib parsers, 8-bit non-interlaced
     PNG via the stdlib-zlib tier (:func:`_decode_png`), baseline
     sequential JPEG via the pure-Python Huffman+IDCT codec
-    (``operators/jpeg.py``), and — as of round 10 — progressive (SOF2)
+    (``operators/jpeg.py``), and progressive (SOF2)
     JPEG via ``operators/jpeg_progressive.py``, so this guard passes
     unconditionally for both (``progressive_jpeg`` is kept for callers
     that pinned it). The ONE residual stub path is arithmetic-coded
@@ -1822,7 +1822,7 @@ def _parse_warc_gz(b: bytes, max_records: int, max_member_bytes: int):
 
     The walk is LINEAR in blob size: an offset advances over a
     memoryview and each decompressobj is fed bounded chunks until its
-    ``eof``, so ``unused_data`` stays chunk-sized. (The round-11 form
+    ``eof``, so ``unused_data`` stays chunk-sized. (A form that
     passed the whole remaining buffer per member and re-materialized
     the tail each time — O(members × blob), tens of minutes of memcpy
     on a real many-member Common Crawl .warc.gz and a CPU-DoS on an
@@ -1923,8 +1923,8 @@ def explode_warc(
             passthrough = [c for c in pdf.columns if c != content_col]
             # Column-wise packing: the previous iterrows() +
             # list-of-dicts construction measured ~4x the parse cost
-            # itself at corpus grain (r18 micro-profile: 0.42 s vs
-            # 0.10 s per 5k docs single-core, identical output) — plain
+            # itself at corpus grain (0.42 s vs 0.10 s per 5k docs
+            # single-core, identical output) — plain
             # list appends + ONE DataFrame construction keep the Python
             # interior parse-bound (guide §4.2).
             pvals = [pdf[c].tolist() for c in passthrough]

@@ -303,7 +303,7 @@ def ivf_topk(
     query. At 100 TB, persist the assigned corpus as a bucketed table
     partitioned by cell id so probes prune partitions.
 
-    ``impl="grid"`` (round 14) swaps the trainer for
+    ``impl="grid"`` swaps the trainer for
     :func:`grid_kmeans_fit` and both assignment passes for
     :func:`grid_assign_cells`, making cell boundaries — and therefore
     the whole approximate result — replayable by any ANSI engine (the
@@ -415,10 +415,16 @@ def ivf_load_centroids(spark, table: str) -> list[list[float]]:
     session-independent way for probes and appends to get the CURRENT
     matrix, including after maintenance rotated it. k × dim values —
     a driver-side collect by design."""
-    from ..sources.io import get_table_meta
+    from ..sources.io import read_contract
 
+    return _load_centroids(spark, table, read_contract(spark, table, "ivf"))
+
+
+def _load_centroids(spark, table: str, meta: dict) -> list[list[float]]:
+    """:func:`ivf_load_centroids` for the IVF contract ``meta`` the
+    caller already read."""
     comp = _centroids_table(table)
-    fp = get_table_meta(spark, table).get("centroid_fp")
+    fp = meta["centroid_fp"]
     rows = sorted(
         spark.table(comp).filter(F.col("centroid_fp") == fp).collect(),
         key=lambda r: r["cell"],
@@ -458,28 +464,15 @@ def _check_centroids(spark, table: str, centroids: list[list[float]]) -> dict:
     from ..sources.io import check_table_meta
 
     return check_table_meta(
-        spark, table, centroid_fp=_centroid_fingerprint(centroids)
+        spark, table, "ivf", centroid_fp=_centroid_fingerprint(centroids)
     )
 
 
 def _drift_baseline(meta: dict) -> tuple:
     """``(mean_dist, p95_dist)`` the last rotation recorded in the
-    contract; ``None`` where it recorded none (an empty index), which
-    leaves drift unmeasured."""
-    return tuple(
-        float(meta[k]) if k in meta else None for k in ("mean_dist", "p95_dist")
-    )
-
-
-def _ivf_meta(spark, table: str) -> dict:
-    from ..sources.io import get_table_meta
-
-    meta = get_table_meta(spark, table)
-    if meta.get("kind") != "ivf":
-        raise ValueError(
-            f"{table!r} is not an IVF index (kind={meta.get('kind')!r})"
-        )
-    return meta
+    contract; an empty index records 0, which leaves drift
+    unmeasured."""
+    return meta["mean_dist"], meta["p95_dist"]
 
 
 def _cell_sizes(rows: DataFrame) -> dict[int, int]:
@@ -553,8 +546,8 @@ def ivf_build_index(
     in the contract so appends re-quantize their batches to match.
 
     The layout is cell-partitioned AND id-bucketed
-    (``n_id_buckets`` hash buckets on ``id_col``, recorded in the
-    contract so appends match the spec; ``0`` records none): probes
+    (``n_id_buckets`` ≥ 1 hash buckets on ``id_col``, recorded in the
+    contract so appends match the spec): probes
     prune by the ``_cell`` directories, while the streaming-ingest
     replay guard (:func:`~..streaming.events.stream_ivf_append`'s id
     anti-join) streams the id column out of the bucketed layout
@@ -562,6 +555,8 @@ def ivf_build_index(
     monotonically growing index, the same flat-probe property the
     exact seen-set measures (``dedup.exact_build_index``).
     """
+    if n_id_buckets < 1:
+        raise ValueError(f"n_id_buckets={n_id_buckets} must be >= 1")
     if impl == "grid":
         centroids = grid_kmeans_fit(corpus, id_col, vec_col, k=n_clusters)
         indexed = (
@@ -592,12 +587,6 @@ def ivf_build_index(
         # reads only (id, _cell, pq_code) — the m-byte column — and
         # never touches the float vectors at query time
         indexed = pq_encode(indexed, pq_codebook, vec_col=vec_col)
-    # pre-bucketing indexes (n_id_buckets=0) record NO bucket spec:
-    # bucket keys for files that are not bucket-aligned would make
-    # appends bucket into an unbucketed table
-    buckets = (
-        {"n_buckets": n_id_buckets, "bucket_cols": id_col} if n_id_buckets else {}
-    )
     _commit_rotation(
         corpus.sparkSession,
         table,
@@ -608,9 +597,10 @@ def ivf_build_index(
         # so repeated drift cannot ratchet the budget up
         {
             "impl": impl,
-            "pq": str(pq_codebook is not None).lower(),
+            "pq": pq_codebook is not None,
             "base_n_clusters": n_clusters,
-            **buckets,
+            "n_buckets": n_id_buckets,
+            "bucket_cols": id_col,
         },
         vec_col,
         pq_codebook=pq_codebook,
@@ -633,8 +623,8 @@ def _commit_rotation(
     merge) takes. In order:
 
     1. the drift baseline — mean / p95 distance of each vector to its
-       cell's centroid, and the row count — from one aggregate over
-       ``rows``, recorded in the contract;
+       cell's centroid (0 for no rows), and the row count — from one
+       aggregate over ``rows``, recorded in the contract;
     2. the ``{table}_centroids`` companion is overwritten with the
        matrix the table records now AND the new one, each under its
        ``centroid_fp`` (:func:`ivf_load_centroids` reads the recorded
@@ -649,7 +639,7 @@ def _commit_rotation(
     A crash before step 4 commits leaves the old rows under the old
     fingerprint; after it, the new rows under the new one. Probes
     never see one without the other."""
-    from ..sources.io import get_table_meta, rewrite_layout, write_table
+    from ..sources.io import prior_contract, rewrite_layout, write_table
 
     fp = _centroid_fingerprint(centroids)
     # grid centroids live in quantized units: measure in the same
@@ -657,12 +647,14 @@ def _commit_rotation(
     stats = (
         rows.select(
             F.col("_cell"),
-            _quantized_vec(vec_col, contract.get("impl", "mllib")).alias("_qv"),
+            _quantized_vec(vec_col, contract["impl"]).alias("_qv"),
         )
         .select(_centroid_dist("_qv", "_cell", centroids).alias("_dist"))
         .agg(
-            F.avg("_dist").alias("mean_dist"),
-            F.expr("approx_percentile(_dist, 0.95, 10000)").alias("p95_dist"),
+            F.coalesce(F.avg("_dist"), F.lit(0.0)).alias("mean_dist"),
+            F.coalesce(
+                F.expr("approx_percentile(_dist, 0.95, 10000)"), F.lit(0.0)
+            ).alias("p95_dist"),
             F.count("*").alias("n_vectors"),
         )
         .first()
@@ -675,7 +667,7 @@ def _commit_rotation(
         "n_clusters": len(centroids),
         "centroid_fp": fp,
         "partition_cols": "_cell",
-        **{k: v for k, v in stats.items() if v is not None},
+        **stats,
     }
 
     comp = _centroids_table(table)
@@ -683,15 +675,11 @@ def _commit_rotation(
         [(fp, i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "centroid_fp string, cell int, centroid array<double>",
     )
-    recorded = (
-        get_table_meta(spark, table).get("centroid_fp")
-        if spark.catalog.tableExists(table)
-        else None
-    )
-    if recorded not in (None, fp) and spark.catalog.tableExists(comp):
+    prior = prior_contract(spark, table, "ivf")
+    if prior and prior["centroid_fp"] != fp and spark.catalog.tableExists(comp):
         matrices = (
             spark.table(comp)
-            .filter(F.col("centroid_fp") == recorded)
+            .filter(F.col("centroid_fp") == prior["centroid_fp"])
             .unionByName(matrices)
         )
     write_table(matrices, comp)
@@ -705,10 +693,13 @@ def _carried_contract(meta: dict) -> dict:
     """The contract keys a split or merge carries over; the rotation
     re-derives the rest. ``base_n_clusters`` rides through unchanged,
     so later splits cannot ratchet the budget."""
-    return {
-        **{k: meta[k] for k in ("impl", "pq", "n_buckets", "bucket_cols") if k in meta},
-        "base_n_clusters": meta["base_n_clusters"],
-    }
+    keep = ("impl", "pq", "n_buckets", "bucket_cols", "base_n_clusters")
+    return {k: meta[k] for k in keep}
+
+
+# an append recommends a rebuild when its batch p95 distance exceeds
+# this multiple of the recorded baseline
+DRIFT_THRESHOLD = 1.5
 
 
 def _pinned_by_cell(rows: DataFrame) -> DataFrame:
@@ -726,7 +717,7 @@ def ivf_append_index(
     centroids: list[list[float]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    drift_threshold: float = 1.5,
+    drift_threshold: float = DRIFT_THRESHOLD,
     pq_codebook: "PQCodebook | None" = None,
     log_drift: bool = True,
     build_stats: "tuple | None" = None,
@@ -750,8 +741,8 @@ def ivf_append_index(
     in-distribution one tracks the build stats). Rebuild cost is one
     fit on a bounded sample plus one assignment pass
     (:func:`ivf_retrain_index` is that action, runnable straight off
-    the standing table). An index with no recorded baseline yields
-    ``build_p95=None`` and no recommendation.
+    the standing table). An empty index records a zero baseline,
+    which yields no drift ratio and no recommendation.
 
     ``log_drift=True`` also APPENDS the report as one row to the
     ``{table}_drift_log`` companion, so the recommendation persists
@@ -775,31 +766,43 @@ def ivf_append_index(
     job. The baseline comes from the contract (no job), or from
     ``build_stats=(mean, p95)`` when the caller already holds it.
     """
-    from ..sources.io import write_table
+    from ..sources.io import read_contract
 
     spark = new_vectors.sparkSession
     if centroids is None:
         # no-driver-state form: resolve the CURRENT matrix from the
         # persisted companion (also how appenders resume after a
         # maintenance rotation)
-        centroids = ivf_load_centroids(spark, table)
-    _meta = _check_centroids(spark, table, centroids)
+        meta = read_contract(spark, table, "ivf")
+        centroids = _load_centroids(spark, table, meta)
+    else:
+        meta = _check_centroids(spark, table, centroids)
+    return _append_assigned(
+        new_vectors, table, centroids, meta, id_col, vec_col,
+        build_stats if build_stats is not None else _drift_baseline(meta),
+        drift_threshold, pq_codebook, log_drift,
+    )
+
+
+def _append_assigned(
+    new_vectors: DataFrame, table: str, centroids: list[list[float]], meta: dict,
+    id_col: str, vec_col: str, build_stats: tuple,
+    drift_threshold: float = DRIFT_THRESHOLD,
+    pq_codebook: "PQCodebook | None" = None, log_drift: bool = True,
+) -> dict:
+    """The body of :func:`ivf_append_index` for ``centroids`` whose
+    fingerprint the IVF contract ``meta`` records: a stream that
+    already read the contract this batch hands it here instead of
+    reading it again."""
+    from ..sources.io import append_layout
+
+    spark = new_vectors.sparkSession
     C = np.asarray(centroids, dtype=np.float64)
     dim = C.shape[1]
     # grid-built indexes store centroids in quantized units (see
     # ivf_build_index impl="grid"): re-quantize batch vectors to match
     # before the nearest-centroid assignment
-    _is_grid = _meta.get("impl") == "grid"
-    # indexes built with the id-bucketed layout record their bucket
-    # spec; appends MUST match it (Spark rejects an unbucketed append
-    # into a bucketed table). Pre-bucketing indexes record none and
-    # keep appending plain cell-partitioned files.
-    _n_id_buckets = int(_meta.get("n_buckets", 0) or 0)
-    _id_bucket_spec = (
-        (_n_id_buckets, _meta["bucket_cols"].split(","))
-        if _n_id_buckets and "bucket_cols" in _meta
-        else None
-    )
+    _is_grid = meta["impl"] == "grid"
 
     if _is_grid:
         # size(NULL) is NULL, so this single predicate drops NULL and
@@ -829,34 +832,17 @@ def ivf_append_index(
         ).localCheckpoint(eager=True)
         assigned = stats_src.filter(F.col("_cell") >= 0)
     to_write = assigned
-    index_has_codes = "pq_code" in spark.table(table).columns
-    if index_has_codes and pq_codebook is None:
-        # resolve the build's persisted companion (bit-identical to
-        # the trained object) before giving up — the codebook twin of
-        # centroids=None resolution above
-        try:
-            pq_codebook = pq_load_codebook(spark, table)
-        except Exception:
-            raise ValueError(
-                f"{table} stores PQ codes (built with pq_codebook=...) "
-                f"and has no {_pq_codebook_table(table)} companion to "
-                "resolve; appends must pass the SAME codebook so new "
-                "rows carry codes"
-            )
+    pq_codebook = _index_codebook(spark, table, meta, pq_codebook)
     if pq_codebook is not None:
-        if not index_has_codes:
+        if not meta["pq"]:
             raise ValueError(
                 f"{table} has no pq_code column; pass pq_codebook only "
                 "for indexes built with one"
             )
         to_write = pq_encode(assigned, pq_codebook, vec_col=vec_col)
-    write_table(
-        to_write,
-        table,
-        mode="append",
-        partition_by=["_cell"],
-        bucket_by=_id_bucket_spec,
-    )
+    # the append keeps the cell partitions and id buckets the contract
+    # records (Spark rejects an unbucketed append into a bucketed table)
+    append_layout(to_write, table, meta)
 
     _dv = _quantized_vec(vec_col, "grid" if _is_grid else "mllib")
     # ONE aggregation job for both the global drift stats and the
@@ -896,9 +882,7 @@ def ivf_append_index(
     cell_rows = [
         r for r in stats_rows if r["_is_total"] == 0 and r["_cell"] != -1
     ]
-    build_mean, build_p95 = (
-        build_stats if build_stats is not None else _drift_baseline(_meta)
-    )
+    build_mean, build_p95 = build_stats
     batch_p95 = row["p95_dist"]
     drift_ratio = (
         batch_p95 / build_p95 if batch_p95 is not None and build_p95 else None
@@ -1010,17 +994,10 @@ def ivf_retrain_index(
     wrong cells, and the drift log is dropped, resetting
     ``maintenance.table_health``'s ``retrain_recommended``.
     """
-    meta = _ivf_meta(spark, table)
-    if meta.get("pq") == "true" and pq_codebook is None:
-        try:
-            pq_codebook = pq_load_codebook(spark, table)
-        except Exception:
-            raise ValueError(
-                f"{table} stores PQ codes and has no "
-                f"{_pq_codebook_table(table)} companion to resolve; "
-                "retrain must pass the SAME codebook so rebuilt rows "
-                "carry codes"
-            )
+    from ..sources.io import read_contract
+
+    meta = read_contract(spark, table, "ivf")
+    pq_codebook = _index_codebook(spark, table, meta, pq_codebook)
     # build writes (id_col, vec_col, _cell[, pq_code]) in that order —
     # the column order IS the contract (names are caller-chosen)
     cols = spark.table(table).columns
@@ -1032,13 +1009,13 @@ def ivf_retrain_index(
     return ivf_build_index(
         corpus,
         table,
-        n_clusters=n_clusters or int(meta.get("n_clusters", 16)),
+        n_clusters=n_clusters or meta["n_clusters"],
         seed=seed,
         id_col=id_col,
         vec_col=vec_col,
         pq_codebook=pq_codebook,
-        impl=meta.get("impl", "mllib"),
-        n_id_buckets=n_id_buckets or int(meta.get("n_buckets", 0) or 8),
+        impl=meta["impl"],
+        n_id_buckets=n_id_buckets or meta["n_buckets"],
     )
 
 
@@ -1060,8 +1037,8 @@ def ivf_split_hot_cells(
     other row changes cell. The split runs on one pinned copy of the
     index and commits once (:func:`_commit_rotation`): rows, the new
     matrix's fingerprint and a fresh drift baseline in one create,
-    with the id-bucket spec the contract records (or none, for an
-    index that records none), and the drift log dropped.
+    with the id-bucket spec the contract records, and the drift log
+    dropped.
 
     Mechanics per hot cell (row count > ``max_cell_fraction`` × index
     rows, needs ≥ 2 rows): fit k=2 on the cell's own vectors, impl-aware
@@ -1093,9 +1070,11 @@ def ivf_split_hot_cells(
     base k when the budget is exhausted — the fit-everything
     remediation is also the one that resets k.
     """
-    meta = _ivf_meta(spark, table)
-    centroids = [list(c) for c in ivf_load_centroids(spark, table)]
-    impl = meta.get("impl", "mllib")
+    from ..sources.io import read_contract
+
+    meta = read_contract(spark, table, "ivf")
+    centroids = [list(c) for c in _load_centroids(spark, table, meta)]
+    impl = meta["impl"]
     cols = spark.table(table).columns
     id_col, vec_col = cols[0], cols[1]
     data_cols = [c for c in cols if c != "_cell"]
@@ -1234,12 +1213,14 @@ def ivf_merge_cold_cells(
 
     Raises if the fraction would retire EVERY cell (fraction ≥ 1/k
     territory) — a merge must leave at least one survivor."""
-    meta = _ivf_meta(spark, table)
-    impl = meta.get("impl", "mllib")
+    from ..sources.io import read_contract
+
+    meta = read_contract(spark, table, "ivf")
+    impl = meta["impl"]
     cols = spark.table(table).columns
     id_col, vec_col = cols[0], cols[1]
     data_cols = [c for c in cols if c != "_cell"]
-    centroids = [list(c) for c in ivf_load_centroids(spark, table)]
+    centroids = [list(c) for c in _load_centroids(spark, table, meta)]
     sizes = _cell_sizes(spark.table(table))
     total = sum(sizes.values())
     # a matrix cell with no rows is maximally cold
@@ -1362,7 +1343,8 @@ def ivf_query_index(
     """
     if centroids is None:
         centroids = ivf_load_centroids(spark, table)
-    _check_centroids(spark, table, centroids)
+    else:
+        _check_centroids(spark, table, centroids)
     C = np.asarray(centroids, dtype=np.float64)
 
     if impl == "grid":
@@ -1450,7 +1432,7 @@ def lsh_topk(
     md5 parity via ``functions.vectors.sign_matrix`` — Charikar's SRP
     is valid for any symmetric plane distribution, and the md5 family
     is recomputable by any ANSI engine, so md5-family LSH is
-    DuckDB-oracle replayable bucket for bucket; round 14, the same
+    DuckDB-oracle replayable bucket for bucket, the same
     pattern as the CMS/simhash hash families. ±1 planes also make
     every per-plane product EXACT in doubles — float32 × ±1 — so the
     sign of each dot is engine-stable away from exact zero).
@@ -1652,15 +1634,35 @@ def pq_save_codebook(spark, table: str, codebook: PQCodebook) -> None:
     )
 
 
+def _index_codebook(
+    spark, table: str, meta: dict, pq_codebook: "PQCodebook | None" = None
+) -> "PQCodebook | None":
+    """The codebook an IVF index's rows are coded with: ``pq_codebook``
+    when the caller passes one, else — when the contract ``meta``
+    records PQ codes — the persisted companion, which round-trips the
+    trained object bit-identically (the codebook twin of
+    ``centroids=None``). None for an index without codes."""
+    if pq_codebook is not None or not meta["pq"]:
+        return pq_codebook
+    try:
+        return pq_load_codebook(spark, table)
+    except Exception:
+        raise ValueError(
+            f"{table} stores PQ codes and its persisted codebook companion "
+            f"{_pq_codebook_table(table)} cannot be read; pass the SAME "
+            "codebook the build used so new rows carry codes"
+        )
+
+
 def pq_load_codebook(spark, table: str) -> PQCodebook:
     """Rehydrate the :func:`pq_save_codebook` companion of ``table``.
-    Raises if the companion is missing (an index built before the
-    companion existed) or not a dense (m × n_codes) grid."""
-    companion = _pq_codebook_table(table)
-    from ..sources.io import get_table_meta
+    Raises if the companion is missing or not a dense (m × n_codes)
+    grid."""
+    from ..sources.io import read_contract
 
-    meta = get_table_meta(spark, companion)
-    m, n_codes = int(meta["m"]), int(meta["n_codes"])
+    companion = _pq_codebook_table(table)
+    meta = read_contract(spark, companion, "pq_codebook")
+    m, n_codes = meta["m"], meta["n_codes"]
     rows = spark.table(companion).orderBy("subspace", "code").collect()
     if len(rows) != m * n_codes or [
         (r["subspace"], r["code"]) for r in rows
@@ -1669,7 +1671,7 @@ def pq_load_codebook(spark, table: str) -> PQCodebook:
     books = np.asarray(
         [r["centroid"] for r in rows], dtype=np.float64
     ).reshape(m, n_codes, -1)
-    return PQCodebook(books, int(meta["dim"]), int(meta["seed"]))
+    return PQCodebook(books, meta["dim"], meta["seed"])
 
 
 def pq_encode(
@@ -1969,7 +1971,7 @@ def mmr_rerank(
     1-based in selection order. Deterministic: equal MMR scores break
     toward the candidate earlier in (relevance desc, id asc) order,
     and pairwise similarities are rounded to ``sim_round`` decimals
-    BEFORE the greedy comparison (round 14) — the same
+    BEFORE the greedy comparison — the same
     round-before-rank rule as :func:`mine_hard_negatives`, which makes
     the whole greedy selection replayable by a SQL engine computing
     cosines independently (6 dp ties on raw doubles would otherwise

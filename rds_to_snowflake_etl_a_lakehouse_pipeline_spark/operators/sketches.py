@@ -207,7 +207,7 @@ def _cms_cells(
     the fastest JVM path) or ``"md5"`` (hashes the value's STRING
     form, like curation's ``_det_bucket``) — any ANSI engine computes
     the identical grid, so md5-family sketches are DuckDB-oracle
-    replayable cell for cell (round 14; the a1_cms_topk /
+    replayable cell for cell (the a1_cms_topk /
     x1_cms_stream registry entries use it — the pq_topk pattern:
     hash-check the counting machinery with the replayable family,
     keep the fast family as the default scale path under the pytest

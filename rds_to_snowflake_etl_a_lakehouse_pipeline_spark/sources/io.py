@@ -9,28 +9,36 @@ creates and registers a table in one ``CREATE TABLE … AS SELECT``,
 1000-executor cluster ingests in parallel instead of through one
 connection.
 
-Standing-index contract (shared by every incremental index family —
-``minhash_*_index``, ``span_*_index``, ``ivf_*_index``, ``er_*_index``):
+Table contracts. Every standing index, stream-state table, sketch
+and batch sink records its build parameters as ``spark_graft.index.*``
+table properties, and this module is the only one that reads or
+writes them:
 
+- **one spec per kind** (:data:`TABLE_SPECS`): the required keys with
+  their types, the optional ones (a sink's ``stream_id`` and
+  ``pending_fold``) and a ``format`` number. Every create path passes
+  ``kind`` and its keys to :func:`rewrite_layout` or
+  ``write_table(properties=)``, which refuse a contract that misses a
+  key and stamp the spec's ``format``;
 - **build / reband / compact** (and IVF's centroid-matrix rotations:
   build, retrain, split, merge) rewrite through :func:`rewrite_layout`,
   which writes the rows in the layout the contract records and
   commits the contract as the new table's properties in the same
-  statement (``kind`` plus the layout/signature params: ``k``,
-  ``n_buckets``, ``num_hashes``, ``bands``, ``shingle_n``,
-  ``centroid_fp``, …), so data and contract are one commit; a build
-  that leaves ``n_buckets`` unset gets a count sized from its rows
+  statement, so data and contract are one commit; a build that leaves
+  ``n_buckets`` unset gets a count sized from its rows
   (:func:`_sized_buckets`), and every later rewrite keeps it;
-- **probe / append** call :func:`check_table_meta` first — explicit
-  parameters must MATCH the recorded contract (mismatches raise,
-  because a silent mismatch deduplicates/probes nothing), and layout
-  parameters left as ``None`` DEFAULT from it;
+- **probe / append / health** read the contract through
+  :func:`read_contract` (one ``SHOW TBLPROPERTIES``), which returns
+  the typed values or raises naming the table and the missing key,
+  kind or format; :func:`check_table_meta` also raises when a
+  caller's explicit parameter differs from the recorded one, because
+  a silent mismatch deduplicates or probes nothing;
 - **health** is a cheap dict (``*_index_health`` / ``health()`` /
   the append's returned drift dict) with a ``*_recommended`` flag the
   pipeline can act on (or an ``auto_*`` knob that acts on it).
 
-A new index family implements those verbs against these helpers — the
-lifecycle itself is not re-invented per family.
+A new table kind adds its spec and implements those verbs against
+these helpers — the lifecycle itself is not re-invented per family.
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ import os
 import re
 import uuid
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -105,7 +114,7 @@ def read_jdbc(
     ``num_partitions`` parallel cursors — the scale path for RDS
     ingest; without it the read is single-connection (dev only).
 
-    Bounds are AUTO-DERIVED when omitted (round 12): giving
+    Bounds are AUTO-DERIVED when omitted: giving
     ``partition_column`` with EITHER bound missing runs ONE pushed-down
     ``SELECT MIN(col), MAX(col)`` probe over the same connection and
     fills the missing side(s) — an explicitly passed bound is kept and
@@ -228,8 +237,9 @@ def write_table(
     (:func:`_create_as_select`) that carries its layout and
     ``properties``: the table appears in the catalog only once its
     data is written, already stamped with its contract (recorded
-    under ``spark_graft.index.*``, read back by :func:`get_table_meta`).
-    An append to an existing table keeps that table's properties.
+    under ``spark_graft.index.*`` after the kind's spec checked it,
+    read back by :func:`read_contract`). An append to an existing
+    table keeps that table's properties.
 
     Overwrite is fail-safe (write-then-swap): when the target already
     exists, the new data is fully materialized into a ``__stage`` table
@@ -250,6 +260,8 @@ def write_table(
     """
     if format not in ("parquet", "orc"):
         raise ValueError(f"unsupported table format {format!r} (parquet|orc)")
+    if properties is not None:
+        properties = _recorded(table, properties)
     spark = df.sparkSession
     options = {"compression": compression}
     if bloom_filter_cols and format == "orc":
@@ -275,7 +287,7 @@ def write_table(
     # fresh table of just the appended rows and flip the committed
     # stage into "stale" — exactly the content the sweep would then
     # reclaim. Memoized per process: the interrupted states the heal
-    # repairs can only PREDATE this session (a crash killed the
+    # repairs were left by an earlier session (a crash killed the
     # session that created them; our own completed writes below leave
     # the catalog consistent, and a write that raises mid-swap
     # un-memoizes so its retry re-probes) — so one catalog probe per
@@ -326,8 +338,8 @@ def _kv_sql(kv: dict) -> str:
 
 
 def _meta_props(props: dict) -> dict:
-    """Index-contract keys namespaced as table properties."""
-    return {f"{_INDEX_META_PREFIX}{k}": v for k, v in props.items()}
+    """Contract keys namespaced as table properties."""
+    return {f"{_INDEX_META_PREFIX}{k}": _render(v) for k, v in props.items()}
 
 
 def _create_as_select(
@@ -488,26 +500,101 @@ def _save_with_orphan_retry(spark: SparkSession, save, table: str) -> None:
 _INDEX_META_PREFIX = "spark_graft.index."
 
 
+class TableSpec(NamedTuple):
+    """What a table of one kind records: the required contract keys
+    with their types, the keys it may lack, and the on-disk format
+    its create path writes (a table recording another format is
+    refused)."""
+
+    keys: dict
+    optional: dict = {}
+    format: int = 1
+
+
+_BUCKETED = {"n_buckets": int, "bucket_cols": str}
+_BANDED = {**_BUCKETED, "skew_epoch": int}
+
+# one spec per table kind; ``kind`` and ``format`` are recorded by all
+TABLE_SPECS: dict[str, TableSpec] = {
+    "exact": TableSpec({**_BUCKETED, "content_sig": str}),
+    "span": TableSpec({**_BUCKETED, "k": int}),
+    "minhash": TableSpec({**_BANDED, "num_hashes": int, "bands": int, "shingle_n": int}),
+    "hamming_fp": TableSpec({**_BANDED, "band_bits": int}),
+    "er": TableSpec(_BANDED),
+    "ivf": TableSpec({
+        **_BUCKETED, "partition_cols": str, "impl": str, "pq": bool, "dim": int,
+        "base_n_clusters": int, "n_clusters": int, "centroid_fp": str,
+        "mean_dist": float, "p95_dist": float, "n_vectors": int,
+    }),
+    "pq_codebook": TableSpec({"m": int, "n_codes": int, "dim": int, "seed": int}),
+    # sessionize and frontier state: rows live in the partition this
+    # modulus hashed their key into
+    "session_state": TableSpec({"state_partitions": int}),
+    # 0 = unbucketed
+    "distinct_state": TableSpec({"state_buckets": int}),
+    # the fold manifest is transient, and a sink created by a direct
+    # call adopts the first stream id that lands in it
+    "batch_sink": TableSpec({}, {"stream_id": str, "pending_fold": str}),
+    "cms": TableSpec({"depth": int, "width": int, "seed": int, "hash_impl": str}),
+    "hll": TableSpec({"p": int, "hash_impl": str}),
+    "hist": TableSpec({"lo": float, "hi": float, "n_bins": int}),
+}
+
+
+def _render(v) -> str:
+    return str(v).lower() if isinstance(v, bool) else str(v)
+
+
+def _parse(typ: type, raw: str):
+    return raw == "true" if typ is bool else typ(raw)
+
+
+def _spec(table: str, kind) -> TableSpec:
+    if kind not in TABLE_SPECS:
+        raise ValueError(
+            f"{table!r} has no contract of a known kind (kind={kind!r}): no "
+            "parameters or layout metadata to read or record"
+        )
+    return TABLE_SPECS[kind]
+
+
+def _recorded(table: str, contract: dict) -> dict:
+    """``contract`` as ``table`` will record it: checked against its
+    kind's spec (every required key, no unknown one) and stamped with
+    the spec's format."""
+    spec = _spec(table, contract.get("kind"))
+    missing = sorted(set(spec.keys) - set(contract))
+    unknown = sorted(set(contract) - {"kind", "format", *spec.keys, *spec.optional})
+    if missing or unknown:
+        raise ValueError(
+            f"{contract['kind']} contract for {table!r}: missing {missing}, "
+            f"unknown {unknown}"
+        )
+    return {**contract, "format": spec.format}
+
+
 def set_table_meta(spark: SparkSession, table: str, **props) -> None:
-    """Record index-contract parameters (k, n_buckets, num_hashes, …) as
-    table properties on an existing catalog table, namespaced under
-    ``spark_graft.index.*``, so probes/appends can validate their
-    parameters against the table's actual contract instead of trusting
-    the caller (a ``k`` mismatch on a fingerprint index is otherwise
-    SILENTLY wrong: the grams never match and everything passes
-    through undeduped). A table's first contract rides its create
-    (``write_table(..., properties=)``); this stamps later changes to
-    a table that is not rewritten."""
+    """Record contract keys on an existing table without rewriting it:
+    a sink's ``stream_id`` and ``pending_fold``. A table's contract
+    rides its create (``write_table(..., properties=)``)."""
     spark.sql(
         f"ALTER TABLE {table} SET TBLPROPERTIES ({_kv_sql(_meta_props(props))})"
     )
 
 
+def unset_table_meta(spark: SparkSession, table: str, key: str) -> None:
+    """Drop an optional contract key (the fold manifest once a fold
+    completes)."""
+    spark.sql(
+        f"ALTER TABLE {table} UNSET TBLPROPERTIES IF EXISTS "
+        f"('{_INDEX_META_PREFIX}{key}')"
+    )
+
+
 def get_table_meta(spark: SparkSession, table: str) -> dict[str, str]:
-    """Read back the ``spark_graft.index.*`` properties set by
-    :func:`write_table` or :func:`set_table_meta`. Empty dict for tables
-    that predate metadata (or were built elsewhere) — callers treat
-    missing keys as unvalidatable, not as a mismatch."""
+    """The raw ``spark_graft.index.*`` properties of ``table`` as
+    strings, unchecked: one ``SHOW TBLPROPERTIES``. Engine code reads
+    contracts through :func:`read_contract`."""
     rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     plen = len(_INDEX_META_PREFIX)
     return {
@@ -517,19 +604,53 @@ def get_table_meta(spark: SparkSession, table: str) -> dict[str, str]:
     }
 
 
-def check_table_meta(spark: SparkSession, table: str, **expected) -> dict[str, str]:
-    """Validate probe/append parameters against a standing index's
-    recorded contract. Raises ``ValueError`` listing every mismatching
-    key; keys absent from the table's metadata are skipped (pre-metadata
-    indexes stay usable). Returns the full recorded metadata so callers
-    can default unspecified parameters (e.g. ``n_buckets``) from it.
-    The recorded contract always describes the data: both were
-    committed by the same create (:func:`rewrite_layout`)."""
+def recorded_kind(spark: SparkSession, table: str) -> str | None:
+    """The kind ``table`` records, or None for a table without a
+    contract (user data). One catalog read; the contract itself is
+    not checked."""
+    return get_table_meta(spark, table).get("kind")
+
+
+def read_contract(spark: SparkSession, table: str, kind: str | None = None) -> dict:
+    """The contract ``table`` records, typed by its kind's spec
+    (:data:`TABLE_SPECS`): ``{"kind", "format", key: value, …}`` with
+    every required key and whichever optional keys are set. One
+    ``SHOW TBLPROPERTIES``. Raises ``ValueError`` naming the table
+    when it is not of ``kind`` (any known kind when None), records
+    another format than its spec's, or lacks a required key; such a
+    table has to be rebuilt by its create path."""
     meta = get_table_meta(spark, table)
+    kind = kind or meta.get("kind")
+    spec = _spec(table, kind)
+    missing = sorted(set(spec.keys) - set(meta))
+    if meta.get("kind") != kind or meta.get("format") != str(spec.format) or missing:
+        raise ValueError(
+            f"{table!r} is not a format-{spec.format} {kind} table: it records "
+            f"kind={meta.get('kind')!r}, format={meta.get('format')!r} and "
+            f"lacks {missing} (rebuild the table)"
+        )
+    types = {**spec.keys, **spec.optional}
+    return {
+        "kind": kind,
+        "format": spec.format,
+        **{k: _parse(t, meta[k]) for k, t in types.items() if k in meta},
+    }
+
+
+def check_table_meta(spark: SparkSession, table: str, kind: str, **expected) -> dict:
+    """:func:`read_contract` for a ``kind`` table, then validate the
+    caller's parameters against it: every non-None value in
+    ``expected`` must equal the recorded one, or ``ValueError`` lists
+    each mismatch. Returns the contract, so callers take the
+    parameters they left unset (e.g. ``n_buckets``) from it. The
+    contract always describes the data: both were committed by the
+    same create (:func:`rewrite_layout`)."""
+    meta = read_contract(spark, table, kind)
+    types = TABLE_SPECS[kind].keys
     bad = {
-        k: (meta[k], str(v))
+        k: (meta[k], v)
         for k, v in expected.items()
-        if v is not None and k in meta and meta[k] != str(v)
+        if v is not None and meta[k] != _parse(types[k], _render(v))
     }
     if bad:
         detail = ", ".join(
@@ -544,6 +665,19 @@ def check_table_meta(spark: SparkSession, table: str, **expected) -> dict[str, s
     return meta
 
 
+def prior_contract(spark: SparkSession, table: str, kind: str) -> dict | None:
+    """The contract of the ``kind`` table a create path is about to
+    replace, or None when ``table`` holds no readable ``kind`` contract
+    (absent, another kind, another format): a build starts fresh over
+    whatever was there."""
+    if not spark.catalog.tableExists(table):
+        return None
+    try:
+        return read_contract(spark, table, kind)
+    except ValueError:
+        return None
+
+
 def index_table_health(
     spark: SparkSession, table: str, max_files_per_bucket: float = 8.0
 ) -> dict:
@@ -552,18 +686,14 @@ def index_table_health(
     directory), so a long append chain turns each into dozens of small
     files and probe-side scan cost creeps. Returns ``{n_files,
     n_buckets, files_per_bucket, compact_recommended}`` (for the IVF
-    family ``n_buckets`` is the recorded cell count). Constant-time
-    metadata: a file listing, no data scan."""
+    family ``n_buckets`` is cells × id buckets, the per-append file
+    fanout). Constant-time metadata: a file listing, no data scan."""
     df = spark.table(table)
     n_files = len(df.inputFiles())
-    meta = get_table_meta(spark, table)
-    # bucketed families record n_buckets; the cell-partitioned IVF
-    # family records n_clusters — the per-append file fanout is the
-    # one recorded, or their PRODUCT for the combined layout (IVF is
-    # cell-partitioned AND id-bucketed since the flat-probe fix)
-    _b = int(meta.get("n_buckets", 0) or 0)
-    _c = int(meta.get("n_clusters", 0) or 0)
-    n_buckets = (_b * _c if _b and _c else _b or _c) or 1
+    meta = read_contract(spark, table)
+    n_buckets = meta["n_buckets"]
+    if meta["kind"] == "ivf":
+        n_buckets *= meta["n_clusters"]
     ratio = n_files / n_buckets
     return {
         "n_files": n_files,
@@ -649,23 +779,19 @@ def _sized_buckets(rows: DataFrame) -> int:
 def _contract_layout(
     contract: dict, columns: list[str]
 ) -> tuple[list[str] | None, tuple[int, list[str]] | None]:
-    """``(partition_by, bucket_by)`` fixed by a recorded contract: the
-    index families record ``n_buckets`` + ``bucket_cols`` (IVF also
+    """``(partition_by, bucket_by)`` fixed by a contract: the index
+    kinds record ``n_buckets`` + ``bucket_cols`` (IVF also
     ``partition_cols``); distinct state records ``state_buckets`` and
-    buckets on every column (the tuple IS the key)."""
-    bucket_by = None
-    if "n_buckets" in contract and "bucket_cols" in contract:
-        bucket_by = (
-            int(contract["n_buckets"]), str(contract["bucket_cols"]).split(",")
-        )
-    elif int(contract.get("state_buckets", 0) or 0):
-        bucket_by = (int(contract["state_buckets"]), list(columns))
-    partition_by = (
-        str(contract["partition_cols"]).split(",")
-        if "partition_cols" in contract
-        else None
-    )
-    return partition_by, bucket_by
+    buckets on every column (the tuple IS the key; 0 = unbucketed)."""
+    if contract["kind"] == "distinct_state":
+        n = contract["state_buckets"]
+        return None, ((n, list(columns)) if n else None)
+    if "bucket_cols" not in TABLE_SPECS[contract["kind"]].keys:
+        raise ValueError(f"a {contract['kind']} table records no layout")
+    bucket_by = (contract["n_buckets"], contract["bucket_cols"].split(","))
+    if contract["kind"] == "ivf":
+        return contract["partition_cols"].split(","), bucket_by
+    return None, bucket_by
 
 
 def rewrite_layout(
@@ -701,15 +827,9 @@ def rewrite_layout(
     if "n_buckets" in contract and contract["n_buckets"] is None:
         contract = {**contract, "n_buckets": _sized_buckets(rows)}
     if rotate_skew:
-        prior = (
-            get_table_meta(spark, table)
-            if spark.catalog.tableExists(table)
-            else {}
-        )
-        contract = {
-            **contract,
-            "skew_epoch": int(prior.get("skew_epoch", 0) or 0) + 1,
-        }
+        prior = prior_contract(spark, table, contract["kind"])
+        epoch = prior["skew_epoch"] + 1 if prior else 1
+        contract = {**contract, "skew_epoch": epoch}
         spark.sql(f"DROP TABLE IF EXISTS {table}_skew_log")
     partition_by, bucket_by = _contract_layout(contract, rows.columns)
     write_table(
@@ -737,15 +857,8 @@ def compact_index_table(spark: SparkSession, table: str) -> None:
     semantics are unchanged — existence-set indexes (span, exact) and
     signature indexes (minhash) both tolerate row dedup by
     construction."""
-    meta = get_table_meta(spark, table)
-    rows = spark.table(table).distinct()
-    if _contract_layout(meta, rows.columns) == (None, None):
-        raise ValueError(
-            f"{table!r} records no bucket/partition layout metadata; only "
-            "indexes built by this library's *_build_index functions are "
-            "compactable generically"
-        )
-    rewrite_layout(spark, table, rows, meta)
+    meta = read_contract(spark, table)
+    rewrite_layout(spark, table, spark.table(table).distinct(), meta)
 
 
 def connection_config(prefix: str, keys: tuple[str, ...]) -> dict[str, str]:

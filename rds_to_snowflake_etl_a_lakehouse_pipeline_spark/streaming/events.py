@@ -415,12 +415,12 @@ def _stream_probe(
     per-batch skew reports are buffered and written once after the
     drain by :func:`_flush_skew_reports`, under the ``skew_epoch``
     read here before the first batch."""
-    from ..sources.io import get_table_meta
+    from ..sources.io import read_contract
 
     reports: list[dict] = []
     if log_skew is None:
         log_skew = cap is not None
-    held_epoch = get_table_meta(sdf.sparkSession, table).get("skew_epoch")
+    held_epoch = read_contract(sdf.sparkSession, table)["skew_epoch"]
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -449,9 +449,9 @@ def _flush_skew_reports(
     so the buffer is dropped when the recorded epoch no longer
     matches. One constant-time SHOW TBLPROPERTIES, then one write."""
     from ..operators.dedup import append_skew_reports
-    from ..sources.io import get_table_meta
+    from ..sources.io import read_contract
 
-    if get_table_meta(spark, table).get("skew_epoch") != held_epoch:
+    if read_contract(spark, table)["skew_epoch"] != held_epoch:
         reports = []
     append_skew_reports(spark, table, reports)
 
@@ -817,16 +817,19 @@ def _land_batch_partition(
     stream id (a direct call with ``stream_id=None``) adopts the first
     stream id that lands in it; collisions before adoption are
     undetectable."""
-    from ..sources.io import get_table_meta, set_table_meta, write_table
+    from ..sources.io import read_contract, set_table_meta, write_table
 
     spark = df.sparkSession
     stamped = df.withColumn("_batch_id", F.lit(batch_id))
     if not spark.catalog.tableExists(sink):
-        props = {} if stream_id is None else {"stream_id": stream_id}
+        props = {"kind": "batch_sink"}
+        if stream_id is not None:
+            props["stream_id"] = stream_id
         write_table(stamped, sink, partition_by=["_batch_id"], properties=props)
         return
     if stream_id is not None:
-        recorded = get_table_meta(spark, sink).get("stream_id")
+        # optional: a sink created with stream_id=None has none yet
+        recorded = read_contract(spark, sink, "batch_sink").get("stream_id")
         if recorded is None:
             set_table_meta(spark, sink, stream_id=stream_id)
         elif recorded != stream_id:
@@ -872,9 +875,10 @@ def _pending_fold(spark: SparkSession, table: str):
     None. The manifest is a table property written ATOMICALLY before
     any data moves, so every crash window inside a fold is resumable
     from it (see :func:`_fold_batch_partitions`)."""
-    from ..sources.io import get_table_meta
+    from ..sources.io import read_contract
 
-    raw = get_table_meta(spark, table).get("pending_fold")
+    # optional: set only while a fold is in flight
+    raw = read_contract(spark, table, "batch_sink").get("pending_fold")
     if not raw:
         return None
     max_fold, archive_id, phase = raw.split(":")
@@ -892,12 +896,9 @@ def _set_pending_fold(
 
 
 def _clear_pending_fold(spark: SparkSession, table: str) -> None:
-    from ..sources.io import _INDEX_META_PREFIX
+    from ..sources.io import unset_table_meta
 
-    spark.sql(
-        f"ALTER TABLE {table} UNSET TBLPROPERTIES IF EXISTS "
-        f"('{_INDEX_META_PREFIX}pending_fold')"
-    )
+    unset_table_meta(spark, table, "pending_fold")
 
 
 def _fold_batch_partitions(
@@ -1054,38 +1055,61 @@ def stream_frequency_sketch(
     a merge with the existing sketch — which is BOUNDED at ``keys ×
     depth × width`` cells regardless of stream length, so the
     stage-and-swap rewrite each batch pays is KBs-to-MBs forever.
-    Sketch parameters must match across every writer to ``table``.
+    Sketch parameters are the table's recorded contract: a writer
+    passing other ones raises before any write.
     Runs with trigger=availableNow and blocks until input is drained.
     """
     from ..operators.sketches import cms_merge, cms_sketch
-    from ..sources.io import write_table
 
     keys = keys or []
+    contract = {
+        "kind": "cms", "depth": depth, "width": width, "seed": seed,
+        "hash_impl": hash_impl,
+    }
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         batch_sketch = cms_sketch(
             batch_df, keys, value_col, depth=depth, width=width, seed=seed,
             hash_impl=hash_impl,
         )
-        stamp = _stream_stamp(
-            _checkpoint_stream_id(spark, checkpoint_dir), batch_id
+        _merge_sketch_batch(
+            batch_sketch, table, contract, checkpoint_dir, batch_id,
+            lambda union: cms_merge(union, keys),
         )
-        if spark.catalog.tableExists(table):
-            state = _replay_guarded_state(spark, table, stamp)
-            if state is None:  # this exact batch already merged
-                return
-            merged = cms_merge(state.unionByName(batch_sketch), keys)
-            # the union reads the table being overwritten: materialize
-            # the (bounded, cell-count-sized) merge before the swap
-            merged = merged.localCheckpoint(eager=True)
-        else:
-            merged = batch_sketch
-        write_table(merged.withColumn("_applied_batch", F.lit(stamp)), table)
 
     _drain(sdf, _merge, checkpoint_dir, query_name)
+
+
+def _merge_sketch_batch(
+    batch_sketch: DataFrame, table: str, contract: dict, checkpoint_dir: str,
+    batch_id: int, merge,
+) -> None:
+    """Merge one micro-batch's sketch into the sketch ``table`` — the
+    one body of the three sketch streams. A writer whose sketch
+    parameters differ from the table's recorded ``contract`` raises
+    before any write (cells of two sketch shapes summed together mean
+    nothing); a batch whose stamp the table already carries is skipped
+    (:func:`_replay_guarded_state`). Otherwise the table is rewritten
+    as ``merge(state ∪ batch)`` under the same contract."""
+    from ..sources.io import check_table_meta, write_table
+
+    spark = batch_sketch.sparkSession
+    stamp = _stream_stamp(_checkpoint_stream_id(spark, checkpoint_dir), batch_id)
+    merged = batch_sketch
+    if spark.catalog.tableExists(table):
+        check_table_meta(spark, table, **contract)
+        state = _replay_guarded_state(spark, table, stamp)
+        if state is None:  # this exact batch already merged
+            return
+        # the union reads the table being overwritten: materialize the
+        # (bounded, cell-count-sized) merge before the swap
+        merged = merge(state.unionByName(batch_sketch)).localCheckpoint(eager=True)
+    write_table(
+        merged.withColumn("_applied_batch", F.lit(stamp)), table,
+        properties=contract,
+    )
 
 
 def stream_distinct_sketch(
@@ -1112,36 +1136,24 @@ def stream_distinct_sketch(
     IDEMPOTENT — a crash-redelivered batch merged twice cannot inflate
     the registers — so the ``_applied_batch`` replay guard here only
     skips the wasted state rewrite; correctness never depended on it.
+    ``p`` and ``hash_impl`` are the table's recorded contract.
     Runs with trigger=availableNow and blocks until input is drained.
     """
     from ..operators.sketches import hll_register_merge, hll_register_sketch
-    from ..sources.io import write_table
 
     keys = keys or []
+    contract = {"kind": "hll", "p": p, "hash_impl": hash_impl}
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         batch_sketch = hll_register_sketch(
             batch_df, keys, value_col, p=p, hash_impl=hash_impl
         )
-        stamp = _stream_stamp(
-            _checkpoint_stream_id(spark, checkpoint_dir), batch_id
+        _merge_sketch_batch(
+            batch_sketch, table, contract, checkpoint_dir, batch_id,
+            lambda union: hll_register_merge(union, keys),
         )
-        if spark.catalog.tableExists(table):
-            state = _replay_guarded_state(spark, table, stamp)
-            if state is None:  # this exact batch already merged
-                return
-            merged = hll_register_merge(
-                state.unionByName(batch_sketch), keys
-            )
-            # the union reads the table being overwritten: materialize
-            # the (bounded, register-count-sized) merge before the swap
-            merged = merged.localCheckpoint(eager=True)
-        else:
-            merged = batch_sketch
-        write_table(merged.withColumn("_applied_batch", F.lit(stamp)), table)
 
     _drain(sdf, _merge, checkpoint_dir, query_name)
 
@@ -1190,59 +1202,41 @@ def stream_ivf_append(
     every ``compact_index_table``.
 
     ``centroids=None`` resolves the CURRENT matrix from the persisted
-    ``{table}_centroids`` companion at stream start. The held matrix is
-    additionally RE-CHECKED every micro-batch against the table's
-    recorded fingerprint (one constant-time SHOW TBLPROPERTIES — no
-    Spark job): when a maintenance retrain, split or merge rotates the
-    matrix mid-stream, the next batch reloads the companion and bins
-    against the NEW cells instead of dying on the stale-matrix check —
-    maintenance is non-disruptive to running ingests (rows are never
-    mis-binned: the reload happens BEFORE assignment, and a rotation
-    commits rows and fingerprint in one create). The drift baseline
-    comes from the same contract read, at stream start and on each
-    resync, so it costs no Spark job.
+    ``{table}_centroids`` companion at stream start. Every micro-batch
+    reads the table's contract once (one constant-time SHOW
+    TBLPROPERTIES — no Spark job) and hands it to the append, which
+    takes its layout, ``impl``, PQ flag and drift baseline from it;
+    when the recorded fingerprint differs from the held matrix's (a
+    maintenance retrain, split or merge rotated it mid-stream), the
+    batch reloads the companion and bins against the NEW cells instead
+    of dying on the stale-matrix check — maintenance is non-disruptive
+    to running ingests (rows are never mis-binned: the reload happens
+    BEFORE assignment, and a rotation commits rows and fingerprint in
+    one create).
     """
     from ..operators.similarity import (
+        _append_assigned,
         _centroid_fingerprint,
         _drift_baseline,
-        ivf_append_index,
-        ivf_load_centroids,
-        pq_load_codebook,
+        _index_codebook,
+        _load_centroids,
     )
-    from ..sources.io import get_table_meta
+    from ..sources.io import read_contract
 
     if checkpoint_dir is None:
         raise ValueError("stream_ivf_append requires checkpoint_dir")
     spark0 = sdf.sparkSession
+    meta = read_contract(spark0, table, "ivf")
     if centroids is None:
-        centroids = ivf_load_centroids(spark0, table)
-    meta = get_table_meta(spark0, table)
-    _is_grid = meta.get("impl") == "grid"
-
-    def _codebook():
-        # resolve the PQ companion ONCE per stream (and again on
-        # resync), not per batch: ivf_append_index would otherwise
-        # re-collect the m x n_codes companion every micro-batch —
-        # exactly the fixed per-batch overhead this path sheds
-        if "pq_code" in spark0.table(table).columns:
-            try:
-                return pq_load_codebook(spark0, table)
-            except Exception:
-                raise ValueError(
-                    f"{table} stores PQ codes and has no "
-                    f"{table}_pq_codebook companion; streaming appends "
-                    "need the persisted codebook (rebuild the index, or "
-                    "pq_save_codebook the original)"
-                )
-        return None
+        centroids = _load_centroids(spark0, table, meta)
 
     held = {
         "cents": centroids,
         "fp": _centroid_fingerprint(centroids),
-        "cb": _codebook(),
-        # the drift baseline rotates with the matrix: the contract
-        # records both, so the fingerprint resync below refreshes it
-        "stats": _drift_baseline(meta),
+        # the PQ companion is resolved here and on resync, never per
+        # batch: a per-batch load would re-collect the m x n_codes
+        # companion on every micro-batch
+        "cb": _index_codebook(spark0, table, meta),
     }
     reports: list[dict] = []
 
@@ -1250,9 +1244,8 @@ def stream_ivf_append(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        meta = get_table_meta(spark, table)
-        recorded = meta.get("centroid_fp")
-        if recorded and recorded != held["fp"]:
+        meta = read_contract(spark, table, "ivf")
+        if meta["centroid_fp"] != held["fp"]:
             # maintenance rotated the quantizer since the last batch:
             # resync from the companion instead of failing the batch.
             # Buffered PRE-rotation drift reports are DROPPED — the
@@ -1260,10 +1253,9 @@ def stream_ivf_append(
             # and reports measured against the retired centroids would
             # re-arm retrain_recommended (with stale cell ids) on a
             # freshly remediated index.
-            held["cents"] = ivf_load_centroids(spark, table)
-            held["fp"] = _centroid_fingerprint(held["cents"])
-            held["cb"] = _codebook()
-            held["stats"] = _drift_baseline(meta)
+            held["cents"] = _load_centroids(spark, table, meta)
+            held["fp"] = meta["centroid_fp"]
+            held["cb"] = _index_codebook(spark, table, meta)
             reports.clear()
         existing = spark.table(table).select(F.col(id_col))
         # the replay-guard anti-join feeds ivf_append_index LAZILY: the
@@ -1274,21 +1266,15 @@ def stream_ivf_append(
         # before assigning it, so the guard stays checkpointed on that
         # path.
         fresh = batch_df.join(existing, on=id_col, how="left_anti")
-        if _is_grid:
+        if meta["impl"] == "grid":
             fresh = fresh.localCheckpoint(eager=True)
         # log_drift=False: buffer the per-batch report and flush ONE
         # companion write post-drain instead of a 1-row write job per
         # batch (see ivf_append_drift_reports for the crash story)
         reports.append(
-            ivf_append_index(
-                fresh,
-                table,
-                held["cents"],
-                id_col=id_col,
-                vec_col=vec_col,
-                pq_codebook=held["cb"],
-                log_drift=False,
-                build_stats=held["stats"],
+            _append_assigned(
+                fresh, table, held["cents"], meta, id_col, vec_col,
+                _drift_baseline(meta), pq_codebook=held["cb"], log_drift=False,
             )
         )
 
@@ -1312,10 +1298,9 @@ def _flush_ivf_drift_reports(
     fingerprint no longer matches the one the reports were measured
     against. One constant-time SHOW TBLPROPERTIES, then one write."""
     from ..operators.similarity import ivf_append_drift_reports
-    from ..sources.io import get_table_meta
+    from ..sources.io import read_contract
 
-    recorded = get_table_meta(spark, table).get("centroid_fp")
-    if recorded and recorded != held_fp:
+    if read_contract(spark, table, "ivf")["centroid_fp"] != held_fp:
         reports = []
     ivf_append_drift_reports(spark, table, reports)
 
@@ -1341,28 +1326,18 @@ def stream_histogram_sketch(
     (lo, hi, n_bins) range is part of the table's contract like CMS
     depth/width. Runs with trigger=availableNow and blocks."""
     from ..operators.sketches import hist_merge, hist_sketch
-    from ..sources.io import write_table
 
     keys = keys or []
+    contract = {"kind": "hist", "lo": lo, "hi": hi, "n_bins": n_bins}
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        batch_sketch = hist_sketch(batch_df, keys, value_col, lo, hi, n_bins)
-        stamp = _stream_stamp(
-            _checkpoint_stream_id(spark, checkpoint_dir), batch_id
+        _merge_sketch_batch(
+            hist_sketch(batch_df, keys, value_col, lo, hi, n_bins), table,
+            contract, checkpoint_dir, batch_id,
+            lambda union: hist_merge(union, keys),
         )
-        if spark.catalog.tableExists(table):
-            state = _replay_guarded_state(spark, table, stamp)
-            if state is None:  # this exact batch already merged
-                return
-            merged = hist_merge(
-                state.unionByName(batch_sketch), keys
-            ).localCheckpoint(eager=True)
-        else:
-            merged = batch_sketch
-        write_table(merged.withColumn("_applied_batch", F.lit(stamp)), table)
 
     _drain(sdf, _merge, checkpoint_dir, query_name)
 
@@ -1626,7 +1601,9 @@ def _frontier_schedule_merge_batch(
     exists = spark.catalog.tableExists(state_table)
     done_kb: set = set()
     if exists:
-        check_table_meta(spark, state_table, state_partitions=state_partitions)
+        check_table_meta(
+            spark, state_table, "session_state", state_partitions=state_partitions
+        )
         state = spark.table(state_table)
         touched_kb = sorted(r[0] for r in b.select("_kb").distinct().collect())
         # the replay guard honors ONLY the exact stamp: a false match
@@ -1687,7 +1664,7 @@ def _frontier_schedule_merge_batch(
             out.select("fetch_domain", "next_slot", "_applied_batch", "_kb"),
             state_table,
             partition_by=["_kb"],
-            properties={"state_partitions": state_partitions},
+            properties={"kind": "session_state", "state_partitions": state_partitions},
         )
         return
     todo_kb = [k for k in touched_kb if k not in done_kb]
@@ -1916,13 +1893,13 @@ def _sessionize_merge_batch(
             merged,
             table,
             partition_by=["_kb"],
-            properties={"state_partitions": state_partitions},
+            properties={"kind": "session_state", "state_partitions": state_partitions},
         )
         return
 
     # raises on a state_partitions mismatch with the recorded physical
     # modulus (silent mis-bucketing would duplicate sessions)
-    check_table_meta(spark, table, state_partitions=state_partitions)
+    check_table_meta(spark, table, "session_state", state_partitions=state_partitions)
     state = spark.table(table)
     batch_iv = batch_iv.withColumn("_kb", bucket)
     # touched partitions: bounded by state_partitions, tiny collect
@@ -2067,7 +2044,7 @@ def stream_incremental_distinct(
     State grows only with NEW tuples — redelivered or repeated events
     are absorbed by the anti-join, making the sink idempotent at the
     tuple level. Runs with trigger=availableNow and blocks."""
-    from ..sources.io import get_table_meta, write_table
+    from ..sources.io import append_layout, read_contract, rewrite_layout
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -2081,15 +2058,13 @@ def stream_incremental_distinct(
             # state_buckets — a caller restarting with a different
             # value would otherwise fail every batch with a
             # bucket-spec mismatch
-            n = int(get_table_meta(spark, table)["state_buckets"])
-            bb = (n, list(cols)) if n else None
+            meta = read_contract(spark, table, "distinct_state")
             fresh = fresh.join(spark.table(table), cols, "left_anti")
-            write_table(fresh, table, mode="append", bucket_by=bb)
+            append_layout(fresh, table, meta)
         else:
-            bucket_by = (state_buckets, list(cols)) if state_buckets else None
-            write_table(
-                fresh, table, bucket_by=bucket_by,
-                properties={"state_buckets": state_buckets or 0},
+            rewrite_layout(
+                spark, table, fresh,
+                {"kind": "distinct_state", "state_buckets": state_buckets or 0},
             )
 
     _drain(sdf, _merge, checkpoint_dir, query_name)

@@ -2801,73 +2801,6 @@ def test_ivf_split_rounds_until_no_hot_cell(spark):
     assert spark.table(t).count() == 80  # every row preserved
 
 
-def test_ivf_split_preserves_missing_bucket_spec(spark):
-    """Splitting a LEGACY pre-bucketing index (no recorded bucket spec,
-    unbucketed files) must not fabricate one: the split's rewrite
-    takes its layout from the recorded contract (io._contract_layout),
-    so recording n_buckets=8/bucket_cols here would make the next
-    ivf_append_index attempt a bucketed append into an unbucketed
-    table and inflate index_table_health's fanout denominator."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.similarity import (
-        ivf_append_index,
-        ivf_build_index,
-        ivf_split_hot_cells,
-    )
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        get_table_meta,
-        index_table_health,
-        write_table,
-    )
-
-    t = "ivf_split_legacy"
-    for s in (t, f"{t}_drift_log", f"{t}_centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {s}")
-    import random
-
-    rng = random.Random(9)
-    rows, vid = [], 0
-    for cx in (0.0, 10.0):
-        for _ in range(8):
-            rows.append((vid, [cx + rng.uniform(-0.2, 0.2), 0.0]))
-            vid += 1
-    # hot blob: cell 0's region gets 24 more rows -> > 0.5 of the index
-    for _ in range(24):
-        rows.append((vid, [rng.uniform(-0.2, 0.2), 0.0]))
-        vid += 1
-    base = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ivf_build_index(base, t, n_clusters=2, seed=5)
-    # simulate the pre-bucketing layout: rewrite the files unbucketed
-    # and re-record the contract WITHOUT a bucket spec (exactly what an
-    # index built before the id-bucketed layout landed looks like)
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        set_table_meta,
-    )
-
-    legacy_meta = {
-        k: v
-        for k, v in get_table_meta(spark, t).items()
-        if k not in ("n_buckets", "bucket_cols")
-    }
-    legacy_rows = spark.table(t).localCheckpoint(eager=True)
-    write_table(legacy_rows, t, partition_by=["_cell"])
-    set_table_meta(spark, t, **legacy_meta)
-    assert "n_buckets" not in get_table_meta(spark, t)
-
-    cents = ivf_split_hot_cells(spark, t, max_cell_fraction=0.5)
-    assert len(cents) == 3  # the hot cell did split
-    meta = get_table_meta(spark, t)
-    assert "n_buckets" not in meta and "bucket_cols" not in meta
-    # fanout denominator = cell count only (no phantom 8x bucket factor)
-    assert index_table_health(spark, t)["n_buckets"] == 3
-    # and the next append still works (plain cell-partitioned files)
-    extra = spark.createDataFrame(
-        [(900, [10.0, 0.1])], "vec_id long, embedding array<double>"
-    )
-    rep = ivf_append_index(extra, t)
-    assert rep["n_appended"] == 1
-    assert spark.table(t).count() == 41
-
-
 def test_ivf_merge_cold_cells_retires_and_renumbers(spark):
     """Round 16: ivf_merge_cold_cells retires underfull cells —
     their rows fold into the nearest SURVIVING cell, the cold

@@ -629,7 +629,7 @@ def test_er_compact_preserves_skew_epoch_and_flush_guard(spark, tmp_path):
         resolve_entities,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        get_table_meta,
+        read_contract,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
         _flush_skew_reports as _flush_er_skew_reports,
@@ -646,7 +646,7 @@ def test_er_compact_preserves_skew_epoch_and_flush_guard(spark, tmp_path):
         resolve_entities(corpus, "id", "name", key, threshold=0.9),
         t, "id", "name", key,
     )
-    held = get_table_meta(spark, t).get("skew_epoch")
+    held = read_contract(spark, t)["skew_epoch"]
     report = {
         "n_hit_buckets": 1, "max_bucket_rows": 30,
         "sum_sq_bucket_rows": 900, "n_capped_buckets": 1,
@@ -657,7 +657,7 @@ def test_er_compact_preserves_skew_epoch_and_flush_guard(spark, tmp_path):
 
     # compaction: epoch AND log survive (block keys unchanged)
     er_compact_index(spark, t)
-    assert get_table_meta(spark, t).get("skew_epoch") == held
+    assert read_contract(spark, t)["skew_epoch"] == held
     assert spark.table(f"{t}_skew_log").count() == 1
 
     # rebuild: epoch rotates, log clears, stale-held flush drops

@@ -136,10 +136,12 @@ def test_distinct_state_rewrite_keeps_contract(spark):
     for i in range(10):  # one small file per append
         row = spark.createDataFrame([(i, i % 3)], "user_id long, cohort long")
         io.write_table(
-            row, t, mode="append", bucket_by=spec, properties={"state_buckets": 1}
+            row, t, mode="append", bucket_by=spec,
+            properties={"kind": "distinct_state", "state_buckets": 1},
         )
     meta = io.get_table_meta(spark, t)
-    assert meta == {"state_buckets": "1"}  # recorded by the first write
+    # recorded by the first write
+    assert meta == {"kind": "distinct_state", "format": "1", "state_buckets": "1"}
     rows = sorted(map(tuple, spark.table(t).collect()))
 
     out = maintenance.run_maintenance(spark, apply=True, tables=(t,))
@@ -415,7 +417,7 @@ def _case(spark, verb, t):
             row = spark.createDataFrame([(i, i % 3)], "user_id long, cohort long")
             io.write_table(
                 row, t, mode="append", bucket_by=(1, ["user_id", "cohort"]),
-                properties={"state_buckets": 1},
+                properties={"kind": "distinct_state", "state_buckets": 1},
             )
         return (
             lambda: maintenance._rewrite_distinct_state(spark, t),

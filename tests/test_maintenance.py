@@ -930,7 +930,7 @@ def test_hamming_skew_flush_drops_stale_epoch(spark, tmp_path):
         _flush_skew_reports as _flush_hamming_skew_reports,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        get_table_meta,
+        read_contract,
     )
 
     t = "maint_fp_skew_epoch"
@@ -940,7 +940,7 @@ def test_hamming_skew_flush_drops_stale_epoch(spark, tmp_path):
         [(1, 0x1111), (2, 0x2222_0000)], "doc_id bigint, phash bigint"
     )
     hamming_index_build(corpus, t)
-    held = get_table_meta(spark, t).get("skew_epoch")
+    held = read_contract(spark, t)["skew_epoch"]
     report = {
         "n_hit_buckets": 1, "max_bucket_rows": 30,
         "sum_sq_bucket_rows": 900, "n_capped_buckets": 1,
@@ -1023,7 +1023,7 @@ def test_minhash_skew_flush_drops_stale_epoch(spark):
         minhash_build_index,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        get_table_meta,
+        read_contract,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
         _flush_skew_reports as _flush_minhash_skew_reports,
@@ -1037,7 +1037,7 @@ def test_minhash_skew_flush_drops_stale_epoch(spark):
         "doc_id bigint, text string",
     )
     minhash_build_index(corpus, t)
-    held = get_table_meta(spark, t).get("skew_epoch")
+    held = read_contract(spark, t)["skew_epoch"]
     assert held is not None  # builds stamp the epoch
 
     report = {
@@ -1047,12 +1047,12 @@ def test_minhash_skew_flush_drops_stale_epoch(spark):
     }
     # a rebuild rotates the epoch: the held buffer is stale -> dropped
     minhash_build_index(corpus, t)
-    assert get_table_meta(spark, t).get("skew_epoch") != held
+    assert read_contract(spark, t)["skew_epoch"] != held
     _flush_minhash_skew_reports(spark, t, held, [dict(report)])
     assert not spark.catalog.tableExists(f"{t}_skew_log")
 
     # the current epoch flushes normally
-    held2 = get_table_meta(spark, t).get("skew_epoch")
+    held2 = read_contract(spark, t)["skew_epoch"]
     _flush_minhash_skew_reports(spark, t, held2, [dict(report)])
     assert spark.table(f"{t}_skew_log").count() == 1
     for s in (t, f"{t}_skew_log"):

@@ -2602,6 +2602,7 @@ def test_replay_guard_honors_legacy_bare_id_stamp(spark, tmp_path):
     checkpoint's batch 0 over that table is applied, not silently
     dropped."""
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
+        read_contract,
         write_table,
     )
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming.events import (
@@ -2626,7 +2627,7 @@ def test_replay_guard_honors_legacy_bare_id_stamp(spark, tmp_path):
     bare = spark.table(t).withColumn(
         "_applied_batch", F.lit(0).cast("bigint")
     ).localCheckpoint(eager=True)
-    write_table(bare, t)
+    write_table(bare, t, properties=read_contract(spark, t, "hist"))
     run("ck2")  # a fresh checkpoint: its batch 0 again
     assert spark.table(t).agg(F.sum("cnt")).first()[0] == 20
     spark.sql(f"DROP TABLE IF EXISTS {t}")
