@@ -118,10 +118,10 @@ def exact_build_index(
     through ``io.rewrite_layout``, which commits the digest with the
     fingerprints, so no probe ever sees one without the other.
 
-    ``n_buckets=None`` sizes the bucket count from the fingerprints
-    (``io._sized_buckets``: at least one per core, at most 32, and 32
-    when the size is unknown); an explicit count wins. Either way it
-    is recorded, and every append and compaction keeps it."""
+    ``n_buckets=None`` sizes the bucket count from the fingerprints'
+    measured bytes (``io._sized_buckets``: at least one per core, at
+    most 32); an explicit count wins. Either way it is recorded, and
+    every append and compaction keeps it."""
     from ..sources.io import rewrite_layout
 
     fps = df.select(
@@ -443,10 +443,11 @@ def minhash_build_index(
     Signature parameters + ``n_buckets`` are recorded as table
     properties; probes/appends validate against them (a mismatched
     ``shingle_n``/``num_hashes`` silently estimates garbage jaccard).
-    ``n_buckets=None`` sizes the count from the banded rows
-    (``io._sized_buckets``); the Arrow signature kernel (the default
-    ``impl``) hides their size from Catalyst, so such a build keeps
-    32 buckets. An explicit count wins; rebands and appends keep the
+    ``n_buckets=None`` sizes the count from the banded rows' measured
+    bytes (``io._sized_buckets``: at least one per core, at most 32):
+    ``io.rewrite_layout`` pins them once, so the Arrow signature kernel
+    (the default ``impl``) runs once and is sized like any other
+    input. An explicit count wins; rebands and appends keep the
     recorded one.
     The write goes through ``io.rewrite_layout``, which commits the
     contract with the data, advances ``skew_epoch`` and clears the skew
@@ -765,9 +766,11 @@ def _banded_dedup(
     pins for the probe, the within-batch self-join, the cap rule and
     the skew report. The scan behind the hit slice still opens every
     index file, so the per-batch floor grows with the file count until
-    compaction. Survivors are pinned before the append: a lazy
+    compaction. Survivors are pinned eagerly before an append: a lazy
     survivor plan re-read after it would find the batch's own rows in
-    the index and drop them as duplicates of themselves."""
+    the index and drop them as duplicates of themselves. Without an
+    append the pin stays lazy, and the caller's first action fills
+    it."""
     from ..sources.io import append_layout, check_table_meta
 
     meta = check_table_meta(spark, table, fam.kind, **fam.contract)
@@ -808,7 +811,7 @@ def _banded_dedup(
             )
         )
     losers = vs_corpus.unionByName(within).distinct()
-    survivors = new_df.join(losers, id_col, "left_anti").localCheckpoint()
+    survivors = new_df.join(losers, id_col, "left_anti").localCheckpoint(eager=append)
     if log_skew:
         _log_skew(spark, table, banded, idx, cap, skew_sink)
     if append:
@@ -2175,10 +2178,10 @@ def span_build_index(
     same commit as the fingerprints (``io.rewrite_layout``); probes and
     appends validate against them — a silent ``k`` mismatch would
     never match any gram and pass everything through undeduped.
-    ``n_buckets=None`` sizes the count from the fingerprints
-    (``io._sized_buckets``: at least one per core, at most 32, and 32
-    when the size is unknown); an explicit count wins, and appends and
-    compactions keep the recorded one.
+    ``n_buckets=None`` sizes the count from the fingerprints' measured
+    bytes (``io._sized_buckets``: at least one per core, at most 32);
+    an explicit count wins, and appends and compactions keep the
+    recorded one.
     """
     from ..sources.io import rewrite_layout
 

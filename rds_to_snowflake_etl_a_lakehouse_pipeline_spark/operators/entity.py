@@ -321,8 +321,9 @@ def er_build_index(
     buckets and a batch pays only its own side of the shuffle. The
     ``block_key`` expression must be reused verbatim on every probe
     and append (it defines the join layout). ``n_buckets=None`` sizes
-    the bucket count from the index rows (``io._sized_buckets``: at
-    least one per core, at most 32, and 32 when the size is unknown);
+    the bucket count from the index rows' measured bytes
+    (``io._sized_buckets``: at least one per core, at most 32; the
+    rows out of the checkpointed clustering are pinned once for it);
     an explicit count wins. It is recorded as a table property, and
     appends, reblocks and compactions keep it. Written through
     ``io.rewrite_layout``, which commits the contract with the rows; a

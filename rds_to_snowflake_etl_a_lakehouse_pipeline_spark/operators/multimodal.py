@@ -1081,9 +1081,9 @@ def hamming_index_build(
     recorded as table properties and validated on every probe/append
     (a mismatched ``band_bits`` would silently destroy recall).
 
-    ``n_buckets=None`` sizes the bucket count from the banded rows
-    (``io._sized_buckets``: at least one per core, at most 32, and 32
-    when the size is unknown); an explicit count wins. The count is
+    ``n_buckets=None`` sizes the bucket count from the banded rows'
+    measured bytes (``io._sized_buckets``: at least one per core, at
+    most 32); an explicit count wins. The count is
     recorded, and every append, reband and compaction keeps it.
 
     ``skew_epoch`` is a monotone rebuild counter: streaming skew

@@ -513,7 +513,7 @@ def ivf_build_index(
     vec_col: str = "embedding",
     pq_codebook: "PQCodebook | None" = None,
     impl: str = "mllib",
-    n_id_buckets: int = 8,
+    n_id_buckets: int | None = None,
 ) -> list[list[float]]:
     """Materialize the IVF index :func:`ivf_topk` computes on the fly:
     fit the KMeans coarse quantizer, assign every corpus vector its
@@ -534,8 +534,10 @@ def ivf_build_index(
     centroid fingerprint, the layout and the build-time drift baseline
     (mean / p95 distance of each vector to its centroid, which
     :func:`ivf_append_index` measures every batch against) as its
-    properties. The baseline is one more pass of the assignment, not a
-    scan of the written index.
+    properties. The assigned rows are pinned once, grouped by cell
+    (:func:`_pinned_by_cell`): the baseline, the bucket sizing and the
+    write all read that pin, so the assignment runs once and the write
+    puts one file in each cell and id bucket.
 
     ``impl="grid"`` trains with the deterministic
     :func:`grid_kmeans_fit` and assigns with :func:`grid_assign_cells`
@@ -547,7 +549,9 @@ def ivf_build_index(
 
     The layout is cell-partitioned AND id-bucketed
     (``n_id_buckets`` ≥ 1 hash buckets on ``id_col``, recorded in the
-    contract so appends match the spec): probes
+    contract so appends match the spec; ``None`` sizes the count from
+    the pinned rows' measured bytes through ``io.rewrite_layout``, and
+    retrains, splits, merges and appends keep the recorded count): probes
     prune by the ``_cell`` directories, while the streaming-ingest
     replay guard (:func:`~..streaming.events.stream_ivf_append`'s id
     anti-join) streams the id column out of the bucketed layout
@@ -555,7 +559,7 @@ def ivf_build_index(
     monotonically growing index, the same flat-probe property the
     exact seen-set measures (``dedup.exact_build_index``).
     """
-    if n_id_buckets < 1:
+    if n_id_buckets is not None and n_id_buckets < 1:
         raise ValueError(f"n_id_buckets={n_id_buckets} must be >= 1")
     if impl == "grid":
         centroids = grid_kmeans_fit(corpus, id_col, vec_col, k=n_clusters)
@@ -590,7 +594,7 @@ def ivf_build_index(
     _commit_rotation(
         corpus.sparkSession,
         table,
-        indexed,
+        _pinned_by_cell(indexed),
         centroids,
         # base_n_clusters: the k of the LAST FULL FIT, kept by splits
         # and merges — maintenance's split budget is a multiple of it,
@@ -703,10 +707,11 @@ DRIFT_THRESHOLD = 1.5
 
 
 def _pinned_by_cell(rows: DataFrame) -> DataFrame:
-    """``rows`` pinned and hash-partitioned by cell. A split or merge
-    reads the index's own files, where every task holds rows of every
+    """``rows`` pinned and hash-partitioned by cell. A build's
+    assignment keeps its input's partitions, and a split or merge reads
+    the index's own files; either way every task holds rows of every
     cell and bucket, and a rewrite from that writes a file per task,
-    cell and bucket; grouped by cell, it writes one per cell and
+    cell and bucket. Grouped by cell, it writes one per cell and
     bucket."""
     return rows.repartition("_cell").localCheckpoint(eager=True)
 

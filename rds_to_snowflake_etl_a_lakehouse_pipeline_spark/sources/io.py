@@ -25,8 +25,9 @@ writes them:
   which writes the rows in the layout the contract records and
   commits the contract as the new table's properties in the same
   statement, so data and contract are one commit; a build that leaves
-  ``n_buckets`` unset gets a count sized from its rows
-  (:func:`_sized_buckets`), and every later rewrite keeps it;
+  ``n_buckets`` unset pins its rows once and gets a count sized from
+  the pin's measured bytes (:func:`_sized_buckets`), and every later
+  rewrite keeps it;
 - **probe / append / health** read the contract through
   :func:`read_contract` (one ``SHOW TBLPROPERTIES``), which returns
   the typed values or raises naming the table and the missing key,
@@ -703,76 +704,57 @@ def index_table_health(
     }
 
 
-# Optimized-plan nodes whose size Catalyst cannot know: RDD-backed
-# relations (createDataFrame over local data or an RDD) and every
-# Python evaluation node (UDFs, mapInPandas/mapInArrow, grouped maps).
-_UNSIZED_NODES = ("LogicalRDD", "Python", "InPandas", "InArrow")
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's ``sizeInBytes`` estimate for the optimized plan — free
-    (no job). None when the estimate rests on unknown statistics: an
-    unknown size must never trigger a size-gated code path.
-
-    Unknown is detected at the plan's LEAVES, not by the magnitude of
-    the derived estimate: Catalyst gives an unsizable leaf the
-    ``spark.sql.defaultSizeInBytes`` sentinel (``Long.MaxValue``), and
-    a projection scales that by its row-width ratio, so a narrow select
-    over a wide RDD-backed frame lands on a plausible-looking number.
-    Any RDD-backed or Python-evaluation node, or any leaf sized at the
-    sentinel, makes the whole estimate unknown."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        default = int(
-            str(df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes())
-        )
-        nodes = [plan]
-        while nodes:
-            node = nodes.pop()
-            if any(n in node.getClass().getSimpleName() for n in _UNSIZED_NODES):
-                return None
-            children = node.children()
-            if children.size() == 0 and int(str(node.stats().sizeInBytes())) >= default:
-                return None
-            nodes.extend(children.apply(i) for i in range(children.size()))
-        est = int(str(plan.stats().sizeInBytes()))
-    except Exception:  # noqa: BLE001 — best-effort; caller treats as unknown
-        return None
-    return est if 0 <= est < default else None
-
-
-# bucket count of a standing index whose size is unknown, and the
-# ceiling of a sized one: a sized build never gets more buckets (or
-# more files per append) than an unsized one
+# the ceiling of a sized standing index's bucket count (the old fixed
+# default): no build gets more buckets, or more files per append
 INDEX_MAX_BUCKETS = 32
 
 
-def _sized_buckets(rows: DataFrame) -> int:
-    """Bucket count for a standing index built from ``rows``: one
-    bucket per core, more only when the estimated size needs more than
-    one ``spark.sql.files.maxPartitionBytes`` split per core, never
-    more than :data:`INDEX_MAX_BUCKETS` — and exactly that cap when
-    :func:`_plan_size_bytes` cannot size ``rows`` (RDD-backed or
-    Python-kernel input). Every append writes up to one file per
-    bucket and every probe opens every file, so a small index pays for
-    each bucket it does not need on every micro-batch. A bucketed scan
-    reads each bucket as one task and never splits it, so past one
-    split per core the count keeps a bucket near one split.
+def _pin_rdd(rows: DataFrame):
+    """The JVM RDD behind ``rows`` when ``rows`` is itself a
+    materialized ``localCheckpoint`` (its optimized plan is one
+    checkpointed ``LogicalRDD``), else None."""
+    plan = rows._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        return plan.rdd()
+    return None
 
-    The estimate is Catalyst's non-CBO one, which does not scale an
-    ``explode``: a banded index (one row per band) is estimated at its
-    input's size, e.g. 78 KB for a 4-band Hamming index that writes
-    318 KB, so a large banded index can get as few as 1/bands of the
-    buckets its written size asks for. The per-core floor hides the
-    gap at small sizes. The count is sized once, at build: an index
-    that grows by appends keeps it, and ``defaultParallelism`` counts
-    only the executors registered at build time."""
-    est = _plan_size_bytes(rows)
-    if est is None:
-        return INDEX_MAX_BUCKETS
-    spark = rows.sparkSession
+
+def _pinned(rows: DataFrame) -> DataFrame:
+    """``rows`` as a materialized local checkpoint: ``rows`` itself
+    when a caller already pinned it, so no rows are pinned twice, else
+    one eager ``localCheckpoint``. Either way the partitioning is the
+    rows' own: a build from 9 input partitions still writes 9 files
+    per bucket."""
+    return rows if _pin_rdd(rows) is not None else rows.localCheckpoint()
+
+
+def _sized_buckets(pin: DataFrame) -> int:
+    """Bucket count for a standing index built from ``pin``
+    (:func:`_pinned` rows): one bucket per core, more only when the
+    pin's stored bytes need more than one
+    ``spark.sql.files.maxPartitionBytes`` split per core, never more
+    than :data:`INDEX_MAX_BUCKETS`. The bytes are the pin's memory and
+    disk blocks in Spark's storage status, a measurement of the very
+    rows the write reads, so a Python kernel, an RDD-backed frame or an
+    ``explode`` is sized like a parquet scan; it is the rows' in-memory
+    size, not their compressed size on disk. Every append writes up to
+    one file per bucket and every probe opens every file, so a small
+    index pays for each bucket it does not need on every micro-batch.
+    A bucketed scan reads each bucket as one task and never splits it,
+    so past one split per core the count keeps a bucket near one split.
+
+    The count is sized once, at build: an index that grows by appends
+    keeps it, and ``defaultParallelism`` counts only the executors
+    registered at build time."""
+    spark = pin.sparkSession
+    rdd_id = _pin_rdd(pin).id()
+    stored = sum(
+        info.memSize() + info.diskSize()
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if info.id() == rdd_id
+    )
     split = int(str(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()))
-    wanted = max(spark.sparkContext.defaultParallelism, -(-est // split))
+    wanted = max(spark.sparkContext.defaultParallelism, -(-stored // split))
     return min(INDEX_MAX_BUCKETS, wanted)
 
 
@@ -821,10 +803,14 @@ def rewrite_layout(
     reports about retired keys next to the new contract.
 
     A build passes ``n_buckets=None`` to have the count sized from
-    ``rows`` (:func:`_sized_buckets`); the sized count is what the
+    ``rows``: they are pinned once (:func:`_pinned`; a caller's pin is
+    reused), the count is sized from the pin's stored bytes
+    (:func:`_sized_buckets`), and the write reads the pin, so every
+    kernel behind ``rows`` still runs once. The sized count is what the
     contract records, so every later reband, compaction and append
     keeps it."""
     if "n_buckets" in contract and contract["n_buckets"] is None:
+        rows = _pinned(rows)
         contract = {**contract, "n_buckets": _sized_buckets(rows)}
     if rotate_skew:
         prior = prior_contract(spark, table, contract["kind"])

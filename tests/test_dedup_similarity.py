@@ -514,46 +514,6 @@ def test_minhash_lsh_hot_bucket_cap_bounds_candidates(spark):
     assert 1002 in kept_ids
 
 
-def test_plan_size_bytes_unknown_through_narrow_projection(spark, tmp_path):
-    """Unknown statistics are detected at the plan's leaves: Catalyst
-    scales an RDD-backed leaf's ``Long.MaxValue`` sentinel by a
-    projection's row-width ratio, so a 2-column select over a
-    60-column frame derives an estimate below any magnitude cutoff.
-    It must still read as unknown (``io._sized_buckets`` gates on
-    it), as must a local-list frame, while a range or file scan keeps
-    its real estimate."""
-    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import (
-        _plan_size_bytes,
-    )
-
-    rng = spark.range(1000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("doc text "), F.col("id").cast("string")).alias("text"),
-    )
-    est = _plan_size_bytes(rng)
-    assert est is not None and est > 0
-    # a local-list DataFrame is RDD-backed in PySpark: no usable size
-    # estimate (Catalyst's defaultSizeInBytes sentinel)
-    local = spark.createDataFrame(
-        [(1000, BASE), (1001, NEAR)], "doc_id bigint, text string"
-    )
-    assert _plan_size_bytes(local) is None
-
-    cols = ", ".join(f"c{i} bigint" for i in range(60))
-    rdd = spark.sparkContext.parallelize([tuple(range(60))] * 3)
-    wide = spark.createDataFrame(rdd, cols)
-    narrow = wide.select(
-        F.col("c0").alias("doc_id"), F.col("c1").cast("string").alias("text")
-    )
-    assert _plan_size_bytes(wide) is None
-    assert _plan_size_bytes(narrow) is None
-
-    path = str(tmp_path / "scan")
-    spark.range(100).write.parquet(path)
-    est = _plan_size_bytes(spark.read.parquet(path).select("id"))
-    assert est is not None and est > 0
-
-
 def test_connected_components_self_loops_both_algorithms(spark):
     """Degenerate input contract: a self-loop-only vertex appears in
     the output labeled as its own component on BOTH algorithm paths
@@ -1010,6 +970,45 @@ def test_minhash_index_build_query_incremental(spark):
     )
     surv3 = minhash_incremental_dedup(spark, t, batch3, threshold=0.9)
     assert {r["doc_id"] for r in surv3.collect()} == {21}
+
+
+def test_survivors_pin_stays_lazy_without_append(spark, monkeypatch):
+    """With ``append=False`` nothing re-reads the survivor plan after an
+    append, so the survivors are pinned lazily: the call starts one
+    job fewer than the eager pin does, and returns the same rows."""
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
+        minhash_build_index,
+        minhash_incremental_dedup,
+    )
+
+    t = "mh_lazy_survivors"
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    corpus = spark.createDataFrame([(1, BASE)], "doc_id bigint, text string")
+    minhash_build_index(corpus, t)
+    batch = spark.createDataFrame(
+        [(10, BASE), (11, "fresh new content nothing like the corpus " * 3)],
+        "doc_id bigint, text string",
+    )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def call():
+        start = scheduler.nextJobId()
+        out = minhash_incremental_dedup(spark, t, batch, threshold=0.8, append=False)
+        return scheduler.nextJobId() - start, sorted(map(tuple, out.collect()))
+
+    call()  # warm the contract read
+    lazy_jobs, lazy_rows = call()
+    frame = type(batch)
+    real = frame.localCheckpoint
+    monkeypatch.setattr(
+        frame, "localCheckpoint", lambda df, eager=True, *a: real(df, True, *a)
+    )
+    eager_jobs, eager_rows = call()
+    assert lazy_rows == eager_rows
+    assert [r[0] for r in lazy_rows] == [11]
+    assert lazy_jobs == eager_jobs - 1
+    assert spark.table(t).count() == 16  # nothing appended
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_minhash_reband_matches_direct_build(spark):
@@ -2621,7 +2620,7 @@ def test_ivf_split_hot_cells_partition_scoped(spark):
             )
             vid += 1
     base = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents0 = ivf_build_index(base, t, n_clusters=3, seed=11)
+    cents0 = ivf_build_index(base, t, n_clusters=3, seed=11, n_id_buckets=8)
 
     drift_rows = []
     for _ in range(30):

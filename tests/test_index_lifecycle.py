@@ -9,6 +9,8 @@ probes work with no resume step."""
 
 from __future__ import annotations
 
+import ast
+import inspect
 import os
 import random
 from urllib.parse import urlparse
@@ -545,10 +547,11 @@ def _fps(spark, n=40):
 
 def test_built_index_bucket_count_follows_its_data(spark, tmp_path):
     """A build left at ``n_buckets=None`` sizes the bucket count from
-    the rows it writes: one bucket per core for a small sized input,
-    never more than the old fixed 32, and exactly 32 when Catalyst
-    cannot size the input. An explicit count wins, and no later
-    rewrite or append changes the recorded count."""
+    the measured bytes of the rows it writes: one bucket per core for a
+    small input, never more than the old fixed 32, whatever produced
+    the rows (a parquet scan, the Arrow signature kernel, a
+    checkpointed clustering or an RDD-backed frame). An explicit count
+    wins, and no later rewrite or append changes the recorded count."""
     cores = spark.sparkContext.defaultParallelism
     sized = min(32, cores)
     fp_path, doc_path = str(tmp_path / "fps"), str(tmp_path / "docs")
@@ -590,9 +593,9 @@ def test_built_index_bucket_count_follows_its_data(spark, tmp_path):
     _drop(spark, t)
 
     # MinHash, exact and ER appends (uncapped and capped) land in the
-    # count their build recorded. The Arrow signature kernel hides the
-    # MinHash rows' size and the ER rows come out of a checkpointed
-    # clustering, so those two builds may keep 32.
+    # count their build recorded. The MinHash rows come out of the
+    # Arrow signature kernel and the ER rows out of a checkpointed
+    # clustering; both are sized like the parquet-backed builds.
     docs = spark.read.parquet(doc_path)
     new_docs = spark.createDataFrame(
         [(1000 + i, f"an appended note {i} on tides and estuaries " * 2)
@@ -631,7 +634,7 @@ def test_built_index_bucket_count_follows_its_data(spark, tmp_path):
         _drop(spark, t)
         build(t)
         n = int(io.get_table_meta(spark, t)["n_buckets"])
-        assert n == sized or (family != "exact" and n == 32), family
+        assert n == sized, family
         assert _bucket_spec(spark, t) == (n, col)
         rows = spark.table(t).count()
         for k, cap in enumerate((None, 2)):
@@ -641,13 +644,12 @@ def test_built_index_bucket_count_follows_its_data(spark, tmp_path):
         assert _bucket_spec(spark, t) == (n, col), family
         _drop(spark, t)
 
-    # unknown statistics (an RDD-backed frame) keep the fixed 32
+    # an RDD-backed frame, which Catalyst cannot size, is measured too
     t = "sizing_rdd_idx"
     _drop(spark, t)
-    assert io._plan_size_bytes(_fps(spark)) is None
     mm.hamming_index_build(_fps(spark), t, band_bits=16)
-    assert io.get_table_meta(spark, t)["n_buckets"] == "32"
-    assert _bucket_spec(spark, t) == (32, "val")
+    assert io.get_table_meta(spark, t)["n_buckets"] == str(sized)
+    assert _bucket_spec(spark, t) == (sized, "val")
     _drop(spark, t)
 
     # an explicit count is kept as given
@@ -659,40 +661,140 @@ def test_built_index_bucket_count_follows_its_data(spark, tmp_path):
     _drop(spark, t)
 
 
-def test_sized_bucket_count_follows_the_split_size(spark, tmp_path, monkeypatch):
+def _measured_pins(monkeypatch):
+    """Record the stored bytes of every pin ``io._sized_buckets`` sizes,
+    read from Spark's storage status beside the code under test."""
+    pinned = []
+    real = io._sized_buckets
+
+    def spy(pin):
+        rdd_id = pin._jdf.queryExecution().optimizedPlan().rdd().id()
+        infos = pin.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+        pinned.append(sum(
+            i.memSize() + i.diskSize() for i in infos if i.id() == rdd_id
+        ))
+        return real(pin)
+
+    monkeypatch.setattr(io, "_sized_buckets", spy)
+    return pinned
+
+
+def test_sized_bucket_count_follows_the_split_size(spark, monkeypatch):
     """Past one ``spark.sql.files.maxPartitionBytes`` split per core a
-    build gets ``ceil(estimate / split)`` buckets, never more than 32.
-    A bucketed scan reads each bucket as one task, however large, so
-    the count keeps a bucket near one split."""
+    build gets ``ceil(pinned bytes / split)`` buckets, never more than
+    32: the measured size, not the core floor, sets the count. A
+    bucketed scan reads each bucket as one task, however large, so the
+    count keeps a bucket near one split. The 16-band MinHash rows come
+    out of the Arrow signature kernel and an ``explode``, neither of
+    which Catalyst can size."""
     cores = spark.sparkContext.defaultParallelism
-    path = str(tmp_path / "fps")
-    _fps(spark, n=400).write.parquet(path)
-    ests = []
-    real = io._plan_size_bytes
-
-    def spy(df):
-        ests.append(real(df))
-        return ests[-1]
-
-    monkeypatch.setattr(io, "_plan_size_bytes", spy)
+    docs = spark.createDataFrame(
+        [(i, f"split sizing document {i} on basalt columns and tides " * 3)
+         for i in range(300)],
+        "doc_id bigint, text string",
+    )
+    pinned = _measured_pins(monkeypatch)
     t = "sizing_split_idx"
     _drop(spark, t)
-    mm.hamming_index_build(spark.read.parquet(path), t, band_bits=16)
-    est = ests[-1]
+    dd.minhash_build_index(docs, t, bands=16)
+    stored = pinned[-1]
+    assert stored > 0
     assert int(io.get_table_meta(spark, t)["n_buckets"]) == cores
 
     key = "spark.sql.files.maxPartitionBytes"
     try:
-        for split in (est // (cores + 3), est // 40):
+        for split in (stored // (cores + 3), stored // 40):
             spark.conf.set(key, str(split))
             _drop(spark, t)
-            mm.hamming_index_build(spark.read.parquet(path), t, band_bits=16)
-            assert ests[-1] == est
-            want = min(32, -(-est // split))
+            dd.minhash_build_index(docs, t, bands=16)
+            want = min(32, -(-pinned[-1] // split))
             assert want > cores
             assert int(io.get_table_meta(spark, t)["n_buckets"]) == want
-            assert _bucket_spec(spark, t) == (want, "val")
+            assert _bucket_spec(spark, t) == (want, "bucket")
         assert want == 32
     finally:
         spark.conf.unset(key)
         _drop(spark, t)
+
+
+def test_ivf_build_sizes_its_id_buckets(spark, monkeypatch):
+    """An IVF build with ``n_id_buckets`` unset records the count sized
+    from its pinned rows, one pin the drift baseline and the write
+    also read; an append, a retrain and a split keep the recorded
+    count, and an explicit count wins."""
+    sized = min(32, spark.sparkContext.defaultParallelism)
+    pinned = _measured_pins(monkeypatch)
+    three = [(0.0, 0.0, 20), (10.0, 0.0, 20), (0.0, 10.0, 20)]
+    t = "sizing_ivf_idx"
+    _drop(spark, t)
+    sim.ivf_build_index(_blobs(spark, three), t, n_clusters=3, impl="grid")
+    assert len(pinned) == 1 and pinned[0] > 0
+
+    def recorded():
+        n = io.read_contract(spark, t, "ivf")["n_buckets"]
+        assert _bucket_spec(spark, t) == (n, "vec_id")
+        return n
+
+    assert recorded() == sized
+    sim.ivf_append_index(_blobs(spark, [(40.0, 40.0, 30)], start=100), t)
+    assert recorded() == sized
+    sim.ivf_retrain_index(spark, t)
+    assert recorded() == sized
+    sim.ivf_split_hot_cells(spark, t, max_cell_fraction=0.25)
+    assert io.read_contract(spark, t, "ivf")["n_clusters"] > 3
+    assert recorded() == sized
+    assert len(pinned) == 1  # nothing after the build was sized again
+
+    sim.ivf_build_index(
+        _blobs(spark, three), t, n_clusters=3, impl="grid", n_id_buckets=sized + 1
+    )
+    assert recorded() == sized + 1
+    _drop(spark, t)
+
+
+def test_ivf_build_writes_one_file_per_cell_and_id_bucket(spark):
+    """A build from a many-partition corpus writes at most one file per
+    cell and id bucket: the assigned rows are grouped by cell before
+    the write, instead of writing a file per input task, cell and
+    bucket. MLlib's assignment is a narrow map, so it keeps the
+    corpus's 4 partitions up to the write."""
+    spec = [(0.0, 0.0, 30), (10.0, 0.0, 30), (0.0, 10.0, 30), (10.0, 10.0, 30)]
+    corpus = _blobs(spark, spec).repartition(4)
+    assert corpus.rdd.getNumPartitions() == 4
+    t = "ivf_build_files_idx"
+    _drop(spark, t)
+    sim.ivf_build_index(corpus, t, n_clusters=4, n_id_buckets=4)
+    assert len(spark.table(t).inputFiles()) <= 4 * 4
+    assert spark.table(t).count() == 120
+    _drop(spark, t)
+
+
+def test_every_build_defaults_to_a_sized_bucket_count():
+    """No index family can regain a fixed bucket default: every public
+    build leaves its count unset (sized at the write), and the one
+    bucket ceiling in ``sources/io.py`` is ``INDEX_MAX_BUCKETS``."""
+    builds = {
+        dd.minhash_build_index: "n_buckets",
+        mm.hamming_index_build: "n_buckets",
+        ent.er_build_index: "n_buckets",
+        dd.span_build_index: "n_buckets",
+        dd.exact_build_index: "n_buckets",
+        sim.ivf_build_index: "n_id_buckets",
+    }
+    for build, param in builds.items():
+        assert inspect.signature(build).parameters[param].default is None, build
+
+    tree = ast.parse(inspect.getsource(io))
+    named = [
+        target.id
+        for node in tree.body
+        if isinstance(node, ast.Assign) and isinstance(node.value, ast.Constant)
+        for target in node.targets
+        if "BUCKET" in target.id
+    ]
+    assert named == ["INDEX_MAX_BUCKETS"]
+    literals = [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and node.value == io.INDEX_MAX_BUCKETS
+    ]
+    assert len(literals) == 1
