@@ -98,6 +98,26 @@ def _single_bucket_key(df: DataFrame, keys: list, key_col: str) -> DataFrame:
     return df.withColumn(key_col, F.row_number().over(w).cast("bigint"))
 
 
+def _leaf_bytes(df: DataFrame) -> int | None:
+    """Summed ``sizeInBytes`` of the optimized plan's leaf relations (the
+    bytes the plan reads), or None when any leaf's size is unknown to
+    Spark (at or above ``spark.sql.defaultSizeInBytes``). Starts no job."""
+    try:
+        unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        sizes = [
+            # py4j returns a plain int for scala BigInt; str() also
+            # covers a raw java.math.BigInteger
+            int(str(leaves.apply(i).stats().sizeInBytes()))
+            for i in range(leaves.size())
+        ]
+    except Exception:  # noqa: BLE001 — best-effort; fall through to count
+        return None
+    if any(b >= unknown for b in sizes):
+        return None
+    return sum(sizes)
+
+
 def surrogate_key_two_phase(
     df: DataFrame,
     order_cols: Sequence[str],
@@ -130,14 +150,20 @@ def surrogate_key_two_phase(
     global key = offset + local ``row_number``. ``order_cols`` must be
     non-NULL and unique per row.
 
-    Dim-sized fast path: Catalyst's ``sizeInBytes`` estimate for the
-    optimized plan is free (no job). When it is at most ``small_bytes``
-    (conservative — join-chain estimates err high), the input provably
-    fits one sorted bucket and the single-window plan is emitted with
-    ZERO extra actions — identical job structure to the faithful form,
-    so gold dims pay nothing for being scale-safe. The estimate only
-    picks the PLAN; any actual size still yields correct keys (one slow
-    partition in the worst case, never a wrong answer).
+    Dim-sized fast path: the bytes the plan reads — the summed
+    ``sizeInBytes`` of the optimized plan's leaf relations (file bytes
+    for a table scan, exact for a local relation) — are free (no job).
+    When they are at most ``small_bytes`` the input fits one sorted
+    bucket and the single-window plan is emitted with ZERO extra
+    actions — identical job structure to the faithful form, so gold dims
+    over silver tables pay nothing for being scale-safe. Catalyst's
+    whole-plan estimate is not used: it multiplies join sides (a 5k-row
+    left-join chain estimates at ~10^14 bytes), so a dim would never
+    take the fast path. A leaf whose size Spark does not know (an RDD-
+    or checkpoint-backed relation reports ``spark.sql.defaultSizeInBytes``)
+    keeps the count-and-bucket path. The bytes only pick the PLAN; keys
+    are the same on either path (one slow partition in the worst case,
+    never a wrong answer).
 
     ``materialize`` (default True): the remaining phases are separate
     Spark actions, so a non-trivial upstream plan (a silver join chain
@@ -153,18 +179,10 @@ def surrogate_key_two_phase(
     spark = df.sparkSession
     keys = list(order_cols)
 
-    est_bytes = None
     if small_bytes > 0:  # small_bytes <= 0 opts out: always count+bucket
-        try:
-            # py4j returns a plain int for scala BigInt; str() also covers
-            # a raw java.math.BigInteger from other Spark versions.
-            est_bytes = int(
-                str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-        except Exception:  # noqa: BLE001 — best-effort; fall through to count
-            pass
-    if est_bytes is not None and est_bytes <= small_bytes:
-        return _single_bucket_key(df, keys, key_col)
+        read_bytes = _leaf_bytes(df)
+        if read_bytes is not None and read_bytes <= small_bytes:
+            return _single_bucket_key(df, keys, key_col)
 
     if materialize:
         # lazy: the phase-0 count below is a full scan, so it

@@ -24,9 +24,16 @@ exception), no further node is dispatched, the nodes already running
 finish, and the failure of the earliest failed node in topological
 order is raised.
 
-Gold nodes that also target the warehouse double-write; the runner
-caches between the two sinks instead of recomputing the plan (the
-reference recomputes — dim_customers_gold.py:56-62 then :72-81).
+A node is done once its catalog write and its gate have passed, and
+its downstream nodes are dispatched at once. A gold node that also
+targets the warehouse gets its second sink as a leaf task on the same
+pool: the copy reads the committed, gated catalog table, so it holds
+exactly the rows the gate checked and no downstream node waits for it
+(the reference writes S3, then Snowflake, and no later job reads the
+Snowflake copy — dim_customers_gold.py:56-62 then :72-81). A failed
+copy counts as its node's failure, a failed gate never reaches the
+warehouse, and ``run`` returns only after every copy has landed. The
+copy's jobs are tagged ``plans.runner.<node>.warehouse``.
 """
 
 from __future__ import annotations
@@ -61,6 +68,7 @@ class NodeResult:
     rows_written: int | None
     dq: list[DQResult] = field(default_factory=list)
     started: float = 0.0  # seconds from the start of Pipeline.run
+    warehouse_seconds: float | None = None  # the copy; None without a second sink
 
 
 class Pipeline:
@@ -96,7 +104,8 @@ class Pipeline:
         """Execute the DAG. ``sources`` provides DataFrames for dep names
         that are not nodes (external inputs). Raises on a cycle or an
         unresolved input before anything is written, and on a failed DQ
-        gate or a failing node once the nodes already running finish.
+        gate, a failing node or a failing warehouse copy once the work
+        already running finishes. Returns after every copy has landed.
         """
         sources = sources or {}
         order = self._topo_order()
@@ -133,33 +142,18 @@ class Pipeline:
                     df_obs, finish = attach_observation(df, observable, f"dq_{name}")
                 else:
                     df_obs, finish = df, None
-                if node.warehouse_table:
-                    df_obs = df_obs.cache()
-                try:
-                    write_table(
-                        df_obs,
-                        node.sink,
-                        partition_by=list(node.partition_by) if node.partition_by else None,
-                    )
-                    out = spark.table(node.sink)
-                    if finish:
-                        dq.extend(finish())
-                    if unique_rules:
-                        # checks the rows written, without re-running
-                        # the node's plan
-                        dq.extend(evaluate_now(out, unique_rules))
-                    # Gate BEFORE the warehouse write: the observe-based DQ
-                    # results only exist once the primary (catalog) sink has
-                    # executed — that write is the documented piggyback — but
-                    # a failed gate must stop propagation to the second sink.
-                    failed = [r for r in dq if not r.passed]
-                    if failed:
-                        raise RuntimeError(f"DQ gate failed at {name}: {failed}")
-                    if node.warehouse_table:
-                        self.warehouse.write(df_obs, node.warehouse_table)
-                finally:
-                    if node.warehouse_table:
-                        df_obs.unpersist()
+                write_table(
+                    df_obs,
+                    node.sink,
+                    partition_by=list(node.partition_by) if node.partition_by else None,
+                )
+                out = spark.table(node.sink)
+                if finish:
+                    dq.extend(finish())
+                if unique_rules:
+                    # checks the rows written, without re-running the
+                    # node's plan
+                    dq.extend(evaluate_now(out, unique_rules))
                 rows = next((int(r.observed) for r in dq if r.rule == "row_count"), None)
             else:
                 if rules:
@@ -172,34 +166,49 @@ class Pipeline:
                 name, round(time.time() - t0, 3), rows, dq, started=round(t0 - t_run, 3)
             )
 
+        def copy_to_warehouse(name: str) -> float:
+            spark.sparkContext.setJobDescription(f"plans.runner.{name}.warehouse")
+            node = self.nodes[name]
+            t0 = time.time()
+            self.warehouse.write(spark.table(node.sink), node.warehouse_table)
+            return round(time.time() - t0, 3)
+
+        def submit(fn: Callable, name: str) -> Future:
+            # wrapping clones the caller's local properties (job group,
+            # tags) once; wrap per task, because the task's
+            # setJobDescription writes into that clone
+            return pool.submit(inheritable_thread_target(spark)(fn), name)
+
         # in-DAG dependencies each node still waits for; a node is
         # dispatched once its set is empty and no node has failed
         pending = {n: {d for d in self.nodes[n].deps if d in self.nodes} for n in order}
         failures: dict[str, BaseException] = {}
-        # a pool thread starts only when no idle one is free, so the
-        # threads never outnumber the nodes in flight (the DAG's width)
+        # a pool thread starts only when no idle one is free, and a
+        # node's copy starts after its node task ends, so the threads
+        # never outnumber the nodes in flight (the DAG's width)
         with ThreadPoolExecutor(max_workers=max(len(order), 1)) as pool:
-            running: dict[Future, str] = {}
+            running: dict[Future, tuple[str, bool]] = {}  # -> (node, is its copy)
             while True:
                 if not failures:
                     for name in [n for n in order if n in pending and not pending[n]]:
                         del pending[name]
-                        # wrapping clones the caller's local properties (job
-                        # group, tags) once; wrap per node, because the node's
-                        # setJobDescription writes into that clone
-                        target = inheritable_thread_target(spark)(run_node)
-                        running[pool.submit(target, name)] = name
+                        running[submit(run_node, name)] = (name, False)
                 if not running:
                     break
                 done, _ = wait(running, return_when=FIRST_COMPLETED)
                 for fut in done:
-                    name = running.pop(fut)
+                    name, is_copy = running.pop(fut)
                     if (exc := fut.exception()) is not None:
                         failures[name] = exc
-                        continue
-                    outputs[name], results[name] = fut.result()
-                    for deps in pending.values():
-                        deps.discard(name)
+                    elif is_copy:
+                        results[name].warehouse_seconds = fut.result()
+                    else:
+                        outputs[name], results[name] = fut.result()
+                        node = self.nodes[name]
+                        if node.sink and node.warehouse_table:
+                            running[submit(copy_to_warehouse, name)] = (name, True)
+                        for deps in pending.values():
+                            deps.discard(name)
         if failures:
             raise failures[next(n for n in order if n in failures)]
         return {n: results[n] for n in order}

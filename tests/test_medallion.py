@@ -9,7 +9,10 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.medallion import build_pipeline
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.medallion import (
+    build_pipeline,
+    gold_dim_customers,
+)
 
 D = datetime.date
 TS = datetime.datetime
@@ -180,6 +183,21 @@ def test_warehouse_double_write(spark, run):
     wh = spark.table("warehouse.dim_customers")
     assert wh.count() == spark.table("gold.dim_customers").count()
     assert spark.table("warehouse.fact_sales").count() == 5
+
+
+def test_dim_customers_key_plan_starts_no_job(spark, run):
+    # the silver tables' file bytes size the key plan: the dim-sized
+    # single window is chosen without a count or a pin, bracketed by
+    # job id, and gives the faithful global window's keys
+    silver = [
+        spark.table(f"silver.{t}") for t in ("crm_cust_info", "erp_cust_az12", "erp_loc_a101")
+    ]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    mark = dag.nextJobId()
+    keyed = gold_dim_customers(*silver)
+    assert dag.nextJobId() == mark
+    faithful = gold_dim_customers(*silver, scale_safe=False)
+    assert sorted(map(tuple, keyed.collect())) == sorted(map(tuple, faithful.collect()))
 
 
 def test_faithful_pipeline_matches_default(spark, sources):

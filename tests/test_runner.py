@@ -1,18 +1,23 @@
 """Pipeline runner contract: dependency-driven concurrent dispatch,
 fail-fast on a failed DQ gate, deterministic error and result order,
-job-group inheritance, and validation before any write. Tiny in-memory
-DataFrames with sinks in a per-test scratch database."""
+job-group inheritance, validation before any write, and warehouse copies
+as leaf tasks off the critical path. Tiny in-memory DataFrames with
+sinks in a per-test scratch database."""
 
 from __future__ import annotations
 
 import itertools
+import re
 import threading
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans import runner
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.dq import DQRule
 from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.plans.runner import Node, Pipeline
+from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.sources.io import WarehouseSink
 
 ROW_GATE = [DQRule("row_count", "row_count", threshold=1)]
 # NodeResult.started and .seconds are each rounded to the millisecond
@@ -170,3 +175,107 @@ def test_unique_gate_checks_the_written_sink(spark, db, src):
     assert calls.value == src.count() == 3
     assert [(r.rule, r.passed, r.observed) for r in res["u"].dq] == [("v_unique", True, 3)]
     assert sorted(r.v for r in spark.table(f"{db}.u").collect()) == ["A", "B", "C"]
+
+
+class _GatedSink(WarehouseSink):
+    """A catalog warehouse sink whose copy first waits for ``release``."""
+
+    def __init__(self, release: threading.Event):
+        super().__init__()
+        self.release = release
+
+    def write(self, df, table, mode="overwrite"):
+        if not self.release.wait(timeout=30):
+            raise TimeoutError("no downstream node was dispatched during the copy")
+        super().write(df, table, mode)
+
+
+class _FailingSink(WarehouseSink):
+    """A warehouse sink whose copy fails and then sets ``failed``."""
+
+    def __init__(self, failed: threading.Event):
+        super().__init__()
+        self.failed = failed
+
+    def write(self, df, table, mode="overwrite"):
+        try:
+            raise RuntimeError("warehouse is down")
+        finally:
+            self.failed.set()
+
+
+def test_downstream_is_dispatched_while_the_warehouse_copy_runs(spark, db, src):
+    # a's copy waits until b has started: a runner that holds b back
+    # until a's copy lands times out inside the copy
+    b_started = threading.Event()
+
+    def b(df):
+        b_started.set()
+        return df
+
+    pipe = Pipeline(
+        [
+            Node("a", lambda df: df, deps=["src"], sink=f"{db}.a", dq_rules=ROW_GATE,
+                 warehouse_table=f"{db}.a_wh"),
+            Node("b", b, deps=["a"], sink=f"{db}.b", dq_rules=ROW_GATE),
+        ],
+        warehouse=_GatedSink(b_started),
+    )
+    results = pipe.run(spark, {"src": src})
+    # run returned only after the copy landed
+    assert sorted(r.id for r in spark.table(f"{db}.a_wh").collect()) == [1, 2, 3]
+    assert results["a"].warehouse_seconds is not None
+    assert results["b"].rows_written == 3
+
+
+def test_failing_copy_is_raised_and_stops_dispatch(spark, db, src):
+    # w's copy fails while s is held in its plan; once s finishes, its
+    # downstream d must not be dispatched, and w's catalog sink stays
+    copy_failed = threading.Event()
+    ran: list[str] = []
+
+    def s(df):
+        assert copy_failed.wait(timeout=30)
+        return df
+
+    pipe = Pipeline(
+        [
+            Node("w", lambda df: df, deps=["src"], sink=f"{db}.w", dq_rules=ROW_GATE,
+                 warehouse_table=f"{db}.w_wh"),
+            Node("s", _track(ran, "s", s), deps=["src"], sink=f"{db}.s"),
+            Node("d", _track(ran, "d"), deps=["s"], sink=f"{db}.d"),
+        ],
+        warehouse=_FailingSink(copy_failed),
+    )
+    with pytest.raises(RuntimeError, match="warehouse is down"):
+        pipe.run(spark, {"src": src})
+    assert ran == ["s"]
+    assert not spark.catalog.tableExists(f"{db}.d")
+    assert sorted(r.id for r in spark.table(f"{db}.w").collect()) == [1, 2, 3]
+    assert not spark.catalog.tableExists(f"{db}.w_wh")
+
+
+def test_warehouse_copy_holds_the_gated_rows(spark, db, src):
+    # a nondeterministic column: a copy that re-ran the node's plan
+    # would land other values than the gate checked
+    pipe = Pipeline([
+        Node("r", lambda df: df.withColumn("x", F.rand()), deps=["src"], sink=f"{db}.r",
+             dq_rules=ROW_GATE, warehouse_table=f"{db}.r_wh"),
+        Node("p", lambda r: r, deps=["r"], sink=f"{db}.p"),
+    ])
+    results = pipe.run(spark, {"src": src})
+    gold = sorted(map(tuple, spark.table(f"{db}.r").collect()))
+    assert sorted(map(tuple, spark.table(f"{db}.r_wh").collect())) == gold
+    assert results["r"].warehouse_seconds >= 0
+    assert results["p"].warehouse_seconds is None
+
+
+def test_runner_pins_nothing_and_no_whole_plan_estimate_is_read():
+    # a pinned frame between the sinks, or a plan choice read from
+    # Catalyst's whole-plan estimate, puts a stall back on the refresh
+    src = Path(runner.__file__).read_text()
+    for call in (".cache(", ".persist(", ".unpersist("):
+        assert call not in src
+    pkg = Path(runner.__file__).parents[1]
+    whole_plan = re.compile(r"optimizedPlan\(\)\s*\.\s*stats\(")
+    assert not [f.name for f in pkg.rglob("*.py") if whole_plan.search(f.read_text())]

@@ -68,7 +68,7 @@ def test_surrogate_key_dense_and_ordered(spark):
 def test_surrogate_two_phase_matches_faithful(spark):
     df = spark.createDataFrame([(i,) for i in range(997, -1, -1)], "id int")
     faithful = {r["id"]: r["sk"] for r in surrogate_key(df, ["id"], "sk").collect()}
-    # small_bytes=0 disables the dim-size estimate fast path so this
+    # small_bytes=0 disables the dim-sized (leaf bytes) fast path so this
     # genuinely runs the counted single-bucket branch
     two_phase = {
         r["id"]: r["sk"]
@@ -91,7 +91,7 @@ def test_surrogate_two_phase_multibucket_path(spark):
         (r["start"], r["key"]): r["sk"]
         for r in surrogate_key(df, order, "sk").collect()
     }
-    # small_bytes=0 disables the estimate fast path; tiny rows_per_bucket
+    # small_bytes=0 disables the leaf-bytes fast path; tiny rows_per_bucket
     # then forces the genuinely-bucketed branch (multiple range buckets,
     # broadcast offsets join)
     ranged = surrogate_key_two_phase(
@@ -186,8 +186,8 @@ def test_salted_join_matches_plain_join(spark):
 
 def test_surrogate_two_phase_at_default_scale_threshold(spark):
     """5M rows crosses the default 4M rows_per_bucket, so the REAL
-    multi-bucket branch runs with production defaults (estimate
-    fast-path included — spark.range's estimate is accurate and small,
+    multi-bucket branch runs with production defaults (leaf-bytes
+    fast path included — spark.range's leaf size is exact and small,
     so disable it explicitly). Ordering by id makes the exact answer
     id+1, checkable distributed without a faithful twin."""
     from pyspark.sql import functions as F
@@ -518,3 +518,21 @@ def test_bloom_undersized_guard_warns_and_skips_dead_prune(spark):
         warnings.simplefilter("error")
         ok = bloom_semi_join(left, right, "k", num_bits=1 << 17)
     assert ok.count() == 10000
+
+
+def test_surrogate_two_phase_unsized_leaf_takes_the_count_path(spark):
+    # an RDD-backed relation's size is unknown to Spark: the phase-0
+    # count runs. A sized leaf (a range) takes the fast path: no job.
+    jsc = spark.sparkContext._jsc.sc()
+    rdd_backed = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i,) for i in range(50, 0, -1)]), "id int"
+    )
+    mark = jsc.dagScheduler().nextJobId()
+    out = surrogate_key_two_phase(rdd_backed, ["id"], "sk")
+    assert jsc.dagScheduler().nextJobId() > mark
+    assert {r["id"]: r["sk"] for r in out.collect()} == {i: i for i in range(1, 51)}
+
+    mark = jsc.dagScheduler().nextJobId()
+    ranged = surrogate_key_two_phase(spark.range(50), ["id"], "sk")
+    assert jsc.dagScheduler().nextJobId() == mark
+    assert {r["id"]: r["sk"] for r in ranged.collect()} == {i: i + 1 for i in range(50)}
