@@ -3950,7 +3950,7 @@ def _q_x1_ann_stream(spark, sf_dir):
     q = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_query_index(spark, table, q, centroids, k=10, impl="grid")
+    return ivf_query_index(spark, table, q, centroids, k=10)
 
 
 def _q_x1_stateful_totals(spark, sf_dir):
@@ -4284,7 +4284,7 @@ def _q_v_ivf_index_topk(spark, sf_dir):
     centroids = ivf_build_index(
         e.filter(F.col("vec_id") >= 3), table, n_clusters=16, impl="grid"
     )
-    return ivf_query_index(spark, table, q, centroids, k=10, impl="grid")
+    return ivf_query_index(spark, table, q, centroids, k=10)
 
 
 def _q_v_ivf_split_topk(spark, sf_dir):
@@ -4330,9 +4330,7 @@ def _q_v_ivf_split_topk(spark, sf_dir):
     q = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_query_index(
-        spark, t, q, new_cents, k=10, n_probe=2, impl="grid"
-    )
+    return ivf_query_index(spark, t, q, new_cents, k=10, n_probe=2)
 
 
 def _q_v_ivf_maintain_topk(spark, sf_dir):
@@ -4403,8 +4401,7 @@ def _q_v_ivf_maintain_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return ivf_query_index(
-        spark, t, q, ivf_load_centroids(spark, t), k=10, n_probe=2,
-        impl="grid",
+        spark, t, q, ivf_load_centroids(spark, t), k=10, n_probe=2
     )
 
 
@@ -4459,9 +4456,7 @@ def _q_v_ivf_merge_topk(spark, sf_dir):
             lambda j: (F.col("vec_id") * 10 + 3 + (j % 2)).cast("float"),
         ).alias("embedding"),
     )
-    return ivf_query_index(
-        spark, t, q, merged, k=10, n_probe=2, impl="grid"
-    )
+    return ivf_query_index(spark, t, q, merged, k=10, n_probe=2)
 
 
 def _q_v_ivf_maintain_merge_topk(spark, sf_dir):
@@ -4528,9 +4523,7 @@ def _q_v_ivf_maintain_merge_topk(spark, sf_dir):
             lambda j: (F.col("vec_id") * 10 + 3 + (j % 2)).cast("float"),
         ).alias("embedding"),
     )
-    return ivf_query_index(
-        spark, t, q, merged, k=10, n_probe=2, impl="grid"
-    )
+    return ivf_query_index(spark, t, q, merged, k=10, n_probe=2)
 
 
 def _q_d_minhash_index_dedup(spark, sf_dir):
@@ -4561,7 +4554,7 @@ def _q_d_minhash_index_dedup(spark, sf_dir):
     batch = d.filter(F.col("doc_id") % 2 == 1)
     minhash_build_index(corpus, table, impl="md5")
     surv = minhash_incremental_dedup(
-        spark, table, batch, threshold=0.5, append=False, impl="md5"
+        spark, table, batch, threshold=0.5, append=False
     )
     return surv.select("doc_id").orderBy("doc_id")
 
@@ -4594,7 +4587,7 @@ def _q_m_minhash_reband_dedup(spark, sf_dir):
     minhash_build_index(corpus, table, impl="md5", bands=8)
     minhash_reband_index(spark, table, bands=16)
     surv = minhash_incremental_dedup(
-        spark, table, batch, threshold=0.5, append=False, impl="md5"
+        spark, table, batch, threshold=0.5, append=False
     )
     return surv.select("doc_id").orderBy("doc_id")
 
@@ -4626,7 +4619,7 @@ def _q_d_span_index_dedup(spark, sf_dir):
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     batch = d.filter(F.col("doc_id") % 2 == 1)
     span_build_index(corpus, table, k=8)
-    out = span_incremental_dedup(spark, table, batch, k=8, append=False)
+    out = span_incremental_dedup(spark, table, batch, append=False)
     return out.select("doc_id", "deduped_text", "n_tokens_removed").orderBy(
         "doc_id"
     )

@@ -359,9 +359,12 @@ def with_minhash_signature_arrow(
 
 
 def _signature_table(df, id_col, text_col, num_hashes, shingle_n, impl):
-    """Narrow (_id, _sig) MinHash signature table (Arrow kernel by
-    default; Catalyst reference impl for oracle parity checks)."""
-    if impl in ("arrow", "md5"):
+    """Narrow (_id, _sig) MinHash signature table: the Arrow kernel
+    (``impl`` "arrow", crc32 shingle hashes), its md5 form (what the
+    DuckDB oracle replays) or the Catalyst reference ("catalyst")."""
+    if impl not in ("arrow", "md5", "catalyst"):
+        raise ValueError(f"unknown MinHash impl: {impl!r} (arrow|md5|catalyst)")
+    if impl != "catalyst":
         sig = with_minhash_signature_arrow(
             _ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col))),
             text_col,
@@ -440,26 +443,27 @@ def minhash_build_index(
     sizes change as appends accrete, so capping is re-evaluated per
     probe over the buckets each batch actually hits.
 
-    Signature parameters + ``n_buckets`` are recorded as table
-    properties; probes/appends validate against them (a mismatched
-    ``shingle_n``/``num_hashes`` silently estimates garbage jaccard).
-    ``n_buckets=None`` sizes the count from the banded rows' measured
-    bytes (``io._sized_buckets``: at least one per core, at most 32):
-    ``io.rewrite_layout`` pins them once, so the Arrow signature kernel
-    (the default ``impl``) runs once and is sized like any other
-    input. An explicit count wins; rebands and appends keep the
-    recorded one.
+    The signature parameters (``num_hashes``, ``bands``, ``shingle_n``,
+    ``impl``) and ``n_buckets`` are recorded as the index contract;
+    probes and appends take them from it, so they sign every batch the
+    way the corpus was signed. ``n_buckets=None`` sizes the count from
+    the banded rows' measured bytes (``io._sized_buckets``: at least
+    one per core, at most 32): ``io.rewrite_layout`` pins them once, so
+    the Arrow signature kernel (the default ``impl``) runs once and is
+    sized like any other input. An explicit count wins; rebands and
+    appends keep the recorded one.
     The write goes through ``io.rewrite_layout``, which commits the
     contract with the data, advances ``skew_epoch`` and clears the skew
     log (bucket keys re-derive from the fresh corpus).
     """
-    fam = _minhash_family(id_col, text_col, num_hashes, bands, shingle_n, impl)
+    fam = _minhash_family(id_col, text_col)
+    contract = {
+        "kind": "minhash", "num_hashes": num_hashes, "bands": bands,
+        "shingle_n": shingle_n, "impl": impl, "n_buckets": n_buckets,
+        "bucket_cols": "bucket",
+    }
     _rewrite_banded(
-        df.sparkSession, table, fam, fam.sign(df), id_col,
-        {
-            "kind": "minhash", **fam.contract, "n_buckets": n_buckets,
-            "bucket_cols": "bucket",
-        },
+        df.sparkSession, table, fam, fam.sign(df, contract), id_col, contract
     )
 
 
@@ -477,8 +481,9 @@ def minhash_reband_index(spark, table: str, bands: int) -> None:
     the threshold S-curve but hotter buckets; fewer bands the reverse.
     That is a policy call, so the maintenance sweep only flags it.
 
-    ``bands`` must divide the recorded ``num_hashes``. A caller still
-    probing with the old band count fails the contract check. The
+    ``bands`` must divide the recorded ``num_hashes``. Probes and
+    streams read the banding from the contract on every call, so a
+    running stream's next batch probes at the new band count. The
     rewrite rotates ``skew_epoch`` and clears the skew log. Data and
     contract commit together, so a crash at any step leaves the old
     banding or the new one, and a re-run converges.
@@ -638,18 +643,21 @@ class _BandedFamily(NamedTuple):
     (:func:`_banded_reband`) bodies read it. The instances are
     :func:`_minhash_family` and ``multimodal._hamming_family``.
 
-    - ``kind`` / ``contract``: the recorded contract kind, and the
-      caller's values for the contract keys a probe validates;
+    Every parameter the index records is read from the contract that
+    ``sign``, ``band`` and ``score`` are handed, never from the caller.
+
+    - ``kind``: the recorded contract kind;
     - ``keys``: the bucket key columns;
     - ``value`` / ``batch_value``: the column holding the full
       signature on the index and on the banded batch;
-    - ``sign``: caller batch → ``(_id, batch_value)``, NULLs dropped;
+    - ``sign``: caller batch and contract → ``(_id, batch_value)``,
+      NULLs dropped;
     - ``band`` / ``band_param``: those rows and a contract →
       ``(_id, batch_value, *keys)``, one row per band; the contract key
       that sets the banding (a reband's target);
-    - ``score`` / ``keep`` / ``score_col``: the score of two values,
-      the predicate a candidate pair's score must pass, and the
-      score's name in the probe's output;
+    - ``score`` / ``keep`` / ``score_col``: the score of two values
+      under a contract, the predicate a candidate pair's score must
+      pass, and the score's name in the probe's output;
     - ``star``: the hot-bucket rule. Star: a hot index bucket is met
       only through its min-id representative, which matches whatever
       the score, and a hot batch bucket drops every member but its min
@@ -660,14 +668,13 @@ class _BandedFamily(NamedTuple):
     """
 
     kind: str
-    contract: dict
     keys: list[str]
     value: str
     batch_value: str
-    sign: Callable[[DataFrame], DataFrame]
+    sign: Callable[[DataFrame, dict], DataFrame]
     band: Callable[[DataFrame, dict], DataFrame]
     band_param: str
-    score: Callable[[Column, Column], Column]
+    score: Callable[[Column, Column, dict], Column]
     keep: Callable[[Column], Column]
     score_col: str
     star: bool
@@ -675,17 +682,13 @@ class _BandedFamily(NamedTuple):
 
 
 def _minhash_family(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 5,
-    impl: str = "arrow",
-    threshold: float = 0.8,
+    id_col: str = "doc_id", text_col: str = "text", threshold: float = 0.8
 ) -> _BandedFamily:
-    """The MinHash index: signatures banded into ``(band, bucket)``,
-    pairs kept at a 6-decimal rounded Jaccard estimate ≥ ``threshold``
-    (matching :func:`minhash_lsh_pairs`), star rule on hot buckets."""
+    """The MinHash index: signatures of the recorded ``num_hashes``,
+    ``shingle_n`` and ``impl``, banded into ``(band, bucket)`` at the
+    recorded ``bands``, pairs kept at a 6-decimal rounded Jaccard
+    estimate ≥ ``threshold`` (matching :func:`minhash_lsh_pairs`), star
+    rule on hot buckets."""
 
     def band(sig: DataFrame, contract: dict) -> DataFrame:
         b, n = int(contract["bands"]), int(contract["num_hashes"])
@@ -695,26 +698,28 @@ def _minhash_family(
 
     return _BandedFamily(
         kind="minhash",
-        contract={"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n},
         keys=["band", "bucket"], value="sig", batch_value="_sig",
-        sign=lambda df: _signature_table(
-            df, id_col, text_col, num_hashes, shingle_n, impl
+        sign=lambda df, c: _signature_table(
+            df, id_col, text_col, c["num_hashes"], c["shingle_n"], c["impl"]
         ),
         band=band, band_param="bands",
-        score=lambda x, y: F.round(_jaccard_est(x, y, num_hashes), 6),
+        score=lambda x, y, c: F.round(_jaccard_est(x, y, c["num_hashes"]), 6),
         keep=lambda s: s >= threshold, score_col="jaccard_est",
         star=True, pin_batch=False,
     )
 
 
 def _corpus_hits(
-    fam: _BandedFamily, banded: DataFrame, idx: DataFrame, cap: int | None
+    fam: _BandedFamily, meta: dict, banded: DataFrame, idx: DataFrame,
+    cap: int | None,
 ) -> DataFrame:
     """``banded`` (as ``n``) joined to the index rows ``idx`` (as
     ``c``) on the bucket keys, kept by ``fam``'s pair predicate under
-    its hot-bucket rule. ``idx`` is the whole index when uncapped, and
-    its sized hit slice otherwise."""
-    keep = fam.keep(fam.score(F.col(f"n.{fam.batch_value}"), F.col(f"c.{fam.value}")))
+    its hot-bucket rule and the index contract ``meta``. ``idx`` is the
+    whole index when uncapped, and its sized hit slice otherwise."""
+    keep = fam.keep(
+        fam.score(F.col(f"n.{fam.batch_value}"), F.col(f"c.{fam.value}"), meta)
+    )
     if cap is not None and fam.star:
         keep = keep | (F.col("c._bsz") > cap)
     elif not fam.star:
@@ -730,21 +735,21 @@ def _banded_probe(
     """``(new_id, corpus_id, <score_col>)``, one row per batch document
     and indexed document that :func:`_corpus_hits` pairs. Lazy: each
     action on the result scans the index once."""
-    from ..sources.io import check_table_meta
+    from ..sources.io import read_contract
 
-    meta = check_table_meta(spark, table, fam.kind, **fam.contract)
-    banded = fam.band(fam.sign(new_df), meta)
+    meta = read_contract(spark, table, fam.kind)
+    banded = fam.band(fam.sign(new_df, meta), meta)
     idx = spark.table(table)
     if cap is not None:
         idx = _index_hit_slice(idx, banded, fam.keys, id_col, cap)
     return (
-        _corpus_hits(fam, banded, idx, cap)
+        _corpus_hits(fam, meta, banded, idx, cap)
         .select(
             F.col("n._id").alias("new_id"),
             F.col(f"c.{id_col}").alias("corpus_id"),
-            fam.score(F.col(f"n.{fam.batch_value}"), F.col(f"c.{fam.value}")).alias(
-                fam.score_col
-            ),
+            fam.score(
+                F.col(f"n.{fam.batch_value}"), F.col(f"c.{fam.value}"), meta
+            ).alias(fam.score_col),
         )
         .dropDuplicates(["new_id", "corpus_id"])
     )
@@ -771,14 +776,14 @@ def _banded_dedup(
     the index and drop them as duplicates of themselves. Without an
     append the pin stays lazy, and the caller's first action fills
     it."""
-    from ..sources.io import append_layout, check_table_meta
+    from ..sources.io import append_layout, read_contract
 
-    meta = check_table_meta(spark, table, fam.kind, **fam.contract)
+    meta = read_contract(spark, table, fam.kind)
     if log_skew is None:
         log_skew = cap is not None
     if fam.pin_batch:
         new_df = new_df.localCheckpoint()
-    signed = fam.sign(new_df)
+    signed = fam.sign(new_df, meta)
     idx = spark.table(table)
     if cap is None and not log_skew:
         banded = fam.band(signed if fam.pin_batch else signed.localCheckpoint(), meta)
@@ -786,7 +791,7 @@ def _banded_dedup(
         banded, idx = _pin_probe_sides(
             fam.band(signed, meta), idx, fam.keys, id_col, cap
         )
-    vs_corpus = _corpus_hits(fam, banded, idx, cap).select(
+    vs_corpus = _corpus_hits(fam, meta, banded, idx, cap).select(
         F.col("n._id").alias(id_col)
     )
     within_banded = _cold(banded, cap)
@@ -799,7 +804,9 @@ def _banded_dedup(
         )
         .filter(
             fam.keep(
-                fam.score(F.col(f"a.{fam.batch_value}"), F.col(f"b.{fam.batch_value}"))
+                fam.score(
+                    F.col(f"a.{fam.batch_value}"), F.col(f"b.{fam.batch_value}"), meta
+                )
             )
         )
         .select(F.col("b._id").alias(id_col))
@@ -866,18 +873,15 @@ def minhash_query_index(
     new_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 5,
     threshold: float = 0.8,
-    impl: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """``(new_id, corpus_id, jaccard_est)`` for every new document whose
     estimated Jaccard against an indexed document clears
-    ``threshold``. Signature parameters must match the build. Only the
-    batch is signed and banded; the index streams out of its bucketed
-    table into the ``(band, bucket)`` join.
+    ``threshold``. The batch is signed and banded with the parameters
+    the index records (``num_hashes``, ``bands``, ``shingle_n``,
+    ``impl``); the index streams out of its bucketed table into the
+    ``(band, bucket)`` join.
 
     ``max_bucket_size`` caps hot index buckets with the star rule of
     :func:`minhash_lsh_pairs`: a probe landing in a bucket over the cap
@@ -886,9 +890,7 @@ def minhash_query_index(
     hits. The body is :func:`_banded_probe`, shared with
     ``multimodal.hamming_index_probe``; the result is lazy, so each
     action on it scans the index once."""
-    fam = _minhash_family(
-        id_col, text_col, num_hashes, bands, shingle_n, impl, threshold
-    )
+    fam = _minhash_family(id_col, text_col, threshold)
     return _banded_probe(spark, table, fam, new_df, id_col, max_bucket_size)
 
 
@@ -903,10 +905,6 @@ def minhash_incremental_dedup(
     max_bucket_size: int | None = None,
     log_skew: bool | None = None,
     skew_sink: list | None = None,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Drop the new documents that near-dup an indexed document or an
     earlier (smaller-id) document of the same batch, then
@@ -916,9 +914,10 @@ def minhash_incremental_dedup(
     its own signatures plus one scan of the bucketed index. The
     signatures are computed once and pinned.
 
-    Signature parameters and the append's bucket layout come from the
-    index's recorded contract (:func:`~..sources.io.check_table_meta`);
-    a mismatch raises.
+    The signature parameters and the append's bucket layout come from
+    the index's recorded contract (:func:`~..sources.io.read_contract`),
+    read once per call, so a reband between batches takes effect on the
+    next one.
 
     ``max_bucket_size`` caps hot ``(band, bucket)`` keys with the star
     rule on both sides: a probe landing in a hot index bucket is
@@ -934,9 +933,7 @@ def minhash_incremental_dedup(
 
     The body is :func:`_banded_dedup`, shared with
     ``multimodal.hamming_incremental_dedup``."""
-    fam = _minhash_family(
-        id_col, text_col, num_hashes, bands, shingle_n, impl, threshold
-    )
+    fam = _minhash_family(id_col, text_col, threshold)
     return _banded_dedup(
         spark, table, fam, new_df, id_col, append, max_bucket_size, log_skew,
         skew_sink,
@@ -2168,7 +2165,7 @@ def span_build_index(
     corpus's distinct-span count (≤ its token count), and existence is
     all the dedup semantics need — historical copies always outrank a
     new batch, so no (id, pos) payload is stored. ``k`` is part of the
-    index contract: every probe/append must pass the same value.
+    index contract: every probe and append reads it from there.
 
     Run :func:`span_dedup` over the initial corpus FIRST if it should
     be self-deduped before becoming the standard; the index then
@@ -2176,8 +2173,7 @@ def span_build_index(
 
     ``k`` and ``n_buckets`` are recorded as table properties in the
     same commit as the fingerprints (``io.rewrite_layout``); probes and
-    appends validate against them — a silent ``k`` mismatch would
-    never match any gram and pass everything through undeduped.
+    appends take both from there.
     ``n_buckets=None`` sizes the count from the fingerprints' measured
     bytes (``io._sized_buckets``: at least one per core, at most 32);
     an explicit count wins, and appends and compactions keep the
@@ -2207,7 +2203,6 @@ def span_incremental_dedup(
     batch: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 8,
     append: bool = True,
     out_col: str = "deduped_text",
     removed_col: str = "n_tokens_removed",
@@ -2246,14 +2241,15 @@ def span_incremental_dedup(
     keeps; the index remembers original spans (by design: a span seen
     once and masked later must still be recognized as seen).
 
-    ``k`` is validated against the index's recorded contract
-    (:func:`~..sources.io.check_table_meta`), since a mismatched ``k``
-    would silently dedup nothing, and the append takes its bucket
-    layout from the same contract (``io.append_layout``).
+    The span length ``k`` and the append's bucket layout come from the
+    index's recorded contract (:func:`~..sources.io.read_contract`;
+    ``io.append_layout``): a batch exploded at another ``k`` would
+    match no fingerprint and dedup nothing.
     """
-    from ..sources.io import append_layout, check_table_meta
+    from ..sources.io import append_layout, read_contract
 
-    meta = check_table_meta(spark, table, "span", k=k)
+    meta = read_contract(spark, table, "span")
+    k = meta["k"]
 
     idx = spark.table(table)
     probe_idx = _before_batch(idx, batch_id)

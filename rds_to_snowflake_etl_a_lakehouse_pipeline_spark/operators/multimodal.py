@@ -1077,9 +1077,9 @@ def hamming_index_build(
     (id, fp, band, val), hash-bucketed on the band ``val``: every later
     probe joins on (band, val), so the corpus side of that join is
     pre-shuffled at write time and never moves again — incremental
-    batches pay only their own fingerprints. Banding parameters are
-    recorded as table properties and validated on every probe/append
-    (a mismatched ``band_bits`` would silently destroy recall).
+    batches pay only their own fingerprints. ``band_bits`` is recorded
+    as a table property, and every probe and append bands its batch at
+    the recorded width.
 
     ``n_buckets=None`` sizes the bucket count from the banded rows'
     measured bytes (``io._sized_buckets``: at least one per core, at
@@ -1094,12 +1094,12 @@ def hamming_index_build(
     from .dedup import _rewrite_banded
 
     fam = _hamming_family(id_col, hash_col)
+    contract = {
+        "kind": "hamming_fp", "band_bits": band_bits,
+        "n_buckets": n_buckets, "bucket_cols": "val",
+    }
     _rewrite_banded(
-        df.sparkSession, table, fam, fam.sign(df), id_col,
-        {
-            "kind": "hamming_fp", "band_bits": band_bits,
-            "n_buckets": n_buckets, "bucket_cols": "val",
-        },
+        df.sparkSession, table, fam, fam.sign(df, contract), id_col, contract
     )
 
 
@@ -1116,8 +1116,9 @@ def hamming_reband_index(spark, table: str, band_bits: int) -> None:
     hotter buckets; larger ``band_bits`` the reverse. That is a policy
     call, so the maintenance sweep only flags it.
 
-    ``band_bits`` must divide 64. A caller still probing at the old
-    width fails the contract check. The rewrite rotates
+    ``band_bits`` must divide 64. Probes and streams read the width
+    from the contract on every call, so a running stream's next batch
+    probes at the new width. The rewrite rotates
     ``skew_epoch`` and clears the skew log. Data and contract commit
     together, so a crash at any step leaves the old banding or the new
     one, and a re-run converges."""
@@ -1143,13 +1144,13 @@ def _hamming_family(
         return _fp_band_explode(fps, "_id", "_ph", bits)
 
     return _BandedFamily(
-        kind="hamming_fp", contract={},
+        kind="hamming_fp",
         keys=["band", "val"], value="fp", batch_value="_ph",
-        sign=lambda df: df.select(
+        sign=lambda df, _: df.select(
             F.col(id_col).alias("_id"), F.col(hash_col).alias("_ph")
         ).filter(F.col("_ph").isNotNull()),
         band=band, band_param="band_bits",
-        score=lambda x, y: F.bit_count(x.bitwiseXOR(y)),
+        score=lambda x, y, _: F.bit_count(x.bitwiseXOR(y)),
         keep=lambda s: s <= max_hamming, score_col="hamming",
         star=False, pin_batch=True,
     )

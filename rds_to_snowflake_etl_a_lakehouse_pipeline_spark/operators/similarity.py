@@ -1318,7 +1318,6 @@ def ivf_query_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "mllib",
 ) -> DataFrame:
     """Top-k against a persisted :func:`ivf_build_index` table.
 
@@ -1334,11 +1333,11 @@ def ivf_query_index(
     almost nothing) is skipped entirely — the probe join alone carries
     the semantics (see :func:`_pruned_index_scan`).
 
-    ``impl="grid"``: for indexes built with the deterministic trainer
-    (quantized-unit centroids) the probe runs through
-    :func:`grid_assign_cells` — same quantization, same tie-breaks —
-    so the whole query is engine-replayable. Partition pruning is
-    unchanged (layout only).
+    The probe follows the ``impl`` the index records. A ``"grid"``
+    index (deterministic trainer, quantized-unit centroids) probes
+    through :func:`grid_assign_cells` — same quantization, same
+    tie-breaks — so the whole query is engine-replayable. Partition
+    pruning is unchanged (layout only).
 
     ``centroids=None`` loads the matrix from the persisted
     ``{table}_centroids`` companion (:func:`ivf_load_centroids`) — the
@@ -1346,13 +1345,16 @@ def ivf_query_index(
     maintenance retrain rotated the matrix. An explicitly passed
     matrix is still fingerprint-validated against the index.
     """
+    from ..sources.io import read_contract
+
     if centroids is None:
-        centroids = ivf_load_centroids(spark, table)
+        meta = read_contract(spark, table, "ivf")
+        centroids = _load_centroids(spark, table, meta)
     else:
-        _check_centroids(spark, table, centroids)
+        meta = _check_centroids(spark, table, centroids)
     C = np.asarray(centroids, dtype=np.float64)
 
-    if impl == "grid":
+    if meta["impl"] == "grid":
         probes = (
             grid_assign_cells(
                 queries, query_id_col, vec_col, centroids,
@@ -1365,7 +1367,7 @@ def ivf_query_index(
                 F.col("cell").alias("_cell"),
             )
         )
-    elif impl == "mllib":
+    else:
 
         @pandas_udf("array<int>")
         def probe_cells(vecs: pd.Series) -> pd.Series:
@@ -1382,8 +1384,6 @@ def ivf_query_index(
             l2_norm(F.col(vec_col)).alias("_qn"),
             F.explode(probe_cells(F.col(vec_col))).alias("_cell"),
         )
-    else:
-        raise ValueError(f"unknown impl: {impl!r}")
     indexed = _pruned_index_scan(spark, table, probes, len(C))
     cand = (
         indexed.withColumn("_cn", l2_norm(F.col(vec_col)))

@@ -519,7 +519,10 @@ _BANDED = {**_BUCKETED, "skew_epoch": int}
 TABLE_SPECS: dict[str, TableSpec] = {
     "exact": TableSpec({**_BUCKETED, "content_sig": str}),
     "span": TableSpec({**_BUCKETED, "k": int}),
-    "minhash": TableSpec({**_BANDED, "num_hashes": int, "bands": int, "shingle_n": int}),
+    "minhash": TableSpec(
+        {**_BANDED, "num_hashes": int, "bands": int, "shingle_n": int, "impl": str},
+        format=2,
+    ),
     "hamming_fp": TableSpec({**_BANDED, "band_bits": int}),
     "er": TableSpec(_BANDED),
     "ivf": TableSpec({

@@ -351,10 +351,6 @@ def stream_corpus_dedup(
     query_name: str = "stream_corpus_dedup",
     append: bool = True,
     log_skew: bool | None = None,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 5,
-    impl: str = "arrow",
 ):
     """Streaming corpus curation: every micro-batch of arriving
     documents is near-dup-checked against the persisted MinHash index
@@ -364,9 +360,10 @@ def stream_corpus_dedup(
     The streaming form of a standing ingest pipeline — each batch pays
     its own signatures plus ONE read of the bucketed index, capped or
     not (the per-batch cost is spelled out on
-    ``minhash_incremental_dedup``), never a corpus re-shingle. Signature
-    parameters must match the ``minhash_build_index`` call that created
-    ``table``.
+    ``minhash_incremental_dedup``), never a corpus re-shingle. Each
+    batch signs and bands with the parameters ``table`` records, read
+    from its contract in that batch, so a ``minhash_reband_index``
+    between two batches applies from the next one.
 
     Unlike exact ``dedup_events`` (state-store keyed dropDuplicates),
     the dedup criterion here is NEAR-duplication — state lives in the
@@ -383,18 +380,14 @@ def stream_corpus_dedup(
     ``max_bucket_size`` is set) are buffered and flushed once per drain
     by :func:`_stream_probe`. Each report is one aggregate job over the
     batch's two pins, with no index read; the bench's q22 passes
-    ``log_skew=False`` to time the probe alone. The signature
-    parameters (``num_hashes``, ``bands``, ``shingle_n``, ``impl``)
-    pass through to ``minhash_incremental_dedup``."""
+    ``log_skew=False`` to time the probe alone."""
     from ..operators.dedup import minhash_incremental_dedup
 
     _stream_probe(
         sdf, table, checkpoint_dir, query_name, max_bucket_size, log_skew,
         partial(
             minhash_incremental_dedup, id_col=id_col, text_col=text_col,
-            threshold=threshold, append=append,
-            max_bucket_size=max_bucket_size, num_hashes=num_hashes,
-            bands=bands, shingle_n=shingle_n, impl=impl,
+            threshold=threshold, append=append, max_bucket_size=max_bucket_size,
         ),
     )
 
@@ -1349,7 +1342,6 @@ def stream_span_dedup(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 8,
     query_name: str = "stream_span_dedup",
 ):
     """Streaming exact-substring curation: every micro-batch of
@@ -1362,9 +1354,9 @@ def stream_span_dedup(
     :func:`stream_corpus_dedup` (near-dup) and
     :func:`stream_frequency_sketch` (frequencies): state lives in a
     bucketed table, not the streaming state store — restart-proof,
-    queryable, compactable. ``k`` must match the
-    ``span_build_index`` call that created ``table``. Runs with
-    trigger=availableNow and blocks until input is drained.
+    queryable, compactable. Each batch reads the span length ``k``
+    from ``table``'s contract. Runs with trigger=availableNow and
+    blocks until input is drained.
     """
     from ..operators.dedup import span_incremental_dedup
 
@@ -1383,7 +1375,7 @@ def stream_span_dedup(
         sid = _checkpoint_stream_id(batch_df.sparkSession, checkpoint_dir)
         masked = span_incremental_dedup(
             batch_df.sparkSession, table, batch_df,
-            id_col=id_col, text_col=text_col, k=k, append=True,
+            id_col=id_col, text_col=text_col, append=True,
             batch_id=_stream_stamp(sid, batch_id),
         )
         _land_batch_partition(masked, sink_table, batch_id, stream_id=sid)

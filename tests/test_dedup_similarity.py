@@ -1015,9 +1015,8 @@ def test_minhash_reband_matches_direct_build(spark):
     """Re-banding a standing index from its stored signatures must be
     indistinguishable from building at the new band count directly —
     banding is a pure function of (signature, bands). Probes after the
-    reband validate against the UPDATED meta (a stale-bands caller
-    fails loudly), the rotation bumps skew_epoch, and the skew log is
-    cleared like a rebuild."""
+    reband read the UPDATED meta, the rotation bumps skew_epoch, and
+    the skew log is cleared like a rebuild."""
     import pytest as _pytest
 
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
@@ -1060,22 +1059,16 @@ def test_minhash_reband_matches_direct_build(spark):
     want = {tuple(r) for r in spark.table(t_direct).select(*cols).collect()}
     assert got == want and len(got) == 24 * 16
 
-    # probes at the new band count agree with the direct build; the
-    # old band count is refused (stale caller fails loudly)
+    # a probe reads the new band count from the contract and agrees
+    # with the direct build
     batch = spark.createDataFrame(
         [(100, base * 3 + "tail 3")], "doc_id bigint, text string"
     )
-    hits_re = minhash_query_index(
-        spark, t_re, batch, bands=16, threshold=0.5
-    )
-    hits_direct = minhash_query_index(
-        spark, t_direct, batch, bands=16, threshold=0.5
-    )
+    hits_re = minhash_query_index(spark, t_re, batch, threshold=0.5)
+    hits_direct = minhash_query_index(spark, t_direct, batch, threshold=0.5)
     assert sorted(map(tuple, hits_re.collect())) == sorted(
         map(tuple, hits_direct.collect())
     )
-    with _pytest.raises(ValueError):
-        minhash_query_index(spark, t_re, batch, bands=8, threshold=0.5)
 
     # parameter validation: non-divisor band counts and non-minhash
     # tables are refused before any mutation
@@ -2044,9 +2037,7 @@ def test_span_incremental_dedup_against_persisted_index(spark):
     )
     got1 = {
         r.doc_id: (r.deduped_text, r.n_tokens_removed)
-        for r in span_incremental_dedup(
-            spark, "span_idx_t", b1, k=4
-        ).collect()
+        for r in span_incremental_dedup(spark, "span_idx_t", b1).collect()
     }
     # hit spans start at positions 2-4 (the three historical 4-grams),
     # covering tokens 2-7; the unseen boundary spans containing intro /
@@ -2056,33 +2047,33 @@ def test_span_incremental_dedup_against_persisted_index(spark):
 
     # batch 2: repeats batch 1's NEW doc -> dropped via the appended index
     b2 = spark.createDataFrame([(20, fresh)], "doc_id long, text string")
-    got2 = span_incremental_dedup(spark, "span_idx_t", b2, k=4).first()
+    got2 = span_incremental_dedup(spark, "span_idx_t", b2).first()
     assert got2.deduped_text == "" and got2.n_tokens_removed == 6
 
     # append=False masks the same way and leaves the index unchanged
     n_before = spark.table("span_idx_t").count()
-    got3 = span_incremental_dedup(spark, "span_idx_t", b2, k=4, append=False).first()
+    got3 = span_incremental_dedup(spark, "span_idx_t", b2, append=False).first()
     assert got3.deduped_text == "" and got3.n_tokens_removed == 6
     b3 = spark.createDataFrame(
         [(30, "another brand new span of words entirely")],
         "doc_id long, text string",
     )
-    span_incremental_dedup(spark, "span_idx_t", b3, k=4, append=False)
+    span_incremental_dedup(spark, "span_idx_t", b3, append=False)
     assert spark.table("span_idx_t").count() == n_before
 
 
 def test_index_contract_metadata_validation(spark):
     """Standing indexes record their build parameters as table
-    properties; probes/appends validate against them. A silent ``k``
-    mismatch on a span index would pass everything through undeduped —
-    it must raise instead — and a non-default ``n_buckets`` must be
-    picked up by the append automatically (the round-5 advice bug:
-    appends hardcoded 32 and crashed on any other build spec)."""
-    import pytest
-
+    properties, and probes/appends take them from there. A probe that
+    restates nothing uses the recorded span ``k`` (a default ``k``
+    would pass everything through undeduped) and the recorded MinHash
+    banding, and a non-default ``n_buckets`` is picked up by the append
+    automatically (the round-5 advice bug: appends hardcoded 32 and
+    crashed on any other build spec)."""
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
-        minhash_incremental_dedup,
         minhash_build_index,
+        minhash_incremental_dedup,
+        minhash_query_index,
         span_build_index,
         span_incremental_dedup,
     )
@@ -2101,33 +2092,46 @@ def test_index_contract_metadata_validation(spark):
     batch = spark.createDataFrame(
         [(10, "alpha beta gamma delta epsilon extra")], "doc_id long, text string"
     )
-    with pytest.raises(ValueError, match="index contract mismatch"):
-        span_incremental_dedup(spark, "span_idx_meta", batch, k=5)
+    # the probe reads k=4: a 5-token corpus holds no span of the
+    # default k=8, so only the recorded k masks anything
+    dry = span_incremental_dedup(spark, "span_idx_meta", batch, append=False).first()
+    assert (dry.deduped_text, dry.n_tokens_removed) == ("extra", 5)
 
     # n_buckets defaults from metadata: the append against the
     # 8-bucket table succeeds without the caller restating it
-    got = span_incremental_dedup(spark, "span_idx_meta", batch, k=4).first()
+    got = span_incremental_dedup(spark, "span_idx_meta", batch).first()
     # historical spans @1,@2 cover tokens 1..5 -> only "extra" survives
     assert (got.deduped_text, got.n_tokens_removed) == ("extra", 5)
     b2 = spark.createDataFrame(
         [(20, "alpha beta gamma delta epsilon extra")], "doc_id long, text string"
     )
-    got2 = span_incremental_dedup(spark, "span_idx_meta", b2, k=4).first()
+    got2 = span_incremental_dedup(spark, "span_idx_meta", b2).first()
     assert got2.deduped_text == ""  # batch-1 append took effect
 
-    # minhash twin: signature-parameter mismatch raises
+    # minhash twin: a probe and an append that restate nothing sign and
+    # band at the recorded 32 hashes in 8 bands
     spark.sql("DROP TABLE IF EXISTS mh_idx_meta")
     minhash_build_index(corpus, "mh_idx_meta", num_hashes=32, bands=8)
-    with pytest.raises(ValueError, match="index contract mismatch"):
-        minhash_incremental_dedup(
-            spark, "mh_idx_meta", batch, num_hashes=64, bands=16
-        )
+    same = spark.createDataFrame(
+        [(10, "alpha beta gamma delta epsilon")], "doc_id long, text string"
+    )
+    hits = minhash_query_index(spark, "mh_idx_meta", same).collect()
+    assert [tuple(r) for r in hits] == [(10, 1, 1.0)]
+    fresh = spark.createDataFrame(
+        [(30, "zulu yankee xray whiskey victor uniform")], "doc_id long, text string"
+    )
+    minhash_incremental_dedup(spark, "mh_idx_meta", fresh).collect()
+    appended = spark.table("mh_idx_meta").filter("doc_id = 30")
+    assert sorted(r.band for r in appended.collect()) == list(range(8))
+    assert {len(r.sig) for r in appended.collect()} == {32}
 
 
 def test_minhash_incremental_dedup_rejects_unknown_keywords(spark, tmp_path):
-    """A misspelt signature parameter (``band=`` for ``bands=``) or a
-    removed option raises ``TypeError`` instead of running with the
-    defaults, on the batch call and on its streaming wrapper."""
+    """A misspelt or recorded signature parameter (``band=``, or
+    ``num_hashes=``/``bands=``/``impl=``, which the index contract
+    holds) or a removed option raises ``TypeError`` instead of running
+    with the defaults, on the batch call and on its streaming
+    wrapper."""
     import pytest
 
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
@@ -2144,11 +2148,12 @@ def test_minhash_incremental_dedup_rejects_unknown_keywords(spark, tmp_path):
         [(1, "alpha beta gamma delta epsilon zeta eta")], "doc_id long, text string"
     )
     minhash_build_index(docs, t, num_hashes=32, bands=8)
-    for bad in ({"band": 8}, {"storage": "persist"}):
+    for bad in (
+        {"band": 8}, {"storage": "persist"}, {"num_hashes": 32}, {"bands": 8},
+        {"impl": "md5"},
+    ):
         with pytest.raises(TypeError):
-            minhash_incremental_dedup(
-                spark, t, docs, num_hashes=32, bands=8, append=False, **bad
-            )
+            minhash_incremental_dedup(spark, t, docs, append=False, **bad)
         with pytest.raises(TypeError):
             stream_corpus_dedup(
                 spark.readStream.schema("doc_id long, text string").parquet(
@@ -2216,7 +2221,7 @@ def test_span_incremental_matches_full_span_dedup_for_one_shot(spark):
     inc = {
         r.doc_id: (r.deduped_text, r.n_tokens_removed)
         for r in span_incremental_dedup(
-            spark, "span_idx_empty", batch, k=4, append=False
+            spark, "span_idx_empty", batch, append=False
         ).collect()
     }
     full = {
@@ -2559,10 +2564,10 @@ def test_ivf_companion_centroids_resolve_when_none(spark):
         [(1, [2.0, 3.0])], "query_id long, embedding array<double>"
     )
     explicit = sorted(
-        map(tuple, ivf_query_index(spark, t, q, cents, k=5, impl="grid").collect())
+        map(tuple, ivf_query_index(spark, t, q, cents, k=5).collect())
     )
     resolved = sorted(
-        map(tuple, ivf_query_index(spark, t, q, None, k=5, impl="grid").collect())
+        map(tuple, ivf_query_index(spark, t, q, None, k=5).collect())
     )
     assert explicit == resolved
     extra = spark.createDataFrame(

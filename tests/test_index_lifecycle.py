@@ -285,11 +285,8 @@ def _er_probe(spark, t, key):
 
 def _minhash_hits(spark, t):
     batch = spark.createDataFrame([(100, DOCS[3][1])], "doc_id bigint, text string")
-    bands = int(io.get_table_meta(spark, t)["bands"])
     return sorted(
-        map(tuple, dd.minhash_query_index(
-            spark, t, batch, bands=bands, threshold=0.5
-        ).collect())
+        map(tuple, dd.minhash_query_index(spark, t, batch, threshold=0.5).collect())
     )
 
 
@@ -314,7 +311,7 @@ def _ivf_probe(spark, t):
         [(1, [0.0, 0.0]), (2, [40.0, 40.0])], "query_id long, embedding array<double>"
     )
     return sim.ivf_query_index(
-        spark, t, q, sim.ivf_load_centroids(spark, t), k=3, n_probe=2, impl="grid"
+        spark, t, q, sim.ivf_load_centroids(spark, t), k=3, n_probe=2
     ).count() == 6
 
 
@@ -403,14 +400,14 @@ def _case(spark, verb, t):
             [(50, "an appended note on tides and estuaries " * 2)],
             "doc_id bigint, text string",
         )
-        dd.span_incremental_dedup(spark, t, new_docs, k=4).collect()
+        dd.span_incremental_dedup(spark, t, new_docs).collect()
         batch = spark.createDataFrame(DOCS[:2], "doc_id bigint, text string")
         return (
             lambda: io.compact_index_table(spark, t),
             lambda: all(
                 r["n_tokens_removed"] > 0
                 for r in dd.span_incremental_dedup(
-                    spark, t, batch, k=4, append=False
+                    spark, t, batch, append=False
                 ).collect()
             ),
         )

@@ -479,7 +479,7 @@ def test_index_table_health_and_generic_compact(spark):
             [(10 + i, f"fresh content number {i} varies widely here")],
             "doc_id long, text string",
         )
-        span_incremental_dedup(spark, "span_idx_compact_t", b, k=4)
+        span_incremental_dedup(spark, "span_idx_compact_t", b)
     h = index_table_health(spark, "span_idx_compact_t",
                            max_files_per_bucket=1.5)
     assert h["n_buckets"] == 4 and h["n_files"] > 4
@@ -502,7 +502,6 @@ def test_index_table_health_and_generic_compact(spark):
             [(99, "fresh content number 0 varies widely here")],
             "doc_id long, text string",
         ),
-        k=4,
         append=False,
     ).first()
     assert got.n_tokens_removed > 0

@@ -1084,7 +1084,7 @@ def test_stream_span_dedup_masks_across_microbatches(spark, tmp_path):
     )
     stream_span_dedup(
         sdf, "stream_span_idx", "stream_span_sink",
-        checkpoint_dir=str(tmp_path / "span_ck"), k=4,
+        checkpoint_dir=str(tmp_path / "span_ck"),
     )
     got = {
         r.doc_id: (r.deduped_text, r.n_tokens_removed)
@@ -2459,9 +2459,8 @@ def test_hamming_reband_matches_direct_build(spark):
     must be indistinguishable from building at the new band width
     directly — banding is a pure function of (fingerprint, band_bits)
     and the full 64-bit fingerprint rides on every index row. Probes
-    after the reband validate against the UPDATED meta (a stale-width
-    caller fails loudly), the rotation bumps skew_epoch, and the skew
-    log is cleared like a rebuild."""
+    after the reband read the UPDATED meta, the rotation bumps
+    skew_epoch, and the skew log is cleared like a rebuild."""
     import pytest as _pytest
 
     from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.multimodal import (
@@ -2518,7 +2517,7 @@ def test_hamming_reband_matches_direct_build(spark):
     }
     assert hits_re == hits_direct and (100, 3, 2) in hits_re
 
-    # a caller still asserting the OLD width fails the meta contract
+    # the contract no longer records the OLD width
     with _pytest.raises(ValueError):
         check_table_meta(spark, t_re, kind="hamming_fp", band_bits=16)
     # validation: non-divisors of 64 and non-hamming tables refused

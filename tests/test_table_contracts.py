@@ -390,3 +390,141 @@ def test_only_io_reads_or_writes_table_properties():
             if isinstance(node, ast.Attribute) and node.attr == "_INDEX_META_PREFIX":
                 offenders.append(f"{path.name}:{node.lineno}")
     assert offenders == []
+
+
+def test_probe_functions_accept_no_recorded_key():
+    """A value the contract records is read from it, never restated by
+    the caller: no probe, append or stream function of an index kind
+    takes a parameter named after one of that kind's recorded keys."""
+    import inspect
+
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators import (
+        dedup,
+        entity,
+        multimodal,
+        similarity,
+    )
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming import events
+
+    callers = {
+        "exact": [dedup.exact_incremental_dedup, events.stream_exact_dedup],
+        "span": [dedup.span_incremental_dedup, events.stream_span_dedup],
+        "minhash": [
+            dedup.minhash_query_index, dedup.minhash_incremental_dedup,
+            events.stream_corpus_dedup,
+        ],
+        "hamming_fp": [
+            multimodal.hamming_index_probe, multimodal.hamming_incremental_dedup,
+            events.stream_media_dedup,
+        ],
+        "er": [entity.er_incremental, events.stream_entity_resolution],
+        "ivf": [
+            similarity.ivf_query_index, similarity.ivf_append_index,
+            events.stream_ivf_append,
+        ],
+    }
+    offenders = [
+        f"{fn.__name__}({key})"
+        for kind, fns in callers.items()
+        for fn in fns
+        for key in inspect.signature(fn).parameters
+        if key in io.TABLE_SPECS[kind].keys
+    ]
+    assert offenders == []
+
+
+def test_md5_index_probed_without_impl_drops_its_duplicate(spark):
+    """An md5-signed index is probed with md5 signatures although the
+    caller names no ``impl``: a planted exact duplicate of an indexed
+    document is dropped, and an unknown ``impl`` is refused at build."""
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
+        minhash_build_index,
+        minhash_incremental_dedup,
+    )
+
+    t = "contract_mh_md5"
+    _drop(spark, t)
+    minhash_build_index(_docs(spark), t, impl="md5")
+    batch = spark.createDataFrame(
+        [(100, TEXT + " tail 2"), (101, "an unrelated note on tides and estuaries")],
+        "doc_id bigint, text string",
+    )
+    survivors = minhash_incremental_dedup(spark, t, batch, append=False)
+    assert sorted(r.doc_id for r in survivors.collect()) == [101]
+    assert io.read_contract(spark, t, "minhash")["impl"] == "md5"
+    with pytest.raises(ValueError, match="unknown MinHash impl"):
+        minhash_build_index(_docs(spark), "contract_mh_crc", impl="crc32")
+    assert not spark.catalog.tableExists("contract_mh_crc")
+    _drop(spark, t)
+
+
+def test_ivf_grid_query_follows_the_recorded_impl(spark):
+    """A grid-built IVF index stores quantized-unit centroids; a query
+    that names no ``impl`` probes through the grid assignment the index
+    records, so each query's single probed cell is its own blob's and
+    the top-k equals brute force."""
+    import random
+
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_build_index,
+        ivf_query_index,
+    )
+
+    rng = random.Random(5)
+    rows = [
+        (i, [cx + rng.uniform(-0.2, 0.2), cy + rng.uniform(-0.2, 0.2)])
+        for i, (cx, cy) in enumerate(
+            [(0.0, 10.0)] * 10 + [(10.0, 0.0)] * 10 + [(10.0, 10.0)] * 10
+        )
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    t = "contract_ivf_grid_query"
+    _drop(spark, t)
+    cents = ivf_build_index(df, t, n_clusters=3, impl="grid")
+    qs = spark.createDataFrame(
+        [(0, [0.0, 10.0]), (1, [10.0, 0.0]), (2, [10.0, 10.0])],
+        "query_id long, embedding array<double>",
+    )
+    got = {
+        (r["query_id"], r["vec_id"])
+        for r in ivf_query_index(spark, t, qs, cents, k=3, n_probe=1).collect()
+    }
+    truth = {
+        (r["query_id"], r["vec_id"]) for r in brute_force_topk(df, qs, k=3).collect()
+    }
+    assert got == truth and len(got) == 9
+    _drop(spark, t)
+
+
+def test_minhash_stream_keeps_deduplicating_across_a_reband(spark, tmp_path):
+    """A stream that names no banding reads it from the contract in
+    each batch: after a reband between two drains on one checkpoint,
+    the second drain still drops a duplicate of an indexed document
+    and appends a fresh one at the new band count."""
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.operators.dedup import (
+        minhash_build_index,
+        minhash_reband_index,
+    )
+    from rds_to_snowflake_etl_a_lakehouse_pipeline_spark.streaming import events
+
+    t = "contract_mh_reband_stream"
+    _drop(spark, t)
+    minhash_build_index(_docs(spark), t)
+    src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
+    schema = "doc_id bigint, text string"
+
+    def drain(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+        events.stream_corpus_dedup(spark.readStream.schema(schema).parquet(src), t, ck)
+
+    drain([(50, "a first streamed note about harbour cranes and cargo")])
+    minhash_reband_index(spark, t, 8)
+    drain([(60, TEXT + " tail 4"), (61, "a second note on glaciers and moraines")])
+    bands = {
+        r.doc_id: r.n
+        for r in spark.table(t).groupBy("doc_id").agg(F.count("*").alias("n")).collect()
+    }
+    assert 60 not in bands
+    assert bands[50] == bands[61] == 8
+    _drop(spark, t)
